@@ -313,7 +313,7 @@ object Bench {
                   "pagerank_knn",
                   "graphsage_agg", "warc_ingest", "wds_ingest"))
       try SparkEntry.queries(w)(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => () }
+      catch { case e: Throwable => System.err.println(s"[bench] warmup $w failed: $e") }
 
     // optional args = subset of query names to time (targeted re-measure)
     val selected = if (args.nonEmpty) headline.filter(args.contains) else headline
@@ -384,9 +384,11 @@ object Bench {
     // AFTER spark.stop() so no Spark shutdown logging can follow it, and
     // flush — it must be the LAST line on stdout (build.sbt inherits
     // stdout for forked runs and suppresses sbt's success banner so the
-    // line arrives bare, not "[info] "-prefixed).
-    spark.stop()
-    println(mainLine)
-    System.out.flush()
+    // line arrives bare, not "[info] "-prefixed) — even if stop() throws.
+    try spark.stop()
+    finally {
+      println(mainLine)
+      System.out.flush()
+    }
   }
 }

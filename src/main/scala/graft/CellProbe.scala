@@ -13,7 +13,8 @@ import org.apache.spark.sql.functions._
   * `runMain graft.CellProbe <cell> [sfDir] [scale] [runs]` —
   * cells: knn_join_exact, ivf_blocked_join, index_ingest, stream_retract,
   * hnsw_serve_tombstoned,
-  * image_neardup, label_noise_audit, knn_scan_topk. */
+  * image_neardup, label_noise_audit, span_dedup_bloom, line_dedup_split,
+  * knn_scan_topk. */
 object CellProbe {
   import ScaleBench.expandEmb
 

@@ -71,109 +71,261 @@ object Hnsw {
     math.min((-math.log(u) * p.mL).toInt, p.maxLevel - 1)
   }
 
-  /** In-memory builder for ONE shard (runs inside a task; never sees
-    * more than its shard's rows). Standard Malkov-Yashunin insert:
-    * greedy descent above the node's level, ef_construction beam on the
-    * levels it joins, closest-m neighbor selection, capped lists
-    * (m above level 0, 2m at level 0). */
-  private final class Builder(p: Params, dist: (Array[Float], Array[Float]) => Double) {
-    val ids = mutable.ArrayBuffer[Long]()
-    val vecs = mutable.ArrayBuffer[Array[Float]]()
-    val nbrs = mutable.ArrayBuffer[Array[mutable.ArrayBuffer[Int]]]()
-    var entry = -1
-    var topLevel = -1
+  /** Scratch state of one walk — the visited stamps and both heaps —
+    * kept per thread and reused by every walk on it, so a walk allocates
+    * nothing per query. Node n is visited in the current walk iff
+    * `stamp(n) == epoch`. */
+  private[graft] final class Scratch {
+    private var stamp = new Array[Int](64)
+    private var epoch = 0
+    val cand = new Heap(nearestFirst = true)
+    val res = new Heap(nearestFirst = false)
+    /** Distance of the node the last [[Graph.greedy]] stopped at. */
+    var dist = 0.0
+    /** [[res]] drained in ascending (distance, id) order by [[drain]]. */
+    var outD = new Array[Double](64)
+    var outN = new Array[Int](64)
 
-    private def d(q: Array[Float], n: Int): Double = dist(q, vecs(n))
+    def begin(size: Int): Unit = {
+      if (stamp.length < size) stamp = new Array[Int](math.max(size, 2 * stamp.length))
+      else if (epoch == Int.MaxValue) { java.util.Arrays.fill(stamp, 0); epoch = 0 }
+      epoch += 1
+      cand.clear(); res.clear()
+    }
 
-    private def greedy(q: Array[Float], ep0: Int, level: Int): Int = {
+    /** Mark `n` visited; false if it already was. */
+    def visit(n: Int): Boolean =
+      if (stamp(n) == epoch) false else { stamp(n) = epoch; true }
+
+    /** Empty [[res]] into `outD`/`outN`, nearest first; returns the count. */
+    def drain(): Int = {
+      val n = res.size
+      if (outD.length < n) { outD = new Array[Double](n); outN = new Array[Int](n) }
+      var i = n - 1
+      while (i >= 0) { outD(i) = res.headDist; outN(i) = res.headNode; res.pop(); i -= 1 }
+      n
+    }
+  }
+
+  private val scratch = ThreadLocal.withInitial[Scratch](() => new Scratch)
+
+  /** Binary heap of (distance, node) keyed by (distance, id), with the
+    * orderings of the tuple queues it replaced (Double total order, then
+    * id): `nearestFirst` pops the smallest key — the candidate queue —
+    * otherwise the largest — the bounded result set. */
+  private[graft] final class Heap(nearestFirst: Boolean) {
+    var size = 0
+    private var ds = new Array[Double](64)
+    private var ns = new Array[Int](64)
+    private var ks = new Array[Long](64)
+
+    def clear(): Unit = size = 0
+    def headDist: Double = ds(0)
+    def headNode: Int = ns(0)
+
+    /** Slot a pops before slot b. */
+    private def above(a: Int, b: Int): Boolean =
+      if (nearestFirst) {
+        val c = java.lang.Double.compare(-ds(a), -ds(b))
+        c > 0 || (c == 0 && -ks(a) > -ks(b))
+      } else {
+        val c = java.lang.Double.compare(ds(a), ds(b))
+        c > 0 || (c == 0 && ks(a) > ks(b))
+      }
+
+    private def swap(a: Int, b: Int): Unit = {
+      val d = ds(a); ds(a) = ds(b); ds(b) = d
+      val n = ns(a); ns(a) = ns(b); ns(b) = n
+      val k = ks(a); ks(a) = ks(b); ks(b) = k
+    }
+
+    def push(d: Double, node: Int, id: Long): Unit = {
+      if (size == ds.length) {
+        ds = java.util.Arrays.copyOf(ds, 2 * size)
+        ns = java.util.Arrays.copyOf(ns, 2 * size)
+        ks = java.util.Arrays.copyOf(ks, 2 * size)
+      }
+      var i = size
+      ds(i) = d; ns(i) = node; ks(i) = id
+      size += 1
+      while (i > 0 && above(i, (i - 1) >> 1)) { swap(i, (i - 1) >> 1); i = (i - 1) >> 1 }
+    }
+
+    def pop(): Unit = {
+      size -= 1
+      if (size > 0) {
+        swap(0, size)
+        var i = 0
+        var done = false
+        while (!done) {
+          val l = 2 * i + 1
+          val r = l + 1
+          var top = i
+          if (l < size && above(l, top)) top = l
+          if (r < size && above(r, top)) top = r
+          if (top == i) done = true else { swap(i, top); i = top }
+        }
+      }
+    }
+  }
+
+  /** One shard's graph in the int-indexed form the build and the search
+    * both walk: node n has id `ids(n)`, vector `vecs(n)` and, at each
+    * level l it joins, the neighbor array `adj(n)(l)`. */
+  private[graft] class Graph(dist: (Array[Float], Array[Float]) => Double) {
+    protected var size = 0
+    protected var ids = new Array[Long](16)
+    protected var vecs = new Array[Array[Float]](16)
+    protected var adj = new Array[Array[Array[Int]]](16)
+
+    /** Append a node with `levels` empty neighbor lists; returns its index. */
+    protected def add(id: Long, v: Array[Float], levels: Int): Int = {
+      if (size == ids.length) {
+        ids = java.util.Arrays.copyOf(ids, 2 * size)
+        vecs = java.util.Arrays.copyOf(vecs, 2 * size)
+        adj = java.util.Arrays.copyOf(adj, 2 * size)
+      }
+      ids(size) = id; vecs(size) = v
+      adj(size) = Array.fill(levels)(Array.emptyIntArray)
+      size += 1
+      size - 1
+    }
+
+    /** Greedy descent on one level: from `ep` at distance `dEp`, move to
+      * a nearer neighbor (on equal distance, to the smaller id) until
+      * none is. Returns the node reached; its distance is left in
+      * `s.dist`. */
+    protected final def greedy(q: Array[Float], ep0: Int, dEp0: Double, level: Int,
+                               s: Scratch): Int = {
       var ep = ep0
-      var dEp = d(q, ep)
+      var dEp = dEp0
       var improved = true
       while (improved) {
         improved = false
-        val ns = nbrs(ep)(level)
+        val ns = adj(ep)(level)
         var i = 0
         while (i < ns.length) {
           val c = ns(i)
-          val dc = d(q, c)
+          val dc = dist(q, vecs(c))
           if (dc < dEp || (dc == dEp && ids(c) < ids(ep))) {
             ep = c; dEp = dc; improved = true
           }
           i += 1
         }
       }
+      s.dist = dEp
       ep
     }
 
-    /** Beam search on one level; ascending (dist, id) result. */
-    private def searchLayer(q: Array[Float], ep: Int, ef: Int, level: Int): Vector[(Double, Int)] = {
-      val visited = mutable.HashSet[Int](ep)
-      val cand = mutable.PriorityQueue.empty[(Double, Int)](
-        Ordering.by(t => (-t._1, -ids(t._2)))) // pops nearest first
-      val res = mutable.PriorityQueue.empty[(Double, Int)](
-        Ordering.by(t => (t._1, ids(t._2)))) // pops farthest first
-      val d0 = d(q, ep)
-      cand.enqueue((d0, ep)); res.enqueue((d0, ep))
-      while (cand.nonEmpty) {
-        val (dc, c) = cand.dequeue()
-        if (dc > res.head._1 && res.size >= ef) { cand.clear() }
+    /** Beam search on one level from `ep` at distance `dEp`; leaves the
+      * `ef` nearest nodes in `s.res`. `dead` (null: none) is the lazy-
+      * deletion mask: a dead node still routes the walk but never enters
+      * the result set. */
+    protected final def searchLayer(q: Array[Float], ep: Int, dEp: Double, ef: Int,
+                                    level: Int, dead: Array[Boolean], s: Scratch): Unit = {
+      s.begin(size)
+      s.visit(ep)
+      val cand = s.cand
+      val res = s.res
+      cand.push(dEp, ep, ids(ep))
+      if (dead == null || !dead(ep)) res.push(dEp, ep, ids(ep))
+      while (cand.size > 0) {
+        val dc = cand.headDist
+        val c = cand.headNode
+        cand.pop()
+        if (res.size >= ef && dc > res.headDist) cand.clear()
         else {
-          val ns = nbrs(c)(level)
+          val ns = adj(c)(level)
           var i = 0
           while (i < ns.length) {
             val e = ns(i)
-            if (!visited(e)) {
-              visited += e
-              val de = d(q, e)
-              if (res.size < ef || de < res.head._1) {
-                cand.enqueue((de, e)); res.enqueue((de, e))
-                if (res.size > ef) res.dequeue()
+            if (s.visit(e)) {
+              val de = dist(q, vecs(e))
+              if (res.size < ef || de < res.headDist) {
+                cand.push(de, e, ids(e))
+                if (dead == null || !dead(e)) {
+                  res.push(de, e, ids(e))
+                  if (res.size > ef) res.pop()
+                }
               }
             }
             i += 1
           }
         }
       }
-      res.dequeueAll.reverseIterator.toVector // ascending
+    }
+  }
+
+  /** In-memory builder for ONE shard (runs inside a task; never sees
+    * more than its shard's rows). Standard Malkov-Yashunin insert:
+    * greedy descent above the node's level, ef_construction beam on the
+    * levels it joins, closest-m neighbor selection, capped lists
+    * (m above level 0, 2m at level 0). */
+  private[graft] final class Builder(p: Params, dist: (Array[Float], Array[Float]) => Double)
+      extends Graph(dist) {
+    private var entry = -1
+    private var topLevel = -1
+
+    /** Keep the `cap` nearest of u's neighbors at `level`, ordered by
+      * (distance, id) — a stable insertion sort, the order of the tuple
+      * sort it replaced. */
+    private def shrink(u: Int, level: Int, cap: Int): Unit = {
+      val ns = adj(u)(level)
+      val v = vecs(u)
+      val ds = new Array[Double](ns.length)
+      var i = 0
+      while (i < ns.length) {
+        val n = ns(i)
+        val d = dist(v, vecs(n))
+        var j = i
+        while (j > 0 && {
+          val c = java.lang.Double.compare(ds(j - 1), d)
+          c > 0 || (c == 0 && ids(ns(j - 1)) > ids(n))
+        }) { ds(j) = ds(j - 1); ns(j) = ns(j - 1); j -= 1 }
+        ds(j) = d; ns(j) = n
+        i += 1
+      }
+      adj(u)(level) = java.util.Arrays.copyOf(ns, cap)
     }
 
-    private def shrink(u: Int, level: Int, cap: Int): Unit = {
-      val v = vecs(u)
-      val kept = nbrs(u)(level)
-        .map(n => (dist(v, vecs(n)), n))
-        .sortBy(t => (t._1, ids(t._2)))
-        .take(cap).map(_._2)
-      nbrs(u)(level) = kept
+    private def link(u: Int, level: Int, n: Int): Unit = {
+      val ns = adj(u)(level)
+      val grown = java.util.Arrays.copyOf(ns, ns.length + 1)
+      grown(ns.length) = n
+      adj(u)(level) = grown
     }
 
     def insert(id: Long, v: Array[Float]): Unit = {
       val lvl = levelFor(id, p)
-      val node = ids.length
-      ids += id; vecs += v
-      nbrs += Array.fill(lvl + 1)(mutable.ArrayBuffer[Int]())
+      val node = add(id, v, lvl + 1)
       if (entry < 0) { entry = node; topLevel = lvl; return }
+      val s = scratch.get()
       var ep = entry
+      var dEp = dist(v, vecs(ep))
       var lc = topLevel
-      while (lc > lvl) { ep = greedy(v, ep, lc); lc -= 1 }
+      while (lc > lvl) { ep = greedy(v, ep, dEp, lc, s); dEp = s.dist; lc -= 1 }
       lc = math.min(topLevel, lvl)
       while (lc >= 0) {
-        val w = searchLayer(v, ep, p.efConstruction, lc)
-        w.take(p.m).foreach { case (_, u) =>
-          nbrs(node)(lc) += u
-          nbrs(u)(lc) += node
-          val cap = if (lc == 0) 2 * p.m else p.m
-          if (nbrs(u)(lc).length > cap) shrink(u, lc, cap)
+        searchLayer(v, ep, dEp, p.efConstruction, lc, null, s)
+        val found = s.drain()
+        val cap = if (lc == 0) 2 * p.m else p.m
+        var i = 0
+        while (i < math.min(found, p.m)) {
+          val u = s.outN(i)
+          link(node, lc, u)
+          link(u, lc, node)
+          if (adj(u)(lc).length > cap) shrink(u, lc, cap)
+          i += 1
         }
-        ep = w.head._2
+        ep = s.outN(0); dEp = s.outD(0)
         lc -= 1
       }
       if (lvl > topLevel) { topLevel = lvl; entry = node }
     }
 
     def toNodes(shard: Int): Iterator[Node] =
-      ids.indices.iterator.map { n =>
-        Node(shard, ids(n), vecs(n).toSeq,
-          nbrs(n).map(_.map(ids(_).toLong).toSeq).toSeq)
+      (0 until size).iterator.map { n =>
+        Node(shard, ids(n), vecs(n).toSeq, adj(n).map(_.map(ids(_)).toSeq).toSeq)
       }
   }
 
@@ -232,10 +384,19 @@ object Hnsw {
       .select(col("id"), col("vec"))
       .join(newRows.select("id"), Seq("id"), "left_anti")
       .unionByName(newRows.select(col("id"), col("vec")))
-    val rebuilt = build(members, "id", "vec", numShards, params, metric)
-    untouched.select("shard", "id", "vec", "nbrs")
-      .unionByName(rebuilt.select("shard", "id", "vec", "nbrs"))
+    withRebuilt(untouched, build(members, "id", "vec", numShards, params, metric), numShards)
   }
+
+  /** A maintained index: the untouched shards' rows verbatim, then the
+    * rebuilt shards'. A union concatenates its inputs' partitions, so
+    * the untouched side is first coalesced (no shuffle) to `numShards`
+    * partitions; otherwise every maintenance call would add `numShards`
+    * partitions, and every later call on the index one task per
+    * partition. */
+  private def withRebuilt(untouched: DataFrame, rebuilt: DataFrame,
+                          numShards: Int): DataFrame =
+    untouched.coalesce(numShards).select("shard", "id", "vec", "nbrs")
+      .unionByName(rebuilt.select("shard", "id", "vec", "nbrs"))
 
   def write(index: DataFrame, path: String): Unit =
     index.write.mode("overwrite").partitionBy("shard").parquet(path)
@@ -259,9 +420,7 @@ object Hnsw {
     val members = index.filter(col("shard").isin(shards: _*))
       .filter(!col("id").isin(ids: _*))
       .select(col("id"), col("vec"))
-    untouched.select("shard", "id", "vec", "nbrs")
-      .unionByName(build(members, "id", "vec", numShards, params, metric)
-        .select("shard", "id", "vec", "nbrs"))
+    withRebuilt(untouched, build(members, "id", "vec", numShards, params, metric), numShards)
   }
 
   /** Bulk-purge deletion ([[Ivf.deleteBulk]]'s HNSW form, the GDPR-
@@ -295,9 +454,7 @@ object Hnsw {
     val members = index.filter(col("shard").isin(shards: _*))
       .join(del, Seq("id"), "left_anti")
       .select(col("id"), col("vec"))
-    untouched.select("shard", "id", "vec", "nbrs")
-      .unionByName(build(members, "id", "vec", numShards, params, metric)
-        .select("shard", "id", "vec", "nbrs"))
+    withRebuilt(untouched, build(members, "id", "vec", numShards, params, metric), numShards)
   }
 
   /** Collect an erasure-id frame into the broadcastable tombstone set
@@ -345,9 +502,8 @@ object Hnsw {
     val members = index.filter(col("shard").isin(shards: _*))
       .join(del, Seq("id"), "left_anti")
       .select(col("id"), col("vec"))
-    val compacted = untouched.select("shard", "id", "vec", "nbrs")
-      .unionByName(build(members, "id", "vec", numShards, params, metric)
-        .select("shard", "id", "vec", "nbrs"))
+    val compacted =
+      withRebuilt(untouched, build(members, "id", "vec", numShards, params, metric), numShards)
     // tombstones on compacted shards are consumed; the rest stay active
     val surviving = del
       .filter(!pmod(hash(col("id")), lit(numShards)).isin(shards: _*))
@@ -377,75 +533,62 @@ object Hnsw {
     if (m < 0) m + numShards else m
   }
 
-  /** Search-time view of one shard rebuilt from its rows. */
+  /** Search-time view of one shard rebuilt from its rows: vectors are
+    * unboxed and neighbor ids resolved to node indices once, here, so the
+    * walk touches only primitive arrays. An id repeated in the rows
+    * resolves to its last row. */
   private[graft] final class ShardGraph(nodes: Array[Node],
-                                 dist: (Array[Float], Array[Float]) => Double) {
-    private val byId = new mutable.HashMap[Long, Node]()
-    nodes.foreach(n => byId(n.id) = n)
-    private val entry: Node =
-      nodes.minBy(n => (-n.nbrs.length, n.id)) // max level, tie → min id
-    private def vecOf(id: Long): Array[Float] = byId(id).vec.toArray
+                                        dist: (Array[Float], Array[Float]) => Double)
+      extends Graph(dist) {
+    private val (entry, top) = {
+      val index = new mutable.LongMap[Int](nodes.length)
+      nodes.foreach(n => index(n.id) = add(n.id, n.vec.toArray, n.nbrs.length))
+      nodes.indices.foreach { i =>
+        adj(i) = nodes(i).nbrs.iterator.map(_.iterator.map(index).toArray).toArray
+      }
+      val e = nodes.minBy(n => (-n.nbrs.length, n.id)) // max level, tie → min id
+      (index(e.id), e.nbrs.length - 1)
+    }
+
+    /** The lazy-deletion mask of `dead` over this graph's nodes, for
+      * [[search]]; null when no node is dead. */
+    def deadMask(dead: Long => Boolean): Array[Boolean] = {
+      val m = Array.tabulate(size)(n => dead(ids(n)))
+      if (m.contains(true)) m else null
+    }
 
     /** `dead` is the LAZY-deletion filter (mark-and-sweep, the classic
-      * HNSW answer to deletion): tombstoned nodes still ROUTE — the
-      * walk traverses them like any node, preserving graph
-      * connectivity — but never enter the result heap. At the
+      * HNSW answer to deletion), as a [[deadMask]]: tombstoned nodes
+      * still ROUTE — the walk traverses them like any node, preserving
+      * graph connectivity — but never enter the result heap. At the
       * exhaustive dial (ef ≥ |shard|) the scan guarantees exactly
       * brute force over the SURVIVORS. At production ef the beam is
       * live-results-sized, so heavily tombstoned shards effectively
       * search a little wider; [[Hnsw.compact]] bounds that overhead by
       * rebuilding shards past a dead-fraction threshold. */
     def search(q: Array[Float], k: Int, ef: Int,
-               dead: Long => Boolean = _ => false): Seq[(Long, Double)] = {
+               dead: Array[Boolean] = null): Seq[(Long, Double)] = {
       // ef >= |shard| is the documented exhaustive limit (reference ef
       // clamp contract, hnsw_am.c:938-941): make it a GUARANTEE by
       // scanning, not a property contingent on level-0 connectivity —
       // the asymmetric closest-m shrink can in principle orphan a
       // node's inbound edges, and the hnsw_exhaustive oracle family
       // asserts brute-force equality
-      if (math.max(ef, k) >= byId.size)
-        return nodes.view.filterNot(n => dead(n.id))
-          .map(n => (dist(q, n.vec.toArray), n.id))
-          .toSeq.sorted.take(k).map { case (d, id) => (id, d) }
-      var ep = entry.id
-      var dEp = dist(q, vecOf(ep))
-      var lc = entry.nbrs.length - 1
+      if (math.max(ef, k) >= size)
+        return (0 until size).filter(n => dead == null || !dead(n))
+          .map(n => (dist(q, vecs(n)), ids(n)))
+          .sorted.take(k).map { case (d, id) => (id, d) }
+      val s = scratch.get()
+      var ep = entry
+      var dEp = dist(q, vecs(ep))
+      var lc = top
       while (lc > 0) { // greedy descent to level 1 (dead nodes may route)
-        var improved = true
-        while (improved) {
-          improved = false
-          byId(ep).nbrs(lc).foreach { c =>
-            val dc = dist(q, vecOf(c))
-            if (dc < dEp || (dc == dEp && c < ep)) { ep = c; dEp = dc; improved = true }
-          }
-        }
+        ep = greedy(q, ep, dEp, lc, s); dEp = s.dist
         lc -= 1
       }
-      val efK = math.max(ef, k)
-      val visited = mutable.HashSet[Long](ep)
-      val cand = mutable.PriorityQueue.empty[(Double, Long)](Ordering.by(t => (-t._1, -t._2)))
-      val res = mutable.PriorityQueue.empty[(Double, Long)](Ordering.by(identity))
-      cand.enqueue((dEp, ep))
-      if (!dead(ep)) res.enqueue((dEp, ep))
-      while (cand.nonEmpty) {
-        val (dc, c) = cand.dequeue()
-        if (res.size >= efK && dc > res.head._1) { cand.clear() }
-        else byId(c).nbrs(0).foreach { e =>
-          if (!visited(e)) {
-            visited += e
-            val de = dist(q, vecOf(e))
-            if (res.size < efK || de < res.head._1) {
-              cand.enqueue((de, e))
-              if (!dead(e)) {
-                res.enqueue((de, e))
-                if (res.size > efK) res.dequeue()
-              }
-            }
-          }
-        }
-      }
-      res.dequeueAll.reverseIterator.toSeq // ascending (dist, id)
-        .take(k).map { case (d, id) => (id, d) }
+      searchLayer(q, ep, dEp, math.max(ef, k), 0, dead, s)
+      val found = math.min(s.drain(), k)
+      Array.tabulate(found)(i => (ids(s.outN(i)), s.outD(i))).toSeq
     }
   }
 
@@ -500,10 +643,18 @@ object Hnsw {
   }
 
   /**
-   * Batch ANN search: queries broadcast (tiny), every shard graph walked
-   * in parallel where its rows live, per-shard top-k merged by one
-   * |Q|·k·shards-row window — never a corpus-sized shuffle.
-   * Returns (qid, id, distance, rank ≤ k).
+   * Batch ANN search: queries broadcast (tiny), per-shard top-k merged by
+   * one |Q|·k·shards-row window — never a corpus-sized shuffle. Returns
+   * (qid, id, distance, rank ≤ k).
+   *
+   * The shard walk is the heavy stage and runs in parallel because of
+   * its exchange: the index rows move to `defaultParallelism` partitions
+   * by partition NUMBER, shard s to partition s mod P, so the shards
+   * spread evenly and min(#shards, P) tasks walk them. A by-column
+   * exchange would not do: adaptive execution sizes those partitions by
+   * bytes, and a graph's rows are few bytes for a lot of walking, so it
+   * merged every shard onto one task. By-number exchanges are never
+   * merged.
    *
    * `cacheKey` (set by [[searchBatchFromDisk]]) memoizes the deserialized
    * per-shard graphs in the executor JVM, so repeated batches against the
@@ -529,8 +680,9 @@ object Hnsw {
     val dist = distFn(metric)
     val bq = spark.sparkContext.broadcast(queries)
     val bt = spark.sparkContext.broadcast(tombstones)
+    val parts = spark.sparkContext.defaultParallelism
     index.select(col("shard"), col("id"), col("vec"), col("nbrs"))
-      .repartition(col("shard"))
+      .repartitionById(parts, pmod(col("shard"), lit(parts)))
       .as[Node]
       .mapPartitions { it =>
         it.toArray.groupBy(_.shard).iterator.flatMap { case (shard, ns) =>
@@ -542,8 +694,7 @@ object Hnsw {
               }
             case None => new ShardGraph(ns, dist)
           }
-          val dead: Long => Boolean =
-            if (bt.value.isEmpty) _ => false else bt.value.contains
+          val dead = if (bt.value.isEmpty) null else g.deadMask(bt.value.contains)
           bq.value.iterator.flatMap { case (qid, q) =>
             g.search(q, k, ef, dead).map { case (id, d) => (qid, id, d) }
           }

@@ -481,7 +481,11 @@ object Ivf {
       val bound = if (dkv == null) Double.MaxValue else dkv.doubleValue + 1e-9
       (0 until cs.length).filter(i => VectorOps.l2(q, cs(i)) - rs(i) <= bound)
     })
-    queries.join(dk, Seq(qIdCol), "left")
+    // the query side moves to P partitions by NUMBER: pass 2 is the
+    // heavy stage, and adaptive execution would merge a by-column qid
+    // exchange of these few bytes onto a single task
+    queries.repartition(spark.sparkContext.defaultParallelism, col(qIdCol))
+      .join(dk, Seq(qIdCol), "left")
       // keep EVERY query column (labels, weights…), as the output
       // contract promises — callers must not pay a re-join to get them
       .select((queries.columns.map(col) :+

@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, Literal, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
@@ -48,48 +48,60 @@ abstract class FloatArrayBinaryExpression extends BinaryExpression {
   /** Static binary kernel on DistanceExpressions to invoke. */
   protected def kernel: String
 
-  protected def eval2(a: ArrayData, b: ArrayData): Double
+  /** The kernel; `nullsA`/`nullsB` say whether each side must be scanned for
+    * null elements. */
+  protected def eval2(a: ArrayData, b: ArrayData, nullsA: Boolean, nullsB: Boolean): Double
+
+  // decided once per plan: the per-pair null scan runs only on a side
+  // that can hold a null element
+  private lazy val leftNulls = DistanceExpressions.mayHoldNulls(left)
+  private lazy val rightNulls = DistanceExpressions.mayHoldNulls(right)
 
   override def nullSafeEval(a: Any, b: Any): Any =
-    eval2(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+    eval2(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData], leftNulls, rightNulls)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.plans.DistanceExpressions.$kernel($a, $b);")
+      s"${ev.value} = graft.plans.DistanceExpressions.$kernel($a, $b, $leftNulls, $rightNulls);")
 }
 
 case class L2DistanceExpr(left: Expression, right: Expression) extends FloatArrayBinaryExpression {
   override def prettyName: String = "vector_l2_distance"
   protected def kernel: String = "l2Data"
-  protected def eval2(a: ArrayData, b: ArrayData): Double = DistanceExpressions.l2Data(a, b)
+  protected def eval2(a: ArrayData, b: ArrayData, nullsA: Boolean, nullsB: Boolean): Double =
+    DistanceExpressions.l2Data(a, b, nullsA, nullsB)
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
 }
 
 case class CosineDistanceExpr(left: Expression, right: Expression) extends FloatArrayBinaryExpression {
   override def prettyName: String = "vector_cosine_distance"
   protected def kernel: String = "cosineData"
-  protected def eval2(a: ArrayData, b: ArrayData): Double = DistanceExpressions.cosineData(a, b)
+  protected def eval2(a: ArrayData, b: ArrayData, nullsA: Boolean, nullsB: Boolean): Double =
+    DistanceExpressions.cosineData(a, b, nullsA, nullsB)
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
 }
 
 case class InnerProductExpr(left: Expression, right: Expression) extends FloatArrayBinaryExpression {
   override def prettyName: String = "vector_inner_product"
   protected def kernel: String = "innerProductData"
-  protected def eval2(a: ArrayData, b: ArrayData): Double = DistanceExpressions.innerProductData(a, b)
+  protected def eval2(a: ArrayData, b: ArrayData, nullsA: Boolean, nullsB: Boolean): Double =
+    DistanceExpressions.innerProductData(a, b, nullsA, nullsB)
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
 }
 
 case class DotProductExpr(left: Expression, right: Expression) extends FloatArrayBinaryExpression {
   override def prettyName: String = "vector_dot"
   protected def kernel: String = "dotData"
-  protected def eval2(a: ArrayData, b: ArrayData): Double = DistanceExpressions.dotData(a, b)
+  protected def eval2(a: ArrayData, b: ArrayData, nullsA: Boolean, nullsB: Boolean): Double =
+    DistanceExpressions.dotData(a, b, nullsA, nullsB)
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
 }
 
 case class L1DistanceExpr(left: Expression, right: Expression) extends FloatArrayBinaryExpression {
   override def prettyName: String = "vector_l1_distance"
   protected def kernel: String = "l1Data"
-  protected def eval2(a: ArrayData, b: ArrayData): Double = DistanceExpressions.l1Data(a, b)
+  protected def eval2(a: ArrayData, b: ArrayData, nullsA: Boolean, nullsB: Boolean): Double =
+    DistanceExpressions.l1Data(a, b, nullsA, nullsB)
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
 }
 
@@ -104,77 +116,88 @@ case class L1DistanceExpr(left: Expression, right: Expression) extends FloatArra
 case class SquaredL2DistanceExpr(left: Expression, right: Expression) extends FloatArrayBinaryExpression {
   override def prettyName: String = "vector_squared_l2_distance"
   protected def kernel: String = "squaredL2Data"
-  protected def eval2(a: ArrayData, b: ArrayData): Double = DistanceExpressions.squaredL2Data(a, b)
+  protected def eval2(a: ArrayData, b: ArrayData, nullsA: Boolean, nullsB: Boolean): Double =
+    DistanceExpressions.squaredL2Data(a, b, nullsA, nullsB)
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
 }
 
 case class ChebyshevDistanceExpr(left: Expression, right: Expression) extends FloatArrayBinaryExpression {
   override def prettyName: String = "vector_chebyshev_distance"
   protected def kernel: String = "chebyshevData"
-  protected def eval2(a: ArrayData, b: ArrayData): Double = DistanceExpressions.chebyshevData(a, b)
+  protected def eval2(a: ArrayData, b: ArrayData, nullsA: Boolean, nullsB: Boolean): Double =
+    DistanceExpressions.chebyshevData(a, b, nullsA, nullsB)
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
 }
 
 case class HammingDistanceExpr(left: Expression, right: Expression) extends FloatArrayBinaryExpression {
   override def prettyName: String = "vector_hamming_distance"
   protected def kernel: String = "hammingData"
-  protected def eval2(a: ArrayData, b: ArrayData): Double = DistanceExpressions.hammingData(a, b)
+  protected def eval2(a: ArrayData, b: ArrayData, nullsA: Boolean, nullsB: Boolean): Double =
+    DistanceExpressions.hammingData(a, b, nullsA, nullsB)
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
 }
 
 case class JaccardDistanceExpr(left: Expression, right: Expression) extends FloatArrayBinaryExpression {
   override def prettyName: String = "vector_jaccard_distance"
   protected def kernel: String = "jaccardData"
-  protected def eval2(a: ArrayData, b: ArrayData): Double = DistanceExpressions.jaccardData(a, b)
+  protected def eval2(a: ArrayData, b: ArrayData, nullsA: Boolean, nullsB: Boolean): Double =
+    DistanceExpressions.jaccardData(a, b, nullsA, nullsB)
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
 }
 
 case class DiceDistanceExpr(left: Expression, right: Expression) extends FloatArrayBinaryExpression {
   override def prettyName: String = "vector_dice_distance"
   protected def kernel: String = "diceData"
-  protected def eval2(a: ArrayData, b: ArrayData): Double = DistanceExpressions.diceData(a, b)
+  protected def eval2(a: ArrayData, b: ArrayData, nullsA: Boolean, nullsB: Boolean): Double =
+    DistanceExpressions.diceData(a, b, nullsA, nullsB)
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
 }
 
 case class BrayCurtisDistanceExpr(left: Expression, right: Expression) extends FloatArrayBinaryExpression {
   override def prettyName: String = "vector_bray_curtis_distance"
   protected def kernel: String = "brayCurtisData"
-  protected def eval2(a: ArrayData, b: ArrayData): Double = DistanceExpressions.brayCurtisData(a, b)
+  protected def eval2(a: ArrayData, b: ArrayData, nullsA: Boolean, nullsB: Boolean): Double =
+    DistanceExpressions.brayCurtisData(a, b, nullsA, nullsB)
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
 }
 
 case class CanberraDistanceExpr(left: Expression, right: Expression) extends FloatArrayBinaryExpression {
   override def prettyName: String = "vector_canberra_distance"
   protected def kernel: String = "canberraData"
-  protected def eval2(a: ArrayData, b: ArrayData): Double = DistanceExpressions.canberraData(a, b)
+  protected def eval2(a: ArrayData, b: ArrayData, nullsA: Boolean, nullsB: Boolean): Double =
+    DistanceExpressions.canberraData(a, b, nullsA, nullsB)
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
 }
 
 case class SokalMichenerDistanceExpr(left: Expression, right: Expression) extends FloatArrayBinaryExpression {
   override def prettyName: String = "vector_sokal_michener_distance"
   protected def kernel: String = "sokalMichenerData"
-  protected def eval2(a: ArrayData, b: ArrayData): Double = DistanceExpressions.sokalMichenerData(a, b)
+  protected def eval2(a: ArrayData, b: ArrayData, nullsA: Boolean, nullsB: Boolean): Double =
+    DistanceExpressions.sokalMichenerData(a, b, nullsA, nullsB)
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
 }
 
 case class RogersTanimotoDistanceExpr(left: Expression, right: Expression) extends FloatArrayBinaryExpression {
   override def prettyName: String = "vector_rogers_tanimoto_distance"
   protected def kernel: String = "rogersTanimotoData"
-  protected def eval2(a: ArrayData, b: ArrayData): Double = DistanceExpressions.rogersTanimotoData(a, b)
+  protected def eval2(a: ArrayData, b: ArrayData, nullsA: Boolean, nullsB: Boolean): Double =
+    DistanceExpressions.rogersTanimotoData(a, b, nullsA, nullsB)
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
 }
 
 case class RussellRaoDistanceExpr(left: Expression, right: Expression) extends FloatArrayBinaryExpression {
   override def prettyName: String = "vector_russell_rao_distance"
   protected def kernel: String = "russellRaoData"
-  protected def eval2(a: ArrayData, b: ArrayData): Double = DistanceExpressions.russellRaoData(a, b)
+  protected def eval2(a: ArrayData, b: ArrayData, nullsA: Boolean, nullsB: Boolean): Double =
+    DistanceExpressions.russellRaoData(a, b, nullsA, nullsB)
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
 }
 
 case class MatchingCoefficientExpr(left: Expression, right: Expression) extends FloatArrayBinaryExpression {
   override def prettyName: String = "vector_matching_coefficient"
   protected def kernel: String = "matchingCoefficientData"
-  protected def eval2(a: ArrayData, b: ArrayData): Double = DistanceExpressions.matchingCoefficientData(a, b)
+  protected def eval2(a: ArrayData, b: ArrayData, nullsA: Boolean, nullsB: Boolean): Double =
+    DistanceExpressions.matchingCoefficientData(a, b, nullsA, nullsB)
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
 }
 
@@ -194,44 +217,57 @@ case class NormSqExpr(child: Expression) extends UnaryExpression {
       case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
         s"$prettyName requires an array<float> argument, got ${other.catalogString}")
     }
+  private lazy val nulls = DistanceExpressions.mayHoldNulls(child)
   override def nullSafeEval(a: Any): Any =
-    DistanceExpressions.normSqData(a.asInstanceOf[ArrayData])
+    DistanceExpressions.normSqData(a.asInstanceOf[ArrayData], nulls)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, a => s"graft.plans.DistanceExpressions.normSqData($a)")
+    defineCodeGen(ctx, ev, a => s"graft.plans.DistanceExpressions.normSqData($a, $nulls)")
   override protected def withNewChildInternal(c: Expression): Expression = copy(c)
 }
 
 object DistanceExpressions {
 
-  /** Same error contract as the pre-r15 `noNulls` + `checkDims` pair,
-    * in the same order: null elements rejected first (left side, then
-    * right), then the dimension check — `ArrayData.getFloat` would
-    * silently read a null slot as 0.0f, corrupting the distance. */
-  @inline private def checkedDim(a: ArrayData, b: ArrayData): Int = {
+  /** Whether `e`'s array<float> values can hold a null element: per its
+    * type (`containsNull`), or — for a literal, whose type from a plain
+    * `lit(Array[Float])` always admits nulls — per its one value. */
+  private[plans] def mayHoldNulls(e: Expression): Boolean = e match {
+    case Literal(v: ArrayData, _) => (0 until v.numElements()).exists(v.isNullAt)
+    case _ => e.dataType match {
+      case ArrayType(_, containsNull) => containsNull
+      case _ => true
+    }
+  }
+
+  @inline private def noNullElement(a: ArrayData): Unit = {
     var i = 0
-    val na = a.numElements()
-    while (i < na) {
+    val n = a.numElements()
+    while (i < n) {
       if (a.isNullAt(i))
         throw new IllegalArgumentException(s"vector contains a null element at index $i")
       i += 1
     }
-    var j = 0
-    val nb = b.numElements()
-    while (j < nb) {
-      if (b.isNullAt(j))
-        throw new IllegalArgumentException(s"vector contains a null element at index $j")
-      j += 1
-    }
-    if (na != nb)
-      throw new IllegalArgumentException(s"vector dimensions must match: $na vs $nb")
-    na
+  }
+
+  /** Same error contract as the pre-r15 `noNulls` + `checkDims` pair,
+    * in the same order: null elements rejected first (left side, then
+    * right), then the dimension check — `ArrayData.getFloat` would
+    * silently read a null slot as 0.0f, corrupting the distance. A side
+    * whose type rules out null elements (`nullsA`/`nullsB` false) is not
+    * scanned. */
+  @inline private def checkedDim(a: ArrayData, b: ArrayData, nullsA: Boolean, nullsB: Boolean): Int = {
+    if (nullsA) noNullElement(a)
+    if (nullsB) noNullElement(b)
+    val n = a.numElements()
+    if (n != b.numElements())
+      throw new IllegalArgumentException(s"vector dimensions must match: $n vs ${b.numElements()}")
+    n
   }
 
   /** Kahan-summed sum of squared differences — the arithmetic of
     * [[graft.functions.VectorOps.squaredL2]] verbatim, reading the
     * ArrayData in place. */
-  def squaredL2Data(a: ArrayData, b: ArrayData): Double = {
-    val n = checkedDim(a, b)
+  def squaredL2Data(a: ArrayData, b: ArrayData, nullsA: Boolean, nullsB: Boolean): Double = {
+    val n = checkedDim(a, b, nullsA, nullsB)
     var sum = 0.0; var c = 0.0; var i = 0
     while (i < n) {
       val diff = a.getFloat(i).toDouble - b.getFloat(i).toDouble
@@ -244,21 +280,23 @@ object DistanceExpressions {
     sum
   }
 
-  def l2Data(a: ArrayData, b: ArrayData): Double = math.sqrt(squaredL2Data(a, b))
+  def l2Data(a: ArrayData, b: ArrayData, nullsA: Boolean, nullsB: Boolean): Double =
+    math.sqrt(squaredL2Data(a, b, nullsA, nullsB))
 
-  def dotData(a: ArrayData, b: ArrayData): Double = {
-    val n = checkedDim(a, b)
+  def dotData(a: ArrayData, b: ArrayData, nullsA: Boolean, nullsB: Boolean): Double = {
+    val n = checkedDim(a, b, nullsA, nullsB)
     var sum = 0.0; var i = 0
     while (i < n) { sum += a.getFloat(i).toDouble * b.getFloat(i).toDouble; i += 1 }
     sum
   }
 
-  def innerProductData(a: ArrayData, b: ArrayData): Double = -dotData(a, b)
+  def innerProductData(a: ArrayData, b: ArrayData, nullsA: Boolean, nullsB: Boolean): Double =
+    -dotData(a, b, nullsA, nullsB)
 
   /** 1 - dot/(|a||b|); zero-norm input yields 1.0 —
     * [[graft.functions.VectorOps.cosineDistance]] verbatim. */
-  def cosineData(a: ArrayData, b: ArrayData): Double = {
-    val n = checkedDim(a, b)
+  def cosineData(a: ArrayData, b: ArrayData, nullsA: Boolean, nullsB: Boolean): Double = {
+    val n = checkedDim(a, b, nullsA, nullsB)
     var d = 0.0; var na = 0.0; var nb = 0.0; var i = 0
     while (i < n) {
       val va = a.getFloat(i).toDouble; val vb = b.getFloat(i).toDouble
@@ -269,8 +307,8 @@ object DistanceExpressions {
     else 1.0 - d / (math.sqrt(na) * math.sqrt(nb))
   }
 
-  def l1Data(a: ArrayData, b: ArrayData): Double = {
-    val n = checkedDim(a, b)
+  def l1Data(a: ArrayData, b: ArrayData, nullsA: Boolean, nullsB: Boolean): Double = {
+    val n = checkedDim(a, b, nullsA, nullsB)
     var sum = 0.0; var i = 0
     while (i < n) { sum += math.abs(a.getFloat(i).toDouble - b.getFloat(i).toDouble); i += 1 }
     sum
@@ -279,8 +317,8 @@ object DistanceExpressions {
   // ---- r16 long-tail kernels: VectorOps arithmetic verbatim, in place.
 
   /** max |aᵢ−bᵢ| — [[graft.functions.VectorOps.chebyshev]] verbatim. */
-  def chebyshevData(a: ArrayData, b: ArrayData): Double = {
-    val n = checkedDim(a, b)
+  def chebyshevData(a: ArrayData, b: ArrayData, nullsA: Boolean, nullsB: Boolean): Double = {
+    val n = checkedDim(a, b, nullsA, nullsB)
     var m = 0.0; var i = 0
     while (i < n) {
       val d = math.abs(a.getFloat(i).toDouble - b.getFloat(i).toDouble)
@@ -293,8 +331,8 @@ object DistanceExpressions {
   /** Count of unequal FLOAT coordinates (NaN ≠ NaN, like the UDF) —
     * [[graft.functions.VectorOps.hamming]] verbatim, widened to the
     * double the UDF boundary returned. */
-  def hammingData(a: ArrayData, b: ArrayData): Double = {
-    val n = checkedDim(a, b)
+  def hammingData(a: ArrayData, b: ArrayData, nullsA: Boolean, nullsB: Boolean): Double = {
+    val n = checkedDim(a, b, nullsA, nullsB)
     var c = 0; var i = 0
     while (i < n) { if (a.getFloat(i) != b.getFloat(i)) c += 1; i += 1 }
     c.toDouble
@@ -304,8 +342,8 @@ object DistanceExpressions {
 
   /** Set-style Jaccard over the |x|>1e-10 support; empty union → 0.0 —
     * [[graft.functions.VectorOps.jaccard]] verbatim. */
-  def jaccardData(a: ArrayData, b: ArrayData): Double = {
-    val n = checkedDim(a, b)
+  def jaccardData(a: ArrayData, b: ArrayData, nullsA: Boolean, nullsB: Boolean): Double = {
+    val n = checkedDim(a, b, nullsA, nullsB)
     var inter = 0; var union = 0; var i = 0
     while (i < n) {
       val an = math.abs(a.getFloat(i).toDouble) > NonZeroEps
@@ -318,8 +356,8 @@ object DistanceExpressions {
   }
 
   /** [[graft.functions.VectorOps.dice]] verbatim. */
-  def diceData(a: ArrayData, b: ArrayData): Double = {
-    val n = checkedDim(a, b)
+  def diceData(a: ArrayData, b: ArrayData, nullsA: Boolean, nullsB: Boolean): Double = {
+    val n = checkedDim(a, b, nullsA, nullsB)
     var inter = 0; var ca = 0; var cb = 0; var i = 0
     while (i < n) {
       val an = math.abs(a.getFloat(i).toDouble) > NonZeroEps
@@ -336,8 +374,8 @@ object DistanceExpressions {
 
   /** Σ|a−b| / Σ|a+b|; zero denominator errors —
     * [[graft.functions.VectorOps.brayCurtis]] verbatim. */
-  def brayCurtisData(a: ArrayData, b: ArrayData): Double = {
-    val n = checkedDim(a, b)
+  def brayCurtisData(a: ArrayData, b: ArrayData, nullsA: Boolean, nullsB: Boolean): Double = {
+    val n = checkedDim(a, b, nullsA, nullsB)
     var num = 0.0; var den = 0.0; var i = 0
     while (i < n) {
       val x = a.getFloat(i).toDouble; val y = b.getFloat(i).toDouble
@@ -351,8 +389,8 @@ object DistanceExpressions {
 
   /** Σ(|a−b|/(|a|+|b|)) skipping both-zero coords; all-zero errors —
     * [[graft.functions.VectorOps.canberra]] verbatim. */
-  def canberraData(a: ArrayData, b: ArrayData): Double = {
-    val n = checkedDim(a, b)
+  def canberraData(a: ArrayData, b: ArrayData, nullsA: Boolean, nullsB: Boolean): Double = {
+    val n = checkedDim(a, b, nullsA, nullsB)
     var sum = 0.0; var anyNonZero = false; var i = 0
     while (i < n) {
       val x = math.abs(a.getFloat(i).toDouble); val y = math.abs(b.getFloat(i).toDouble)
@@ -368,8 +406,8 @@ object DistanceExpressions {
   }
 
   /** (n10+n01)/dim — [[graft.functions.VectorOps.sokalMichener]]. */
-  def sokalMichenerData(a: ArrayData, b: ArrayData): Double = {
-    val n = checkedDim(a, b)
+  def sokalMichenerData(a: ArrayData, b: ArrayData, nullsA: Boolean, nullsB: Boolean): Double = {
+    val n = checkedDim(a, b, nullsA, nullsB)
     var r = 0; var i = 0
     while (i < n) {
       val an = math.abs(a.getFloat(i).toDouble) > NonZeroEps
@@ -382,8 +420,8 @@ object DistanceExpressions {
 
   /** 2R/(S+2R), R = mismatches, S = matches —
     * [[graft.functions.VectorOps.rogersTanimoto]]. */
-  def rogersTanimotoData(a: ArrayData, b: ArrayData): Double = {
-    val n = checkedDim(a, b)
+  def rogersTanimotoData(a: ArrayData, b: ArrayData, nullsA: Boolean, nullsB: Boolean): Double = {
+    val n = checkedDim(a, b, nullsA, nullsB)
     var r = 0; var i = 0
     while (i < n) {
       val an = math.abs(a.getFloat(i).toDouble) > NonZeroEps
@@ -396,8 +434,8 @@ object DistanceExpressions {
   }
 
   /** 1 − n11/dim — [[graft.functions.VectorOps.russellRao]]. */
-  def russellRaoData(a: ArrayData, b: ArrayData): Double = {
-    val n = checkedDim(a, b)
+  def russellRaoData(a: ArrayData, b: ArrayData, nullsA: Boolean, nullsB: Boolean): Double = {
+    val n = checkedDim(a, b, nullsA, nullsB)
     var n11 = 0; var i = 0
     while (i < n) {
       val an = math.abs(a.getFloat(i).toDouble) > NonZeroEps
@@ -409,8 +447,8 @@ object DistanceExpressions {
   }
 
   /** (n11+n00)/dim — [[graft.functions.VectorOps.matchingCoefficient]]. */
-  def matchingCoefficientData(a: ArrayData, b: ArrayData): Double = {
-    val n = checkedDim(a, b)
+  def matchingCoefficientData(a: ArrayData, b: ArrayData, nullsA: Boolean, nullsB: Boolean): Double = {
+    val n = checkedDim(a, b, nullsA, nullsB)
     var same = 0; var i = 0
     while (i < n) {
       val an = math.abs(a.getFloat(i).toDouble) > NonZeroEps
@@ -424,34 +462,17 @@ object DistanceExpressions {
   /** Σ vᵢ² in double, plain accumulation — exactly the `na`/`nb`
     * accumulator of [[cosineData]], hoisted to a per-row invariant.
     * Same null-element contract as the binary kernels. */
-  def normSqData(a: ArrayData): Double = {
+  def normSqData(a: ArrayData, nulls: Boolean): Double = {
+    if (nulls) noNullElement(a)
     var i = 0
     val n = a.numElements()
     var sum = 0.0
     while (i < n) {
-      if (a.isNullAt(i))
-        throw new IllegalArgumentException(s"vector contains a null element at index $i")
       val v = a.getFloat(i).toDouble
       sum += v * v
       i += 1
     }
     sum
-  }
-
-  /** Shared by interpreted eval and codegen of OTHER callers that still
-    * need a defensive copy: reject null ELEMENTS before a bulk copy.
-    * Kept for source compatibility (the expression kernels above now
-    * check nulls in place). */
-  def noNulls(a: ArrayData): ArrayData = {
-    var i = 0
-    val n = a.numElements()
-    while (i < n) {
-      if (a.isNullAt(i))
-        throw new IllegalArgumentException(
-          s"vector contains a null element at index $i")
-      i += 1
-    }
-    a
   }
 
   private def toCol(e: Expression): Column =

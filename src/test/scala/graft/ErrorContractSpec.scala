@@ -143,4 +143,26 @@ class ErrorContractSpec extends SparkSpecBase {
       graft.operators.Ico.encodeIco(Seq.fill(65536)((4, 4)),
         Seq.fill(65536)(Array[Byte](1))))
   }
+
+  test("distance kernels: a null element is reported before a dimension mismatch") {
+    import graft.plans.{DistanceExpressions => DE}
+    def messages(body: => Any): Seq[String] = {
+      val e = intercept[Exception](body)
+      Iterator.iterate(e: Throwable)(_.getCause).takeWhile(_ != null)
+        .map(t => Option(t.getMessage).getOrElse("")).toSeq
+    }
+    // containsNull = true: the per-pair scan runs and the null wins
+    val withNull = Seq((Seq(Some(1.0f), None), Seq(Some(1.0f), Some(2.0f), Some(3.0f))))
+      .toDF("a", "b")
+    for (d <- Seq(DE.l2 _, DE.dot _, DE.cosine _)) {
+      val msgs = messages(withNull.select(d($"a", $"b")).collect())
+      assert(msgs.exists(_.contains("null element at index 1")), msgs.headOption)
+    }
+    // containsNull = false on both sides (and a literal with no null):
+    // no scan, the dimension check still fires
+    val clean = Seq((Array(1.0f, 2.0f), Array(1.0f, 2.0f, 3.0f))).toDF("a", "b")
+    val msgs = messages(clean.select(DE.l2($"a", lit(Array(1.0f, 2.0f, 3.0f)))).collect())
+    assert(msgs.exists(_.contains("vector dimensions must match: 2 vs 3")), msgs.headOption)
+    assert(clean.select(DE.l2($"a", $"a")).head().getDouble(0) == 0.0)
+  }
 }

@@ -158,6 +158,17 @@ class HnswSpec extends SparkSpecBase {
     assert(kept == before)
   }
 
+  test("maintenance keeps an index within 2·numShards partitions, however many calls") {
+    var idx = Hnsw.build(emb.filter($"vec_id" < 400), "vec_id", "embedding", numShards = 4)
+    for (i <- 0 until 4) {
+      idx = Hnsw.insert(idx, emb.filter($"vec_id" === 400L + i), "vec_id", "embedding",
+        numShards = 4)
+      idx = Hnsw.deleteBulk(idx, Seq(10L + i).toDF("vec_id"), numShards = 4)
+    }
+    assert(idx.rdd.getNumPartitions <= 8, s"${idx.rdd.getNumPartitions} partitions")
+    assert(idx.count() == 400)
+  }
+
   test("delete rebuilds only touched shards and equals a from-scratch build") {
     val base = Hnsw.build(emb.filter($"vec_id" < 450), "vec_id", "embedding", numShards = 4)
     val dropped = Seq(410L, 420L, 430L)

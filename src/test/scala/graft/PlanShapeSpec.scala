@@ -1,5 +1,9 @@
 package graft
 
+import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, Partitioning, ShufflePartitionIdPassThrough}
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AQEShuffleReadExec, QueryStageExec, ShuffleQueryStageExec}
+import org.apache.spark.sql.execution.exchange.REPARTITION_BY_NUM
 import org.apache.spark.sql.functions._
 
 /** Plan-shape assertions: the scale properties the engine relies on
@@ -197,6 +201,33 @@ class PlanShapeSpec extends SparkSpecBase {
     assert(joined.count() == 1)
   }
 
+  /** Every node of an executed adaptive plan, into its query stages. */
+  private def nodesOf(p: SparkPlan): Seq[SparkPlan] = p match {
+    case a: AdaptiveSparkPlanExec => nodesOf(a.executedPlan)
+    case s: QueryStageExec => s +: nodesOf(s.plan)
+    case other => other +: other.children.flatMap(nodesOf)
+  }
+
+  /** Runs `df`, then returns the query stage of its one by-number
+    * exchange that `isIt` picks, after checking that no stage of the
+    * final plan reads it through an adaptive shuffle read (a coalesced
+    * or local read would change how many tasks consume it), and the
+    * number of its partitions that hold rows. */
+  private def byNumberStage(df: org.apache.spark.sql.DataFrame)(
+      isIt: Partitioning => Boolean): (ShuffleQueryStageExec, Int) = {
+    df.collect()
+    val nodes = nodesOf(df.queryExecution.executedPlan)
+    val stages = nodes.collect {
+      case s: ShuffleQueryStageExec if s.shuffle.shuffleOrigin == REPARTITION_BY_NUM &&
+        isIt(s.shuffle.outputPartitioning) => s
+    }
+    assert(stages.size == 1, s"want one such exchange in: ${df.queryExecution.executedPlan}")
+    val st = stages.head
+    val reads = nodes.collect { case r: AQEShuffleReadExec if r.child eq st => r }
+    assert(reads.isEmpty, s"adaptive execution re-read the exchange: ${reads.mkString}")
+    (st, st.mapStats.get.bytesByPartitionId.count(_ > 0))
+  }
+
   test("HNSW batch search merges per-shard top-k by a per-query window — no global sort") {
     val emb = Tables.read(spark, dir, "embeddings").filter(col("vec_id") < 200)
     val idx = operators.Hnsw.build(emb, "vec_id", "embedding", numShards = 2)
@@ -204,6 +235,33 @@ class PlanShapeSpec extends SparkSpecBase {
     val plan = planOf(operators.Hnsw.searchBatch(idx, qs, k = 5))
     assert(!plan.contains("Exchange SinglePartition"), s"single-partition stage in: $plan")
     assert(!plan.contains("CartesianProduct"), plan)
+    // executed: the shard walk runs on min(#shards, parallelism) tasks,
+    // its exchange never merged by adaptive execution
+    val p = spark.sparkContext.defaultParallelism
+    for (shards <- Seq(2, 16)) {
+      val idx = operators.Hnsw.build(emb, "vec_id", "embedding", numShards = shards)
+      val (st, busy) = byNumberStage(operators.Hnsw.searchBatch(idx, qs, k = 5)) {
+        case _: ShufflePartitionIdPassThrough => true
+        case _ => false
+      }
+      assert(st.shuffle.numPartitions == p, s"walk exchange has ${st.shuffle.numPartitions} partitions")
+      assert(busy == math.min(shards, p),
+        s"$shards shards walked on $busy tasks, want ${math.min(shards, p)}")
+    }
+  }
+
+  test("IVF kNN join pass 2 runs on `parallelism` tasks — its qid exchange is never merged") {
+    val p = spark.sparkContext.defaultParallelism
+    val emb = Tables.read(spark, dir, "embeddings").filter(col("vec_id") < 400)
+    val model = operators.Ivf.build(emb, "embedding", 8, 7L, 5)
+    val qs = emb.filter(col("vec_id") < 64)
+      .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
+    val (st, busy) = byNumberStage(operators.Ivf.knnJoin(model, qs, "qvec", "qid", 5)) {
+      case h: HashPartitioning => h.expressions.map(_.toString).exists(_.startsWith("qid"))
+      case _ => false
+    }
+    assert(st.shuffle.numPartitions == p, s"pass-2 exchange has ${st.shuffle.numPartitions} partitions")
+    assert(busy == p, s"pass 2 ran on $busy non-empty tasks, want $p")
   }
 
   test("q1_agg_typed keeps double sums in whole-stage codegen — no decimal anywhere") {

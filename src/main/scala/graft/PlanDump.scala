@@ -9,7 +9,8 @@ import org.apache.spark.sql.functions._
   * (the AeFixpoint contract materializes results inside the operator,
   * so `plans/<query>_after.txt` shows only a `Scan ExistingRDD`).
   * Usage: `runMain graft.PlanDump <scenario> [sfDir]`; the committed
-  * files under `plans/r16/` are reproduced by the scenarios below.
+  * files under `plans/r16/` are reproduced by the scenarios below, except
+  * `v_distances2_before.txt`, whose boxed distance UDFs no longer exist.
   * Scenarios suffixed `_r15` rebuild the PRE-r16 stage shape inline
   * (copied verbatim from the r15 tree) so before/after pairs come from
   * the same tool on the same box. */
@@ -55,27 +56,7 @@ object PlanDump {
     "community_labelprop_rounds_r15" -> (labelPropRoundR15(_, _)),
     // v_distances2 as the registry builds it today (native long-tail
     // expressions, r16) — the query-level plan, no checkpoint to hide it
-    "v_distances2" -> { (s, dir) => SparkEntry.queries("v_distances2")(s, dir) },
-    // ...and as r15 built it: the boxed-Seq UDF per metric, verbatim
-    // from SparkEntry.vDistances2@16e86ec
-    "v_distances2_r15" -> { (s, dir) =>
-      import graft.functions.{VectorFunctions => VF}
-      val q = Tables.read(s, dir, "embeddings")
-        .filter(col("vec_id") === 0L).select(col("embedding"))
-        .head().getSeq[Float](0).toArray
-      val qc = lit(q)
-      Tables.read(s, dir, "embeddings")
-        .select(
-          col("vec_id"),
-          round(VF.jaccardUdf(col("embedding"), qc), 6).as("jaccard"),
-          round(VF.diceUdf(col("embedding"), qc), 6).as("dice"),
-          round(VF.canberraUdf(col("embedding"), qc), 6).as("canberra"),
-          round(VF.brayCurtisUdf(col("embedding"), qc), 6).as("braycurtis"),
-          round(VF.sokalMichenerUdf(col("embedding"), qc), 6).as("sokal"),
-          round(VF.rogersTanimotoUdf(col("embedding"), qc), 6).as("rogers"),
-          round(VF.russellRaoUdf(col("embedding"), qc), 6).as("russell"),
-          round(VF.matchingCoefficientUdf(col("embedding"), qc), 6).as("matching"))
-    }
+    "v_distances2" -> { (s, dir) => SparkEntry.queries("v_distances2")(s, dir) }
   )
 
   def main(args: Array[String]): Unit = {

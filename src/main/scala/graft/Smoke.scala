@@ -1,20 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.lit
 
 /** Local smoke driver: runs the flagship `entry` query plus a couple of
   * error-contract probes. Mirrors what the round driver smoke-checks. */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.localMeasurement("4")
 
     val e = SparkEntry.entry(spark)
     println("ENTRY_ROWS=" + e.count())
@@ -22,7 +14,7 @@ object Smoke {
 
     // dim-mismatch must raise (NeuronDB/src/core/distance.c:27-36)
     try {
-      spark.range(1).select(functions.VectorFunctions.l2Udf(
+      spark.range(1).select(plans.DistanceExpressions.l2(
         lit(Array(1f, 2f)), lit(Array(1f, 2f, 3f)))).collect()
       println("PROBE_DIM=NO_ERROR")
     } catch {

@@ -38,7 +38,7 @@ object SparkEntry {
       .withColumn("embedding", Embeddings.embed_text(col("text"), lit("all-MiniLM-L6-v2")))
     val qv = Embeddings.embedText("fast query sort merge join", "all-MiniLM-L6-v2")
     docs
-      .withColumn("dist", VF.cosineUdf(col("embedding"), lit(qv)))
+      .withColumn("dist", DE.cosine(col("embedding"), lit(qv)))
       .orderBy(col("dist"), col("doc_id"))
       .select(col("doc_id"), col("text"), round(col("dist"), 6).as("dist"))
       .limit(10)
@@ -271,9 +271,9 @@ object SparkEntry {
         DE.chebyshev(col("embedding"), qc).cast("float").as("chebyshev"),
         DE.squaredL2(col("embedding"), qc).cast("float").as("sq_l2"),
         // minkowski keeps the UDF: its p-shortcut dispatch is scalar-arg
-        // logic the 2-arg native family doesn't model (r16 note)
+        // logic the two-vector DistanceExpr does not model
         VF.minkowskiUdf(col("embedding"), qc, lit(3.0)).cast("float").as("minkowski3"),
-        // LONG, not the UDF's double: the oracle's len() is BIGINT and the
+        // LONG, not the kernel's double: the oracle's len() is BIGINT and the
         // driver's hash comparator is type-sensitive (37.0 != 37) — this,
         // not float rounding, was the r7/r8 red row.
         DE.hamming(col("embedding"), qc).cast("long").as("hamming"))
@@ -784,8 +784,8 @@ object SparkEntry {
     val q = qvec(s, dir)
     val e = Tables.read(s, dir, "embeddings")
       .select(col("vec_id"),
-        (-VF.l2Udf(col("embedding"), lit(q))).as("s1"),
-        (-VF.ipUdf(col("embedding"), lit(q))).as("s2"))
+        (-DE.l2(col("embedding"), lit(q))).as("s1"),
+        (-DE.innerProduct(col("embedding"), lit(q))).as("s2"))
     operators.Rerank.ensembleWeighted(e, Seq("s1", "s2"), Seq(0.6, 0.4))
       .select(col("vec_id"), round(col("ensemble_score"), 6).as("score"))
   }
@@ -1618,8 +1618,8 @@ object SparkEntry {
   private def bordaRerank(s: SparkSession, dir: String): DataFrame = {
     val q = qvec(s, dir)
     val e = Tables.read(s, dir, "embeddings")
-      .withColumn("d_l2", VF.l2Udf(col("embedding"), lit(q)))
-      .withColumn("d_ip", VF.ipUdf(col("embedding"), lit(q)))
+      .withColumn("d_l2", DE.l2(col("embedding"), lit(q)))
+      .withColumn("d_ip", DE.innerProduct(col("embedding"), lit(q)))
     operators.Rerank.ensembleBorda(e, "vec_id", Seq(("d_l2", false), ("d_ip", false)))
       .select(col("vec_id"), col("borda_score"))
   }

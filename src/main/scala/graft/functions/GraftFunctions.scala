@@ -1,6 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.classic.GraftShim
+import graft.plans.{DistanceExpr, Metric}
 
 /** One-call registration of the full SQL function surface — the analog of
   * installing the reference extension (`CREATE EXTENSION neurondb`). After
@@ -9,6 +11,7 @@ import org.apache.spark.sql.SparkSession
 object GraftFunctions {
   def registerAll(spark: SparkSession): Unit = {
     VectorFunctions.register(spark)
+    Metric.all.foreach(m => GraftShim.registerBinary(spark, m.sqlName)(DistanceExpr(m, _, _)))
     VectorAggregates.register(spark)
     Embeddings.register(spark)
     TextFunctions.register(spark)

@@ -6,21 +6,18 @@ import org.apache.spark.sql.functions.udf
 
 /**
  * Column-level API + SQL registration for the vector kernels in
- * [[VectorOps]]. Mirrors the SQL function surface installed by
- * `NeuronDB/neurondb--1.0.sql` (`vector_l2_distance` et al.) so that a
- * reference user can translate queries 1:1.
+ * [[VectorOps]] that have no native node. Mirrors the SQL function
+ * surface installed by `NeuronDB/neurondb--1.0.sql` so that a reference
+ * user can translate queries 1:1; the 16 two-vector distances
+ * (`vector_l2_distance` et al.) are registered by
+ * `GraftFunctions.registerAll` as the native [[graft.plans.DistanceExpr]]
+ * instead (see [[graft.plans.Metric]]).
  *
  * NULL semantics: the reference declares these functions STRICT (NULL in
- * → NULL out, `neurondb--1.0.sql`), and the native Catalyst expressions
- * in `graft.plans` inherit the same behavior from `BinaryExpression`'s
- * null-safe eval — so every UDF here propagates NULL instead of crashing,
- * keeping the SQL surface identical whether or not `PromoteDistanceUdfs`
- * rewrites a call. (NULL *elements* inside a vector are still an error on
- * both paths: silently reading them as 0.0 would corrupt distances.)
- *
- * All functions are plain Scala UDFs over `array<float>` columns; the four
- * hot distances also exist as codegen'd Catalyst expressions (see
- * `graft.plans`) which [[Vectors.dist]] prefers.
+ * → NULL out, `neurondb--1.0.sql`), so every UDF here propagates NULL
+ * instead of crashing, as the native distance node does. (NULL *elements*
+ * inside a vector are an error: silently reading them as 0.0 would
+ * corrupt results.)
  */
 object VectorFunctions {
 
@@ -40,29 +37,13 @@ object VectorFunctions {
   private def aS(f: (Array[Float], Double) => Array[Float]): UserDefinedFunction =
     udf((a: Seq[Float], s: Double) => if (a == null) null else f(a.toArray, s))
 
-  // -- distances ---------------------------------------------------------
-  val l2Udf: UserDefinedFunction = d2(VectorOps.l2)
-  val squaredL2Udf: UserDefinedFunction = d2(VectorOps.squaredL2)
-  val ipUdf: UserDefinedFunction = d2(VectorOps.innerProductDistance)
-  val dotUdf: UserDefinedFunction = d2(VectorOps.dot)
-  val cosineUdf: UserDefinedFunction = d2(VectorOps.cosineDistance)
+  // -- distances without a native node ----------------------------------
   val cosineSimUdf: UserDefinedFunction = d2(VectorOps.cosineSimilarity)
-  val l1Udf: UserDefinedFunction = d2(VectorOps.l1)
-  val hammingUdf: UserDefinedFunction = d2(VectorOps.hamming)
-  val chebyshevUdf: UserDefinedFunction = d2(VectorOps.chebyshev)
   val minkowskiUdf: UserDefinedFunction = udf((a: Seq[Float], b: Seq[Float], p: Double) =>
     if (a == null || b == null) None else Some(VectorOps.minkowski(a.toArray, b.toArray, p)))
-  val jaccardUdf: UserDefinedFunction = d2(VectorOps.jaccard)
-  val diceUdf: UserDefinedFunction = d2(VectorOps.dice)
   val mahalanobisUdf: UserDefinedFunction = udf((a: Seq[Float], b: Seq[Float], c: Seq[Float]) =>
     if (a == null || b == null || c == null) None
     else Some(VectorOps.mahalanobis(a.toArray, b.toArray, c.toArray)))
-  val brayCurtisUdf: UserDefinedFunction = d2(VectorOps.brayCurtis)
-  val canberraUdf: UserDefinedFunction = d2(VectorOps.canberra)
-  val sokalMichenerUdf: UserDefinedFunction = d2(VectorOps.sokalMichener)
-  val rogersTanimotoUdf: UserDefinedFunction = d2(VectorOps.rogersTanimoto)
-  val russellRaoUdf: UserDefinedFunction = d2(VectorOps.russellRao)
-  val matchingCoefficientUdf: UserDefinedFunction = d2(VectorOps.matchingCoefficient)
 
   // -- norms / transforms ------------------------------------------------
   val normUdf: UserDefinedFunction = d1(VectorOps.norm)
@@ -157,26 +138,10 @@ object VectorFunctions {
     if (a == null) null else VectorOps.castDimension(a.toArray, d))
 
   private val byName: Map[String, UserDefinedFunction] = Map(
-    "vector_l2_distance" -> l2Udf,
-    "vector_squared_l2_distance" -> squaredL2Udf,
-    "vector_inner_product" -> ipUdf,
-    "vector_dot" -> dotUdf,
-    "vector_cosine_distance" -> cosineUdf,
     "vector_cosine_similarity" -> cosineSimUdf,
     "vector_similarity" -> cosineSimUdf,
-    "vector_l1_distance" -> l1Udf,
-    "vector_hamming_distance" -> hammingUdf,
-    "vector_chebyshev_distance" -> chebyshevUdf,
     "vector_minkowski_distance" -> minkowskiUdf,
-    "vector_jaccard_distance" -> jaccardUdf,
-    "vector_dice_distance" -> diceUdf,
     "vector_mahalanobis_distance" -> mahalanobisUdf,
-    "vector_bray_curtis_distance" -> brayCurtisUdf,
-    "vector_canberra_distance" -> canberraUdf,
-    "vector_sokal_michener_distance" -> sokalMichenerUdf,
-    "vector_rogers_tanimoto_distance" -> rogersTanimotoUdf,
-    "vector_russell_rao_distance" -> russellRaoUdf,
-    "vector_matching_coefficient" -> matchingCoefficientUdf,
     "vector_norm" -> normUdf,
     "vector_normalize" -> normalizeUdf,
     "vector_add" -> addUdf,

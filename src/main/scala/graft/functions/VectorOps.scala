@@ -245,23 +245,6 @@ object VectorOps {
     if (a.length == 0) 0.0 else (n11 + n00).toDouble / a.length
   }
 
-  /** Dispatch used by kNN / IVF / search operators. */
-  def distance(metric: String)(a: Array[Float], b: Array[Float]): Double = metric match {
-    case "l2" | "euclidean"        => l2(a, b)
-    case "sq_l2" | "squared_l2"    => squaredL2(a, b)
-    case "ip" | "inner_product"    => innerProductDistance(a, b)
-    case "cosine"                  => cosineDistance(a, b)
-    case "l1" | "manhattan" | "cityblock" => l1(a, b)
-    case "hamming"                 => hamming(a, b).toDouble
-    case "chebyshev"               => chebyshev(a, b)
-    case "jaccard"                 => jaccard(a, b)
-    case "dice"                    => dice(a, b)
-    case "braycurtis"              => brayCurtis(a, b)
-    case "canberra"                => canberra(a, b)
-    case other =>
-      throw new IllegalArgumentException(s"unknown distance metric: $other")
-  }
-
   // ---------------------------------------------------------------------
   // Norms / normalization (NeuronDB/neurondb--1.0.sql:342-347)
   // ---------------------------------------------------------------------

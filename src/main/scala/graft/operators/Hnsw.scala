@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.functions.VectorOps
+import graft.plans.Metric
 
 /**
  * HNSW ANN index (`NeuronDB/src/index/hnsw_am.c`, 3,044 LoC: handler
@@ -49,12 +49,12 @@ object Hnsw {
     * no driver-side state. */
   case class Node(shard: Int, id: Long, vec: Seq[Float], nbrs: Seq[Seq[Long]])
 
+  /** The `Array[Float]` kernel of `metric`; the graph supports l2, cosine
+    * and inner product. */
   private[operators] def distFn(metric: String): (Array[Float], Array[Float]) => Double =
-    metric match {
-      case "l2" | "euclidean"     => VectorOps.l2
-      case "cosine"               => VectorOps.cosineDistance
-      case "ip" | "inner_product" => VectorOps.innerProductDistance
-      case other => throw new IllegalArgumentException(s"unknown metric: $other")
+    Metric.get(metric) match {
+      case Some(m @ (Metric.L2 | Metric.Cosine | Metric.InnerProduct)) => m.arrayKernel
+      case _ => throw new IllegalArgumentException(s"unknown metric: $metric")
     }
 
   private def mix64(x: Long): Long = {

@@ -449,7 +449,7 @@ object Ivf {
   def knnJoin(model: IvfModel, queries: DataFrame, qVecCol: String, qIdCol: String,
               k: Int, metric: String = "l2", initProbes: Int = 4,
               tieBreak: Seq[String] = Nil): DataFrame = {
-    require(metric == "l2" || metric == "euclidean",
+    require(graft.plans.Metric.get(metric).contains(graft.plans.Metric.L2),
       s"knnJoin bounds need a metric space; got $metric (map cosine to normalized-L2 first)")
     val spark = queries.sparkSession
     val bc = spark.sparkContext.broadcast(model.centroids)

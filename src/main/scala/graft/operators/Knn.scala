@@ -21,18 +21,11 @@ import graft.functions.{VectorFunctions => VF, VectorOps}
  */
 object Knn {
 
-  /** Hot metrics go through native Catalyst expressions (no per-element
-    * boxing, codegen-friendly — see graft.plans.DistanceExpressions);
-    * long-tail metrics stay UDFs. Same kernels, identical results. */
-  def distCol(metric: String)(a: Column, b: Column): Column = metric match {
-    case "l2" | "euclidean"     => graft.plans.DistanceExpressions.l2(a, b)
-    case "cosine"               => graft.plans.DistanceExpressions.cosine(a, b)
-    case "ip" | "inner_product" => graft.plans.DistanceExpressions.innerProduct(a, b)
-    case "l1" | "manhattan"     => graft.plans.DistanceExpressions.l1(a, b)
-    case "hamming"              => graft.plans.DistanceExpressions.hamming(a, b)
-    case "chebyshev"            => graft.plans.DistanceExpressions.chebyshev(a, b)
-    case other => throw new IllegalArgumentException(s"unknown metric: $other")
-  }
+  /** The native distance node ([[graft.plans.DistanceExpr]]) of the
+    * metric named `metric`, one of the aliases in [[graft.plans.Metric]]
+    * (`l2`, `cosine`, `ip`, `l1`, `hamming`, …). */
+  def distCol(metric: String)(a: Column, b: Column): Column =
+    graft.plans.DistanceExpressions.dist(graft.plans.Metric(metric))(a, b)
 
   /** Exact brute-force top-k: one scan, per-partition heap, driver merge.
     * `tieBreak` columns pin the order among equal distances — essential

@@ -1,56 +1,97 @@
 package graft.plans
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, Literal, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ImplicitCastInputTypes, Literal, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
 
 /**
- * Native Catalyst expressions for the four hot distance kernels
- * (SURVEY §4 "promote the hot distances to Expression if bench demands").
- *
- * Why not the Scala UDFs in [[graft.functions.VectorFunctions]]: a UDF
- * over `array<float>` deserializes into `Seq[Float]` — one boxed
- * `java.lang.Float` per element per row.
- *
- * r15 optimization (guide §1.2 "per-task work", measured against the
- * r15 baseline): the expressions no longer copy each side into an
- * `Array[Float]` per evaluation (`toFloatArray()` = one allocation +
- * bulk copy per side per ROW-PAIR — at 10⁷⁺ pair evaluations in the
- * blocked similarity joins that was the dominant allocation source).
- * The kernels below read the columnar `ArrayData` IN PLACE via
- * `getFloat(i)`; the arithmetic (double upcast, accumulation order,
- * Kahan compensation for L2) is copied verbatim from
- * [[graft.functions.VectorOps]], so results are bit-identical — the
- * oracle gate re-proved 375/375 at three SFs on this change. The
- * `Array[Float]` kernels in VectorOps stay: driver-side routing and the
- * long-tail UDF metrics still use them.
- *
- * Codegen: the generated code calls straight into the static kernel,
- * keeping the expression inside whole-stage codegen spans instead of
- * falling back to interpreted eval.
+ * One distance metric: the SQL name it is registered under, the names the
+ * search operators (`Knn.distCol`, `Hnsw.distFn`, `Ivf.knnJoin`) accept
+ * for it, and its two kernels — the static `ArrayData` kernel on
+ * [[DistanceExpressions]] (named for generated code, held for interpreted
+ * eval) and the [[graft.functions.VectorOps]] `Array[Float]` kernel that
+ * the HNSW walk and IVF routing call. Both kernels have the same
+ * arithmetic (double upcast, accumulation order, Kahan compensation for
+ * L2), so the two paths give bit-identical results.
  */
-abstract class FloatArrayBinaryExpression extends BinaryExpression {
+sealed abstract class Metric(
+    val sqlName: String,
+    val aliases: Seq[String],
+    val kernel: String,
+    val dataKernel: (ArrayData, ArrayData, Boolean, Boolean) => Double,
+    val arrayKernel: (Array[Float], Array[Float]) => Double) extends Serializable
+
+object Metric {
+  import graft.plans.{DistanceExpressions => DE}
+  import graft.functions.{VectorOps => VO}
+
+  case object L2 extends Metric("vector_l2_distance", Seq("l2", "euclidean"),
+    "l2Data", DE.l2Data, VO.l2)
+  case object SquaredL2 extends Metric("vector_squared_l2_distance", Seq("sq_l2", "squared_l2"),
+    "squaredL2Data", DE.squaredL2Data, VO.squaredL2)
+  case object Cosine extends Metric("vector_cosine_distance", Seq("cosine"),
+    "cosineData", DE.cosineData, VO.cosineDistance)
+  case object InnerProduct extends Metric("vector_inner_product", Seq("ip", "inner_product"),
+    "innerProductData", DE.innerProductData, VO.innerProductDistance)
+  case object Dot extends Metric("vector_dot", Nil,
+    "dotData", DE.dotData, VO.dot)
+  case object L1 extends Metric("vector_l1_distance", Seq("l1", "manhattan", "cityblock"),
+    "l1Data", DE.l1Data, VO.l1)
+  case object Chebyshev extends Metric("vector_chebyshev_distance", Seq("chebyshev"),
+    "chebyshevData", DE.chebyshevData, VO.chebyshev)
+  case object Hamming extends Metric("vector_hamming_distance", Seq("hamming"),
+    "hammingData", DE.hammingData, VO.hamming(_, _).toDouble)
+  case object Jaccard extends Metric("vector_jaccard_distance", Seq("jaccard"),
+    "jaccardData", DE.jaccardData, VO.jaccard)
+  case object Dice extends Metric("vector_dice_distance", Seq("dice"),
+    "diceData", DE.diceData, VO.dice)
+  case object BrayCurtis extends Metric("vector_bray_curtis_distance", Seq("braycurtis"),
+    "brayCurtisData", DE.brayCurtisData, VO.brayCurtis)
+  case object Canberra extends Metric("vector_canberra_distance", Seq("canberra"),
+    "canberraData", DE.canberraData, VO.canberra)
+  case object SokalMichener extends Metric("vector_sokal_michener_distance", Nil,
+    "sokalMichenerData", DE.sokalMichenerData, VO.sokalMichener)
+  case object RogersTanimoto extends Metric("vector_rogers_tanimoto_distance", Nil,
+    "rogersTanimotoData", DE.rogersTanimotoData, VO.rogersTanimoto)
+  case object RussellRao extends Metric("vector_russell_rao_distance", Nil,
+    "russellRaoData", DE.russellRaoData, VO.russellRao)
+  case object MatchingCoefficient extends Metric("vector_matching_coefficient", Nil,
+    "matchingCoefficientData", DE.matchingCoefficientData, VO.matchingCoefficient)
+
+  val all: Seq[Metric] = Seq(L2, SquaredL2, Cosine, InnerProduct, Dot, L1, Chebyshev, Hamming,
+    Jaccard, Dice, BrayCurtis, Canberra, SokalMichener, RogersTanimoto, RussellRao,
+    MatchingCoefficient)
+
+  private val byAlias: Map[String, Metric] = all.flatMap(m => m.aliases.map(_ -> m)).toMap
+
+  def get(name: String): Option[Metric] = byAlias.get(name)
+
+  def apply(name: String): Metric =
+    get(name).getOrElse(throw new IllegalArgumentException(s"unknown metric: $name"))
+}
+
+/**
+ * The native Catalyst node for every [[Metric]]; `GraftFunctions.registerAll`
+ * registers each metric's SQL name as a builder of it, so SQL and the
+ * Column API build the same node at analysis time. It reads the columnar
+ * `ArrayData` in place (a UDF over `array<float>` would deserialize one
+ * boxed `java.lang.Float` per element per row), and generated code calls
+ * the metric's static kernel directly, keeping the node inside
+ * whole-stage codegen.
+ *
+ * STRICT like the reference's C functions: a NULL vector gives NULL. The
+ * metric is part of the node's equality, so common-subexpression
+ * elimination never merges two metrics over the same pair; it is left out
+ * of the printed form, which reads `vector_l2_distance(a, b)`.
+ */
+case class DistanceExpr(metric: Metric, left: Expression, right: Expression)
+    extends BinaryExpression with ImplicitCastInputTypes {
+  override def prettyName: String = metric.sqlName
   override def dataType: DataType = DoubleType
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    def ok(t: DataType) = t match {
-      case ArrayType(FloatType, _) => true
-      case _ => false
-    }
-    if (ok(left.dataType) && ok(right.dataType))
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires two array<float> arguments, " +
-        s"got ${left.dataType.catalogString} and ${right.dataType.catalogString}")
-  }
-
-  /** Static binary kernel on DistanceExpressions to invoke. */
-  protected def kernel: String
-
-  /** The kernel; `nullsA`/`nullsB` say whether each side must be scanned for
-    * null elements. */
-  protected def eval2(a: ArrayData, b: ArrayData, nullsA: Boolean, nullsB: Boolean): Double
+  override def inputTypes: Seq[ArrayType] = Seq(DistanceExpr.Vec, DistanceExpr.Vec)
+  override protected def stringArgs: Iterator[Any] = Iterator(left, right)
 
   // decided once per plan: the per-pair null scan runs only on a side
   // that can hold a null element
@@ -58,147 +99,21 @@ abstract class FloatArrayBinaryExpression extends BinaryExpression {
   private lazy val rightNulls = DistanceExpressions.mayHoldNulls(right)
 
   override def nullSafeEval(a: Any, b: Any): Any =
-    eval2(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData], leftNulls, rightNulls)
+    metric.dataKernel(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData], leftNulls, rightNulls)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.plans.DistanceExpressions.$kernel($a, $b, $leftNulls, $rightNulls);")
+      s"${ev.value} = graft.plans.DistanceExpressions.${metric.kernel}($a, $b, $leftNulls, $rightNulls);")
+
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
+    copy(left = l, right = r)
 }
 
-case class L2DistanceExpr(left: Expression, right: Expression) extends FloatArrayBinaryExpression {
-  override def prettyName: String = "vector_l2_distance"
-  protected def kernel: String = "l2Data"
-  protected def eval2(a: ArrayData, b: ArrayData, nullsA: Boolean, nullsB: Boolean): Double =
-    DistanceExpressions.l2Data(a, b, nullsA, nullsB)
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
-}
-
-case class CosineDistanceExpr(left: Expression, right: Expression) extends FloatArrayBinaryExpression {
-  override def prettyName: String = "vector_cosine_distance"
-  protected def kernel: String = "cosineData"
-  protected def eval2(a: ArrayData, b: ArrayData, nullsA: Boolean, nullsB: Boolean): Double =
-    DistanceExpressions.cosineData(a, b, nullsA, nullsB)
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
-}
-
-case class InnerProductExpr(left: Expression, right: Expression) extends FloatArrayBinaryExpression {
-  override def prettyName: String = "vector_inner_product"
-  protected def kernel: String = "innerProductData"
-  protected def eval2(a: ArrayData, b: ArrayData, nullsA: Boolean, nullsB: Boolean): Double =
-    DistanceExpressions.innerProductData(a, b, nullsA, nullsB)
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
-}
-
-case class DotProductExpr(left: Expression, right: Expression) extends FloatArrayBinaryExpression {
-  override def prettyName: String = "vector_dot"
-  protected def kernel: String = "dotData"
-  protected def eval2(a: ArrayData, b: ArrayData, nullsA: Boolean, nullsB: Boolean): Double =
-    DistanceExpressions.dotData(a, b, nullsA, nullsB)
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
-}
-
-case class L1DistanceExpr(left: Expression, right: Expression) extends FloatArrayBinaryExpression {
-  override def prettyName: String = "vector_l1_distance"
-  protected def kernel: String = "l1Data"
-  protected def eval2(a: ArrayData, b: ArrayData, nullsA: Boolean, nullsB: Boolean): Double =
-    DistanceExpressions.l1Data(a, b, nullsA, nullsB)
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
-}
-
-// r16 (VERDICT r15 ask #7): the LONG-TAIL metrics join the native
-// family. They were the last interpreted-UDF hot-loop shape in the
-// repo (one boxed java.lang.Float per element per row through the
-// Seq[Float] UDF boundary); the kernels below read the columnar
-// ArrayData in place with the arithmetic copied verbatim from
-// VectorOps, so results are bit-identical (oracle re-proven on
-// v_distances / v_distances2 / every kNN face).
-
-case class SquaredL2DistanceExpr(left: Expression, right: Expression) extends FloatArrayBinaryExpression {
-  override def prettyName: String = "vector_squared_l2_distance"
-  protected def kernel: String = "squaredL2Data"
-  protected def eval2(a: ArrayData, b: ArrayData, nullsA: Boolean, nullsB: Boolean): Double =
-    DistanceExpressions.squaredL2Data(a, b, nullsA, nullsB)
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
-}
-
-case class ChebyshevDistanceExpr(left: Expression, right: Expression) extends FloatArrayBinaryExpression {
-  override def prettyName: String = "vector_chebyshev_distance"
-  protected def kernel: String = "chebyshevData"
-  protected def eval2(a: ArrayData, b: ArrayData, nullsA: Boolean, nullsB: Boolean): Double =
-    DistanceExpressions.chebyshevData(a, b, nullsA, nullsB)
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
-}
-
-case class HammingDistanceExpr(left: Expression, right: Expression) extends FloatArrayBinaryExpression {
-  override def prettyName: String = "vector_hamming_distance"
-  protected def kernel: String = "hammingData"
-  protected def eval2(a: ArrayData, b: ArrayData, nullsA: Boolean, nullsB: Boolean): Double =
-    DistanceExpressions.hammingData(a, b, nullsA, nullsB)
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
-}
-
-case class JaccardDistanceExpr(left: Expression, right: Expression) extends FloatArrayBinaryExpression {
-  override def prettyName: String = "vector_jaccard_distance"
-  protected def kernel: String = "jaccardData"
-  protected def eval2(a: ArrayData, b: ArrayData, nullsA: Boolean, nullsB: Boolean): Double =
-    DistanceExpressions.jaccardData(a, b, nullsA, nullsB)
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
-}
-
-case class DiceDistanceExpr(left: Expression, right: Expression) extends FloatArrayBinaryExpression {
-  override def prettyName: String = "vector_dice_distance"
-  protected def kernel: String = "diceData"
-  protected def eval2(a: ArrayData, b: ArrayData, nullsA: Boolean, nullsB: Boolean): Double =
-    DistanceExpressions.diceData(a, b, nullsA, nullsB)
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
-}
-
-case class BrayCurtisDistanceExpr(left: Expression, right: Expression) extends FloatArrayBinaryExpression {
-  override def prettyName: String = "vector_bray_curtis_distance"
-  protected def kernel: String = "brayCurtisData"
-  protected def eval2(a: ArrayData, b: ArrayData, nullsA: Boolean, nullsB: Boolean): Double =
-    DistanceExpressions.brayCurtisData(a, b, nullsA, nullsB)
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
-}
-
-case class CanberraDistanceExpr(left: Expression, right: Expression) extends FloatArrayBinaryExpression {
-  override def prettyName: String = "vector_canberra_distance"
-  protected def kernel: String = "canberraData"
-  protected def eval2(a: ArrayData, b: ArrayData, nullsA: Boolean, nullsB: Boolean): Double =
-    DistanceExpressions.canberraData(a, b, nullsA, nullsB)
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
-}
-
-case class SokalMichenerDistanceExpr(left: Expression, right: Expression) extends FloatArrayBinaryExpression {
-  override def prettyName: String = "vector_sokal_michener_distance"
-  protected def kernel: String = "sokalMichenerData"
-  protected def eval2(a: ArrayData, b: ArrayData, nullsA: Boolean, nullsB: Boolean): Double =
-    DistanceExpressions.sokalMichenerData(a, b, nullsA, nullsB)
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
-}
-
-case class RogersTanimotoDistanceExpr(left: Expression, right: Expression) extends FloatArrayBinaryExpression {
-  override def prettyName: String = "vector_rogers_tanimoto_distance"
-  protected def kernel: String = "rogersTanimotoData"
-  protected def eval2(a: ArrayData, b: ArrayData, nullsA: Boolean, nullsB: Boolean): Double =
-    DistanceExpressions.rogersTanimotoData(a, b, nullsA, nullsB)
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
-}
-
-case class RussellRaoDistanceExpr(left: Expression, right: Expression) extends FloatArrayBinaryExpression {
-  override def prettyName: String = "vector_russell_rao_distance"
-  protected def kernel: String = "russellRaoData"
-  protected def eval2(a: ArrayData, b: ArrayData, nullsA: Boolean, nullsB: Boolean): Double =
-    DistanceExpressions.russellRaoData(a, b, nullsA, nullsB)
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
-}
-
-case class MatchingCoefficientExpr(left: Expression, right: Expression) extends FloatArrayBinaryExpression {
-  override def prettyName: String = "vector_matching_coefficient"
-  protected def kernel: String = "matchingCoefficientData"
-  protected def eval2(a: ArrayData, b: ArrayData, nullsA: Boolean, nullsB: Boolean): Double =
-    DistanceExpressions.matchingCoefficientData(a, b, nullsA, nullsB)
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
+object DistanceExpr {
+  /** Any float array is accepted as is (a null element fails in the
+    * kernel); another numeric array is cast when its type rules out null
+    * elements. */
+  private val Vec = ArrayType(FloatType, containsNull = false)
 }
 
 /** Squared L2 norm Σ vᵢ² of one array<float> vector, accumulated in
@@ -225,6 +140,10 @@ case class NormSqExpr(child: Expression) extends UnaryExpression {
   override protected def withNewChildInternal(c: Expression): Expression = copy(c)
 }
 
+/** The static `ArrayData` kernels the [[Metric]] table names, each the
+  * arithmetic of its [[graft.functions.VectorOps]] twin reading the array
+  * in place via `getFloat(i)`, and the Column helpers that build
+  * [[DistanceExpr]]. */
 object DistanceExpressions {
 
   /** Whether `e`'s array<float> values can hold a null element: per its
@@ -248,9 +167,8 @@ object DistanceExpressions {
     }
   }
 
-  /** Same error contract as the pre-r15 `noNulls` + `checkDims` pair,
-    * in the same order: null elements rejected first (left side, then
-    * right), then the dimension check — `ArrayData.getFloat` would
+  /** The error contract, in order: null elements rejected first (left
+    * side, then right), then the dimension check — `ArrayData.getFloat` would
     * silently read a null slot as 0.0f, corrupting the distance. A side
     * whose type rules out null elements (`nullsA`/`nullsB` false) is not
     * scanned. */
@@ -313,8 +231,6 @@ object DistanceExpressions {
     while (i < n) { sum += math.abs(a.getFloat(i).toDouble - b.getFloat(i).toDouble); i += 1 }
     sum
   }
-
-  // ---- r16 long-tail kernels: VectorOps arithmetic verbatim, in place.
 
   /** max |aᵢ−bᵢ| — [[graft.functions.VectorOps.chebyshev]] verbatim. */
   def chebyshevData(a: ArrayData, b: ArrayData, nullsA: Boolean, nullsB: Boolean): Double = {
@@ -480,23 +396,26 @@ object DistanceExpressions {
   private def ex(c: Column): Expression =
     org.apache.spark.sql.classic.GraftShim.expression(c)
 
-  def l2(a: Column, b: Column): Column = toCol(L2DistanceExpr(ex(a), ex(b)))
-  def cosine(a: Column, b: Column): Column = toCol(CosineDistanceExpr(ex(a), ex(b)))
-  def innerProduct(a: Column, b: Column): Column = toCol(InnerProductExpr(ex(a), ex(b)))
-  def dot(a: Column, b: Column): Column = toCol(DotProductExpr(ex(a), ex(b)))
-  def l1(a: Column, b: Column): Column = toCol(L1DistanceExpr(ex(a), ex(b)))
+  private[graft] def dist(m: Metric)(a: Column, b: Column): Column =
+    toCol(DistanceExpr(m, ex(a), ex(b)))
+
+  def l2(a: Column, b: Column): Column = dist(Metric.L2)(a, b)
+  def cosine(a: Column, b: Column): Column = dist(Metric.Cosine)(a, b)
+  def innerProduct(a: Column, b: Column): Column = dist(Metric.InnerProduct)(a, b)
+  def dot(a: Column, b: Column): Column = dist(Metric.Dot)(a, b)
+  def l1(a: Column, b: Column): Column = dist(Metric.L1)(a, b)
   def normSq(a: Column): Column = toCol(NormSqExpr(ex(a)))
-  def squaredL2(a: Column, b: Column): Column = toCol(SquaredL2DistanceExpr(ex(a), ex(b)))
-  def chebyshev(a: Column, b: Column): Column = toCol(ChebyshevDistanceExpr(ex(a), ex(b)))
-  def hamming(a: Column, b: Column): Column = toCol(HammingDistanceExpr(ex(a), ex(b)))
-  def jaccard(a: Column, b: Column): Column = toCol(JaccardDistanceExpr(ex(a), ex(b)))
-  def dice(a: Column, b: Column): Column = toCol(DiceDistanceExpr(ex(a), ex(b)))
-  def brayCurtis(a: Column, b: Column): Column = toCol(BrayCurtisDistanceExpr(ex(a), ex(b)))
-  def canberra(a: Column, b: Column): Column = toCol(CanberraDistanceExpr(ex(a), ex(b)))
-  def sokalMichener(a: Column, b: Column): Column = toCol(SokalMichenerDistanceExpr(ex(a), ex(b)))
-  def rogersTanimoto(a: Column, b: Column): Column = toCol(RogersTanimotoDistanceExpr(ex(a), ex(b)))
-  def russellRao(a: Column, b: Column): Column = toCol(RussellRaoDistanceExpr(ex(a), ex(b)))
-  def matchingCoefficient(a: Column, b: Column): Column = toCol(MatchingCoefficientExpr(ex(a), ex(b)))
+  def squaredL2(a: Column, b: Column): Column = dist(Metric.SquaredL2)(a, b)
+  def chebyshev(a: Column, b: Column): Column = dist(Metric.Chebyshev)(a, b)
+  def hamming(a: Column, b: Column): Column = dist(Metric.Hamming)(a, b)
+  def jaccard(a: Column, b: Column): Column = dist(Metric.Jaccard)(a, b)
+  def dice(a: Column, b: Column): Column = dist(Metric.Dice)(a, b)
+  def brayCurtis(a: Column, b: Column): Column = dist(Metric.BrayCurtis)(a, b)
+  def canberra(a: Column, b: Column): Column = dist(Metric.Canberra)(a, b)
+  def sokalMichener(a: Column, b: Column): Column = dist(Metric.SokalMichener)(a, b)
+  def rogersTanimoto(a: Column, b: Column): Column = dist(Metric.RogersTanimoto)(a, b)
+  def russellRao(a: Column, b: Column): Column = dist(Metric.RussellRao)(a, b)
+  def matchingCoefficient(a: Column, b: Column): Column = dist(Metric.MatchingCoefficient)(a, b)
 
   /** Cosine distance assembled from a precomputed dot product and the
     * two sides' precomputed squared norms — the SAME double operations

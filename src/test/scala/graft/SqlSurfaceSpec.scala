@@ -165,16 +165,13 @@ class SqlSurfaceSpec extends SparkSpecBase {
   }
 
   test("null vector ELEMENTS error on both the UDF and the promoted native path") {
-    graft.plans.GraftOptimizations.install(spark)
     import spark.implicits._
-    // parquet round-trip: over a LocalRelation, ConvertToLocalRelation
-    // folds the projection before the experimental batch can promote it
     val dir = java.nio.file.Files.createTempDirectory("badvecs").toString
     Seq((Seq(Some(1.0f), None, Some(3.0f)), Seq(Some(1.0f), Some(2.0f), Some(3.0f))))
       .toDF("a", "b").write.mode("overwrite").parquet(dir)
     val bad = spark.read.parquet(dir)
     bad.createOrReplaceTempView("bad_vecs")
-    // SQL path (promoted to the native expression by the optimizer rule)
+    // SQL path (the registered name builds the native expression)
     val sqlDf = spark.sql("SELECT vector_l2_distance(a, b) FROM bad_vecs")
     assert(!sqlDf.queryExecution.optimizedPlan.toString.toLowerCase.contains("scalaudf"))
     val e1 = intercept[Exception](sqlDf.collect())

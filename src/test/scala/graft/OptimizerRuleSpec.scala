@@ -1,108 +1,87 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
-import graft.functions.{GraftFunctions, VectorFunctions => VF}
-import graft.plans.GraftOptimizations
+import graft.functions.GraftFunctions
+import graft.plans.{DistanceExpressions => DE, Metric}
 
+/** Optimizer rules never change a distance. The SQL distance names were
+  * once boxed UDFs that a rule rewrote into the native node; they now
+  * resolve to [[graft.plans.DistanceExpr]] directly, and these tests keep
+  * the results those UDFs gave: the SQL call, the Column helper and the
+  * [[graft.functions.VectorOps]] kernel the UDF wrapped agree bit for bit,
+  * whether Spark's `ConvertToLocalRelation`/`ConstantFolding` evaluate the
+  * node while optimizing or leave it to generated code. */
 class OptimizerRuleSpec extends SparkSpecBase {
   import spark.implicits._
+
+  private val sf = "/root/testdata/sf0.001"
 
   override def beforeAll(): Unit = {
     super.beforeAll()
     GraftFunctions.registerAll(spark)
-    GraftOptimizations.install(spark)
   }
 
-  test("SQL distance UDF calls are promoted to native expressions") {
-    Tables.read(spark, "/root/testdata/sf0.001", "embeddings")
-      .createOrReplaceTempView("emb_opt")
-    val df = spark.sql(
-      """SELECT vec_id, vector_l2_distance(embedding,
-        |  (SELECT first(embedding) FROM emb_opt WHERE vec_id = 0)) AS d
-        |FROM emb_opt""".stripMargin)
-    val optimized = df.queryExecution.optimizedPlan.toString
-    assert(!optimized.toLowerCase.contains("scalaudf"), optimized)
-    assert(optimized.contains("vector_l2_distance"), optimized)
-    // and it still computes the right thing
-    val d0 = df.filter($"vec_id" === 0).select("d").as[Double].head()
-    assert(d0 == 0.0)
-  }
+  private val foldingRules = Seq("ConvertToLocalRelation", "ConstantFolding")
+    .map("org.apache.spark.sql.catalyst.optimizer." + _).mkString(",")
+
+  private def bits(df: DataFrame): Map[Long, Long] =
+    df.as[(Long, Double)].collect()
+      .map { case (id, d) => id -> java.lang.Double.doubleToRawLongBits(d) }.toMap
+
+  private def kernelBits(m: Metric, rows: Seq[(Long, Array[Float])], q: Array[Float]) =
+    rows.map { case (id, v) => id -> java.lang.Double.doubleToRawLongBits(m.arrayKernel(v, q)) }
+      .toMap
+
+  private def embeddings(n: Int): Seq[(Long, Array[Float])] =
+    Tables.read(spark, sf, "embeddings").limit(n).select($"vec_id", $"embedding")
+      .as[(Long, Seq[Float])].collect().toSeq.map { case (id, v) => (id, v.toArray) }
 
   test("promotion preserves UDF results exactly") {
-    val e = Tables.read(spark, "/root/testdata/sf0.001", "embeddings").limit(50)
-    val q = Tables.queryVector(spark, "/root/testdata/sf0.001", 5L)
-    val viaUdf = e.select($"vec_id", VF.cosineUdf($"embedding", lit(q)).as("d"))
-      .as[(Long, Double)].collect().toMap
-    val viaExpr = e.select($"vec_id",
-      graft.plans.DistanceExpressions.cosine($"embedding", lit(q)).as("d"))
-      .as[(Long, Double)].collect().toMap
-    assert(viaUdf == viaExpr) // bit-identical, same kernels
+    val rows = embeddings(50)
+    val q = Tables.queryVector(spark, sf, 5L)
+    val want = kernelBits(Metric.Cosine, rows, q)
+    val local = rows.map { case (id, v) => (id, v, q) }.toDF("vec_id", "embedding", "q")
+    val sql = "vec_id" :: "vector_cosine_distance(embedding, q) AS d" :: Nil
+
+    // default rules: ConvertToLocalRelation evaluates the node while optimizing
+    val folded = local.selectExpr(sql: _*)
+    assert(folded.queryExecution.optimizedPlan.isInstanceOf[LocalRelation],
+      folded.queryExecution.optimizedPlan)
+    assert(bits(folded) == want)
+
+    // folding rules excluded: the node runs in generated code
+    val old = spark.conf.getOption("spark.sql.optimizer.excludedRules")
+    spark.conf.set("spark.sql.optimizer.excludedRules", foldingRules)
+    try {
+      val unfolded = local.selectExpr(sql: _*)
+      assert(!unfolded.queryExecution.optimizedPlan.isInstanceOf[LocalRelation],
+        unfolded.queryExecution.optimizedPlan)
+      assert(bits(unfolded) == want)
+    } finally old match {
+      case Some(v) => spark.conf.set("spark.sql.optimizer.excludedRules", v)
+      case None => spark.conf.unset("spark.sql.optimizer.excludedRules")
+    }
+
+    val e = Tables.read(spark, sf, "embeddings").filter($"vec_id".isin(rows.map(_._1): _*))
+    assert(bits(e.select($"vec_id", DE.cosine($"embedding", lit(q)))) == want)
   }
 
   test("r16 long-tail metrics: native expressions match the UDFs bit-for-bit") {
-    val e = Tables.read(spark, "/root/testdata/sf0.001", "embeddings").limit(80)
-    val q = Tables.queryVector(spark, "/root/testdata/sf0.001", 7L)
-    import graft.plans.{DistanceExpressions => DE}
-    val pairs: Seq[(String, org.apache.spark.sql.Column, org.apache.spark.sql.Column)] = Seq(
-      ("sq_l2", VF.squaredL2Udf($"embedding", lit(q)), DE.squaredL2($"embedding", lit(q))),
-      ("chebyshev", VF.chebyshevUdf($"embedding", lit(q)), DE.chebyshev($"embedding", lit(q))),
-      ("hamming", VF.hammingUdf($"embedding", lit(q)), DE.hamming($"embedding", lit(q))),
-      ("jaccard", VF.jaccardUdf($"embedding", lit(q)), DE.jaccard($"embedding", lit(q))),
-      ("dice", VF.diceUdf($"embedding", lit(q)), DE.dice($"embedding", lit(q))),
-      ("braycurtis", VF.brayCurtisUdf($"embedding", lit(q)), DE.brayCurtis($"embedding", lit(q))),
-      ("canberra", VF.canberraUdf($"embedding", lit(q)), DE.canberra($"embedding", lit(q))),
-      ("sokal", VF.sokalMichenerUdf($"embedding", lit(q)), DE.sokalMichener($"embedding", lit(q))),
-      ("rogers", VF.rogersTanimotoUdf($"embedding", lit(q)), DE.rogersTanimoto($"embedding", lit(q))),
-      ("russell", VF.russellRaoUdf($"embedding", lit(q)), DE.russellRao($"embedding", lit(q))),
-      ("matching", VF.matchingCoefficientUdf($"embedding", lit(q)), DE.matchingCoefficient($"embedding", lit(q))))
-    for ((name, u, x) <- pairs) {
-      val viaUdf = e.select($"vec_id", u.as("d")).as[(Long, Double)].collect().toMap
-      val viaExpr = e.select($"vec_id", x.as("d")).as[(Long, Double)].collect().toMap
-      assert(viaUdf == viaExpr, s"$name diverges between UDF and native expression")
+    import Metric._
+    val longTail = Seq(SquaredL2, Chebyshev, Hamming, Jaccard, Dice, BrayCurtis, Canberra,
+      SokalMichener, RogersTanimoto, RussellRao, MatchingCoefficient)
+    val rows = embeddings(80)
+    val q = Tables.queryVector(spark, sf, 7L)
+    val e = Tables.read(spark, sf, "embeddings").filter($"vec_id".isin(rows.map(_._1): _*))
+      .withColumn("q", lit(q))
+    for (m <- longTail) {
+      val want = kernelBits(m, rows, q)
+      val viaSql = bits(e.selectExpr("vec_id", s"${m.sqlName}(embedding, q) AS d"))
+      val viaColumn = bits(e.select($"vec_id", DE.dist(m)($"embedding", $"q")))
+      assert(viaSql == want, s"${m.sqlName} via SQL diverges from its VectorOps kernel")
+      assert(viaColumn == want, s"${m.sqlName} via Column diverges from its VectorOps kernel")
     }
-  }
-
-  test("r16 long-tail metrics keep the native error contract (null element, dim mismatch)") {
-    import graft.plans.{DistanceExpressions => DE}
-    val bad = Seq((1L, Seq(1.0f, 2.0f))).toDF("id", "v")
-    val shortQ = Array(1.0f, 2.0f, 3.0f)
-    val exDim = intercept[Exception] {
-      bad.select(DE.jaccard($"v", lit(shortQ))).collect()
-    }
-    assert(exDim.getMessage.contains("vector dimensions must match: 2 vs 3"),
-      exDim.getMessage)
-    // bray-curtis zero denominator / canberra all-zero stay loud
-    val zeros = Seq((1L, Seq(0.0f, 0.0f))).toDF("id", "v")
-    val z = Array(0.0f, 0.0f)
-    val exBc = intercept[Exception] {
-      zeros.select(DE.brayCurtis($"v", lit(z))).collect()
-    }
-    assert(exBc.getMessage.contains("zero denominator"), exBc.getMessage)
-    val exCan = intercept[Exception] {
-      zeros.select(DE.canberra($"v", lit(z))).collect()
-    }
-    assert(exCan.getMessage.contains("all-zero"), exCan.getMessage)
-  }
-
-  test("SQL calls of the r16 long-tail metrics are promoted (no ScalaUDF in plan)") {
-    Tables.read(spark, "/root/testdata/sf0.001", "embeddings")
-      .createOrReplaceTempView("emb_opt2")
-    val df = spark.sql(
-      """SELECT vec_id,
-        |  vector_jaccard_distance(embedding,
-        |    (SELECT first(embedding) FROM emb_opt2 WHERE vec_id = 0)) AS j,
-        |  vector_chebyshev_distance(embedding,
-        |    (SELECT first(embedding) FROM emb_opt2 WHERE vec_id = 0)) AS c
-        |FROM emb_opt2""".stripMargin)
-    val optimized = df.queryExecution.optimizedPlan.toString
-    assert(!optimized.toLowerCase.contains("scalaudf"), optimized)
-    assert(optimized.contains("vector_jaccard_distance") &&
-      optimized.contains("vector_chebyshev_distance"), optimized)
-  }
-
-  test("non-array or wrong-arity calls are left alone") {
-    // vector_norm is single-arg: not in the promotion table, stays a UDF
-    val df = spark.sql("SELECT vector_norm(array(3.0F, 4.0F)) AS n")
-    assert(df.head().getDouble(0) == 5.0)
   }
 }

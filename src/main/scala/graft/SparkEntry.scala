@@ -2620,7 +2620,7 @@ object SparkEntry {
     * (excluding self) is the POSITIVE and ranks 9–10 are the HARD
     * NEGATIVES (similar enough to teach the margin, far enough to be
     * wrong). The plan is the exact two-pass triangle-inequality
-    * `Ivf.knnJoin` (only centroids + radii broadcast — the 100 TB
+    * `Ivf.knnJoin` (nothing broadcast — the 100 TB
     * large×large shape), which provably returns the true top-k; the
     * oracle recomputes per-anchor ranks with a brute-force window. */
   private def hardNegativesQ(s: SparkSession, dir: String): DataFrame = {

@@ -39,9 +39,10 @@ object Extras {
   }
 
   /** [[knnClassify]] for train sides too big to broadcast: exact k-NN via
-    * the IVF radius-bound join ([[graft.operators.Ivf.knnJoin]]) — shuffle
-    * joins on `cluster_id`, nothing but centroids+radii broadcast — then
-    * the identical majority vote. Same results as the broadcast path. */
+    * the IVF radius-bound join ([[graft.operators.Ivf.knnJoin]]) — queries
+    * meet the train rows only in the posting-list blocks they probe,
+    * nothing broadcast — then the identical majority vote. Same results
+    * as the broadcast path. */
   def knnClassifyBlocked(train: DataFrame, test: DataFrame, vecCol: String, labelCol: String,
                          k: Int = 5, idCol: String = "id", nlists: Int = 16,
                          initProbes: Int = 4): DataFrame = {

@@ -246,8 +246,8 @@ object DataValuation {
    * the k nearest (self excluded), suspect = strict-minority agreement.
    *
    * Scale shape: rides the exact two-pass triangle-inequality
-   * [[Ivf.knnJoin]] — only centroids + radii broadcast, every
-   * candidate join is an equi-join on the posting list, so the
+   * [[Ivf.knnJoin]] — nothing broadcast, every query meets only the
+   * posting-list blocks it probes, so the
    * all-points-as-queries audit never goes \|N\|² (the oracle
    * brute-forces and must agree exactly).
    */

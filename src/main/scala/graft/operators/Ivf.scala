@@ -369,6 +369,9 @@ object Ivf {
    * product; the combine step is bit-identical to the fused kernel
    * (`DistanceExpressions.cosineFromParts`), so distances — and the
    * oracle hash — are unchanged while per-pair flops drop ~3×.
+   *
+   * The pair stage runs on `defaultParallelism` tasks: both sides move
+   * there by list, by number ([[byList]]).
    */
   def join(model: IvfModel, other: DataFrame, otherVecCol: String,
            metric: String = "l2", threshold: Double, nprobe: Int = 1,
@@ -396,7 +399,10 @@ object Ivf {
       (if (cosine) Seq(col("__r_nsq")) else Nil)
     val r = r0.withColumn("cluster_id", explode(probeUdf(col(otherVecCol))))
       .select((rCols :+ col("cluster_id")).toSeq: _*)
-    val joined0 = l.join(r, "cluster_id")
+    // the pair stage runs on P tasks: both sides move there by list
+    val parts = other.sparkSession.sparkContext.defaultParallelism
+    val joined0 = byList(l, parts).join(byList(r, parts), Seq("__part", "cluster_id"))
+      .drop("__part")
     val joined = pairFilter.map(joined0.filter).getOrElse(joined0)
     val dist =
       if (cosine) graft.plans.DistanceExpressions.cosineFromParts(
@@ -410,91 +416,65 @@ object Ivf {
       .drop("__l_nsq", "__r_nsq")
   }
 
-  /** Per-cluster covering radius, max over members of d(member, centroid):
-    * the bound that makes [[knnJoin]] exact. One tiny aggregate (nlists
-    * rows to the driver). */
-  def radii(model: IvfModel): Array[Double] = {
-    val bc = model.assigned.sparkSession.sparkContext.broadcast(model.centroids)
-    val dUdf = udf((v: Seq[Float], cid: Int) => VectorOps.l2(v.toArray, bc.value(cid)))
-    val rows = model.assigned
-      .select(col("cluster_id"), dUdf(col(model.vecCol), col("cluster_id")).as("d"))
-      .groupBy("cluster_id").agg(max("d").as("r"))
-      .collect()
-    val out = new Array[Double](model.centroids.length)
-    rows.foreach(r => out(r.getInt(0)) = r.getDouble(1))
-    out
-  }
+  /** Per-list covering radius, max over members of d(member, centroid):
+    * the bound that makes [[knnJoin]] exact. Read from the posting-list
+    * blocks [[knnJoin]] scans, so the radius has one definition (nlists
+    * values to the driver); a list with no rows reads 0. */
+  def radii(model: IvfModel): Array[Double] = IvfBlockJoin.radii(model)
+
+  /** `df` moved by number to `parts` partitions, list c to partition
+    * c mod `parts` (column `__part`): the lists spread evenly, and a join
+    * keyed on (`__part`, `cluster_id`) reads this partitioning as it is.
+    * Adaptive execution never merges a by-number exchange, and it must
+    * not here: these partitions are few bytes for a lot of pair work. */
+  private def byList(df: DataFrame, parts: Int): DataFrame =
+    df.withColumn("__part", pmod(col("cluster_id"), lit(parts)))
+      .repartitionById(parts, col("__part"))
 
   /**
    * EXACT distributed k-NN join — every query row gets its true k nearest
-   * train rows, with no broadcast of the train table (only centroids +
-   * radii, nlists-sized, are broadcast). The scale shape for
+   * train rows, with no broadcast of the train table. The scale shape for
    * `knn_classify`/`knn_regress`/`vec_join(k)` on large train sides.
    *
-   * Two passes, both shuffle joins on `cluster_id`:
-   *  1. probe the `initProbes` nearest posting lists → candidate k-th
-   *     distance D_k per query (an upper bound on the true k-th distance);
-   *  2. probe every cluster whose lower bound d(q,c) − radius(c) ≤ D_k —
-   *     by the triangle inequality that set contains ALL true top-k
-   *     members — and take the exact top-k inside it.
+   * The index's rows move by list to `defaultParallelism` partitions (list
+   * c on partition c mod P, a fixed count) as Spark binary rows, and each
+   * partition cuts its lists into blocks of at most 1024 rows, unpacking a
+   * block's vectors once into primitive arrays and taking its covering
+   * radius. Each pass co-groups the blocks with the queries that probe
+   * their lists: one scan per (block, query) runs the L2 kernel over the
+   * block into a bounded primitive heap and keeps the block's k nearest
+   * rows plus any row tied with the k-th. No row is built per (query,
+   * train row), and a block is never copied per query.
    *
-   * Pruning power tracks the data's cluster structure: tight clusters
-   * prune hard, unclusterable high-dim data degrades to a scan of most
-   * lists (but never loses exactness). Queries with fewer than k
-   * first-pass candidates fall back to probing everything.
+   *  1. Pass 1 scans the `initProbes` nearest lists of each query; the
+   *     k-th distance over their candidates is D_k, an upper bound on the
+   *     true k-th distance.
+   *  2. Pass 2 scans only the lists pass 1 did not scan whose lower bound
+   *     d(q,c) − radius(c) ≤ D_k + 1e-9 holds — by the triangle
+   *     inequality they hold every true top-k member pass 1 missed — and
+   *     its candidates merge with pass 1's. A query with fewer than k
+   *     pass-1 candidates scans every list.
+   *
+   * Routing runs in the scan tasks against the centroids they carry, and
+   * the radii reach the query partitions through a shuffle: nothing is
+   * collected or broadcast by hand. The passes and the merge are the
+   * shuffle stages of one Spark job, and the result is a frame over its
+   * rows; as a query plan, re-planned after each of its stages, the same
+   * steps cost more than the scans themselves on small inputs. Pruning
+   * power tracks the data's cluster structure: tight clusters prune hard,
+   * unclusterable high-dim data degrades to a scan of most lists (but
+   * never loses exactness).
    *
    * Output: query columns + `t_`-prefixed train columns + `distance` +
    * `rank` (1..k, ordered by distance then `tieBreak` train columns).
+   * Query ids must be unique. A null query vector fails the query, as
+   * does a dimension mismatch.
    */
   def knnJoin(model: IvfModel, queries: DataFrame, qVecCol: String, qIdCol: String,
               k: Int, metric: String = "l2", initProbes: Int = 4,
               tieBreak: Seq[String] = Nil): DataFrame = {
     require(graft.plans.Metric.get(metric).contains(graft.plans.Metric.L2),
       s"knnJoin bounds need a metric space; got $metric (map cosine to normalized-L2 first)")
-    val spark = queries.sparkSession
-    val bc = spark.sparkContext.broadcast(model.centroids)
-    val br = spark.sparkContext.broadcast(radii(model))
-
-    val train = model.assigned.select(
-      model.assigned.columns.map(c => col(c).as(if (c == "cluster_id") c else s"t_$c")).toSeq: _*)
-    val dist = Knn.distCol(metric)(col(qVecCol), col(s"t_${model.vecCol}"))
-    val ord = (col("distance") +: tieBreak.map(c => col(s"t_$c"))).toSeq
-
-    // pass 1: nearest initProbes lists → per-query candidate k-th distance
-    val probe1 = udf((v: Seq[Float]) => {
-      val q = v.toArray; val cs = bc.value
-      val ds = Array.tabulate(cs.length)(i => (VectorOps.l2(q, cs(i)), i))
-      ds.sortBy(_._1).take(math.min(math.max(1, initProbes), cs.length)).map(_._2).toSeq
-    })
-    val cand1 = queries.select(col(qIdCol), col(qVecCol), explode(probe1(col(qVecCol))).as("cluster_id"))
-      .join(train, "cluster_id")
-      .withColumn("distance", dist)
-    val dk = cand1
-      .withColumn("__rn", row_number().over(
-        Window.partitionBy(col(qIdCol)).orderBy(col("distance"))))
-      .filter(col("__rn") === k)
-      .select(col(qIdCol), col("distance").as("__dk"))
-
-    // pass 2: every list whose lower bound beats D_k (null D_k → all lists)
-    val probe2 = udf((v: Seq[Float], dkv: java.lang.Double) => {
-      val q = v.toArray; val cs = bc.value; val rs = br.value
-      val bound = if (dkv == null) Double.MaxValue else dkv.doubleValue + 1e-9
-      (0 until cs.length).filter(i => VectorOps.l2(q, cs(i)) - rs(i) <= bound)
-    })
-    // the query side moves to P partitions by NUMBER: pass 2 is the
-    // heavy stage, and adaptive execution would merge a by-column qid
-    // exchange of these few bytes onto a single task
-    queries.repartition(spark.sparkContext.defaultParallelism, col(qIdCol))
-      .join(dk, Seq(qIdCol), "left")
-      // keep EVERY query column (labels, weights…), as the output
-      // contract promises — callers must not pay a re-join to get them
-      .select((queries.columns.map(col) :+
-        explode(probe2(col(qVecCol), col("__dk"))).as("cluster_id")).toSeq: _*)
-      .join(train, "cluster_id")
-      .withColumn("distance", dist)
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col(qIdCol)).orderBy(ord: _*)))
-      .filter(col("rank") <= k)
-      .drop("cluster_id")
+    IvfBlockJoin.knnJoin(model, queries, qVecCol, qIdCol, k, initProbes, tieBreak)
   }
 }

@@ -157,7 +157,7 @@ object DistanceExpressions {
     }
   }
 
-  @inline private def noNullElement(a: ArrayData): Unit = {
+  @inline private[graft] def noNullElement(a: ArrayData): Unit = {
     var i = 0
     val n = a.numElements()
     while (i < n) {

@@ -25,9 +25,9 @@ import graft.operators.Ivf
  * continuity spec pins it, and the batch oracle replays it
  * brute-force).
  *
- * Scale shape: per micro-batch, one broadcast of centroids + radii
- * and the exact two-pass triangle-inequality [[Ivf.knnJoin]] —
- * candidates are equi-joins on posting lists, never |batch|·|index|;
+ * Scale shape: per micro-batch, the exact two-pass triangle-inequality
+ * [[Ivf.knnJoin]] — queries meet only the posting-list blocks they
+ * probe, never |batch|·|index|;
  * there is no cross-batch state at all (the index is the state, and
  * it is immutable).
  */

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, Partitioning, ShufflePartitionIdPassThrough}
+import org.apache.spark.sql.catalyst.plans.physical.{Partitioning, ShufflePartitionIdPassThrough}
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AQEShuffleReadExec, QueryStageExec, ShuffleQueryStageExec}
 import org.apache.spark.sql.execution.exchange.REPARTITION_BY_NUM
@@ -208,24 +208,31 @@ class PlanShapeSpec extends SparkSpecBase {
     case other => other +: other.children.flatMap(nodesOf)
   }
 
-  /** Runs `df`, then returns the query stage of its one by-number
-    * exchange that `isIt` picks, after checking that no stage of the
-    * final plan reads it through an adaptive shuffle read (a coalesced
-    * or local read would change how many tasks consume it), and the
-    * number of its partitions that hold rows. */
-  private def byNumberStage(df: org.apache.spark.sql.DataFrame)(
-      isIt: Partitioning => Boolean): (ShuffleQueryStageExec, Int) = {
+  /** Runs `df`, then returns the query stages of its by-number exchanges
+    * that `isIt` picks, after checking that no stage of the final plan
+    * reads one through an adaptive shuffle read (a coalesced or local
+    * read would change how many tasks consume it), each with the number
+    * of its partitions that hold rows. A reused exchange counts once. */
+  private def byNumberStages(df: org.apache.spark.sql.DataFrame)(
+      isIt: Partitioning => Boolean): Seq[(ShuffleQueryStageExec, Int)] = {
     df.collect()
     val nodes = nodesOf(df.queryExecution.executedPlan)
     val stages = nodes.collect {
       case s: ShuffleQueryStageExec if s.shuffle.shuffleOrigin == REPARTITION_BY_NUM &&
         isIt(s.shuffle.outputPartitioning) => s
     }
-    assert(stages.size == 1, s"want one such exchange in: ${df.queryExecution.executedPlan}")
-    val st = stages.head
-    val reads = nodes.collect { case r: AQEShuffleReadExec if r.child eq st => r }
+    val reads = nodes.collect { case r: AQEShuffleReadExec if stages.exists(r.child eq _) => r }
     assert(reads.isEmpty, s"adaptive execution re-read the exchange: ${reads.mkString}")
-    (st, st.mapStats.get.bytesByPartitionId.count(_ > 0))
+    stages.groupBy(_.shuffle.id).values.map(_.head).toSeq
+      .map(st => (st, st.mapStats.get.bytesByPartitionId.count(_ > 0)))
+  }
+
+  /** [[byNumberStages]] of a plan that must have exactly one such exchange. */
+  private def byNumberStage(df: org.apache.spark.sql.DataFrame)(
+      isIt: Partitioning => Boolean): (ShuffleQueryStageExec, Int) = {
+    val stages = byNumberStages(df)(isIt)
+    assert(stages.size == 1, s"want one such exchange in: ${df.queryExecution.executedPlan}")
+    stages.head
   }
 
   test("HNSW batch search merges per-shard top-k by a per-query window — no global sort") {
@@ -250,18 +257,54 @@ class PlanShapeSpec extends SparkSpecBase {
     }
   }
 
-  test("IVF kNN join pass 2 runs on `parallelism` tasks — its qid exchange is never merged") {
+  test("IVF kNN join scans run on `parallelism` tasks — blocks and query groups move by number") {
     val p = spark.sparkContext.defaultParallelism
     val emb = Tables.read(spark, dir, "embeddings").filter(col("vec_id") < 400)
     val model = operators.Ivf.build(emb, "embedding", 8, 7L, 5)
     val qs = emb.filter(col("vec_id") < 64)
       .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-    val (st, busy) = byNumberStage(operators.Ivf.knnJoin(model, qs, "qvec", "qid", 5)) {
-      case h: HashPartitioning => h.expressions.map(_.toString).exists(_.startsWith("qid"))
+    val out = operators.Ivf.knnJoin(model, qs, "qvec", "qid", 5)
+    out.collect()
+    // the scans' exchanges sit in the lineage of the one RDD the frame
+    // reads, none in its plan, so adaptive execution never re-reads them
+    val plan = out.queryExecution.executedPlan
+    assert(nodesOf(plan).forall(n => !n.isInstanceOf[AQEShuffleReadExec] &&
+      !n.isInstanceOf[org.apache.spark.sql.execution.exchange.Exchange]), s"exchange in: $plan")
+    val rdd = out.queryExecution.analyzed.collectFirst {
+      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
+    }.get
+    def lineage(r: org.apache.spark.rdd.RDD[_]): Seq[org.apache.spark.rdd.RDD[_]] =
+      r +: r.dependencies.flatMap(d => lineage(d.rdd))
+    // the index's blocks and each pass's (list, query) pairs, by list
+    val byList = lineage(rdd).distinct.collect {
+      case s: org.apache.spark.rdd.ShuffledRDD[_, _, _]
+        if s.partitioner.exists(_.isInstanceOf[operators.IvfBlockJoin.ListPartitioner]) => s
+    }
+    assert(byList.size == 3, s"want the blocks and two passes' pairs by list, got ${byList.size}")
+    byList.foreach(s =>
+      assert(s.getNumPartitions == p, s"scan exchange has ${s.getNumPartitions} partitions"))
+    val busy = byList.map(_.mapPartitions(it => Iterator(it.hasNext)).collect().count(identity))
+    // 8 lists on partitions c mod P: the blocks and pass 1 fill every task
+    assert(busy.count(_ == p) >= 2, s"scan exchanges busy on $busy tasks, want $p")
+  }
+
+  test("IVF join pair stage runs on `parallelism` tasks — both sides move by number") {
+    val p = spark.sparkContext.defaultParallelism
+    val emb = Tables.read(spark, dir, "embeddings").filter(col("vec_id") < 400)
+    // the index's rows materialised, as a maintained index is
+    val built = operators.Ivf.build(emb, "embedding", 8, 7L, 5)
+    val model = built.copy(assigned = built.assigned.localCheckpoint())
+    val qs = emb.filter(col("vec_id") < 64).select(col("vec_id").as("qid"), col("embedding"))
+    val stages = byNumberStages(
+      operators.Ivf.join(model, qs, "embedding", "cosine", 0.2, nprobe = 2)) {
+      case _: ShufflePartitionIdPassThrough => true
       case _ => false
     }
-    assert(st.shuffle.numPartitions == p, s"pass-2 exchange has ${st.shuffle.numPartitions} partitions")
-    assert(busy == p, s"pass 2 ran on $busy non-empty tasks, want $p")
+    assert(stages.size == 2, s"want the index and query sides by number, got ${stages.size}")
+    stages.foreach { case (st, busy) =>
+      assert(st.shuffle.numPartitions == p, s"pair exchange has ${st.shuffle.numPartitions} partitions")
+      assert(busy == p, s"pair stage ran on $busy non-empty tasks, want $p")
+    }
   }
 
   test("q1_agg_typed keeps double sums in whole-stage codegen — no decimal anywhere") {

@@ -267,6 +267,31 @@ object CellProbe {
       println(f"run=$i%2d sec=$sec%.3f gc_ms=${gcMs - g0}%d rows=$n%d")
       i += 1
     }
+    if (cell == "hnsw_serve_tombstoned") {
+      // the sweep that ends the serve tax: compact at the threshold. The
+      // compacted index is a union of the cold shards' rows, whose lineage
+      // holds no shuffle, and the rebuilt shards; the index is
+      // checkpointed so its own build shuffle is out of the lineage
+      val idx = hnswIdx.localCheckpoint()
+      val dead = emb.select(col("vec_id")).limit((emb.count() / 5).toInt)
+      val t0 = System.nanoTime()
+      val (compacted, _) = operators.Hnsw.compact(idx, dead, numShards = 32)
+      println(f"  compact_eager_sec=${(System.nanoTime() - t0) / 1e9}%.3f")
+      val Seq(cold, rebuilt) = compacted.queryExecution.analyzed.collectFirst {
+        case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.dependencies.map(_.rdd)
+      }.get
+      def shuffles(r: org.apache.spark.rdd.RDD[_]): Int = r.dependencies.map(d =>
+        (if (d.isInstanceOf[org.apache.spark.ShuffleDependency[_, _, _]]) 1 else 0) +
+          shuffles(d.rdd)).sum
+      println(s"  compact_cold_shuffles=${shuffles(cold)}")
+      for ((name, r) <- Seq("cold" -> cold, "rebuilt" -> rebuilt)) {
+        val t = System.nanoTime()
+        val shards = r.asInstanceOf[org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow]]
+          .map(_.getInt(0)).countByValue()
+        println(f"  compact_${name}_sec=${(System.nanoTime() - t) / 1e9}%.3f " +
+          f"shards=${shards.size}%d rows=${shards.values.sum}%d")
+      }
+    }
     spark.stop()
   }
 }

@@ -24,7 +24,11 @@ object Metrics {
   private val counters = scala.collection.concurrent.TrieMap.empty[String, LongAccumulator]
   private val timers = scala.collection.concurrent.TrieMap.empty[String, DoubleAccumulator]
 
-  /** Counter names mirroring pg_stat_neurondb()'s columns. */
+  /** Counter names mirroring pg_stat_neurondb()'s columns. The engine's
+    * executor-side counters — `VectorsIndexed` (rows an HNSW build or
+    * rebuild task indexes) and `CacheHits`/`CacheMisses` (HNSW graph-cache
+    * lookups) — count work each time it runs: a frame evaluated twice,
+    * or a task retried, counts twice. */
   val QueriesTotal = "queries_total"
   val VectorsIndexed = "vectors_indexed"
   val CacheHits = "cache_hits"

@@ -2,11 +2,18 @@ package graft.operators
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.HashPartitioner
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, UnsafeArrayData, UnsafeProjection}
+import org.apache.spark.sql.catalyst.util.{GenericArrayData, SQLOrderingUtil}
+import org.apache.spark.sql.classic.GraftShim
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
-import graft.plans.Metric
+import graft.plans.{InInts, Metric}
 
 /**
  * HNSW ANN index (`NeuronDB/src/index/hnsw_am.c`, 3,044 LoC: handler
@@ -27,6 +34,12 @@ import graft.plans.Metric
  * scatter-gather contract as [[Knn.search]]'s per-partition heaps.
  * Shards are sized to executor memory (numShards grows with the corpus;
  * each shard's graph is O(rows/numShards · m) edges).
+ *
+ * Each call runs as Spark jobs over the index's binary rows, not as a
+ * query plan: the build and the four maintenance calls are one rebuild
+ * primitive ([[rebuild]]) behind at most one eager job, and
+ * [[searchBatch]] is one job. Rebuild tasks add the rows they index to
+ * `Metrics.VectorsIndexed`.
  *
  * Determinism divergence (documented, same policy as IVF's fixed
  * seed): the reference assigns node levels with un-seeded `random()`;
@@ -327,36 +340,36 @@ object Hnsw {
       (0 until size).iterator.map { n =>
         Node(shard, ids(n), vecs(n).toSeq, adj(n).map(_.map(ids(_)).toSeq).toSeq)
       }
+
+    /** The shard's rows as [[Node]]s' binary rows, in [[NodeType]]. */
+    def toRows(shard: Int): Iterator[InternalRow] = {
+      val project = UnsafeProjection.create(NodeType)
+      (0 until size).iterator.map { n =>
+        val nbrs = adj(n).map(l => UnsafeArrayData.fromPrimitiveArray(l.map(ids(_))): Any)
+        project(new GenericInternalRow(Array[Any](shard, ids(n),
+          UnsafeArrayData.fromPrimitiveArray(vecs(n)), new GenericArrayData(nbrs)))).copy()
+      }
+    }
   }
 
+  /** The index's row type: the columns and types [[build]] returns. */
+  private[graft] lazy val NodeType: StructType = Encoders.product[Node].schema
+
   /**
-   * Build the index: one repartition (the only shuffle), then each task
-   * builds its shards' graphs independently. A row's shard is the STABLE
-   * function `pmod(murmur3(id), numShards)` — not the task's partition
-   * index — so [[insert]] can locate and rebuild exactly the shards a
-   * batch of new rows touches. Returns the index as a DataFrame of
-   * [[Node]] rows — `write`/`load` round-trips it through
+   * Build the index: each id moves by number to the partition of its
+   * shard, and each task builds its shards' graphs independently. A row's
+   * shard is the STABLE function `pmod(murmur3(id), numShards)` — not the
+   * task's partition index — so [[insert]] can locate and rebuild exactly
+   * the shards a batch of new rows touches. Returns the index as a
+   * DataFrame of [[Node]] rows — `write`/`load` round-trips it through
    * shard-partitioned parquet so serving reads prune per shard.
    */
   def build(df: DataFrame, idCol: String, vecCol: String, numShards: Int = 32,
             params: Params = Params(), metric: String = "l2"): DataFrame = {
     require(numShards >= 1, "numShards must be positive")
     val spark = df.sparkSession
-    import spark.implicits._
-    val dist = distFn(metric)
-    df.select(pmod(hash(col(idCol).cast("long")), lit(numShards)).as("shard"),
-        col(idCol).cast("long").as("id"), col(vecCol).as("vec"))
-      .repartition(numShards, col("shard"))
-      .as[(Int, Long, Seq[Float])]
-      .mapPartitions { it =>
-        it.toArray.groupBy(_._1).iterator.flatMap { case (shard, rows) =>
-          val b = new Builder(params, dist)
-          rows.sortBy(_._2) // id-sorted insert: deterministic
-            .foreach { case (_, id, v) => b.insert(id, v.toArray) }
-          b.toNodes(shard)
-        }
-      }
-      .toDF("shard", "id", "vec", "nbrs")
+    rebuild(spark, spark.sparkContext.emptyRDD[InternalRow], NodeType, numShards,
+      (0 until numShards).toSet, newRows(df, idCol, vecCol), params, metric)
   }
 
   /**
@@ -366,37 +379,21 @@ object Hnsw {
    * keep every untouched shard's rows as-is. Because the per-shard build
    * is deterministic and id-sorted, the result is bit-identical to a
    * full rebuild over the union — at the cost of |touched shards| /
-   * numShards of the work.
+   * numShards of the work. A re-sent id replaces its old row (upsert):
+   * keeping both would give the shard graph two nodes with one id.
+   *
+   * One eager job checks the shard layout and finds the touched shards;
+   * the returned index materialises in one more (see [[rebuild]]).
    */
   def insert(index: DataFrame, df: DataFrame, idCol: String, vecCol: String,
              numShards: Int = 32, params: Params = Params(),
              metric: String = "l2"): DataFrame = {
-    checkShardLayout(index, numShards)
-    val newRows = df.select(col(idCol).cast("long").as("id"), col(vecCol).as("vec"))
-      .withColumn("shard", pmod(hash(col("id")), lit(numShards)))
-    val touched = newRows.select("shard").distinct()
-      .collect().map(_.getInt(0)).toSeq
-    val untouched = index.filter(!col("shard").isin(touched: _*))
-    // UPSERT: a re-sent id replaces its old row — keeping both would give
-    // the shard graph two nodes with one id and ShardGraph.byId would
-    // serve a vector the edges weren't built from
-    val members = index.filter(col("shard").isin(touched: _*))
-      .select(col("id"), col("vec"))
-      .join(newRows.select("id"), Seq("id"), "left_anti")
-      .unionByName(newRows.select(col("id"), col("vec")))
-    withRebuilt(untouched, build(members, "id", "vec", numShards, params, metric), numShards)
+    val (rows, rowType) = rowsOf(index)
+    val fresh = newRows(df, idCol, vecCol)
+    val touched = layoutPass(rows, numShards, fresh.map(_._1))
+    if (touched.isEmpty) index
+    else rebuild(index.sparkSession, rows, rowType, numShards, touched, fresh, params, metric)
   }
-
-  /** A maintained index: the untouched shards' rows verbatim, then the
-    * rebuilt shards'. A union concatenates its inputs' partitions, so
-    * the untouched side is first coalesced (no shuffle) to `numShards`
-    * partitions; otherwise every maintenance call would add `numShards`
-    * partitions, and every later call on the index one task per
-    * partition. */
-  private def withRebuilt(untouched: DataFrame, rebuilt: DataFrame,
-                          numShards: Int): DataFrame =
-    untouched.coalesce(numShards).select("shard", "id", "vec", "nbrs")
-      .unionByName(rebuilt.select("shard", "id", "vec", "nbrs"))
 
   def write(index: DataFrame, path: String): Unit =
     index.write.mode("overwrite").partitionBy("shard").parquet(path)
@@ -405,35 +402,34 @@ object Hnsw {
     spark.read.parquet(path)
 
   /**
-   * Deletion (the vacuum analog of [[insert]]): rebuild the shards that
-   * contain deleted ids from their surviving members; untouched shards
-   * keep their rows verbatim. Tombstone-free — the graph never serves a
-   * deleted node, and determinism again makes the result bit-identical
-   * to a full rebuild without the deleted rows.
+   * Deletion (the vacuum analog of [[insert]]): rebuild the shards of the
+   * deleted ids from their surviving members; untouched shards keep their
+   * rows verbatim. Tombstone-free — the graph never serves a deleted
+   * node, and determinism again makes the result bit-identical to a full
+   * rebuild without the deleted rows. One eager job checks the layout.
    */
   def delete(index: DataFrame, ids: Seq[Long], numShards: Int = 32,
              params: Params = Params(), metric: String = "l2"): DataFrame = {
     if (ids.isEmpty) return index
-    checkShardLayout(index, numShards)
-    val shards = ids.map(idShard(_, numShards)).distinct
-    val untouched = index.filter(!col("shard").isin(shards: _*))
-    val members = index.filter(col("shard").isin(shards: _*))
-      .filter(!col("id").isin(ids: _*))
-      .select(col("id"), col("vec"))
-    withRebuilt(untouched, build(members, "id", "vec", numShards, params, metric), numShards)
+    val (rows, rowType) = rowsOf(index)
+    val spark = index.sparkSession
+    layoutPass(rows, numShards, spark.sparkContext.emptyRDD[Long])
+    rebuild(spark, rows, rowType, numShards, ids.map(idShard(_, numShards)).toSet,
+      spark.sparkContext.parallelize(ids.map(id => (id, null: Array[Float]))), params, metric)
   }
 
   /** Bulk-purge deletion ([[Ivf.deleteBulk]]'s HNSW form, the GDPR-
-    * erasure shape): the erasure set arrives as an id FRAME, the
-    * affected SHARDS are derived from the manifest ids ACTUALLY
-    * PRESENT in the index (one semi-join — r14 advice: a retraction
-    * manifest full of stray or already-purged ids must not trigger
-    * rebuilds of shards that lose no members; ≤ numShards ints reach
-    * the driver, never the ids themselves), survivors of those shards
-    * are anti-joined against the frame, and only the affected shards'
-    * graphs are rebuilt — untouched shards keep their adjacency
-    * verbatim, same contract as [[delete]]. An empty or fully-stale
-    * manifest is a no-op.
+    * erasure shape): the erasure set arrives as an id FRAME, and the
+    * affected SHARDS are those that hold a manifest id — a retraction
+    * manifest full of stray, null or already-purged ids triggers no
+    * rebuild of a shard that loses no member (r14 advice). One eager job
+    * checks the layout and finds those shards: the index's ids and the
+    * manifest's meet by shard, and only ≤ numShards counts are
+    * collected, never the ids themselves. The manifest ids then move to their
+    * shards' rebuild tasks, and only the affected shards' graphs are
+    * rebuilt — untouched shards keep their adjacency verbatim, same
+    * contract as [[delete]]. An empty or fully-stale manifest returns
+    * the index itself.
     *
     * Cost shape: rebuild is O(affected shards × shard size) — a
     * SCATTERED erasure (uniform ids) touches every shard and pays a
@@ -443,18 +439,13 @@ object Hnsw {
     * when that cliff is the wrong trade. */
   def deleteBulk(index: DataFrame, ids: DataFrame, numShards: Int = 32,
                  params: Params = Params(), metric: String = "l2"): DataFrame = {
-    checkShardLayout(index, numShards)
-    val del = ids.select(col(ids.columns.head).cast("long").as("id"))
-    val shards = index.select(col("id"))
-      .join(del, Seq("id"), "left_semi")
-      .select(pmod(hash(col("id")), lit(numShards)).as("shard"))
-      .distinct().collect().map(_.getInt(0)).toSeq
-    if (shards.isEmpty) return index
-    val untouched = index.filter(!col("shard").isin(shards: _*))
-    val members = index.filter(col("shard").isin(shards: _*))
-      .join(del, Seq("id"), "left_anti")
-      .select(col("id"), col("vec"))
-    withRebuilt(untouched, build(members, "id", "vec", numShards, params, metric), numShards)
+    val (rows, rowType) = rowsOf(index)
+    val dead = idsOf(ids)
+    val (_, hit) = deadCounts(rows, numShards, dead)
+    val shards = hit.indices.filter(hit(_) > 0).toSet
+    if (shards.isEmpty) index
+    else rebuild(index.sparkSession, rows, rowType, numShards, shards,
+      dead.map(id => (id, null: Array[Float])), params, metric)
   }
 
   /** Collect an erasure-id frame into the broadcastable tombstone set
@@ -477,38 +468,59 @@ object Hnsw {
     * their tombstones stay active. Returns (compacted index,
     * surviving tombstones). `minDeadFraction = 0.0` compacts every
     * shard holding at least one tombstone — exactly [[deleteBulk]].
-    * Driver sees only per-shard (size, dead) counts, ≤ numShards
-    * rows. */
+    * The same one eager job as [[deleteBulk]] checks the layout and
+    * counts each shard's (size, dead); only those ≤ numShards pairs are
+    * collected. */
   def compact(index: DataFrame, tombstones: DataFrame, numShards: Int = 32,
               params: Params = Params(), metric: String = "l2",
               minDeadFraction: Double = 0.2): (DataFrame, DataFrame) = {
-    checkShardLayout(index, numShards)
+    val (rows, rowType) = rowsOf(index)
+    val dead = idsOf(tombstones)
+    val (size, hit) = deadCounts(rows, numShards, dead)
     // dedup: the same id legitimately arrives in two retraction epochs
-    // (a re-submitted request) — counted twice it would inflate both a
-    // shard's size and its dead count through the left_outer fan-out
+    // (a re-submitted request)
     val del = tombstones
       .select(col(tombstones.columns.head).cast("long").as("id"))
       .distinct()
-    val stats = index.select(col("shard"), col("id"))
-      .join(del.withColumn("dead", lit(1)), Seq("id"), "left_outer")
-      .groupBy("shard")
-      .agg(count(lit(1)).as("n"), sum(coalesce(col("dead"), lit(0))).as("d"))
-      .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2)))
-    val shards = stats.collect {
-      case (s, n, d) if d > 0 && d.toDouble / n >= minDeadFraction => s
-    }.toSeq
+    val shards = hit.indices
+      .filter(s => hit(s) > 0 && hit(s).toDouble / size(s) >= minDeadFraction).toSet
     if (shards.isEmpty) return (index, del)
-    val untouched = index.filter(!col("shard").isin(shards: _*))
-    val members = index.filter(col("shard").isin(shards: _*))
-      .join(del, Seq("id"), "left_anti")
-      .select(col("id"), col("vec"))
-    val compacted =
-      withRebuilt(untouched, build(members, "id", "vec", numShards, params, metric), numShards)
+    val compacted = rebuild(index.sparkSession, rows, rowType, numShards, shards,
+      dead.map(id => (id, null: Array[Float])), params, metric)
     // tombstones on compacted shards are consumed; the rest stay active
-    val surviving = del
-      .filter(!pmod(hash(col("id")), lit(numShards)).isin(shards: _*))
+    val surviving = del.filter(!GraftShim.column(
+      InInts(GraftShim.expression(pmod(hash(col("id")), lit(numShards))), shards.toSeq)))
     (compacted, surviving)
   }
+
+  /** The index's rows as binary rows (shard, id, vec, nbrs), and their
+    * row type. */
+  private def rowsOf(index: DataFrame): (RDD[InternalRow], StructType) = {
+    val df = index.select("shard", "id", "vec", "nbrs")
+    (df.queryExecution.toRdd, df.schema)
+  }
+
+  /** The (id, vector) rows of `df`; a null id or vector fails the task. */
+  private def newRows(df: DataFrame, idCol: String, vecCol: String): RDD[(Long, Array[Float])] = {
+    val rows = df.select(col(idCol).cast("long"), col(vecCol))
+    val nulls = rows.schema(1).dataType match {
+      case ArrayType(FloatType, containsNull) => containsNull
+      case other => throw new IllegalArgumentException(
+        s"$vecCol must be array<float>, got ${other.catalogString}")
+    }
+    rows.queryExecution.toRdd.map { r =>
+      if (r.isNullAt(0) || r.isNullAt(1))
+        throw new IllegalArgumentException(s"null $idCol or $vecCol in the rows to index")
+      val v = r.getArray(1)
+      if (nulls) graft.plans.DistanceExpressions.noNullElement(v)
+      (r.getLong(0), v.toFloatArray())
+    }
+  }
+
+  /** The ids of a manifest frame's first column; null ids are skipped. */
+  private def idsOf(ids: DataFrame): RDD[Long] =
+    ids.select(col(ids.columns.head).cast("long")).queryExecution.toRdd
+      .filter(!_.isNullAt(0)).map(_.getLong(0))
 
   /** Maintenance ops must be called with the numShards the index was
     * BUILT with — a mismatch would route new rows mod numShards' while
@@ -516,12 +528,113 @@ object Hnsw {
     * (duplicated ids in rebuilt shards, orphans in untouched ones) with
     * no error at serve time. The layout is verifiable from the rows
     * themselves, so verify it. */
-  private def checkShardLayout(index: DataFrame, numShards: Int): Unit = {
-    val bad = index
-      .filter(pmod(hash(col("id")), lit(numShards)) =!= col("shard"))
-      .limit(1).count()
-    require(bad == 0,
+  private def requireLayout(bad: Boolean, numShards: Int): Unit =
+    require(!bad,
       s"index shard layout does not match numShards=$numShards — pass the build-time value")
+
+  /** One job over the index's rows and the ids of new rows: checks the
+    * shard layout, and returns the new rows' shards. */
+  private def layoutPass(rows: RDD[InternalRow], numShards: Int, fresh: RDD[Long]): Set[Int] = {
+    val n = numShards
+    // per partition, a flag per shard and one (slot n) for a row off its shard
+    def flags(slots: Iterator[Int]): Iterator[Array[Boolean]] = {
+      val f = new Array[Boolean](n + 1)
+      slots.foreach(f(_) = true)
+      Iterator(f)
+    }
+    val found = rows
+      .mapPartitions(it => flags(it.filter(r => idShard(r.getLong(1), n) != r.getInt(0)).map(_ => n)))
+      .union(fresh.mapPartitions(it => flags(it.map(idShard(_, n)))))
+      .collect()
+    requireLayout(found.exists(_(n)), n)
+    (0 until n).filter(s => found.exists(_(s))).toSet
+  }
+
+  /** Per shard, its row count and how many of its rows hold a `dead`
+    * id, from one job: the index's ids and `dead` meet by shard on
+    * min(numShards, P) partitions. Checks the shard layout. */
+  private def deadCounts(rows: RDD[InternalRow], numShards: Int,
+                         dead: RDD[Long]): (Array[Long], Array[Long]) = {
+    val n = numShards
+    val parts = math.min(n, rows.sparkContext.defaultParallelism)
+    // (shard, id, kind): 0 a member, 1 a dead id, 2 a row off its shard
+    val keyed: RDD[(Int, (Long, Byte))] = rows.map { r =>
+      val id = r.getLong(1)
+      val s = idShard(id, n)
+      (s, (id, (if (s == r.getInt(0)) 0 else 2).toByte))
+    }.union(dead.map(id => (idShard(id, n), (id, 1.toByte))))
+    val counts = keyed.partitionBy(new IvfBlockJoin.ListPartitioner(parts)).mapPartitions { it =>
+      val members = mutable.LongMap[Int]()
+      val gone = mutable.HashSet[Long]()
+      val s = new Array[Long](2 * n + 1)
+      it.foreach { case (shard, (id, kind)) =>
+        kind match {
+          case 0 => s(shard) += 1; members(id) = members.getOrElse(id, 0) + 1
+          case 1 => gone += id
+          case _ => s(2 * n) = 1
+        }
+      }
+      gone.foreach(id => members.get(id).foreach(c => s(n + idShard(id, n)) += c))
+      Iterator(s)
+    }.collect()
+    requireLayout(counts.exists(_(2 * n) > 0), n)
+    (Array.tabulate(n)(s => counts.map(_(s)).sum), Array.tabulate(n)(s => counts.map(_(n + s)).sum))
+  }
+
+  /** A member of a shard being rebuilt, a new row (`fresh`), or a
+    * deleted id (`vec` null). */
+  private final case class Change(shard: Int, id: Long, vec: Array[Float], fresh: Boolean)
+
+  /**
+   * The one maintenance primitive: rebuild the `touched` shards of the
+   * index (`rows` of type `rowType`) from their members and `changes` —
+   * new rows, or deleted ids with a null vector — and keep every other
+   * shard's rows as they are. Untouched rows pass through without a
+   * shuffle, coalesced to at most min(numShards, P) partitions; members
+   * and changes move by number, touched shard i (in shard order) to
+   * partition i mod min(|touched|, P), where the unchanged [[Builder]]
+   * rebuilds each shard by id-sorted insert. A member whose id is
+   * deleted or arrives anew is dropped (upsert). So the index stays
+   * within 2·numShards partitions over any number of calls, and
+   * materialising it is one Spark job. Each rebuild task adds the rows
+   * it indexes to `Metrics.VectorsIndexed`.
+   */
+  private def rebuild(spark: SparkSession, rows: RDD[InternalRow], rowType: StructType,
+                      numShards: Int, touched: Set[Int], changes: RDD[(Long, Array[Float])],
+                      params: Params, metric: String): DataFrame = {
+    val sc = spark.sparkContext
+    val dist = distFn(metric)
+    val n = numShards
+    val parts = math.min(touched.size, sc.defaultParallelism)
+    val slot = touched.toSeq.sorted.zipWithIndex.toMap
+    val indexed = graft.Metrics.counter(spark, graft.Metrics.VectorsIndexed)
+    val members = rows.flatMap { r =>
+      val s = r.getInt(0)
+      if (touched(s)) Some(Change(s, r.getLong(1), r.getArray(2).toFloatArray(), fresh = false))
+      else None
+    }
+    val moved = changes.flatMap { case (id, v) =>
+      val s = idShard(id, n)
+      if (touched(s)) Some(Change(s, id, v, fresh = v != null)) else None
+    }
+    val rebuilt = members.union(moved).map(c => (slot(c.shard), c))
+      .partitionBy(new IvfBlockJoin.ListPartitioner(parts))
+      .mapPartitions { it =>
+        val shards = mutable.LinkedHashMap[Int, mutable.ArrayBuffer[Change]]()
+        it.foreach { case (_, c) => shards.getOrElseUpdate(c.shard, mutable.ArrayBuffer()) += c }
+        shards.iterator.flatMap { case (shard, cs) =>
+          val replaced = cs.iterator.filter(c => c.fresh || c.vec == null).map(_.id).toSet
+          val b = new Builder(params, dist)
+          val kept = cs.filter(c => c.vec != null && (c.fresh || !replaced(c.id)))
+          kept.sortBy(_.id) // id-sorted insert: deterministic
+            .foreach(c => b.insert(c.id, c.vec))
+          indexed.add(kept.length)
+          b.toRows(shard)
+        }
+      }
+    val untouched = rows.filter(r => !touched(r.getInt(0)))
+      .coalesce(math.min(n, sc.defaultParallelism))
+    GraftShim.dataFrame(spark, untouched.union(rebuilt), rowType)
   }
 
   /** The stable shard of an id — must mirror the hash used in [[build]]
@@ -533,23 +646,28 @@ object Hnsw {
     if (m < 0) m + numShards else m
   }
 
-  /** Search-time view of one shard rebuilt from its rows: vectors are
-    * unboxed and neighbor ids resolved to node indices once, here, so the
-    * walk touches only primitive arrays. An id repeated in the rows
-    * resolves to its last row. */
-  private[graft] final class ShardGraph(nodes: Array[Node],
+  /** Search-time view of one shard, built from its rows: node i has id
+    * `nodeIds(i)`, vector `nodeVecs(i)` and the neighbor ids
+    * `nbrIds(i)(l)` at level l. Vectors stay unboxed and neighbor ids
+    * resolve to node indices once, here, so the walk touches only
+    * primitive arrays. An id repeated in the rows resolves to its last
+    * row. */
+  private[graft] final class ShardGraph(nodeIds: Array[Long], nodeVecs: Array[Array[Float]],
+                                        nbrIds: Array[Array[Array[Long]]],
                                         dist: (Array[Float], Array[Float]) => Double)
       extends Graph(dist) {
-    private val (entry, top) = {
-      val index = new mutable.LongMap[Int](nodes.length)
-      nodes.foreach(n => index(n.id) = add(n.id, n.vec.toArray, n.nbrs.length))
-      nodes.indices.foreach { i =>
-        adj(i) = nodes(i).nbrs.iterator.map(_.iterator.map(index).toArray).toArray
-      }
-      val e = nodes.minBy(n => (-n.nbrs.length, n.id)) // max level, tie → min id
-      (index(e.id), e.nbrs.length - 1)
-    }
 
+    /** From decoded [[Node]]s. */
+    def this(nodes: Array[Node], dist: (Array[Float], Array[Float]) => Double) =
+      this(nodes.map(_.id), nodes.map(_.vec.toArray), nodes.map(_.nbrs.map(_.toArray).toArray), dist)
+
+    private val (entry, top) = {
+      val index = new mutable.LongMap[Int](nodeIds.length)
+      nodeIds.indices.foreach(i => index(nodeIds(i)) = add(nodeIds(i), nodeVecs(i), nbrIds(i).length))
+      nodeIds.indices.foreach(i => adj(i) = nbrIds(i).map(_.map(index)))
+      val e = nodeIds.indices.minBy(i => (-nbrIds(i).length, nodeIds(i))) // max level, tie → min id
+      (index(nodeIds(e)), nbrIds(e).length - 1)
+    }
     /** The lazy-deletion mask of `dead` over this graph's nodes, for
       * [[search]]; null when no node is dead. */
     def deadMask(dead: Long => Boolean): Array[Boolean] = {
@@ -592,10 +710,20 @@ object Hnsw {
     }
   }
 
-  /** Executor-JVM memo of deserialized shard graphs, keyed by (index
+  private[graft] object ShardGraph {
+    /** From the shard's binary rows (shard, id, vec, nbrs), read in place. */
+    def fromRows(rows: Seq[InternalRow], dist: (Array[Float], Array[Float]) => Double): ShardGraph =
+      new ShardGraph(rows.map(_.getLong(1)).toArray, rows.map(_.getArray(2).toFloatArray()).toArray,
+        rows.map { r =>
+          val levels = r.getArray(3)
+          Array.tabulate(levels.numElements())(levels.getArray(_).toLongArray())
+        }.toArray, dist)
+  }
+
+  /** Executor-JVM memo of built shard graphs, keyed by (index
     * fingerprint, shard, metric). A ShardGraph is rebuilt from rows on
-    * every [[searchBatch]] call otherwise — for a hot serving index the
-    * HashMap/entry construction dominates repeat-batch latency. Bounded
+    * every [[searchBatch]] call otherwise; on a hit the walk task skips
+    * the shard's rows without decoding them. Bounded
     * by per-entry LRU (access-ordered), so one index's overflow evicts
     * the COLDEST entries, never a hot index's shards — no latency cliff
     * on multi-index serving. An index rewrite changes the fingerprint,
@@ -608,23 +736,8 @@ object Hnsw {
             e: java.util.Map.Entry[(String, Int, String), ShardGraph]): Boolean =
           size() > graphCacheCapacity
       })
+  /** Graphs built into [[graphCache]] in this JVM. */
   private[graft] val graphBuilds = new java.util.concurrent.atomic.AtomicLong
-
-  /** Get-or-build without holding the cache lock during construction:
-    * a concurrent first-touch of the same shard may build twice, but the
-    * graph is a pure function of the rows (bit-identical), so last-write
-    * -wins is safe — and unrelated shards are never blocked behind a
-    * heavy deserialization. */
-  private def cachedGraph(key: (String, Int, String))
-                         (mk: => ShardGraph): ShardGraph = {
-    val hit = graphCache.get(key) // refreshes LRU recency
-    if (hit != null) hit
-    else {
-      val g = mk
-      graphCache.put(key, g)
-      g
-    }
-  }
 
   /** Content fingerprint of an on-disk index: file names, sizes, mtimes.
     * Cheap (one listing), and any rewrite-in-place changes it. */
@@ -642,24 +755,44 @@ object Hnsw {
     s"$path@${java.lang.Long.toHexString(h)}"
   }
 
+  /** The columns and types [[searchBatch]] returns. */
+  private val ResultType = StructType(Seq(
+    StructField("qid", LongType, nullable = false), StructField("id", LongType, nullable = false),
+    StructField("distance", DoubleType, nullable = false),
+    StructField("rank", IntegerType, nullable = false)))
+
+  /** The `k` first of `found` in result order: distance as Spark SQL
+    * orders doubles (−0.0 equal to 0.0, NaN last), then id. */
+  private[graft] def nearest(found: Seq[(Long, Double)], k: Int): Seq[(Long, Double)] =
+    found.sortWith { (a, b) =>
+      val c = SQLOrderingUtil.compareDoubles(a._2, b._2)
+      c < 0 || (c == 0 && a._1 < b._1)
+    }.take(k)
+
   /**
-   * Batch ANN search: queries broadcast (tiny), per-shard top-k merged by
-   * one |Q|·k·shards-row window — never a corpus-sized shuffle. Returns
-   * (qid, id, distance, rank ≤ k).
+   * Batch ANN search, one Spark job: queries broadcast (tiny), each
+   * shard's graph walked for every query, and each query's per-shard
+   * top-k merged — never a corpus-sized shuffle. Returns
+   * (qid, id, distance, rank ≤ k), ranked by (distance, id) as Spark SQL
+   * orders them.
    *
-   * The shard walk is the heavy stage and runs in parallel because of
-   * its exchange: the index rows move to `defaultParallelism` partitions
-   * by partition NUMBER, shard s to partition s mod P, so the shards
-   * spread evenly and min(#shards, P) tasks walk them. A by-column
-   * exchange would not do: adaptive execution sizes those partitions by
-   * bytes, and a graph's rows are few bytes for a lot of walking, so it
-   * merged every shard onto one task. By-number exchanges are never
-   * merged.
+   * The index rows move by partition NUMBER to `defaultParallelism`
+   * partitions as binary rows, shard s to partition s mod P, so the
+   * shards spread evenly and min(#shards, P) tasks walk them; each task
+   * builds its shards' graphs straight from the rows and keeps each
+   * query's k nearest over them. Those candidates move by query to P
+   * partitions, where each query's are merged and ranked 1..k. The
+   * exchanges are the job's shuffle stages, not a query plan's, so
+   * adaptive execution never merges the walk's tasks (it would: a
+   * graph's rows are few bytes for a lot of walking).
    *
-   * `cacheKey` (set by [[searchBatchFromDisk]]) memoizes the deserialized
-   * per-shard graphs in the executor JVM, so repeated batches against the
-   * same index skip graph reconstruction; results are bit-identical
-   * either way (the graph is a pure function of the shard's rows).
+   * `cacheKey` (set by [[searchBatchFromDisk]]) memoizes the per-shard
+   * graphs in the executor JVM ([[graphCache]]): on a hit the walk task
+   * skips the shard's rows and never decodes them, so repeated batches
+   * against the same index skip graph construction; results are
+   * bit-identical either way (the graph is a pure function of the
+   * shard's rows). Each lookup adds to `Metrics.CacheHits` or
+   * `Metrics.CacheMisses`.
    *
    * `tombstones` is the LAZY-deletion filter ([[tombstoneSet]]): the
    * set broadcasts with the queries and tombstoned ids are excluded
@@ -676,34 +809,51 @@ object Hnsw {
     require(queries.nonEmpty, "need at least one query")
     val ef = math.min(math.max(efSearch, 1), 100000) // hnsw_am.c:938-941 clamp
     val spark = index.sparkSession
-    import spark.implicits._
+    val sc = spark.sparkContext
     val dist = distFn(metric)
-    val bq = spark.sparkContext.broadcast(queries)
-    val bt = spark.sparkContext.broadcast(tombstones)
-    val parts = spark.sparkContext.defaultParallelism
-    index.select(col("shard"), col("id"), col("vec"), col("nbrs"))
-      .repartitionById(parts, pmod(col("shard"), lit(parts)))
-      .as[Node]
+    val bq = sc.broadcast(queries)
+    val bt = sc.broadcast(tombstones)
+    val parts = sc.defaultParallelism
+    val hits = graft.Metrics.counter(spark, graft.Metrics.CacheHits)
+    val misses = graft.Metrics.counter(spark, graft.Metrics.CacheMisses)
+    val walked = rowsOf(index)._1.map(r => (r.getInt(0), r.copy()))
+      .partitionBy(new IvfBlockJoin.ListPartitioner(parts))
       .mapPartitions { it =>
-        it.toArray.groupBy(_.shard).iterator.flatMap { case (shard, ns) =>
-          val g = cacheKey match {
-            case Some(fp) =>
-              cachedGraph((fp, shard, metric)) {
-                graphBuilds.incrementAndGet()
-                new ShardGraph(ns, dist)
-              }
-            case None => new ShardGraph(ns, dist)
-          }
-          val dead = if (bt.value.isEmpty) null else g.deadMask(bt.value.contains)
-          bq.value.iterator.flatMap { case (qid, q) =>
-            g.search(q, k, ef, dead).map { case (id, d) => (qid, id, d) }
+        // each shard's graph from the cache, or else its rows
+        val cached = mutable.LinkedHashMap[Int, ShardGraph]()
+        val pending = mutable.LinkedHashMap[Int, mutable.ArrayBuffer[InternalRow]]()
+        it.foreach { case (s, r) =>
+          if (!cached.contains(s)) pending.get(s) match {
+            case Some(rs) => rs += r
+            case None =>
+              val g = cacheKey.map(fp => graphCache.get((fp, s, metric))).orNull // refreshes LRU recency
+              if (g != null) { cached(s) = g; hits.add(1) }
+              else pending(s) = mutable.ArrayBuffer(r)
           }
         }
+        val graphs = cached.values.toArray ++ pending.map { case (s, rs) =>
+          val g = ShardGraph.fromRows(rs.toSeq, dist)
+          cacheKey.foreach { fp =>
+            graphCache.put((fp, s, metric), g); graphBuilds.incrementAndGet(); misses.add(1)
+          }
+          g
+        }
+        val dead = graphs.map(g => if (bt.value.isEmpty) null else g.deadMask(bt.value.contains))
+        bq.value.iterator.flatMap { case (qid, q) =>
+          val found = graphs.indices.flatMap(i => graphs(i).search(q, k, ef, dead(i)))
+          if (found.isEmpty) None else Some((qid, nearest(found, k)))
+        }
       }
-      .toDF("qid", "id", "distance")
-      .withColumn("rank", row_number().over(
-        Window.partitionBy("qid").orderBy(col("distance"), col("id"))))
-      .filter(col("rank") <= k)
+    val ranked = walked.partitionBy(new HashPartitioner(parts)).mapPartitions { it =>
+      val byQuery = mutable.LinkedHashMap[Long, mutable.ArrayBuffer[(Long, Double)]]()
+      it.foreach { case (qid, found) => byQuery.getOrElseUpdate(qid, mutable.ArrayBuffer()) ++= found }
+      byQuery.iterator.flatMap { case (qid, found) =>
+        nearest(found.toSeq, k).iterator.zipWithIndex.map { case ((id, d), i) =>
+          new GenericInternalRow(Array[Any](qid, id, d, i + 1)): InternalRow
+        }
+      }
+    }
+    GraftShim.dataFrame(spark, ranked, ResultType)
   }
 
   /** Serve from a [[write]]-persisted index with the executor graph

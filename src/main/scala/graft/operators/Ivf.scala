@@ -3,10 +3,12 @@ package graft.operators
 import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.linalg.Vectors
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.classic.GraftShim
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorOps
+import graft.plans.InInts
 
 /**
  * IVF (inverted-file) ANN index, the Spark-native answer to the
@@ -23,8 +25,9 @@ import graft.functions.VectorOps
  *
  * Search: route the query to the `nprobe` nearest centroids driver-side
  * (tiny argmin over nlists rows), filter the assigned table to those
- * clusters — Catalyst pushes the `cluster_id IN (...)` filter to the scan
- * — then exact top-k over the surviving ~nprobe/nlists fraction of rows.
+ * clusters — Catalyst pushes the `cluster_id IN (...)` filter
+ * ([[inLists]]) to the scan — then exact top-k over the surviving
+ * ~nprobe/nlists fraction of rows.
  * `nprobe = nlists` probes everything, so it must equal brute force
  * exactly (BASELINE.md's recall convention).
  *
@@ -54,13 +57,15 @@ object Ivf {
       * same nprobe dial as [[Ivf.join]] (measured by `ivf_join_recall`)
       * — only `nprobe = nlists` is metric-independently exact. */
     def search(query: Array[Float], k: Int = 10, nprobe: Int = 10,
-               metric: String = "l2"): DataFrame = {
-      val probes = route(query, nprobe)
-      Knn.search(
-        assigned.filter(col("cluster_id").isin(probes: _*)),
-        vecCol, query, k, metric)
-    }
+               metric: String = "l2"): DataFrame =
+      Knn.search(assigned.filter(inLists(route(query, nprobe))), vecCol, query, k, metric)
   }
+
+  /** The rows of the listed posting lists: `cluster_id IN (lists)` as an
+    * [[graft.plans.InInts]], so each probe set reuses the compiled code of
+    * the last; on the partitioned layouts it prunes to the lists' files. */
+  private[operators] def inLists(lists: Seq[Int]): org.apache.spark.sql.Column =
+    GraftShim.column(InInts(GraftShim.expression(col("cluster_id")), lists))
 
   /** Persist the index partitioned by (ingest epoch, cluster id):
     * probes prune at the FILE level — `spark.read.parquet(...)

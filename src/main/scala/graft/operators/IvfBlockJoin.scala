@@ -28,7 +28,8 @@ private[graft] object IvfBlockJoin {
   val BlockRows = 1024
 
   /** List c goes to partition c mod n, so the lists spread evenly over
-    * the n scan tasks; the partition count is fixed by number. */
+    * the n scan tasks; the partition count is fixed by number. The HNSW
+    * calls place shards the same way. */
   final class ListPartitioner(val numPartitions: Int) extends Partitioner {
     def getPartition(key: Any): Int = Math.floorMod(key.asInstanceOf[Int], numPartitions)
     override def equals(o: Any): Boolean = o match {

@@ -52,7 +52,7 @@ object IvfPq {
              nprobe: Int = 8, rerankPool: Int = 64,
              metric: String = "l2"): DataFrame = {
     val probes = model.ivf.route(query, nprobe)
-    val probed = model.encoded.filter(col("cluster_id").isin(probes: _*))
+    val probed = model.encoded.filter(Ivf.inLists(probes))
     val pool = Pq.search(
         probed.select(col(model.idCol), col("pq_codes")),
         model.codebook, query,

@@ -1,10 +1,10 @@
 package graft.plans
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ImplicitCastInputTypes, Literal, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ImplicitCastInputTypes, Literal, Predicate, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, IntegerType}
 
 /**
  * One distance metric: the SQL name it is registered under, the names the
@@ -429,4 +429,29 @@ object DistanceExpressions {
     when(naSq === lit(0.0) || nbSq === lit(0.0), lit(1.0))
       .otherwise(lit(1.0) - d / (sqrt(naSq) * sqrt(nbSq)))
   }
+}
+
+/** `child IN (values)` over ints — an index's probed lists or rebuilt
+  * shards. [[org.apache.spark.sql.catalyst.expressions.In]] writes its
+  * values into the generated code, so each new set compiles new code;
+  * this reads them from the plan's reference objects, so every set
+  * shares one compiled form. Prints as `In` does, and like it serves as a
+  * partition filter: on a layout partitioned by `child`'s column, only
+  * the listed partitions' files are read. */
+case class InInts(child: Expression, values: Seq[Int]) extends UnaryExpression with Predicate {
+  private lazy val sorted = values.distinct.sorted.toArray
+  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
+    if (child.dataType == IntegerType)
+      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
+    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
+      s"IN over ints requires an int argument, got ${child.dataType.catalogString}")
+  override def nullSafeEval(v: Any): Any =
+    java.util.Arrays.binarySearch(sorted, v.asInstanceOf[Int]) >= 0
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val set = ctx.addReferenceObj("ints", sorted, "int[]")
+    defineCodeGen(ctx, ev, v => s"java.util.Arrays.binarySearch($set, $v) >= 0")
+  }
+  override def toString: String = s"$child IN ${values.mkString("(", ",", ")")}"
+  override def sql: String = s"(${child.sql} IN ${values.mkString("(", ", ", ")")})"
+  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }

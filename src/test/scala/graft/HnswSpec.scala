@@ -376,4 +376,142 @@ class HnswSpec extends SparkSpecBase {
     }.sum
     assert(hits.toDouble / (qs.length * 10) >= 0.9)
   }
+
+  /** The corpus vector of `id`. */
+  private def vectorOf(id: Long): Array[Float] =
+    emb.filter($"vec_id" === id).select($"embedding").as[Seq[Float]].head().toArray
+
+  /** Every row of `df` with its vector and neighbor lists, in (shard, id) order. */
+  private def fullRows(df: org.apache.spark.sql.DataFrame) = df
+    .select($"shard", $"id", $"vec".cast("string"), $"nbrs".cast("string"))
+    .as[(Int, Long, String, String)].collect().sortBy(t => (t._1, t._2, t._3)).toSeq
+
+  test("insert keeps a batch's duplicate ids as build does; a later re-send replaces them") {
+    val old = emb.filter($"vec_id" < 100).select($"vec_id", $"embedding")
+    val base = Hnsw.build(old, "vec_id", "embedding", numShards = 4)
+    val batch = Seq((500L, Seq.fill(64)(0.25f)), (501L, Seq.fill(64)(0.5f)),
+      (500L, Seq.fill(64)(0.75f))).toDF("vec_id", "embedding")
+    val after = Hnsw.insert(base, batch, "vec_id", "embedding", numShards = 4)
+    assert(fullRows(after) ==
+      fullRows(Hnsw.build(old.unionByName(batch), "vec_id", "embedding", numShards = 4)))
+    assert(after.filter($"id" === 500L).count() == 2)
+    val resent = Seq((500L, Seq.fill(64)(0.125f))).toDF("vec_id", "embedding")
+    val again = Hnsw.insert(after, resent, "vec_id", "embedding", numShards = 4)
+    assert(again.filter($"id" === 500L).select($"vec").as[Seq[Float]].collect().toSeq ==
+      Seq(Seq.fill(64)(0.125f)))
+    assert(again.count() == 102)
+  }
+
+  test("deleteBulk ignores null and stray manifest ids; an all-stale manifest returns the index") {
+    val base = Hnsw.build(emb.filter($"vec_id" < 200), "vec_id", "embedding", numShards = 4)
+      .localCheckpoint()
+    val manifest = Seq[java.lang.Long](5L, null, 9000001L, null, 5L).toDF("vec_id")
+    val out = Hnsw.deleteBulk(base, manifest, numShards = 4)
+    assert(fullRows(out) == fullRows(Hnsw.build(emb.filter($"vec_id" < 200 && $"vec_id" =!= 5L),
+      "vec_id", "embedding", numShards = 4)))
+    val shard5 = Hnsw.idShard(5L, 4)
+    assert(fullRows(out.filter($"shard" =!= shard5)) == fullRows(base.filter($"shard" =!= shard5)))
+    val stale = Seq[java.lang.Long](null, 9000001L, 5000000L).toDF("vec_id")
+    assert(Hnsw.deleteBulk(base, stale, numShards = 4) eq base)
+    assert(Hnsw.deleteBulk(base, manifest.limit(0), numShards = 4) eq base)
+  }
+
+  test("maintenance stays within 2·numShards partitions when parallelism exceeds numShards") {
+    assume(spark.sparkContext.defaultParallelism > 2)
+    var idx = Hnsw.build(emb.filter($"vec_id" < 300), "vec_id", "embedding", numShards = 2)
+    for (i <- 0 until 4) {
+      idx = Hnsw.insert(idx, emb.filter($"vec_id" === 300L + i || $"vec_id" === 310L + i),
+        "vec_id", "embedding", numShards = 2)
+      idx = Hnsw.deleteBulk(idx, Seq(10L + i, 20L + i).toDF("vec_id"), numShards = 2)
+      assert(idx.rdd.getNumPartitions <= 4, s"${idx.rdd.getNumPartitions} partitions")
+    }
+    assert(idx.count() == 300)
+  }
+
+  test("layout mismatch fails every maintenance call at call time, with one message") {
+    val base = Hnsw.build(emb.filter($"vec_id" < 100), "vec_id", "embedding", numShards = 4)
+    val ids = Seq(7L).toDF("vec_id")
+    val calls = Seq[() => Any](
+      () => Hnsw.insert(base, emb.filter($"vec_id" === 150L), "vec_id", "embedding", numShards = 8),
+      () => Hnsw.delete(base, Seq(7L), numShards = 8),
+      () => Hnsw.deleteBulk(base, ids, numShards = 8),
+      () => Hnsw.compact(base, ids, numShards = 8))
+    calls.foreach { call =>
+      val e = intercept[IllegalArgumentException](call())
+      assert(e.getMessage ==
+        "requirement failed: index shard layout does not match numShards=8 — pass the build-time value")
+    }
+  }
+
+  test("searchBatch keeps its argument contract: empty queries, unknown metric, ef clamp") {
+    val q = Array((7L, vectorOf(7L)))
+    assert(intercept[IllegalArgumentException](Hnsw.searchBatch(index, Array.empty))
+      .getMessage == "requirement failed: need at least one query")
+    assert(intercept[IllegalArgumentException](Hnsw.searchBatch(index, q, metric = "l7"))
+      .getMessage == "unknown metric: l7")
+    // ef below 1 walks at ef 1; above the clamp, exhaustively
+    def ids(ef: Int) = Hnsw.searchBatch(index, q, k = 3, efSearch = ef)
+      .select($"id").as[Long].collect().toSeq
+    assert(ids(-5) == ids(1))
+    assert(ids(Int.MaxValue) == ids(100000))
+  }
+
+  test("a graph-cache hit serves bit-identical rows without building; lookups are counted") {
+    val dir = java.nio.file.Files.createTempDirectory("hnsw_hit").toString
+    Hnsw.write(index, dir)
+    val qs = Seq(0L, 7L, 33L).map(i => (i, vectorOf(i))).toArray
+    def run() = Hnsw.searchBatchFromDisk(spark, dir, qs, k = 10)
+      .select("qid", "id", "distance", "rank").as[(Long, Long, Double, Int)].collect()
+      .map { case (q, id, d, r) => (q, r, id, java.lang.Double.doubleToRawLongBits(d)) }.sorted.toSeq
+    val hits = Metrics.counter(spark, Metrics.CacheHits)
+    val misses = Metrics.counter(spark, Metrics.CacheMisses)
+    Hnsw.graphCache.clear()
+    val (h0, m0) = (hits.value.longValue, misses.value.longValue)
+    val first = run()
+    assert(misses.value.longValue - m0 == 4 && hits.value.longValue == h0, "4 shards, all built")
+    val builds = Hnsw.graphBuilds.get()
+    val second = run()
+    assert(Hnsw.graphBuilds.get() == builds, "a cache hit builds no graph")
+    assert(hits.value.longValue - h0 == 4, "one hit per shard")
+    assert(second == first)
+    assert(first == Hnsw.searchBatch(index, qs, k = 10)
+      .select("qid", "id", "distance", "rank").as[(Long, Long, Double, Int)].collect()
+      .map { case (q, id, d, r) => (q, r, id, java.lang.Double.doubleToRawLongBits(d)) }.sorted.toSeq)
+  }
+
+  test("build adds the rows it indexes to vectors_indexed") {
+    val n = emb.count()
+    val indexed = Metrics.counter(spark, Metrics.VectorsIndexed)
+    val before = indexed.value.longValue
+    Hnsw.build(emb, "vec_id", "embedding", numShards = 4).count()
+    assert(indexed.value.longValue - before == n)
+  }
+
+  test("compact at a mid threshold passes cold shards' rows through unshuffled and verbatim") {
+    // the dead ids: 1 in 8 of shard 0's rows, 1 in 3 of every other shard's
+    val base = Hnsw.build(emb, "vec_id", "embedding", numShards = 4).localCheckpoint()
+    val ids = emb.select($"vec_id").as[Long].collect().sorted
+    val dead = ids.filter(id => id % (if (Hnsw.idShard(id, 4) == 0) 8 else 3) == 0)
+    val (compacted, surviving) = Hnsw.compact(base, dead.toSeq.toDF("vec_id"), numShards = 4,
+      minDeadFraction = 0.25)
+    assert(fullRows(compacted.filter($"shard" === 0)) == fullRows(base.filter($"shard" === 0)))
+    assert(surviving.as[Long].collect().sorted.toSeq == dead.filter(Hnsw.idShard(_, 4) == 0).toSeq)
+    assert(fullRows(compacted.filter($"shard" =!= 0)) == fullRows(Hnsw.build(
+      emb.filter(!$"vec_id".isin(dead: _*) && pmod(hash($"vec_id"), lit(4)) =!= 0),
+      "vec_id", "embedding", numShards = 4)))
+    // the frame reads a union of the cold rows (narrow, no shuffle) and
+    // the rebuilt shards (one by-number shuffle)
+    val union = compacted.queryExecution.analyzed.collectFirst {
+      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
+    }.get
+    val Seq(cold, hot) = union.dependencies.map(_.rdd)
+    def shuffles(r: org.apache.spark.rdd.RDD[_]): Int =
+      r.dependencies.map(d => (if (d.isInstanceOf[org.apache.spark.ShuffleDependency[_, _, _]]) 1
+        else 0) + shuffles(d.rdd)).sum
+    assert(shuffles(cold) == 0 && shuffles(hot) == 1)
+    val shardsOf = (r: org.apache.spark.rdd.RDD[_]) => r.asInstanceOf[
+      org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow]]
+      .map(_.getInt(0)).distinct().collect().toSet
+    assert(shardsOf(cold) == Set(0) && shardsOf(hot) == Set(1, 2, 3))
+  }
 }

@@ -108,6 +108,27 @@ class KnnIvfSpec extends SparkSpecBase {
     assert(curve.getOrElse(rec, 1.0) >= 0.9, s"recall at recommended nprobe=$rec below target")
   }
 
+  test("IVF search compiles its probe filter once: a new probe set reuses the code") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val built = Ivf.build(emb, "embedding", nlists = 8, seed = 42L)
+    val model = built.copy(assigned = built.assigned.cache())
+    model.assigned.count()
+    val qs = Seq(7L, 99L, 200L).map(id =>
+      emb.filter($"vec_id" === id).select($"embedding").as[Seq[Float]].head().toArray)
+    assert(qs.map(model.route(_, 3).toSet).distinct.size == 3, "want three probe sets")
+    model.search(qs.head, k = 5, nprobe = 3).collect()
+    qs.tail.foreach { v =>
+      val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val got = model.search(v, k = 5, nprobe = 3).collect()
+      assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount == compiles,
+        "a new probe set compiled new code")
+      val probes = model.route(v, 3)
+      assert(got.toSeq == Knn.search(model.assigned.filter($"cluster_id".isin(probes: _*)),
+        "embedding", v, k = 5).collect().toSeq)
+    }
+    model.assigned.unpersist()
+  }
+
   test("top-k plan is TakeOrderedAndProject (no global sort)") {
     val plan = Knn.search(emb, "embedding", q, k = 5).queryExecution.executedPlan.toString
     assert(plan.contains("TakeOrderedAndProject"), s"unexpected plan: $plan")

@@ -227,31 +227,47 @@ class PlanShapeSpec extends SparkSpecBase {
       .map(st => (st, st.mapStats.get.bytesByPartitionId.count(_ > 0)))
   }
 
-  /** [[byNumberStages]] of a plan that must have exactly one such exchange. */
-  private def byNumberStage(df: org.apache.spark.sql.DataFrame)(
-      isIt: Partitioning => Boolean): (ShuffleQueryStageExec, Int) = {
-    val stages = byNumberStages(df)(isIt)
-    assert(stages.size == 1, s"want one such exchange in: ${df.queryExecution.executedPlan}")
-    stages.head
+  /** The RDD a frame over binary rows reads, and that RDD's lineage. */
+  private def lineageOf(df: org.apache.spark.sql.DataFrame): Seq[org.apache.spark.rdd.RDD[_]] = {
+    def lineage(r: org.apache.spark.rdd.RDD[_]): Seq[org.apache.spark.rdd.RDD[_]] =
+      r +: r.dependencies.flatMap(d => lineage(d.rdd))
+    lineage(df.queryExecution.analyzed.collectFirst {
+      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
+    }.get).distinct
   }
 
-  test("HNSW batch search merges per-shard top-k by a per-query window — no global sort") {
+  /** No exchange in `df`'s executed plan, so adaptive execution has none
+    * to re-read or merge. */
+  private def noPlanExchange(df: org.apache.spark.sql.DataFrame): Unit = {
+    val plan = df.queryExecution.executedPlan
+    assert(nodesOf(plan).forall(n => !n.isInstanceOf[AQEShuffleReadExec] &&
+      !n.isInstanceOf[org.apache.spark.sql.execution.exchange.Exchange]), s"exchange in: $plan")
+  }
+
+  test("HNSW batch search merges per-shard top-k in its job — shards walk on by-number partitions") {
     val emb = Tables.read(spark, dir, "embeddings").filter(col("vec_id") < 200)
-    val idx = operators.Hnsw.build(emb, "vec_id", "embedding", numShards = 2)
     val qs = Array((0L, Tables.queryVector(spark, dir, 0L)))
-    val plan = planOf(operators.Hnsw.searchBatch(idx, qs, k = 5))
-    assert(!plan.contains("Exchange SinglePartition"), s"single-partition stage in: $plan")
-    assert(!plan.contains("CartesianProduct"), plan)
     // executed: the shard walk runs on min(#shards, parallelism) tasks,
-    // its exchange never merged by adaptive execution
+    // its exchange in the RDD lineage, where adaptive execution never
+    // merges it; the per-query merge runs on parallelism partitions, not one
     val p = spark.sparkContext.defaultParallelism
     for (shards <- Seq(2, 16)) {
+      // the index's rows materialised, as a maintained index is
       val idx = operators.Hnsw.build(emb, "vec_id", "embedding", numShards = shards)
-      val (st, busy) = byNumberStage(operators.Hnsw.searchBatch(idx, qs, k = 5)) {
-        case _: ShufflePartitionIdPassThrough => true
-        case _ => false
-      }
-      assert(st.shuffle.numPartitions == p, s"walk exchange has ${st.shuffle.numPartitions} partitions")
+        .localCheckpoint()
+      val out = operators.Hnsw.searchBatch(idx, qs, k = 5)
+      assert(out.collect().length == 5)
+      val plan = planOf(out)
+      assert(!plan.contains("Exchange SinglePartition"), s"single-partition stage in: $plan")
+      assert(!plan.contains("CartesianProduct"), plan)
+      noPlanExchange(out)
+      val exchanges = lineageOf(out).collect { case s: org.apache.spark.rdd.ShuffledRDD[_, _, _] => s }
+      val walk = exchanges.filter(_.partitioner.exists(
+        _.isInstanceOf[operators.IvfBlockJoin.ListPartitioner]))
+      assert(walk.size == 1 && exchanges.size == 2, s"want the walk and merge exchanges: $exchanges")
+      assert(exchanges.forall(_.getNumPartitions == p),
+        s"exchanges have ${exchanges.map(_.getNumPartitions)} partitions, want $p")
+      val busy = walk.head.mapPartitions(it => Iterator(it.hasNext)).collect().count(identity)
       assert(busy == math.min(shards, p),
         s"$shards shards walked on $busy tasks, want ${math.min(shards, p)}")
     }
@@ -267,16 +283,9 @@ class PlanShapeSpec extends SparkSpecBase {
     out.collect()
     // the scans' exchanges sit in the lineage of the one RDD the frame
     // reads, none in its plan, so adaptive execution never re-reads them
-    val plan = out.queryExecution.executedPlan
-    assert(nodesOf(plan).forall(n => !n.isInstanceOf[AQEShuffleReadExec] &&
-      !n.isInstanceOf[org.apache.spark.sql.execution.exchange.Exchange]), s"exchange in: $plan")
-    val rdd = out.queryExecution.analyzed.collectFirst {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
-    }.get
-    def lineage(r: org.apache.spark.rdd.RDD[_]): Seq[org.apache.spark.rdd.RDD[_]] =
-      r +: r.dependencies.flatMap(d => lineage(d.rdd))
+    noPlanExchange(out)
     // the index's blocks and each pass's (list, query) pairs, by list
-    val byList = lineage(rdd).distinct.collect {
+    val byList = lineageOf(out).collect {
       case s: org.apache.spark.rdd.ShuffledRDD[_, _, _]
         if s.partitioner.exists(_.isInstanceOf[operators.IvfBlockJoin.ListPartitioner]) => s
     }

@@ -1,5 +1,7 @@
 package graft.operators
 
+import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType}
+
 import graft.SparkSpecBase
 import graft.operators.Hnsw.{Node, Params}
 
@@ -105,5 +107,93 @@ class HnswWalkParitySpec extends SparkSpecBase {
     assert(contentHash(Hnsw.build(grid, "id", "vec", numShards = 3,
       Params(m = 4, efConstruction = 16), "cosine")) ==
       "4164d36f3ffff266c776f118e22c5f7bbdcbdafed5e7c72923b60533fdef12a8")
+  }
+  /** SHA-256 over searchBatch rows in (qid, rank) order: query id, id,
+    * distance bit pattern and rank. */
+  private def resultHash(out: org.apache.spark.sql.DataFrame): String = {
+    import spark.implicits._
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    val bb = java.nio.ByteBuffer.allocate(8)
+    def put(x: Long): Unit = { bb.clear(); bb.putLong(x); md.update(bb.array()) }
+    out.select("qid", "id", "distance", "rank").as[(Long, Long, Double, Int)].collect()
+      .sortBy(r => (r._1, r._4)).foreach { case (q, id, d, rank) =>
+        put(q); put(id); put(java.lang.Double.doubleToRawLongBits(d)); put(rank)
+      }
+    md.digest().map(b => f"$b%02x").mkString
+  }
+
+  test("maintenance rows are bit-identical to the SQL-plan implementation's (pinned hashes)") {
+    import spark.implicits._
+    val grid = shard(13L, 400, 8)
+    val p = Params(m = 4, efConstruction = 16)
+    val base = Hnsw.build(grid.take(300).toSeq.toDF("id", "vec"), "id", "vec", 5, p).cache()
+    // six new ids and one re-sent id with a new vector (upsert)
+    val batch = (grid.slice(300, 306) :+ ((grid(7)._1, Array.fill(8)(2f)))).toSeq.toDF("id", "vec")
+    val gone = grid.slice(10, 40).map(_._1)
+    val stray = Seq(123456789L, -987654321L)
+    val manifest = (gone.map(java.lang.Long.valueOf) ++ stray.map(java.lang.Long.valueOf) :+
+      (null: java.lang.Long)).toSeq.toDF("id")
+    val (compacted, surviving) = Hnsw.compact(base, (gone ++ gone.take(5)).toSeq.toDF("id"),
+      5, p, minDeadFraction = 0.08)
+    val got = Seq(
+      contentHash(Hnsw.insert(base, batch, "id", "vec", 5, p)),
+      contentHash(Hnsw.delete(base, (gone.take(3) ++ stray).toSeq, 5, p)),
+      contentHash(Hnsw.deleteBulk(base, manifest, 5, p)),
+      contentHash(compacted),
+      surviving.as[Long].collect().sorted.mkString(","),
+      contentHash(Hnsw.insert(
+        Hnsw.build(grid.take(200).toSeq.toDF("id", "vec"), "id", "vec", 3, p, "ip"),
+        grid.slice(200, 230).toSeq.toDF("id", "vec"), "id", "vec", 3, p, "ip")))
+    // taken from the implementation that rebuilt shards through SQL plans
+    assert(got == Seq(
+      "dc69fa2112339f74205f19f4e696f52103672bce96213b44a6350bca0385a28c",
+      "aee5dcd9243b58b0b9cd2a38826f11f565da305b24dd01293a1ec19116a025eb",
+      "3d189dd32ddbf8dc9d92d4ac18f1a90120bf2afe6ca1db404747a1fe30559063",
+      "ac99d00c67218a99bab6689cb7c6ff41e1ebd4304835b91707b3a59ebb405324",
+      "760224,1029470,1116579,1670909",
+      "69055275aec7105092192a02ea82e4008a9aa3589adaaeaa7e880cd2d29e99e9"))
+    assert(Hnsw.insert(base, batch, "id", "vec", 5, p).schema == Hnsw.NodeType)
+    base.unpersist()
+  }
+
+  test("searchBatch rows are bit-identical to the window-ranked implementation's (pinned hashes)") {
+    import spark.implicits._
+    val grid = shard(17L, 400, 8)
+    val r = new scala.util.Random(3)
+    // grid vectors, random grid points and the zero vector, whose inner
+    // product distances are all -0.0
+    val qs = (grid.take(6).map(_._2) ++ Array.fill(10)(Array.fill(8)((r.nextInt(7) - 3).toFloat)) :+
+      Array.fill(8)(0f)).zipWithIndex.map { case (v, i) => (i.toLong * 3 - 5, v) }
+    val got = for (m <- Seq("l2", "cosine", "ip"); (shards, ef, k) <- Seq((4, 8, 10), (3, 1000, 7), (16, 16, 10))) yield {
+      val idx = Hnsw.build(grid.toSeq.toDF("id", "vec"), "id", "vec", shards,
+        Params(m = 4, efConstruction = 16), m)
+      resultHash(Hnsw.searchBatch(idx, qs, k, ef, m, tombstones = grid.slice(50, 70).map(_._1).toSet))
+    }
+    // taken from the implementation that ranked with a SQL window
+    assert(got == Seq(
+      "0639e3963f4f6dc93777a228df8f9897e879a94263527ea6a1263df154bd7997",
+      "cb25fa33dac783c3672f9146d0afd14ed46b19279b4ca6c1ed3866d98c7824d4",
+      "f375d4c31f2c3199bb6977a006e1c28af5e1a5d223ea0a8801397b05c75e472f",
+      "c53db59abc9b9d04772bdf9118389996247fcdade622df21b0de52fde82ba082",
+      "bfa081a279feb420283a23bd9feec047c522235d196cf04b91c507733bf0455c",
+      "b34357ea7779ea96ce4309877036f25825b1404c62321f1d8307eea526e7bd07",
+      "3600e91cdc54b841b0e746b2097884e2ba9b20e50f5e17e36a4182d715e6d274",
+      "14c4d7e766eb3a7d65a23b88146ea4fc67a233d709ac9e313070b4805433ac49",
+      "b5a2927c171504151f13188c03ca24be70cf5c22e0ee4eccf6123e64f8fa6466"))
+    val schema = Hnsw.searchBatch(Hnsw.build(grid.toSeq.toDF("id", "vec"), "id", "vec", 2), qs).schema
+    assert(schema.map(f => (f.name, f.dataType, f.nullable)) == Seq(("qid", LongType, false),
+      ("id", LongType, false), ("distance", DoubleType, false), ("rank", IntegerType, false)))
+  }
+
+  test("the merge ranks distances as Spark SQL orders them: -0.0 equals 0.0, NaN last") {
+    import spark.implicits._
+    val found = Seq((5L, 0.0), (3L, -0.0), (9L, Double.NaN), (1L, 0.0), (2L, -1.0),
+      (4L, Double.PositiveInfinity), (7L, -0.0))
+    val sql = found.toDF("id", "distance").orderBy("distance", "id")
+      .as[(Long, Double)].collect().toSeq
+    val bits = (s: Seq[(Long, Double)]) =>
+      s.map { case (id, d) => (id, java.lang.Double.doubleToRawLongBits(d)) }
+    assert(bits(Hnsw.nearest(found, found.length)) == bits(sql))
+    assert(bits(Hnsw.nearest(found.reverse, 3)) == bits(sql.take(3)))
   }
 }

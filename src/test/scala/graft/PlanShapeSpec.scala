@@ -244,7 +244,7 @@ class PlanShapeSpec extends SparkSpecBase {
       !n.isInstanceOf[org.apache.spark.sql.execution.exchange.Exchange]), s"exchange in: $plan")
   }
 
-  test("HNSW batch search merges per-shard top-k in its job — shards walk on by-number partitions") {
+  test("HNSW batch search merges per-shard top-k in its job on by-number partitions") {
     val emb = Tables.read(spark, dir, "embeddings").filter(col("vec_id") < 200)
     val qs = Array((0L, Tables.queryVector(spark, dir, 0L)))
     // executed: the shard walk runs on min(#shards, parallelism) tasks,

@@ -13,8 +13,7 @@ import org.apache.spark.sql.functions._
   * `runMain graft.CellProbe <cell> [sfDir] [scale] [runs]` —
   * cells: knn_join_exact, ivf_blocked_join, index_ingest, stream_retract,
   * hnsw_serve_tombstoned,
-  * image_neardup, label_noise_audit, span_dedup_bloom, line_dedup_split,
-  * knn_scan_topk. */
+  * image_neardup, label_noise_audit, span_dedup_bloom, knn_scan_topk. */
 object CellProbe {
   import ScaleBench.expandEmb
 
@@ -205,51 +204,6 @@ object CellProbe {
           require(remPlain == remBloom,
             s"bloom path diverged: $remPlain vs $remBloom")
           remPlain + remBloom
-        case "line_dedup_split" =>
-          // r16 adjudication of r15's "Not yet optimized" #4: lineDedup's
-          // lineage runs split() over the corpus 3× (flagged aggregate,
-          // boilerIdx join, rebuild). Is a persist-once of the split
-          // arrays worth its memory at the 100× tier? Runs BOTH per run:
-          // the shipped operator vs an inline persist-once variant with
-          // identical algebra.
-          val docs0 = Tables.read(spark, sfDir, "documents")
-            .select(col("doc_id").cast("long").as("base_id"), col("text"))
-          val docsB = docs0
-            .withColumn("r", explode(lit((0 until scale).toArray)))
-            .select((col("base_id") + col("r").cast("long") * 1000000L).as("doc_id"),
-              concat(col("text"), lit("\nuniq"), col("r")).as("text"))
-            .cache()
-          docsB.count()
-          def aggOf(df: org.apache.spark.sql.DataFrame): Long =
-            df.agg(sum(length(col("clean_text"))), sum(col("removed_lines")))
-              .head().getLong(1)
-          val tP = System.nanoTime()
-          val remPlain = aggOf(operators.Dedup.lineDedup(docsB, "doc_id", "text", 3))
-          println(f"  plain_sec=${(System.nanoTime() - tP) / 1e9}%.3f removed=$remPlain%d")
-          val tC = System.nanoTime()
-          val ls = docsB.select(col("doc_id"), split(col("text"), "\n").as("__ls"))
-            .filter(col("__ls").isNotNull).persist()
-          val remCached = try {
-            val lines = ls.select(col("doc_id"),
-              posexplode(col("__ls")).as(Seq("idx", "line")))
-            val flagged = lines.groupBy("line")
-              .agg(countDistinct(col("doc_id")).as("__df"))
-              .filter(col("__df") >= 3).select("line")
-            val boilerIdx = lines.join(flagged, "line")
-              .groupBy(col("doc_id")).agg(collect_list(col("idx")).as("__bi"))
-            aggOf(ls.join(boilerIdx, Seq("doc_id"), "left")
-              .select(col("doc_id"),
-                concat_ws("\n", expr("""transform(
-                  array_except(sequence(0, size(__ls) - 1), coalesce(__bi, array())),
-                  i -> element_at(__ls, i + 1))""")).as("clean_text"),
-                expr("CAST(coalesce(size(__bi), 0) AS BIGINT)").as("removed_lines"),
-                expr("CAST(size(__ls) AS BIGINT)").as("total_lines")))
-          } finally ls.unpersist()
-          println(f"  split_once_sec=${(System.nanoTime() - tC) / 1e9}%.3f removed=$remCached%d")
-          docsB.unpersist()
-          require(remPlain == remCached,
-            s"persist-once variant diverged: $remPlain vs $remCached")
-          remPlain + remCached
         case "knn_scan_topk" =>
           // v_l2_knn's exact plan family at scale (r16, VERDICT r15 ask
           // #3): brute-force TakeOrderedAndProject scan, one L2 kernel

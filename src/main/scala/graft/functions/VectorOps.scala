@@ -4,6 +4,14 @@ package graft.functions
  * Pure-Scala vector kernels: distance metrics, norms and element-wise
  * operations over dense `Array[Float]` vectors.
  *
+ * This is the one definition of each distance metric's arithmetic. The
+ * SQL distance node ([[graft.plans.DistanceExpr]]) reads its two sides
+ * into `float[]` and calls these kernels (generated code calls them as
+ * static methods), as do the HNSW walk, the IVF block scan and
+ * nearest-centroid routing, whose one definition
+ * ([[graft.operators.Ivf.nearestCentroid]], [[graft.operators.Ivf.probeOrder]])
+ * runs [[l2]].
+ *
  * Numeric contract (reference parity): every kernel upcasts `float`
  * elements to `double` before accumulating, as the reference C does
  * (`NeuronDB/src/core/distance.c:62,102-103`). L2 / squared-L2 use Kahan
@@ -83,12 +91,13 @@ object VectorOps {
     sum
   }
 
-  /** Count of unequal coordinates (NeuronDB/src/core/distance.c:218-252). */
-  def hamming(a: Array[Float], b: Array[Float]): Int = {
+  /** Count of unequal coordinates (NaN ≠ NaN), as a double like every
+    * other metric (NeuronDB/src/core/distance.c:218-252). */
+  def hamming(a: Array[Float], b: Array[Float]): Double = {
     checkDims(a, b)
     var n = 0; var i = 0
     while (i < a.length) { if (a(i) != b(i)) n += 1; i += 1 }
-    n
+    n.toDouble
   }
 
   def chebyshev(a: Array[Float], b: Array[Float]): Double = {
@@ -249,11 +258,15 @@ object VectorOps {
   // Norms / normalization (NeuronDB/neurondb--1.0.sql:342-347)
   // ---------------------------------------------------------------------
 
-  def norm(a: Array[Float]): Double = {
+  /** Σ vᵢ² in double, plain accumulation: the per-side sum of
+    * [[cosineDistance]]. */
+  def normSq(a: Array[Float]): Double = {
     var sum = 0.0; var i = 0
     while (i < a.length) { val v = a(i).toDouble; sum += v * v; i += 1 }
-    math.sqrt(sum)
+    sum
   }
+
+  def norm(a: Array[Float]): Double = math.sqrt(normSq(a))
 
   /** Zero vector normalizes to itself. */
   def normalize(a: Array[Float]): Array[Float] = {

@@ -244,10 +244,12 @@ object GraphAnalytics {
   def labelPropagation(edges: DataFrame, iterations: Int): DataFrame =
     labelPropagation(edges, iterations, materialize = true)
 
-  /** `materialize = false` skips the final eager localCheckpoint and
-    * returns the composed lazy plan — the PlanShapeSpec hook (the
-    * incrementalDedup convention); production callers always
-    * materialize (the AeFixpoint contract: the result must not
+  /** `materialize = false` cuts nothing eagerly (no node-set, round or
+    * final localCheckpoint) and returns the composed lazy plan — the
+    * PlanShapeSpec hook (the incrementalDedup convention). Either way the
+    * adjacency is unpersisted before returning, so the call leaves no
+    * RDD pinned; the lazy plan re-derives it when run. Production callers
+    * always materialize (the AeFixpoint contract: the result must not
     * re-derive the unpersisted adjacency). */
   private[graft] def labelPropagation(edges: DataFrame, iterations: Int,
                                       materialize: Boolean): DataFrame = {
@@ -261,7 +263,8 @@ object GraphAnalytics {
         .persist()
     }
     try {
-      val nodes = adj.select(col("node").as("id")).distinct().localCheckpoint(true)
+      val nodes0 = adj.select(col("node").as("id")).distinct()
+      val nodes = if (materialize) nodes0.localCheckpoint(true) else nodes0
       var lab = nodes.withColumn("label", col("id"))
       for (t <- 1 to iterations) {
         val counts = adj.join(lab.select(col("id").as("nb"), col("label")), "nb")
@@ -279,13 +282,13 @@ object GraphAnalytics {
           .select(col("id"), col("m").getField("l").as("label"))
         // r15: lazy round chaining — `lab` is read once per round; see
         // pagerankInt. r16: depth bounded via cutEvery.
-        lab = cutEvery(nodes.join(pick, Seq("id"), "left")
-          .select(col("id"), coalesce(col("label"), col("id")).as("label")),
-          t, iterations)
+        val next = nodes.join(pick, Seq("id"), "left")
+          .select(col("id"), coalesce(col("label"), col("id")).as("label"))
+        lab = if (materialize) cutEvery(next, t, iterations) else next
       }
       val out = lab.select(col("id"), col("label").as("community"))
       if (materialize) out.localCheckpoint(true) else out
-    } finally { if (materialize) adj.unpersist() else () }
+    } finally adj.unpersist()
   }
 
   /** Integer PageRank over `edges(src, dst)`; returns (id, score) with

@@ -511,9 +511,7 @@ object Hnsw {
     rows.queryExecution.toRdd.map { r =>
       if (r.isNullAt(0) || r.isNullAt(1))
         throw new IllegalArgumentException(s"null $idCol or $vecCol in the rows to index")
-      val v = r.getArray(1)
-      if (nulls) graft.plans.DistanceExpressions.noNullElement(v)
-      (r.getLong(0), v.toFloatArray())
+      (r.getLong(0), graft.plans.DistanceExpressions.floats(r.getArray(1), nulls))
     }
   }
 
@@ -762,19 +760,25 @@ object Hnsw {
     StructField("rank", IntegerType, nullable = false)))
 
   /** The `k` first of `found` in result order: distance as Spark SQL
-    * orders doubles (−0.0 equal to 0.0, NaN last), then id. */
-  private[graft] def nearest(found: Seq[(Long, Double)], k: Int): Seq[(Long, Double)] =
+    * orders doubles (−0.0 equal to 0.0, NaN last), then id. An id found
+    * twice (a batch that repeats an id indexes both rows) is kept once,
+    * at its first place in that order: its nearer row. */
+  private[graft] def nearest(found: Seq[(Long, Double)], k: Int): Seq[(Long, Double)] = {
+    val seen = mutable.HashSet[Long]()
     found.sortWith { (a, b) =>
       val c = SQLOrderingUtil.compareDoubles(a._2, b._2)
       c < 0 || (c == 0 && a._1 < b._1)
-    }.take(k)
+    }.filter(f => seen.add(f._1)).take(k)
+  }
 
   /**
    * Batch ANN search, one Spark job: queries broadcast (tiny), each
    * shard's graph walked for every query, and each query's per-shard
    * top-k merged — never a corpus-sized shuffle. Returns
    * (qid, id, distance, rank ≤ k), ranked by (distance, id) as Spark SQL
-   * orders them.
+   * orders them. Each id appears at most once per query, at its nearer
+   * row when a batch indexed it twice, so a query may get fewer than k
+   * rows even when the index holds k or more.
    *
    * The index rows move by partition NUMBER to `defaultParallelism`
    * partitions as binary rows, shard s to partition s mod P, so the

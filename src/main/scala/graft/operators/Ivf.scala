@@ -43,13 +43,9 @@ object Ivf {
       assigned: DataFrame, // original columns + cluster_id
       vecCol: String) {
 
-    /** Nearest-centroid ids for a query, closest first. */
+    /** Nearest-centroid ids for a query, closest first ([[probeOrder]]). */
     def route(query: Array[Float], nprobe: Int): Seq[Int] =
-      centroids.zipWithIndex
-        .map { case (c, i) => (VectorOps.l2(query, c), i) }
-        .sortBy(_._1)
-        .take(math.max(1, nprobe))
-        .map(_._2).toSeq
+      probeOrder(centroidDistances(query, centroids)).take(math.max(1, nprobe)).toSeq
 
     /** ANN top-k: probe nprobe posting lists, exact rescore inside them.
       * Routing and the posting lists themselves are L2-k-means; a
@@ -60,6 +56,32 @@ object Ivf {
                metric: String = "l2"): DataFrame =
       Knn.search(assigned.filter(inLists(route(query, nprobe))), vecCol, query, k, metric)
   }
+
+  /** Each centroid's L2 distance from `q`, by centroid id: what every
+    * nearest-centroid route ranks. */
+  private[graft] def centroidDistances(q: Array[Float], centroids: Array[Array[Float]]): Array[Double] =
+    centroids.map(VectorOps.l2(q, _))
+
+  /** The nearest centroid to `q` and its L2 distance: a strict `<` scan
+    * from `Double.MaxValue`, so ties go to the lower id, and a query
+    * whose every distance is NaN or infinite goes to centroid 0 at
+    * `Double.MaxValue`. The argmin of [[routeWithDist]] and
+    * [[Knn.vecRoute]]. */
+  private[graft] def nearestCentroid(q: Array[Float], centroids: Array[Array[Float]]): (Int, Double) = {
+    var best = 0; var bestD = Double.MaxValue; var i = 0
+    while (i < centroids.length) {
+      val d = VectorOps.l2(q, centroids(i))
+      if (d < bestD) { bestD = d; best = i }
+      i += 1
+    }
+    (best, bestD)
+  }
+
+  /** Centroid ids nearest first by their [[centroidDistances]]: a stable
+    * sort in the total double order, so ties go to the lower id. The
+    * probe order of [[IvfModel.route]], [[join]] and [[knnJoin]]. */
+  private[graft] def probeOrder(dists: Array[Double]): Array[Int] =
+    dists.indices.sortBy(dists(_))(Ordering.Double.TotalOrdering).toArray
 
   /** The rows of the listed posting lists: `cluster_id IN (lists)` as an
     * [[graft.plans.InInts]], so each probe set reuses the compiled code of
@@ -254,8 +276,8 @@ object Ivf {
   }
 
   /** The ONE routing kernel: assign each row its nearest centroid
-    * (broadcast, nlists-sized; strict `<` argmin, so ties break to the
-    * LOWER cluster id). Shared verbatim by [[insert]], the streaming
+    * (broadcast, nlists-sized; [[nearestCentroid]], so ties break to the
+    * LOWER cluster id). Shared by [[insert]], the streaming
     * ingest paths ([[graft.streaming.StreamIndexIngest]]), IVFADC
     * maintenance ([[IvfPq.insert]]), and the `route_health` dial —
     * batch and stream routing cannot diverge because there is exactly
@@ -274,17 +296,7 @@ object Ivf {
   def routeWithDist(centroids: Array[Array[Float]], df: DataFrame,
                     vecCol: String): DataFrame = {
     val bc = df.sparkSession.sparkContext.broadcast(centroids)
-    val assign = udf((v: Seq[Float]) => {
-      val q = v.toArray
-      val cs = bc.value
-      var best = 0; var bestD = Double.MaxValue; var i = 0
-      while (i < cs.length) {
-        val d = VectorOps.l2(q, cs(i))
-        if (d < bestD) { bestD = d; best = i }
-        i += 1
-      }
-      (best, bestD)
-    })
+    val assign = udf((v: Seq[Float]) => nearestCentroid(v.toArray, bc.value))
     df.withColumn("__route", assign(col(vecCol)))
       .withColumn("cluster_id", col("__route._1"))
       .withColumn("route_dist", col("__route._2"))
@@ -383,12 +395,8 @@ object Ivf {
            pairFilter: Option[org.apache.spark.sql.Column] = None): DataFrame = {
     val bCentroids = other.sparkSession.sparkContext.broadcast(model.centroids)
     val p = math.max(1, nprobe)
-    val probeUdf = udf((v: Seq[Float]) => {
-      val q = v.toArray
-      val cs = bCentroids.value
-      val ds = Array.tabulate(cs.length)(i => (VectorOps.l2(q, cs(i)), i))
-      ds.sortBy(_._1).take(math.min(p, cs.length)).map(_._2).toSeq
-    })
+    val probeUdf = udf((v: Seq[Float]) =>
+      probeOrder(centroidDistances(v.toArray, bCentroids.value)).take(p).toSeq)
     val cosine = metric == "cosine"
     val l0 = model.assigned.select(
       model.assigned.columns.map(c => col(c).as(if (c == "cluster_id") c else s"l_$c")).toSeq: _*)

@@ -57,8 +57,7 @@ private[graft] object IvfBlockJoin {
     * a null vector rejected. */
   private def vector(a: ArrayData, nulls: Boolean): Array[Float] = {
     if (a == null) throw new IllegalArgumentException("knnJoin: null vector")
-    if (nulls) DistanceExpressions.noNullElement(a)
-    a.toFloatArray
+    DistanceExpressions.floats(a, nulls)
   }
 
   /** The blocks of one partition's index rows, (list, row) pairs. */
@@ -127,13 +126,6 @@ private[graft] object IvfBlockJoin {
       cs.filter(c => java.lang.Double.compare(c.distance, kth) <= 0)
     }
 
-  /** Per-list distances of `q`, and the list ids nearest first (ties to
-    * the lower id). */
-  private def route(q: Array[Float], centroids: Array[Array[Float]]): (Array[Double], Array[Int]) = {
-    val d = centroids.map(VectorOps.l2(q, _))
-    (d, d.indices.sortBy(d(_)).toArray)
-  }
-
   /** The index's rows by list: (list, row of `t_`-prefixed train
     * columns), the row type, the vector's ordinal in it and whether the
     * vector type admits null elements. */
@@ -197,7 +189,8 @@ private[graft] object IvfBlockJoin {
 
     // pass 1: the nearest `probes` lists of each query
     val first = scanAll(index,
-      qs.flatMap(q => route(q.vec, centroids)._2.take(probes).map(c => (c, q))).partitionBy(byList),
+      qs.flatMap(q => Ivf.probeOrder(Ivf.centroidDistances(q.vec, centroids)).take(probes)
+        .map(c => (c, q))).partitionBy(byList),
       k, vecOrd, tNulls, centroids)
 
     // every query with its pass-1 candidates, pruned to the k-th distance
@@ -222,8 +215,8 @@ private[graft] object IvfBlockJoin {
           val bound = if (cs.length >= k)
             cs.map(_.distance).sorted(Ordering.Double.TotalOrdering)(k - 1) + 1e-9
           else Double.MaxValue
-          val (d, order) = route(q.vec, centroids)
-          order.iterator.drop(probes)
+          val d = Ivf.centroidDistances(q.vec, centroids)
+          Ivf.probeOrder(d).iterator.drop(probes)
             .filter(c => radius.get(c).exists(r => d(c) - r <= bound)).map(c => (c, q))
         }
       }.partitionBy(byList),

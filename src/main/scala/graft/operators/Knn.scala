@@ -4,7 +4,6 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.functions.{VectorFunctions => VF, VectorOps}
 
 /**
  * k-NN / similarity-join operators (SURVEY §2.5).
@@ -137,16 +136,10 @@ object Knn {
 
   /** Nearest-centroid routing, the reference's `vec_route`
     * (`NeuronDB/src/core/operators.c:1155-1228`): L2 argmin over a small
-    * centroid array, driver-side. */
+    * centroid array, driver-side ([[Ivf.nearestCentroid]]). */
   def vecRoute(query: Array[Float], centroids: Array[Array[Float]]): Int = {
     require(centroids.nonEmpty, "vec_route requires at least one centroid")
-    var best = 0; var bestD = Double.MaxValue; var i = 0
-    while (i < centroids.length) {
-      val d = VectorOps.l2(query, centroids(i))
-      if (d < bestD) { bestD = d; best = i }
-      i += 1
-    }
-    best
+    Ivf.nearestCentroid(query, centroids)._1
   }
 
   /** Distance-ranked window within partitions — the semantics

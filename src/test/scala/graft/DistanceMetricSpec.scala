@@ -10,9 +10,9 @@ import graft.functions.GraftFunctions
 import graft.plans.{DistanceExpr, DistanceExpressions => DE, Metric}
 
 /** The metric table and its one native node: every SQL distance name
-  * resolves to [[DistanceExpr]] at analysis time, and each entry's
-  * kernels agree bit for bit with its [[graft.functions.VectorOps]]
-  * kernel, with or without codegen. */
+  * resolves to [[DistanceExpr]] at analysis time, and the node agrees bit
+  * for bit with the entry's [[graft.functions.VectorOps]] kernel, with or
+  * without codegen. */
 class DistanceMetricSpec extends SparkSpecBase {
   import spark.implicits._
 
@@ -110,7 +110,7 @@ class DistanceMetricSpec extends SparkSpecBase {
     def run(m: Metric): DataFrame = e.select($"vec_id", DE.dist(m)($"embedding", lit(q)))
     for (m <- Metric.all) {
       val code = run(m).queryExecution.debug.codegenToSeq().map(_._2).mkString
-      assert(code.contains(s"graft.plans.DistanceExpressions.${m.kernel}("), m.sqlName)
+      assert(code.contains(s"graft.functions.VectorOps.${m.kernel}("), m.sqlName)
       val generated = collected(run(m))
       val interpreted = withConf(
           "spark.sql.codegen.wholeStage" -> "false",

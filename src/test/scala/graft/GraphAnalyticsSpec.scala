@@ -77,6 +77,16 @@ class GraphAnalyticsSpec extends SparkSpecBase {
     assert(out(5L) == 1L)
   }
 
+  test("label propagation's lazy plan leaves no RDD persisted") {
+    val edges = Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 10L), (10L, 11L)).toDF("src", "dst")
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val lazyOut = GraphAnalytics.labelPropagation(edges, 5, materialize = false)
+    assert((spark.sparkContext.getPersistentRDDs.keySet -- before).isEmpty)
+    val want = GraphAnalytics.labelPropagation(edges, 5).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toMap
+    assert(lazyOut.collect().map(r => (r.getLong(0), r.getLong(1))).toMap == want)
+  }
+
   test("clustering coefficient: closed triangle = 1, open wedge center = 0") {
     val edges = Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L)).toDF("src", "dst")
     val out = GraphAnalytics.clusteringCoefficients(edges).collect()

@@ -402,6 +402,22 @@ class HnswSpec extends SparkSpecBase {
     assert(again.count() == 102)
   }
 
+  test("search returns a batch's duplicate id once, at its nearer vector") {
+    val old = emb.filter($"vec_id" < 100).select($"vec_id", $"embedding")
+    val batch = Seq((500L, Seq.fill(64)(0.25f)), (501L, Seq.fill(64)(0.5f)),
+      (500L, Seq.fill(64)(0.75f))).toDF("vec_id", "embedding")
+    val index = Hnsw.build(old.unionByName(batch), "vec_id", "embedding", numShards = 4)
+    val q = Array.fill(64)(0.7f)
+    val hits = Hnsw.searchBatch(index, Array((1L, q)), k = 103, efSearch = 200)
+      .select($"id", $"distance", $"rank").as[(Long, Double, Int)].collect().sortBy(_._3)
+    val ids = hits.map(_._1)
+    assert(ids.distinct.length == ids.length, ids.toSeq)
+    assert(hits.length == 102)
+    assert(hits.map(_._3).toSeq == (1 to 102))
+    val near = graft.functions.VectorOps.l2(q, Array.fill(64)(0.75f))
+    assert(hits.find(_._1 == 500L).map(_._2).contains(near))
+  }
+
   test("deleteBulk ignores null and stray manifest ids; an all-stale manifest returns the index") {
     val base = Hnsw.build(emb.filter($"vec_id" < 200), "vec_id", "embedding", numShards = 4)
       .localCheckpoint()

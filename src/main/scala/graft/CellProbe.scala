@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
   * `runMain graft.CellProbe <cell> [sfDir] [scale] [runs]` —
   * cells: knn_join_exact, ivf_blocked_join, index_ingest, stream_retract,
   * hnsw_serve_tombstoned,
-  * image_neardup, label_noise_audit, span_dedup_bloom, knn_scan_topk. */
+  * image_neardup, label_noise_audit, knn_scan_topk. */
 object CellProbe {
   import ScaleBench.expandEmb
 
@@ -165,45 +165,6 @@ object CellProbe {
           operators.DataValuation.labelNoiseKnn(
             auditModel, labeled.filter(col("vec_id") < 500), "vec_id",
             "embedding", "label", k = 10).count()
-        case "span_dedup_bloom" =>
-          // spanDedup's coverage join with a SPARSE flagged side — the
-          // regime the r16 Bloom prefilter targets (ScaleBench's own
-          // span_dedup row is the saturated opposite, where the
-          // selectivity gate correctly refuses the filter). Variants
-          // rewrite every token with a variant suffix, so grams are
-          // unique across variants; only variants 0/1 share the base
-          // text — flagged ≈ the base gram set, tiny vs the stream.
-          // Runs the SAME operator twice per run: gate forced open
-          // (bloom) vs forced shut (plain r15 shape); both sub-times
-          // print, the cell returns both row counts.
-          val docs0 = Tables.read(spark, sfDir, "documents")
-            .select(col("doc_id").cast("long").as("base_id"), col("text"))
-          val docsB = docs0
-            .withColumn("r", explode(lit((0 until scale).toArray)))
-            .select((col("base_id") + col("r").cast("long") * 1000000L).as("doc_id"),
-              when(col("r") < 2, col("text"))
-                .otherwise(regexp_replace(col("text"), lit("(\\S+)"),
-                  concat(lit("$1v"), col("r")))).as("text"))
-            .cache()
-          docsB.count()
-          def runSpan(): Long = operators.Dedup.spanDedup(
-              docsB, "doc_id", "text", n = 8, minDocs = 2, hashGrams = true)
-            .agg(sum(length(col("clean_text"))), sum(col("removed_tokens")))
-            .head().getLong(1)
-          spark.conf.set("spark.graft.spanDedup.bloomMinInputBytes",
-            Long.MaxValue.toString)
-          val tP = System.nanoTime()
-          val remPlain = runSpan()
-          println(f"  plain_sec=${(System.nanoTime() - tP) / 1e9}%.3f removed=$remPlain%d")
-          spark.conf.set("spark.graft.spanDedup.bloomMinInputBytes", "0")
-          val tB = System.nanoTime()
-          val remBloom = runSpan()
-          println(f"  bloom_sec=${(System.nanoTime() - tB) / 1e9}%.3f removed=$remBloom%d")
-          spark.conf.unset("spark.graft.spanDedup.bloomMinInputBytes")
-          docsB.unpersist()
-          require(remPlain == remBloom,
-            s"bloom path diverged: $remPlain vs $remBloom")
-          remPlain + remBloom
         case "knn_scan_topk" =>
           // v_l2_knn's exact plan family at scale (r16, VERDICT r15 ask
           // #3): brute-force TakeOrderedAndProject scan, one L2 kernel

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /**
@@ -40,14 +39,7 @@ object MaintenanceDrift {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val outPath = if (args.length > 1) args(1) else "MAINT_DRIFT.json"
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.localMeasurement(cpus)
     import spark.implicits._
 
     val sf = Tables.read(spark, sfDir, "embeddings")
@@ -76,24 +68,19 @@ object MaintenanceDrift {
           nprobes = Seq(probeWidth))
         .collect().head.getDouble(1)
 
-    // per-(corpus, query) brute-force truth sets, computed once and
-    // reused by every ADC recall point of a leg — the four recall
-    // reads (maintained / rebuilt / re-tuned / re-tuned@pool512) share
-    // the same 25 queries over the same combined corpus
-    val truthCache = collection.mutable.Map.empty[Long, Set[Long]]
+    // recall@10 of the ADC serve path against `truth`, the exact top-10
+    // of each query in `qs` — one scan per leg answers the four recall
+    // reads (maintained / rebuilt / re-tuned / re-tuned@pool512), which
+    // share the same 25 queries over the same combined corpus
     def adcRecall(model: operators.IvfPq.IvfPqModel,
-                  corpus: org.apache.spark.sql.DataFrame,
+                  truth: Map[Long, Set[Long]],
                   qs: Array[(Long, Array[Float])],
                   probeWidth: Int = nprobe,
                   rerankPool: Int = 128): Double = {
       val hits = qs.map { case (qid, q) =>
-        val truth = truthCache.getOrElseUpdate(qid,
-          operators.Knn.search(corpus, "embedding", q, 10,
-              tieBreak = Seq("vec_id"))
-            .select("vec_id").as[Long].collect().toSet)
         val got = operators.IvfPq.search(model, q, 10, probeWidth,
           rerankPool = rerankPool).select("vec_id").as[Long].collect().toSet
-        (truth & got).size
+        (truth(qid) & got).size
       }.sum
       hits.toDouble / (qs.length * 10)
     }
@@ -106,7 +93,6 @@ object MaintenanceDrift {
     // same-distribution rows show it cannot detect volume growth)
     val legs = Seq((0.1, false), (0.5, false), (1.0, false), (0.5, true))
     val lines = legs.map { case (frac, shifted) =>
-      truthCache.clear() // truth is per-leg: same qids, different corpus
       val addReplicas = math.max(1, (baseReplicas * frac).toInt)
       val freshRaw = RecallAtScale
         .corpusSlice(sf, baseReplicas, baseReplicas + addReplicas)
@@ -143,8 +129,11 @@ object MaintenanceDrift {
         nlists = 100, m = 8)
       adcRebuilt.encoded.cache().count()
       val adcQs = qs.take(13) ++ qs.takeRight(12)
-      val aMaint = adcRecall(adcMaint, combined, adcQs)
-      val aRebuild = adcRecall(adcRebuilt, combined, adcQs)
+      // truth is per-leg: same qids, different corpus
+      val truth = operators.Knn.exactTopK(combined, "vec_id", "embedding", adcQs, 10)
+        .map { case (qid, found) => qid -> found.map(_.id).toSet }
+      val aMaint = adcRecall(adcMaint, truth, adcQs)
+      val aRebuild = adcRecall(adcRebuilt, truth, adcQs)
 
       // the recovery point (r14 verdict ask #3): a rebuild alone keeps
       // the BUILD-TIME nprobe, and on the shifted leg that stale dial
@@ -166,10 +155,9 @@ object MaintenanceDrift {
       val (nprobeRetuned, rRetuned) = curve
         .collectFirst { case (p, r) if r >= 0.9 => (p, r) }
         .getOrElse(curve.last)
-      val aRetuned = adcRecall(adcRebuilt, combined, adcQs, nprobeRetuned)
+      val aRetuned = adcRecall(adcRebuilt, truth, adcQs, nprobeRetuned)
       val aRetunedPool512 =
-        adcRecall(adcRebuilt, combined, adcQs, nprobeRetuned,
-          rerankPool = 512)
+        adcRecall(adcRebuilt, truth, adcQs, nprobeRetuned, rerankPool = 512)
 
       maintained.assigned.unpersist(); rebuilt.assigned.unpersist()
       adcMaint.encoded.unpersist(); adcRebuilt.encoded.unpersist()

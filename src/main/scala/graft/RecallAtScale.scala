@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /**
@@ -63,14 +63,7 @@ object RecallAtScale {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val outPath = if (args.length > 1) args(1) else "RECALL_SCALE.json"
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.localMeasurement(cpus)
     import spark.implicits._
 
     // scales: 1x/10x/100x of the 2k-row sf0.1 base -> n up to 200k at
@@ -112,15 +105,12 @@ object RecallAtScale {
         nlists = 100, m = 8)
       adc.encoded.cache().count()
       val adcQs = queries.take(25)
-      val truth: Map[Long, Set[Long]] = adcQs.map { case (qid, q) =>
-        qid -> operators.Knn.search(corpus, "embedding", q, 10)
-          .select("vec_id").as[Long].collect().toSet
-      }.toMap
+      val truth = operators.Knn.exactTopK(corpus, "vec_id", "embedding", adcQs, 10)
       val adcCurve = Seq(4, 8, 12, 16).map { nprobe =>
         val hits = adcQs.map { case (qid, q) =>
           val got = operators.IvfPq.search(adc, q, 10, nprobe, rerankPool = 128)
             .select("vec_id").as[Long].collect().toSet
-          (truth(qid) & got).size
+          (truth(qid).map(_.id).toSet & got).size
         }.sum
         (nprobe, hits.toDouble / (adcQs.length * 10))
       }

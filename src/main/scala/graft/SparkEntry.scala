@@ -2079,6 +2079,35 @@ object SparkEntry {
     ml.KmeansFixpoint.oracleSql("embeddings", "vec_id", "embedding",
       k = 5, iters = 4, dim = 64)
 
+  /** The fixpoint recall curves' probe ranks: for an integer-scaled
+    * query, the 1-based rank of every centroid in `centers` by (squared
+    * distance, centroid index). */
+  private def fixpointPrankUdf(s: SparkSession, centers: Array[Array[Double]]) = {
+    val bc = s.sparkContext.broadcast(centers)
+    udf((q: Seq[Long]) => {
+      val cs = bc.value
+      val ds = cs.zipWithIndex.map { case (c, ci) =>
+        var acc = 0.0
+        var j = 0
+        while (j < c.length) { val t = q(j).toDouble - c(j); acc += t * t; j += 1 }
+        (acc, ci)
+      }
+      val rank = new Array[Int](cs.length)
+      ds.sortBy(identity).map(_._2).zipWithIndex
+        .foreach { case (c, i) => rank(c) = i + 1 }
+      rank.toSeq
+    })
+  }
+
+  /** The fixpoint recall curves' exact integer squared distance between
+    * two integer-scaled vectors. */
+  private lazy val fixpointD2Udf = udf((a: Seq[Long], b: Seq[Long]) => {
+    var acc = 0L
+    var j = 0
+    while (j < a.length) { val t = a(j) - b(j); acc += t * t; j += 1 }
+    acc
+  })
+
   /** ANN recall curve with the MEASUREMENT itself under the oracle: IVF
     * over the bit-exact Lloyd-fixpoint quantizer, recall@10-vs-nprobe by
     * the probe-rank identity (`Ivf.recallCurve`'s single-pass form). The
@@ -2093,33 +2122,14 @@ object SparkEntry {
       k = 5, iters = 4)
     val pts = e.select(col("vec_id").cast("long").as("id"),
       transform(col("embedding"), x => floor(x.cast("double") * 1e6 + 0.5)).as("xs"))
-    val bc = s.sparkContext.broadcast(centers)
-    val prankUdf = udf((q: Seq[Long]) => {
-      val cs = bc.value
-      val ds = cs.zipWithIndex.map { case (c, ci) =>
-        var acc = 0.0
-        var j = 0
-        while (j < c.length) { val t = q(j).toDouble - c(j); acc += t * t; j += 1 }
-        (acc, ci)
-      }
-      val rank = new Array[Int](cs.length)
-      ds.sortBy(identity).map(_._2).zipWithIndex
-        .foreach { case (c, i) => rank(c) = i + 1 }
-      rank.toSeq
-    })
     val queries = pts.filter(col("id") < 20)
-      .select(col("id").as("qid"), col("xs").as("qxs"), prankUdf(col("xs")).as("prank"))
+      .select(col("id").as("qid"), col("xs").as("qxs"),
+        fixpointPrankUdf(s, centers)(col("xs")).as("prank"))
     // denominator from the ACTUAL query count (ids may be sparse / corpus
     // smaller than the id cap), mirroring the oracle's (SELECT count(*) FROM qd)
     val nq = queries.count()
-    val d2Udf = udf((a: Seq[Long], b: Seq[Long]) => {
-      var acc = 0L
-      var j = 0
-      while (j < a.length) { val t = a(j) - b(j); acc += t * t; j += 1 }
-      acc
-    })
     val topk = queries.crossJoin(pts)
-      .withColumn("d2", d2Udf(col("qxs"), col("xs")))
+      .withColumn("d2", fixpointD2Udf(col("qxs"), col("xs")))
       .withColumn("rk", row_number().over(
         Window.partitionBy("qid").orderBy(col("d2"), col("id"))))
       .filter(col("rk") <= 10)
@@ -2164,41 +2174,22 @@ object SparkEntry {
       e.select(col("vec_id").cast("long").as("id"), col("embedding")),
       "embedding", cb).select(col("id"), col("pq_codes"))
 
-    val bCents = s.sparkContext.broadcast(centers)
-    val prankUdf = udf((q: Seq[Long]) => {
-      val cs = bCents.value
-      val ds = cs.zipWithIndex.map { case (c, ci) =>
-        var acc = 0.0
-        var j = 0
-        while (j < c.length) { val t = q(j).toDouble - c(j); acc += t * t; j += 1 }
-        (acc, ci)
-      }
-      val rank = new Array[Int](cs.length)
-      ds.sortBy(identity).map(_._2).zipWithIndex
-        .foreach { case (c, i) => rank(c) = i + 1 }
-      rank.toSeq
-    })
     val qTables = e.filter(col("vec_id") < 20).orderBy("vec_id")
       .select(col("vec_id").cast("long"), col("embedding")).collect()
       .map(r => (r.getLong(0), cb.adcTable(r.getSeq[Float](1).toArray))).toMap
     val bQt = s.sparkContext.broadcast(qTables)
     val adcUdf = udf((qid: Long, codes: Array[Byte]) =>
       bQt.value(qid) match { case t => cb.adcDistance(t, codes) })
-    val d2Udf = udf((a: Seq[Long], b: Seq[Long]) => {
-      var acc = 0L
-      var j = 0
-      while (j < a.length) { val t = a(j) - b(j); acc += t * t; j += 1 }
-      acc
-    })
 
     val queries = pts.filter(col("id") < 20)
-      .select(col("id").as("qid"), col("xs").as("qxs"), prankUdf(col("xs")).as("prank"))
+      .select(col("id").as("qid"), col("xs").as("qxs"),
+        fixpointPrankUdf(s, centers)(col("xs")).as("prank"))
     val nq = queries.count() // actual query count, not the id cap
     val docSide = pts
       .join(assigned.select(col("vec_id").as("id"), col("cluster")), "id")
       .join(enc, "id")
     val base = queries.crossJoin(docSide)
-      .withColumn("d2", d2Udf(col("qxs"), col("xs")))
+      .withColumn("d2", fixpointD2Udf(col("qxs"), col("xs")))
       .withColumn("adc", adcUdf(col("qid"), col("pq_codes")))
       .withColumn("pr", element_at(col("prank"), col("cluster") + 1))
       .select("qid", "id", "d2", "adc", "pr")
@@ -9560,22 +9551,29 @@ object SparkEntry {
     ml.WhitenFixpoint.oracleSql("embeddings", "vec_id", "embedding",
       k = 4, iters = 10, dim = 64)
 
+  /** recall@10 of `search` against the exact top-10 for the five fixed
+    * query ids of the ANN recall reports: one exact scan
+    * ([[operators.Knn.exactTopK]]) answers the truth of all five. */
+  private def annRecallAt10(s: SparkSession, dir: String, e: DataFrame)(
+      search: Array[Float] => Set[Long]): DataFrame = {
+    import s.implicits._
+    val qs = Seq(0L, 7L, 33L, 99L, 200L).map(qid => (qid, Tables.queryVector(s, dir, qid)))
+    val exact = operators.Knn.exactTopK(e, "vec_id", "embedding", qs.toArray, 10)
+    qs.map { case (qid, q) =>
+      val truth = exact(qid).map(_.id).toSet
+      (qid, (truth & search(q)).size.toDouble / truth.size)
+    }.toDF("query_id", "recall_at_10")
+  }
+
   /** ANN at reduced nprobe with measured recall@10 against brute force
     * (BASELINE.md: reduced-nprobe runs report recall, target >=0.90).
     * Rows-only: IVF assignment is not SQL-expressible. */
   private def ivfAnnRecall(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val model = ivfModel(s, dir)
-    val e = Tables.read(s, dir, "embeddings")
-    val rows = Seq(0L, 7L, 33L, 99L, 200L).map { qid =>
-      val q = Tables.queryVector(s, dir, qid)
-      val exact = operators.Knn.search(e, "embedding", q, 10)
-        .select("vec_id").as[Long].collect().toSet
-      val ann = model.search(q, 10, nprobe = 12)
-        .select("vec_id").as[Long].collect().toSet
-      (qid, (exact & ann).size.toDouble / exact.size)
+    annRecallAt10(s, dir, Tables.read(s, dir, "embeddings")) { q =>
+      model.search(q, 10, nprobe = 12).select("vec_id").as[Long].collect().toSet
     }
-    rows.toDF("query_id", "recall_at_10")
   }
 
   /** HNSW (shard-local graphs) at the reference's serve default
@@ -9587,16 +9585,9 @@ object SparkEntry {
     val e = Tables.read(s, dir, "embeddings")
     val index = operators.Hnsw.build(e, "vec_id", "embedding", numShards = 8)
       .persist()
-    try {
-      val rows = Seq(0L, 7L, 33L, 99L, 200L).map { qid =>
-        val q = Tables.queryVector(s, dir, qid)
-        val exact = operators.Knn.search(e, "embedding", q, 10)
-          .select("vec_id").as[Long].collect().toSet
-        val ann = operators.Hnsw.search(index, q, 10, efSearch = 64)
-          .select("id").as[Long].collect().toSet
-        (qid, (exact & ann).size.toDouble / exact.size)
-      }
-      rows.toDF("query_id", "recall_at_10")
+    try annRecallAt10(s, dir, e) { q =>
+      operators.Hnsw.search(index, q, 10, efSearch = 64)
+        .select("id").as[Long].collect().toSet
     } finally { index.unpersist() }
   }
 
@@ -9609,16 +9600,9 @@ object SparkEntry {
     val e = Tables.read(s, dir, "embeddings")
     val model = operators.IvfPq.build(e, "vec_id", "embedding", nlists = 16, m = 8)
     model.encoded.persist()
-    try {
-      val rows = Seq(0L, 7L, 33L, 99L, 200L).map { qid =>
-        val q = Tables.queryVector(s, dir, qid)
-        val exact = operators.Knn.search(e, "embedding", q, 10)
-          .select("vec_id").as[Long].collect().toSet
-        val got = operators.IvfPq.search(model, q, 10, nprobe = 12, rerankPool = 128)
-          .select("vec_id").as[Long].collect().toSet
-        (qid, (exact & got).size.toDouble / exact.size)
-      }
-      rows.toDF("query_id", "recall_at_10")
+    try annRecallAt10(s, dir, e) { q =>
+      operators.IvfPq.search(model, q, 10, nprobe = 12, rerankPool = 128)
+        .select("vec_id").as[Long].collect().toSet
     } finally { model.encoded.unpersist() }
   }
 

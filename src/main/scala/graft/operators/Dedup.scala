@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -857,59 +857,12 @@ object Dedup {
         .as(Seq("__pos", "__gram")))
       .select(col(idCol), col("__pos"), gramKey(col("__gram")).as("__gk"))
       .persist()
-    // r16 (guide §3.2, VERDICT r15 ask #5): Bloom-prefilter the BIG side
-    // of the coverage join at scale. `grams` is the corpus-scale exploded
-    // stream, and every row shuffles to meet `flagged`; a Bloom filter
-    // over the flagged keys drops the never-matching majority at the
-    // (cached) scan, BEFORE the exchange. False positives only cost
-    // shuffle rows — the equi-join stays the exact verify, so the output
-    // is unchanged. The machinery costs two extra driver jobs (stats +
-    // filter build) and a per-gram membership probe, which a measured
-    // sf0.1 A/B priced at ~0.4 s — pure loss when the whole coverage
-    // shuffle is a few MB. So it is SCALE-GATED, guide §2 style, on the
-    // free plan-statistics estimate of the input (no job): below
-    // spanBloomMinInputBytes the operator keeps the exact r15 shape
-    // (zero extra jobs); above it, one stats job decides eligibility —
-    // the flagged side must fit a broadcastable filter (≤
-    // spanBloomMaxItems, ~120 MB at 1% fpp) and be SELECTIVE (≤ 25% of
-    // distinct grams flagged: near-duplicate-saturated corpora flag
-    // almost everything, and a filter that passes everything is pure
-    // overhead).
-    val bloomMinBytes = df.sparkSession.conf
-      .getOption("spark.graft.spanDedup.bloomMinInputBytes")
-      .map(_.toLong).getOrElse(spanBloomMinInputBytesDefault)
-    val bloomEligible =
-      df.queryExecution.optimizedPlan.stats.sizeInBytes >= bloomMinBytes
-    val gramStats =
-      if (!bloomEligible) None
-      else Some(grams.groupBy("__gk")
-        .agg(countDistinct(col(idCol)).as("__df")).persist())
     try {
-      val flagged = gramStats match {
-        case Some(st) => st.filter(col("__df") >= minDocs).select("__gk")
-        case None => grams.groupBy("__gk")
-          .agg(countDistinct(col(idCol)).as("__df"))
-          .filter(col("__df") >= minDocs)
-          .select("__gk")
-      }
-      val gramsForJoin = gramStats match {
-        case None => grams
-        case Some(st) =>
-          val Row(nGramsD: Long, nFlagD: Long) = st
-            .agg(count(lit(1)), count_if(col("__df") >= minDocs)).head()
-          val useBloom = nFlagD > 0 && nFlagD <= spanBloomMaxItems &&
-            nFlagD * 4 <= nGramsD
-          if (!useBloom) grams
-          else {
-            val bloom = flagged.stat.bloomFilter("__gk", nFlagD, 0.01)
-            val bloomB = df.sparkSession.sparkContext.broadcast(bloom)
-            val mightUdf =
-              if (hashGrams) udf((g: Long) => bloomB.value.mightContainLong(g))
-              else udf((g: String) => bloomB.value.mightContainString(g))
-            grams.filter(mightUdf(col("__gk")))
-          }
-      }
-      val covered = gramsForJoin.join(flagged, "__gk")
+      val flagged = grams.groupBy("__gk")
+        .agg(countDistinct(col(idCol)).as("__df"))
+        .filter(col("__df") >= minDocs)
+        .select("__gk")
+      val covered = grams.join(flagged, "__gk")
         .select(col(idCol), explode(expr(s"sequence(__pos, __pos + ${n - 1})")).as("__p"))
         .distinct()
       // r15 (guide §2.3 "shuffle fewer bytes"): the rebuild used to
@@ -942,24 +895,9 @@ object Dedup {
           coalesce(col("total_tokens"), lit(0L)).as("total_tokens"))
         .localCheckpoint(true)
     } finally {
-      gramStats.foreach(_.unpersist()); grams.unpersist(); toks.unpersist()
+      grams.unpersist(); toks.unpersist()
     }
   }
-
-  /** Flagged-gram cap for [[spanDedup]]'s Bloom prefilter: 10⁸ keys at
-    * 1% fpp is a ~120 MB broadcast — the upper end of comfortable; a
-    * corpus flagging more repeated grams than that skips the filter
-    * and keeps the plain coverage join. */
-  private[operators] val spanBloomMaxItems = 100000000L
-
-  /** Input-size gate for [[spanDedup]]'s Bloom prefilter: below this the
-    * coverage shuffle is cheaper than the filter machinery (a measured
-    * sf0.1 A/B priced the machinery at ~0.4 s against a few-MB
-    * shuffle), so the operator keeps the plain shape. 4 GiB of input
-    * text is roughly where the exploded gram exchange reaches the GB
-    * tier. Session-overridable (tests and the CellProbe scale cell)
-    * via `spark.graft.spanDedup.bloomMinInputBytes`. */
-  private[graft] val spanBloomMinInputBytesDefault = 4L << 30
 
   /**
    * SemDeDup (Abbas et al. 2023, arXiv:2303.09540) — SEMANTIC dedup at

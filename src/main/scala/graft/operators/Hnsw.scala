@@ -9,7 +9,6 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, UnsafeArrayData, UnsafeProjection}
 import org.apache.spark.sql.catalyst.util.{GenericArrayData, SQLOrderingUtil}
 import org.apache.spark.sql.classic.GraftShim
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -135,6 +134,7 @@ object Hnsw {
     def clear(): Unit = size = 0
     def headDist: Double = ds(0)
     def headNode: Int = ns(0)
+    def headId: Long = ks(0)
 
     /** Slot a pops before slot b. */
     private def above(a: Int, b: Int): Boolean =
@@ -877,32 +877,9 @@ object Hnsw {
     searchBatch(index, Array((0L, query)), k, efSearch, metric)
       .select("id", "distance")
 
-  /** Exact top-k per query in ONE distributed pass (map-side explode of
-    * corpus × broadcast queries + window rank) — the truth table for
-    * [[recallCurve]] and [[recommendEf]]. */
-  private def exactTopK(corpus: DataFrame, idCol: String, vecCol: String,
-                        queries: Array[(Long, Array[Float])], k: Int,
-                        metric: String): Map[Long, Set[Long]] = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val dist = distFn(metric)
-    val bq = spark.sparkContext.broadcast(queries)
-    val pairs = udf { (id: Long, v: Seq[Float]) =>
-      val x = v.toArray
-      bq.value.map { case (qid, q) => (qid, id, dist(q, x)) }.toSeq
-    }
-    corpus
-      .select(explode(pairs(col(idCol).cast("long"), col(vecCol))).as("p"))
-      .select(col("p._1").as("qid"), col("p._2").as("id"), col("p._3").as("d"))
-      .withColumn("rk", row_number().over(
-        Window.partitionBy("qid").orderBy(col("d"), col("id"))))
-      .filter(col("rk") <= k)
-      .select(col("qid"), col("id")).as[(Long, Long)].collect()
-      .groupBy(_._1).map { case (qid, rs) => qid -> rs.map(_._2).toSet }
-  }
-
   /** Recall@k-vs-ef_search curve (the HNSW face of `Ivf.recallCurve`,
-    * the tuner-evidence artifact): one exact pass for truth, one
+    * the tuner-evidence artifact): one exact scan for the truth of every
+    * query ([[Knn.exactTopK]], a single Spark job), then one
     * [[searchBatch]] pass per ladder step. Returns (ef, recall_at_k). */
   def recallCurve(index: DataFrame, corpus: DataFrame, idCol: String, vecCol: String,
                   queries: Array[(Long, Array[Float])], k: Int = 10,
@@ -910,7 +887,8 @@ object Hnsw {
                   metric: String = "l2"): DataFrame = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    val truth = exactTopK(corpus, idCol, vecCol, queries, k, metric)
+    distFn(metric) // the graph's metrics only
+    val truth = Knn.exactTopK(corpus, idCol, vecCol, queries, k, metric)
     efs.map(ef => (ef, recallAt(index, queries, truth, k, ef, metric)))
       .toDF("ef_search", s"recall_at_$k")
   }
@@ -920,16 +898,16 @@ object Hnsw {
     * fewer than k rows has k-truncated truth sets, and dividing by k
     * would cap "recall" below 1.0 for an exhaustive (perfect) search. */
   private def recallAt(index: DataFrame, queries: Array[(Long, Array[Float])],
-                       truth: Map[Long, Set[Long]], k: Int, ef: Int,
+                       truth: Map[Long, Seq[Knn.Neighbor]], k: Int, ef: Int,
                        metric: String): Double = {
     val spark = index.sparkSession
     import spark.implicits._
     val got = searchBatch(index, queries, k, ef, metric)
       .select(col("qid"), col("id")).as[(Long, Long)].collect()
       .groupBy(_._1).map { case (qid, rs) => qid -> rs.map(_._2).toSet }
-    val denom = math.max(1L, truth.values.map(_.size.toLong).sum).toDouble
-    val hits = truth.map { case (qid, t) =>
-      (t & got.getOrElse(qid, Set.empty)).size }.sum
+    val sets = truth.map { case (qid, t) => qid -> t.map(_.id).toSet }
+    val denom = math.max(1L, sets.values.map(_.size.toLong).sum).toDouble
+    val hits = sets.map { case (qid, t) => (t & got.getOrElse(qid, Set.empty)).size }.sum
     hits / denom
   }
 
@@ -937,14 +915,15 @@ object Hnsw {
    * Self-tuning ef_search (`planner.c:220-237` learn_from_query band):
    * walk the doubling ladder inside [8,256], return the smallest ef
    * whose measured recall@k against the exact answer clears the target.
-   * One brute-force pass establishes truth for ALL queries; each ladder
-   * step is one [[searchBatch]] pass (offline tuner cost, not serve
-   * path).
+   * One exact scan ([[Knn.exactTopK]], a single Spark job) establishes
+   * truth for ALL queries; each ladder step is one [[searchBatch]] pass
+   * (offline tuner cost, not serve path).
    */
   def recommendEf(index: DataFrame, corpus: DataFrame, idCol: String, vecCol: String,
                   sampleQueries: Array[(Long, Array[Float])], k: Int = 10,
                   targetRecall: Double = 0.9, metric: String = "l2"): Int = {
-    val truth = exactTopK(corpus, idCol, vecCol, sampleQueries, k, metric)
+    distFn(metric) // the graph's metrics only
+    val truth = Knn.exactTopK(corpus, idCol, vecCol, sampleQueries, k, metric)
     val ladder = Iterator.iterate(8)(_ * 2).takeWhile(_ <= 256).toSeq
     ladder.find(ef =>
       recallAt(index, sampleQueries, truth, k, ef, metric) >= targetRecall

@@ -4,7 +4,6 @@ import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.linalg.Vectors
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.classic.GraftShim
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorOps
@@ -160,30 +159,26 @@ object Ivf {
   }
 
   /**
-   * Recall@k-vs-nprobe curve for a batch of queries in ONE distributed
-   * pass (the evidence artifact the reference reports for its SIFT bench,
+   * Recall@k-vs-nprobe curve for a batch of queries from ONE exact scan
+   * (the evidence artifact the reference reports for its SIFT bench,
    * `dataset/gen_dataset.py:522`, tuner band `planner.c:220-233`).
    *
    * Identity that makes it single-pass: a member x of query q's TRUE
    * top-k is returned by the IVF probe at width p iff the probe rank of
    * x's posting list for q is ≤ p — any candidate closer than x is also
    * true-closer, so x can never be displaced from the candidate top-k.
-   * Hence recall@k(p) = avg over queries of |{x ∈ true-top-k :
-   * probeRank(x) ≤ p}| / k, and the WHOLE curve falls out of the true
-   * top-k pair table:
+   * Hence recall@k(p) = |{(q, x) : x ∈ true-top-k(q), probeRank(x) ≤ p}|
+   * over the number of truth pairs, and the WHOLE curve falls out of the
+   * true top-k: [[Knn.exactTopK]] finds it in one Spark job, each truth
+   * member carrying its stored `cluster_id`, and the driver reads every
+   * member's probe rank off the query's centroid order. The denominator
+   * is the ACTUAL truth-pair count (a query with fewer than k eligible
+   * rows contributes its real neighbor count, so the exhaustive probe
+   * reads 1.0 even on tiny/excludeSelf corpora).
    *
-   *   1. map-side explode corpus × queries (queries + per-query centroid
-   *      orderings broadcast — |Q|·nlists ints, tiny);
-   *   2. partition-local k-heaps per query prune the pair stream IN the
-   *      scan stage, so the window's shuffle carries at most |Q|·k rows
-   *      per input partition — never the |D|·|Q| pair table;
-   *   3. window rank per query id → keep rank ≤ k (|Q|·k rows);
-   *   4. aggregate `probe_rank ≤ p` per requested p, normalized by the
-   *      ACTUAL truth-pair count (a query with fewer than k eligible
-   *      rows contributes its real neighbor count, so the exhaustive
-   *      probe reads 1.0 even on tiny/excludeSelf corpora).
-   *
-   * No per-query driver loop, no per-nprobe re-probe.
+   * Returns one (nprobe, recall_at_k) row per distinct width, ascending,
+   * and no rows when there is no truth pair. No per-query driver loop,
+   * no per-nprobe re-probe.
    */
   def recallCurve(model: IvfModel, queries: Array[(Long, Array[Float])],
                   idCol: String, k: Int = 10,
@@ -197,57 +192,19 @@ object Ivf {
     val spark = model.assigned.sparkSession
     import spark.implicits._
     val nlists = model.centroids.length
-    // per-query probe order of every posting list: probeRank(q)(cluster)
-    val probeRank: Map[Long, Array[Int]] = queries.map { case (qid, q) =>
-      val order = model.route(q, nlists) // all centroids, closest first
+    val truth = Knn.exactTopK(model.assigned, idCol, model.vecCol, queries, k,
+      excludeSelf = excludeSelf)
+    val vectors = queries.toMap
+    val probeRanks = truth.toSeq.flatMap { case (qid, members) =>
       val rank = new Array[Int](nlists)
-      order.zipWithIndex.foreach { case (c, i) => rank(c) = i + 1 }
-      qid -> rank
-    }.toMap
-    val bQ = spark.sparkContext.broadcast(queries)
-    val bPr = spark.sparkContext.broadcast(probeRank)
-    val pairs = udf { (id: Long, v: Seq[Float], cid: Int) =>
-      val x = v.toArray
-      bQ.value.flatMap { case (qid, q) =>
-        if (excludeSelf && qid == id) None
-        else Some((qid, id, VectorOps.l2(q, x), bPr.value(qid)(cid)))
-      }.toSeq
+      model.route(vectors(qid), nlists).zipWithIndex.foreach { case (c, i) => rank(c) = i + 1 }
+      members.map(m => rank(m.row.getAs[Int]("cluster_id")))
     }
-    val kk = k
-    val pruned = model.assigned
-      .select(explode(pairs(col(idCol).cast("long"), col(model.vecCol), col("cluster_id"))).as("p"))
-      .select(col("p._1").as("qid"), col("p._2").as("cid"),
-        col("p._3").as("dist"), col("p._4").as("prank"))
-      .as[(Long, Long, Double, Int)]
-      .mapPartitions { it =>
-        // local k-heap per qid, max-heap on (dist, cid) so the global
-        // (dist, cid)-ordered top-k is preserved exactly
-        val heaps = scala.collection.mutable.Map
-          .empty[Long, scala.collection.mutable.PriorityQueue[(Double, Long, Int)]]
-        it.foreach { case (qid, cid, dist, prank) =>
-          val h = heaps.getOrElseUpdate(qid,
-            scala.collection.mutable.PriorityQueue
-              .empty[(Double, Long, Int)](Ordering.by(t => (t._1, t._2))))
-          if (h.size < kk) h.enqueue((dist, cid, prank))
-          else if (dist < h.head._1 || (dist == h.head._1 && cid < h.head._2)) {
-            h.dequeue(); h.enqueue((dist, cid, prank))
-          }
-        }
-        heaps.iterator.flatMap { case (qid, h) =>
-          h.iterator.map { case (d, c, pr) => (qid, c, d, pr) }
-        }
-      }
-      .toDF("qid", "cid", "dist", "prank")
-    val topk = pruned
-      .withColumn("rk", row_number().over(
-        Window.partitionBy("qid").orderBy(col("dist"), col("cid"))))
-      .filter(col("rk") <= k)
-    nprobes.toDF("nprobe")
-      .crossJoin(topk)
-      .groupBy("nprobe")
-      .agg((sum(when(col("prank") <= col("nprobe"), 1).otherwise(0)) /
-        count(lit(1))).as(s"recall_at_$k"))
-      .orderBy("nprobe")
+    val curve =
+      if (probeRanks.isEmpty) Seq.empty[(Int, Double)]
+      else nprobes.distinct.sorted.map(p =>
+        (p, probeRanks.count(_ <= p).toDouble / probeRanks.size))
+    curve.toDF("nprobe", s"recall_at_$k")
   }
 
   /** Recommend nprobe for a target recall: smallest probe width on the

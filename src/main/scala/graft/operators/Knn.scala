@@ -1,8 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, FloatType, StructType}
 
 
 /**
@@ -40,6 +42,94 @@ object Knn {
     df.withColumn(distName, distCol(metric)(col(vecCol), lit(query)))
       .orderBy((col(distName).asc_nulls_last +: tieBreak.map(col)).toSeq: _*)
       .limit(k)
+  }
+
+  /** One exact neighbour of a query: its id, its distance (`None` for a
+    * null vector; −0.0 reads as 0.0) and the corpus row's non-vector
+    * columns. */
+  private[graft] case class Neighbor(id: Long, distance: Option[Double], row: Row)
+
+  /**
+   * Exact top-k of a whole query set in ONE scan: the recall truth of
+   * [[Ivf.recallCurve]], [[Hnsw.recallCurve]], their tuners and the
+   * recall reports. Each task reads a row's vector once
+   * ([[graft.plans.DistanceExpressions.floats]]), runs the metric's
+   * kernel against every query, and keeps a bounded heap of k rows per
+   * query; the driver merges the at most k rows each task emits per
+   * query. One Spark job, with no UDF, broadcast, shuffle or window —
+   * the queries ride in the task closure.
+   *
+   * The order is [[search]]'s with `tieBreak = Seq(idCol)`: distance,
+   * then id, and a null vector after every distance (`asc_nulls_last`).
+   * A row with a null id is skipped, and `excludeSelf` skips the rows
+   * whose id is the query's. Returns each query id's neighbours, nearest
+   * first.
+   */
+  private[graft] def exactTopK(corpus: DataFrame, idCol: String, vecCol: String,
+                               queries: Array[(Long, Array[Float])], k: Int,
+                               metric: String = "l2",
+                               excludeSelf: Boolean = false): Map[Long, Seq[Neighbor]] = {
+    require(k >= 1, s"k must be positive: $k")
+    val kernel = graft.plans.Metric(metric).arrayKernel
+    val input = corpus.select(col(idCol).cast("long"), col(vecCol),
+      struct(corpus.columns.filter(_ != vecCol).map(col).toSeq: _*))
+    val nulls = input.schema(1).dataType match {
+      case ArrayType(FloatType, n) => n
+      case t => throw new IllegalArgumentException(s"$vecCol must be array<float>, got ${t.catalogString}")
+    }
+    val restType = input.schema(2).dataType.asInstanceOf[StructType]
+    val (qids, qvecs) = queries.unzip
+    val top = input.queryExecution.toRdd.mapPartitions { rows =>
+      // per query: a heap of the k nearest distances and one of the k
+      // lowest-id null vectors, each heap node a slot of kept rows
+      val heaps = Array.fill(qids.length, 2)(new Hnsw.Heap(nearestFirst = false))
+      val kept = Array.fill(qids.length, 2, k)(null: InternalRow)
+      rows.foreach { r =>
+        if (!r.isNullAt(0)) {
+          val id = r.getLong(0)
+          val v = if (r.isNullAt(1)) null
+                  else graft.plans.DistanceExpressions.floats(r.getArray(1), nulls)
+          var rest: InternalRow = null
+          var i = 0
+          while (i < qids.length) {
+            if (!(excludeSelf && qids(i) == id)) {
+              val n = if (v == null) 1 else 0
+              val h = heaps(i)(n)
+              // + 0.0 turns −0.0 into 0.0, which the heap's
+              // Double.compare would otherwise order first
+              val d = if (v == null) 0.0 else kernel(qvecs(i), v) + 0.0
+              val c = if (h.size < k) -1 else java.lang.Double.compare(d, h.headDist)
+              if (c < 0 || (c == 0 && id < h.headId)) {
+                if (rest == null) rest = r.getStruct(2, restType.length).copy()
+                val slot = if (h.size < k) h.size else { val s = h.headNode; h.pop(); s }
+                kept(i)(n)(slot) = rest
+                h.push(d, slot, id)
+              }
+            }
+            i += 1
+          }
+        }
+      }
+      qids.indices.iterator.flatMap { i =>
+        val Seq(near, far) = Seq(0, 1).map { n =>
+          val h = heaps(i)(n)
+          Seq.fill(h.size) {
+            val e = (qids(i), Option.when(n == 0)(h.headDist), h.headId, kept(i)(n)(h.headNode))
+            h.pop(); e
+          }.reverse
+        }
+        near ++ far.take(k - near.size)
+      }
+    }
+    val toRow = CatalystTypeConverters.createToScalaConverter(restType)
+    val found = top.collect().groupBy(_._1)
+    qids.map { qid =>
+      qid -> found.getOrElse(qid, Array.empty).toSeq
+        .map { case (_, d, id, rest) => Neighbor(id, d, toRow(rest).asInstanceOf[Row]) }
+        .sortBy(n => (n.distance.isEmpty, n.distance.getOrElse(0.0), n.id))(
+          Ordering.Tuple3(Ordering.Boolean, Ordering.Double.TotalOrdering, Ordering.Long))
+        .take(k)
+    }.toMap
   }
 
   /** Per-facet top-k, the reference's `faceted_vector_search`

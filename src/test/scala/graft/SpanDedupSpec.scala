@@ -51,33 +51,20 @@ class SpanDedupSpec extends SparkSpecBase {
     assert(out.forall(r => r.getString(1) == "" && r.getLong(2) == 0L && r.getLong(3) == 0L))
   }
 
-  test("bloom-prefiltered coverage join (the r16 scale gate) produces identical output") {
-    // a corpus with mostly-unique grams and one shared span: flagged is
-    // sparse, so forcing the gate open engages the Bloom path; the
-    // exact verify join must make the output identical either way
+  test("a sparse shared span is cut by the coverage join with hashed and string keys") {
+    // a corpus with mostly-unique grams and one shared span: the flagged
+    // side is sparse against the gram stream
     val docs = (1L to 30L).map { i =>
       if (i <= 2) (i, s"head$i $shared tail$i")
       else (i, (0 until 12).map(j => s"w${i}_$j").mkString(" "))
     }.toDF("doc_id", "text")
-    def run(): Map[Long, (String, Long, Long)] =
-      Dedup.spanDedup(docs, "doc_id", "text", n = 8, minDocs = 2,
-          hashGrams = true)
-        .collect().map(r => r.getLong(0) ->
-          ((r.getString(1), r.getLong(2), r.getLong(3)))).toMap
-    val plain = run()
-    spark.conf.set("spark.graft.spanDedup.bloomMinInputBytes", "0")
-    try {
-      val bloomed = run()
-      assert(bloomed == plain)
-      assert(bloomed(1L)._2 == 8L) // the shared span was actually cut
-    } finally spark.conf.unset("spark.graft.spanDedup.bloomMinInputBytes")
-    // string-key (un-hashed) bloom path too
-    spark.conf.set("spark.graft.spanDedup.bloomMinInputBytes", "0")
-    try {
-      val strPlain = Dedup.spanDedup(docs, "doc_id", "text", n = 8, minDocs = 2)
-        .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
-      assert(strPlain(1L) == 8L && strPlain(5L) == 0L)
-    } finally spark.conf.unset("spark.graft.spanDedup.bloomMinInputBytes")
+    val hashed = Dedup.spanDedup(docs, "doc_id", "text", n = 8, minDocs = 2,
+        hashGrams = true)
+      .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
+    assert(hashed(1L) == 8L) // the shared span was actually cut
+    val strKeys = Dedup.spanDedup(docs, "doc_id", "text", n = 8, minDocs = 2)
+      .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
+    assert(strKeys(1L) == 8L && strKeys(5L) == 0L)
   }
 
   test("hashed gram keys (the shuffle-width dial) produce identical output") {

@@ -9,8 +9,10 @@ import graft.functions.{Embeddings, VectorAggregates => VA, VectorFunctions => V
 import graft.plans.{DistanceExpressions => DE}
 
 /**
- * Driver contract: one `queries` entry (+ DuckDB `oracleSql` where
- * expressible) per implemented operator from SURVEY.md §2.
+ * Query registry: one `specs` declaration per implemented operator from
+ * SURVEY.md §2, each with its builder and either its DuckDB oracle SQL or
+ * the oracled sibling it is a face of; `queries`, `oracleSql` and
+ * `faceSiblings` are views of that list.
  *
  * Numeric conventions for oracle parity (BASELINE.md):
  *  - money-ish SUMs go through DECIMAL(18,4) so both engines sum exactly,
@@ -15123,412 +15125,26 @@ object SparkEntry {
   // Registry
   // ======================================================================
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q1_agg" -> (q1Agg(_, _)),
-    "q1_agg_typed" -> (q1AggTyped(_, _)),
-    "dedup_pipeline" -> (dedupPipelineQ(_, _)),
-    "q2_join" -> (q2Join(_, _)),
-    "q3_topk" -> (q3Topk(_, _)),
-    "q4_window" -> (q4Window(_, _)),
-    "q5_semi_anti" -> (q5SemiAnti(_, _)),
-    "q6_rollup" -> (q6Rollup(_, _)),
-    "json_filter" -> (jsonFilter(_, _)),
-    "v_l2_knn" -> (vL2Knn(_, _)),
-    "v_cosine_knn" -> (vCosineKnn(_, _)),
-    "v_ip_knn" -> (vIpKnn(_, _)),
-    "v_distances" -> (vDistances(_, _)),
-    "v_matryoshka" -> (vMatryoshkaQ(_, _)),
-    "v_distances2" -> (vDistances2(_, _)),
-    "v_mahalanobis" -> (vMahalanobis(_, _)),
-    "bm25_corpus" -> (bm25Corpus(_, _)),
-    "v_norm_stats" -> (vNormStats(_, _)),
-    "v_elementwise" -> (vElementwise(_, _)),
-    "v_normalize" -> (vNormalize(_, _)),
-    "va_avg" -> (vaAvg(_, _)),
-    "va_sum" -> (vaSum(_, _)),
-    "va_minmax" -> (vaMinMax(_, _)),
-    "ivf_knn_exact" -> (ivfKnnExact(_, _)),
-    "ivf_insert_exact" -> (ivfInsertExact(_, _)),
-    "ivf_delete_exact" -> (ivfDeleteExact(_, _)),
-    "ivf_delete_bulk" -> (ivfDeleteBulk(_, _)),
-    "ivfpq_insert_exact" -> (ivfpqInsertExact(_, _)),
-    "ivfpq_delete_exact" -> (ivfpqDeleteExact(_, _)),
-    "ivfpq_delete_bulk" -> (ivfpqDeleteBulk(_, _)),
-    "vec_join_pairs" -> (vecJoinPairs(_, _)),
-    "knn_graph" -> (knnGraph(_, _)),
-    "pagerank_knn" -> (pagerankKnnQ(_, _)),
-    "ppr_knn" -> (pprKnnQ(_, _)),
-    "triangle_count" -> (triangleCountQ(_, _)),
-    "link_predict" -> (linkPredictQ(_, _)),
-    "community_labelprop" -> (communityQ(_, _)),
-    "clustering_coeff" -> (clusteringCoeffQ(_, _)),
-    "sssp_bounded" -> (ssspBoundedQ(_, _)),
-    "tfidf_hashed" -> (tfidfHashedQ(_, _)),
-    "kcore_bounded" -> (kcoreQ(_, _)),
-    "faceted_knn" -> (facetedKnn(_, _)),
-    "bm25_pair" -> (bm25Pair(_, _)),
-    "hybrid_search" -> (hybridSearchQ(_, _)),
-    "rrf_fusion" -> (rrfFusionQ(_, _)),
-    "temporal_knn" -> (temporalKnn(_, _)),
-    "multi_vector" -> (multiVectorQ(_, _)),
-    "ltr_rerank" -> (ltrRerank(_, _)),
-    "borda_rerank" -> (bordaRerank(_, _)),
-    "quant_binary" -> (quantBinary(_, _)),
-    "quant_ternary" -> (quantTernary(_, _)),
-    "quant_int8" -> (quantInt8(_, _)),
-    "cold_tier" -> (coldTierQ(_, _)),
-    "chunk_text" -> (chunkText(_, _)),
-    "rag_query" -> (ragQuery(_, _)),
-    "chunk_pool" -> (chunkPoolQ(_, _)),
-    "cdc_chunks" -> (cdcChunksQ(_, _)),
-    "cdc_dedup" -> (cdcDedupQ(_, _)),
-    "ml_linreg" -> (mlLinreg(_, _)),
-    "knn_classify" -> (knnClassify(_, _)),
-    "zscore_outliers" -> (zscoreOutliersQ(_, _)),
-    "centroid_drift" -> (centroidDrift(_, _)),
-    "recall_at_k" -> (recallAtK(_, _)),
-    "ml_kmeans" -> (mlKmeans(_, _)),
-    "kmeans_fixpoint" -> (kmeansFixpointQ(_, _)),
-    "ivf_recall_fixpoint" -> (ivfRecallFixpointQ(_, _)),
-    "ivfpq_recall_fixpoint" -> (ivfpqRecallFixpointQ(_, _)),
-    "dedup_exact" -> (dedupExact(_, _)),
-    "dedup_cosine" -> (dedupCosine(_, _)),
-    "semdedup" -> (semDedupQ(_, _)),
-    "ivf_join_exact" -> (ivfJoinExact(_, _)),
-    "ivf_join_prod" -> (ivfJoinProd(_, _)),
-    "ivf_join_recall" -> (ivfJoinRecall(_, _)),
-    "fingerprint_dedup" -> (fingerprintDedupQ(_, _)),
-    "knn_classify_blocked" -> (knnClassifyBlockedQ(_, _)),
-    "hard_negatives" -> (hardNegativesQ(_, _)),
-    "token_mask" -> (tokenMaskQ(_, _)),
-    "dsir_select" -> (dsirSelectQ(_, _)),
-    "graph_knn" -> (graphKnnQ(_, _)),
-    "sparse_search" -> (sparseSearchQ(_, _)),
-    "semantic_keyword" -> (semanticKeywordQ(_, _)),
-    "dense_sparse" -> (denseSparseQ(_, _)),
-    "mmr_rerank" -> (mmrRerankQ(_, _)),
-    "dbscan_labels" -> (dbscanLabelsQ(_, _)),
-    "tenant_scan" -> (tenantScanQ(_, _)),
-    "tenant_usage" -> (tenantUsageQ(_, _)),
-    "ngram_jaccard" -> (ngramJaccard(_, _)),
-    "text_stats" -> (textStats(_, _)),
-    "lang_quality" -> (langQuality(_, _)),
-    "repetition_stats" -> (repetitionStatsQ(_, _)),
-    "pii_scrub" -> (piiScrub(_, _)),
-    "url_host_stats" -> (urlHostStats(_, _)),
-    "url_canon_dedup" -> (urlCanonDedupQ(_, _)),
-    "containment_dedup" -> (containmentDedupQ(_, _)),
-    "kmv_distinct" -> (kmvDistinctQ(_, _)),
-    "kmv_merge_shards" -> (kmvMergeShardsQ(_, _)),
-    "hll_distinct" -> (hllDistinctQ(_, _)),
-    "analyze_table" -> (analyzeTableQ(_, _)),
-    "route_health" -> (routeHealthQ(_, _)),
-    "systematic_sample" -> (systematicSampleQ(_, _)),
-    "weighted_reservoir" -> (weightedReservoirQ(_, _)),
-    "group_reservoir" -> (groupReservoirQ(_, _)),
-    "zorder_layout" -> (zorderLayoutQ(_, _)),
-    "shard_layout" -> (shardLayoutQ(_, _)),
-    "semantic_shards" -> (semanticShardsQ(_, _)),
-    "bpe_train" -> (bpeTrainQ(_, _)),
-    "bpe_train_local" -> (bpeTrainLocalQ(_, _)),
-    "bpe_encode" -> (bpeEncodeQ(_, _)),
-    "unigram_encode" -> (unigramEncodeQ(_, _)),
-    "bpe_fertility" -> (bpeFertilityQ(_, _)),
-    "length_filter_adaptive" -> (lengthFilterQ(_, _)),
-    "budget_feed" -> (budgetFeedQ(_, _)),
-    "corpus_entropy" -> (corpusEntropyQ(_, _)),
-    "cms_topk" -> (cmsTopkQ(_, _)),
-    "skew_route" -> (skewRouteQ(_, _)),
-    "hist_quantile" -> (histQuantileQ(_, _)),
-    "decontaminate" -> (decontaminateQ(_, _)),
-    "decontaminate_bloom" -> (decontaminateBloomQ(_, _)),
-    "minhash_lsh" -> (minhashLsh(_, _)),
-    "lsh_plan" -> (lshPlanQ(_, _)),
-    "lsh_catch_rate" -> (lshCatchRateQ(_, _)),
-    "incremental_dedup" -> (incrementalDedupQ(_, _)),
-    "ingest_pipeline" -> (ingestPipelineQ(_, _)),
-    "simhash_pairs" -> (simhashPairs(_, _)),
-    "multimodal_hist" -> (multimodalHist(_, _)),
-    "image_decode" -> (imageDecode(_, _)),
-    "image_phash" -> (imagePhashQ(_, _)),
-    "image_resize" -> (imageResizeQ(_, _)),
-    "strip_markup" -> (stripMarkupQ(_, _)),
-    "gopher_rules" -> (gopherRulesQ(_, _)),
-    "image_neardup" -> (imageNeardupQ(_, _)),
-    "audio_meta" -> (audioMeta(_, _)),
-    "audio_mp3_meta" -> (audioMp3Meta(_, _)),
-    "audio_samples" -> (audioSamples(_, _)),
-    "audio_flac" -> (audioFlac(_, _)),
-    "audio_neardup" -> (audioNeardupQ(_, _)),
-    "audio_mpeg_layer1" -> (audioMpegLayer1(_, _)),
-    "audio_mpeg_layer2" -> (audioMpegLayer2(_, _)),
-    "audio_id3" -> (audioId3(_, _)),
-    "warc_ingest" -> (warcIngest(_, _)),
-    "zip_ingest" -> (zipIngest(_, _)),
-    "image_exif" -> (imageExif(_, _)),
-    "subtitle_cues" -> (subtitleCues(_, _)),
-    "markdown_strip" -> (markdownStrip(_, _)),
-    "pdf_extract" -> (pdfExtract(_, _)),
-    "image_webp" -> (imageWebp(_, _)),
-    "image_png_native" -> (imagePngNative(_, _)),
-    "audio_resample_linear" -> (audioResampleLinear(_, _)),
-    "caption_audio_align" -> (captionAudioAlign(_, _)),
-    "csv_ingest" -> (csvIngest(_, _)),
-    "tfrecord_ingest" -> (tfrecordIngest(_, _)),
-    "webm_probe" -> (webmProbe(_, _)),
-    "jsonl_ingest" -> (jsonlIngest(_, _)),
-    "ogg_ingest" -> (oggIngest(_, _)),
-    "html_links" -> (htmlLinks(_, _)),
-    "image_jpeg_native" -> (imageJpegNative(_, _)),
-    "boilerplate_extract" -> (boilerplateExtract(_, _)),
-    "ogg_codec_probe" -> (oggCodecProbe(_, _)),
-    "crawl_frontier" -> (crawlFrontier(_, _)),
-    "frontier_delays" -> (frontierDelays(_, _)),
-    "redirect_resolve" -> (redirectResolve(_, _)),
-    "html_meta" -> (htmlMeta(_, _)),
-    "canonical_dedup" -> (canonicalDedup(_, _)),
-    "chat_stats" -> (chatStats(_, _)),
-    "chat_loss_mask" -> (chatLossMask(_, _)),
-    "preference_pairs" -> (preferencePairs(_, _)),
-    "bt_strength" -> (btStrengthQ(_, _)),
-    "fim_transform" -> (fimTransform(_, _)),
-    "registrable_domain" -> (registrableDomain(_, _)),
-    "semantic_decontam" -> (semanticDecontamQ(_, _)),
-    "chat_tool_trace" -> (chatToolTrace(_, _)),
-    "reward_calibration" -> (rewardCalibration(_, _)),
-    "annotator_kappa" -> (annotatorKappa(_, _)),
-    "token_budget_mix" -> (tokenBudgetMix(_, _)),
-    "group_advantage" -> (groupAdvantage(_, _)),
-    "judge_vote" -> (judgeVote(_, _)),
-    "pass_at_k" -> (passAtKQ(_, _)),
-    "best_of_n" -> (bestOfNQ(_, _)),
-    "brier_decomp" -> (brierQ(_, _)),
-    "code_stats" -> (codeStatsQ(_, _)),
-    "mi_tokens" -> (miTokensQ(_, _)),
-    "dp_counts" -> (dpCountsQ(_, _)),
-    "needle_insert" -> (needleInsertQ(_, _)),
-    "ndcg_mrr" -> (ndcgMrrQ(_, _)),
-    "k_anon" -> (kAnonQ(_, _)),
-    "constraint_check" -> (constraintCheckQ(_, _)),
-    "sessionize" -> (sessionizeQ(_, _)),
-    "zipf_fit" -> (zipfFitQ(_, _)),
-    "ppo_stats" -> (ppoStatsQ(_, _)),
-    "heaps_fit" -> (heapsFitQ(_, _)),
-    "assortativity" -> (assortativityQ(_, _)),
-    "mcq_shuffle" -> (mcqShuffleQ(_, _)),
-    "span_corrupt" -> (spanCorruptQ(_, _)),
-    "ngram_novelty" -> (ngramNoveltyQ(_, _)),
-    "burstiness" -> (burstinessQ(_, _)),
-    "hits_scores" -> (hitsScoresQ(_, _)),
-    "spearman_rho" -> (spearmanRhoQ(_, _)),
-    "kendall_tau" -> (kendallTauQ(_, _)),
-    "gini_tokens" -> (giniTokensQ(_, _)),
-    "stream_cdc" -> (streamCdcQ(_, _)),
-    "bootstrap_ci" -> (bootstrapCiQ(_, _)),
-    "pan_luhn" -> (panLuhnQ(_, _)),
-    "semantic_chunk" -> (semanticChunkQ(_, _)),
-    "conformal_threshold" -> (conformalQ(_, _)),
-    "scd2_history" -> (scd2HistoryQ(_, _)),
-    "funnel_stages" -> (funnelStagesQ(_, _)),
-    "retention_cohorts" -> (retentionCohortsQ(_, _)),
-    "judge_length_bias" -> (judgeLengthBiasQ(_, _)),
-    "judge_position_bias" -> (judgePositionBiasQ(_, _)),
-    "distinct_n" -> (distinctNQ(_, _)),
-    "ab_ttest" -> (abTtestQ(_, _)),
-    "cuped_adjust" -> (cupedQ(_, _)),
-    "srm_check" -> (srmCheckQ(_, _)),
-    "forecast_accuracy" -> (forecastAccuracyQ(_, _)),
-    "seasonal_decompose" -> (seasonalDecomposeQ(_, _)),
-    "cusum_changepoint" -> (cusumChangepointQ(_, _)),
-    "diff_in_diff" -> (diffInDiffQ(_, _)),
-    "anova_f" -> (anovaFQ(_, _)),
-    "bh_fdr" -> (bhFdrQ(_, _)),
-    "survival_km" -> (survivalKmQ(_, _)),
-    "ips_estimate" -> (ipsEstimateQ(_, _)),
-    "acf_daily" -> (acfDailyQ(_, _)),
-    "theil_sen" -> (theilSenQ(_, _)),
-    "propensity_match" -> (propensityMatchQ(_, _)),
-    "ljung_box" -> (ljungBoxQ(_, _)),
-    "markov_transitions" -> (markovTransitionsQ(_, _)),
-    "knn_shapley" -> (knnShapleyQ(_, _)),
-    "kcenter_coreset" -> (kcenterCoresetQ(_, _)),
-    "cooks_distance" -> (cooksDistanceQ(_, _)),
-    "label_noise_knn" -> (labelNoiseKnnQ(_, _)),
-    "stream_label_noise" -> (streamLabelNoiseQ(_, _)),
-    "stream_index_ingest" -> (streamIndexIngestQ(_, _)),
-    "stream_ivfpq_ingest" -> (streamIvfpqIngestQ(_, _)),
-    "stream_index_retract" -> (streamIndexRetractQ(_, _)),
-    "stream_ivfpq_retract" -> (streamIvfpqRetractQ(_, _)),
-    "stream_hnsw_retract" -> (streamHnswRetractQ(_, _)),
-    "retract_health" -> (retractHealthQ(_, _)),
-    "data_map" -> (dataMapQ(_, _)),
-    "facility_select" -> (facilitySelectQ(_, _)),
-    "betweenness_knn" -> (betweennessKnnQ(_, _)),
-    "katz_knn" -> (katzKnnQ(_, _)),
-    "harmonic_knn" -> (harmonicKnnQ(_, _)),
-    "deepwalk_corpus" -> (deepwalkCorpusQ(_, _)),
-    "rake_keywords" -> (rakeKeywordsQ(_, _)),
-    "textrank_keywords" -> (textrankKeywordsQ(_, _)),
-    "winsorize_stats" -> (winsorizeStatsQ(_, _)),
-    "textrank_summary" -> (textrankSummaryQ(_, _)),
-    "lm_generate" -> (lmGenerateQ(_, _)),
-    "modularity_knn" -> (modularityKnnQ(_, _)),
-    "pmi_collocations" -> (pmiCollocationsQ(_, _)),
-    "benford_audit" -> (benfordAuditQ(_, _)),
-    "mp4_probe" -> (mp4Probe(_, _)),
-    "hls_playlist" -> (hlsPlaylist(_, _)),
-    "psi_drift" -> (psiDrift(_, _)),
-    "json_profile" -> (jsonProfileQ(_, _)),
-    "orc_probe" -> (orcProbe(_, _)),
-    "avro_ingest" -> (avroIngest(_, _)),
-    "bleu_score" -> (bleuScoreQ(_, _)),
-    "rouge_l" -> (rougeLQ(_, _)),
-    "edit_neardup" -> (editNearDupQ(_, _)),
-    "auc_roc" -> (aucRocQ(_, _)),
-    "domain_reweight" -> (domainReweight(_, _)),
-    "audio_segments" -> (audioSegments(_, _)),
-    "sentence_split" -> (sentenceSplit(_, _)),
-    "parquet_probe" -> (parquetProbe(_, _)),
-    "crawl_pipeline" -> (crawlPipeline(_, _)),
-    "script_detect" -> (scriptDetect(_, _)),
-    "curriculum_order" -> (curriculumOrder(_, _)),
-    "shot_boundaries" -> (shotBoundaries(_, _)),
-    "readability_score" -> (readabilityScore(_, _)),
-    "stream_frontier" -> (streamFrontierQ(_, _)),
-    "anchor_text_agg" -> (anchorTextAgg(_, _)),
-    "decompress_auto" -> (decompressAuto(_, _)),
-    "audio_gain" -> (audioGain(_, _)),
-    "image_crop_pad" -> (imageCropPad(_, _)),
-    "xml_extract" -> (xmlExtract(_, _)),
-    "image_orient" -> (imageOrient(_, _)),
-    "video_y4m" -> (videoY4m(_, _)),
-    "video_neardup" -> (videoNeardupQ(_, _)),
-    "image_gif" -> (imageGif(_, _)),
-    "image_qoi" -> (imageQoi(_, _)),
-    "image_tiff" -> (imageTiff(_, _)),
-    "audio_aiff" -> (audioAiff(_, _)),
-    "audio_au" -> (audioAu(_, _)),
-    "robots_filter" -> (robotsFilter(_, _)),
-    "robots_sitemaps" -> (robotsSitemapsQ(_, _)),
-    "charset_decode" -> (charsetDecode(_, _)),
-    "text_normalize" -> (textNormalize(_, _)),
-    "url_idn" -> (urlIdn(_, _)),
-    "url_pct_norm" -> (urlPctNorm(_, _)),
-    "sitemap_parse" -> (sitemapParse(_, _)),
-    "mime_sniff" -> (mimeSniff(_, _)),
-    "image_tga" -> (imageTga(_, _)),
-    "video_flic" -> (videoFlic(_, _)),
-    "epoch_shuffle" -> (epochShuffleQ(_, _)),
-    "wds_ingest" -> (wdsIngest(_, _)),
-    "vgraph_analytics" -> (vgraphAnalyticsQ(_, _)),
-    "audio_resample" -> (audioResample(_, _)),
-    "audio_g711" -> (audioG711(_, _)),
-    "audio_adpcm" -> (audioAdpcm(_, _)),
-    "video_meta" -> (videoMeta(_, _)),
-    "video_frames" -> (videoFrames(_, _)),
-    "video_frames_mjpeg" -> (videoFramesMjpeg(_, _)),
-    "v_compare" -> (vCompare(_, _)),
-    "sim_histogram" -> (simHistogram(_, _)),
-    "sparse_l2" -> (sparseL2(_, _)),
-    "iforest_scores" -> (iforestScores(_, _)),
-    "topics" -> (topicsQ(_, _)),
-    "topics_fixpoint" -> (topicsFixedQ(_, _)),
-    "whiten_fixpoint" -> (whitenFixedQ(_, _)),
-    "iforest_fixpoint" -> (iforestFixedQ(_, _)),
-    "iforest_small" -> (iforestSmallQ(_, _)),
-    "gcn_fixpoint" -> (gcnFixedQ(_, _)),
-    "autoencoder_fixpoint" -> (aeFixedQ(_, _)),
-    "whiten" -> (whitenQ(_, _)),
-    "ivf_ann_recall" -> (ivfAnnRecall(_, _)),
-    "hnsw_ann_recall" -> (hnswAnnRecall(_, _)),
-    "hnsw_knn" -> (hnswKnn(_, _)),
-    "ivf_disk_knn" -> (ivfDiskKnn(_, _)),
-    "ivf_disk_exact" -> (ivfDiskExact(_, _)),
-    "hnsw_disk_knn" -> (hnswDiskKnn(_, _)),
-    "hnsw_exhaustive" -> (hnswExhaustive(_, _)),
-    "hnsw_insert_exact" -> (hnswInsertExact(_, _)),
-    "hnsw_delete_exact" -> (hnswDeleteExact(_, _)),
-    "hnsw_delete_bulk" -> (hnswDeleteBulk(_, _)),
-    "hnsw_delete_lazy" -> (hnswDeleteLazy(_, _)),
-    "ivfpq_knn" -> (ivfpqKnn(_, _)),
-    "ivfpq_disk_exact" -> (ivfpqDiskExact(_, _)),
-    "hnsw_recall_curve" -> (hnswRecallCurve(_, _)),
-    "ivfpq_knn_recall" -> (ivfpqKnnRecall(_, _)),
-    "ivf_recall_curve" -> (ivfRecallCurve(_, _)),
-    "hybrid_fusion" -> (hybridFusionQ(_, _)),
-    "v_arith" -> (vArith(_, _)),
-    "v_element_access" -> (vElementAccess(_, _)),
-    "v_preprocess" -> (vPreprocess(_, _)),
-    "bandit_ucb" -> (banditUcbQ(_, _)),
-    "bandit_thompson" -> (banditThompsonQ(_, _)),
-    "bandit_egreedy" -> (banditEgreedyQ(_, _)),
-    "qlearning_policy" -> (qlearningPolicyQ(_, _)),
-    "graphsage_agg" -> (graphsageAggQ(_, _)),
-    "sgc_propagate" -> (sgcPropagateQ(_, _)),
-    "shap_linear" -> (shapLinearQ(_, _)),
-    "lime_linear" -> (limeLinearQ(_, _)),
-    "shap_fixed" -> (shapFixedQ(_, _)),
-    "lime_fixed" -> (limeFixedQ(_, _)),
-    "gcn_nodes" -> (gcnNodesQ(_, _)),
-    "davies_bouldin" -> (daviesBouldinQ(_, _)),
-    "arima_forecast" -> (arimaForecastQ(_, _)),
-    "lof_scores" -> (lofScores(_, _)),
-    "ocsvm_scores" -> (ocsvmScoresQ(_, _)),
-    "tsne_reduce" -> (tsneReduceQ(_, _)),
-    "tsne_fixpoint" -> (tsneFixedQ(_, _)),
-    "umap_fixpoint" -> (umapFixedQ(_, _)),
-    "autoencoder_recon" -> (autoencoderReconQ(_, _)),
-    "umap_reduce" -> (umapReduceQ(_, _)),
-    "pq_adc" -> (pqAdcQ(_, _)),
-    "two_stage_rerank" -> (twoStageRerankQ(_, _)),
-    "vec_route_assign" -> (vecRouteQ(_, _)),
-    "stream_window_agg" -> (streamWindowAggQ(_, _)),
-    "stream_dedup" -> (streamDedupQ(_, _)),
-    "stream_neardup" -> (streamNeardupQ(_, _)),
-    "dataset_diff" -> (datasetDiffQ(_, _)),
-    "stream_distinct" -> (streamDistinctQ(_, _)),
-    "stream_cms_topk" -> (streamCmsTopkQ(_, _)),
-    "stream_benford" -> (streamBenfordQ(_, _)),
-    "shard_manifest" -> (shardManifestQ(_, _)),
-    "html_tables" -> (htmlTablesQ(_, _)),
-    "html_table_cells" -> (htmlTableCellsQ(_, _)),
-    "ico_probe" -> (icoProbeQ(_, _)),
-    "og_cards" -> (ogCardsQ(_, _)),
-    "svg_probe" -> (svgProbeQ(_, _)),
-    "rss_probe" -> (rssProbeQ(_, _)),
-    "stream_session_agg" -> (streamSessionAggQ(_, _)),
-    "stream_stream_join" -> (streamStreamJoinQ(_, _)),
-    "stream_quota" -> (streamQuotaQ(_, _)),
-    "stream_curation" -> (streamCurationQ(_, _)),
-    "quant_ranged" -> (quantRangedQ(_, _)),
-    "asof_join" -> (asofJoinQ(_, _)),
-    "range_join" -> (rangeJoinQ(_, _)),
-    "skew_salted_join" -> (skewSaltedJoinQ(_, _)),
-    "curation_pipeline" -> (curationPipelineQ(_, _)),
-    "curation_pipeline2" -> (curationPipeline2Q(_, _)),
-    "pack_sequences" -> (packSequencesQ(_, _)),
-    "line_dedup" -> (lineDedupQ(_, _)),
-    "training_feed" -> (trainingFeedQ(_, _)),
-    "lm_score" -> (lmScoreQ(_, _)),
-    "lm_score_kn" -> (lmScoreKnQ(_, _)),
-    "quality_clf" -> (qualityClfQ(_, _)),
-    "span_dedup" -> (spanDedupQ(_, _)),
-    "span_dedup_hashed" -> (spanDedupHashed(_, _)),
-    "hash_sample" -> (hashSampleQ(_, _)),
-    "mixture_sample" -> (mixtureSampleQ(_, _)),
-    "stratified_sample" -> (stratifiedSampleQ(_, _)),
-    "temperature_mixture" -> (temperatureMixtureQ(_, _)),
-    "vec_join_topk" -> (vecJoinTopkQ(_, _)),
-    "weighted_ensemble" -> (weightedEnsembleQ(_, _)),
-    "dup_components" -> (dupComponentsQ(_, _)),
-  )
+  private[graft] type Builder = (SparkSession, String) => DataFrame
+
+  /** What checks a query's output: its own DuckDB oracle SQL (a thunk, so
+    * building the registry generates no oracle SQL), or the oracled
+    * sibling it is the production face of. */
+  private[graft] sealed trait Check
+  private[graft] final case class Oracle(sql: () => String) extends Check
+  private[graft] final case class FaceOf(sibling: String) extends Check
+
+  /** One registered query: its name, its builder, and exactly one check. */
+  private[graft] final case class QuerySpec(name: String, build: Builder, check: Check)
+
+  private def oracled(name: String, build: Builder, sql: => String): QuerySpec =
+    QuerySpec(name, build, Oracle(() => sql))
 
   /**
-   * Every rows-only query (a `queries` entry with no `oracleSql` row) is
-   * the production FACE of a named hard-oracled SIBLING that verifies the
-   * same kernel — this map IS that claim, machine-checked by
-   * `FaceSiblingSpec`: adding an unoracled query without declaring (and
-   * having) a green sibling fails the build. Three face classes:
+   * A rows-only query: the production FACE of a named hard-oracled
+   * SIBLING that verifies the same kernel, a claim `FaceSiblingSpec`
+   * machine-checks (the sibling must exist and be oracled). Three face
+   * classes:
    *  - fixpoint siblings (ml_kmeans → kmeans_fixpoint, …): the face runs
    *    the production trainer, the sibling replays the same math under a
    *    replayable-randomness/ordered-fold contract the oracle can unroll;
@@ -15539,423 +15155,419 @@ object SparkEntry {
    *    the face reports a measured curve, the sibling puts one full
    *    curve of the same machinery under the oracle.
    */
-  def faceSiblings: Map[String, String] = Map(
-    "autoencoder_recon" -> "autoencoder_fixpoint",
-    "gcn_nodes" -> "gcn_fixpoint",
-    "hnsw_ann_recall" -> "hnsw_exhaustive",
-    "hnsw_disk_knn" -> "hnsw_exhaustive",
-    "hnsw_knn" -> "hnsw_exhaustive",
-    "hnsw_recall_curve" -> "hnsw_exhaustive",
-    "iforest_scores" -> "iforest_fixpoint",
-    "ivf_ann_recall" -> "ivf_recall_fixpoint",
-    "ivf_disk_knn" -> "ivf_disk_exact",
-    "ivf_join_prod" -> "ivf_join_exact",
-    "ivf_join_recall" -> "ivf_join_exact",
-    "ivf_recall_curve" -> "ivf_recall_fixpoint",
-    "ivfpq_knn" -> "ivfpq_disk_exact",
-    "ivfpq_knn_recall" -> "ivfpq_recall_fixpoint",
-    "lime_linear" -> "lime_fixed",
-    "ml_kmeans" -> "kmeans_fixpoint",
-    "shap_linear" -> "shap_fixed",
-    "topics" -> "topics_fixpoint",
-    "tsne_reduce" -> "tsne_fixpoint",
-    "umap_reduce" -> "umap_fixpoint",
-    "span_dedup_hashed" -> "span_dedup",
-    "whiten" -> "whiten_fixpoint")
+  private def face(name: String, build: Builder, sibling: String): QuerySpec =
+    QuerySpec(name, build, FaceOf(sibling))
 
-  def oracleSql: Map[String, String] = Map(
-    "q1_agg" -> q1AggSql,
-    "q1_agg_typed" -> q1AggTypedSql,
-    "dedup_pipeline" -> dedupPipelineSql,
-    "q2_join" -> q2JoinSql,
-    "q3_topk" -> q3TopkSql,
-    "q4_window" -> q4WindowSql,
-    "q5_semi_anti" -> q5SemiAntiSql,
-    "q6_rollup" -> q6RollupSql,
-    "json_filter" -> jsonFilterSql,
-    "v_l2_knn" -> vL2KnnSql,
-    "v_cosine_knn" -> vCosineKnnSql,
-    "v_ip_knn" -> vIpKnnSql,
-    "v_distances" -> vDistancesSql,
-    "v_matryoshka" -> vMatryoshkaSql,
-    "v_distances2" -> vDistances2Sql,
-    "v_mahalanobis" -> vMahalanobisSql,
-    "bm25_corpus" -> bm25CorpusSql,
-    "v_norm_stats" -> vNormStatsSql,
-    "v_elementwise" -> vElementwiseSql,
-    "v_normalize" -> vNormalizeSql,
-    "va_avg" -> vaAvgSql,
-    "va_sum" -> vaSumSql,
-    "va_minmax" -> vaMinMaxSql,
-    "ivf_knn_exact" -> ivfKnnExactSql,
-    "ivf_insert_exact" -> vL2KnnSql, // maintained index == brute force
-    "ivf_delete_exact" -> vL2KnnSql, // decoys deleted == original brute force
-    "ivf_delete_bulk" -> vL2KnnSql,  // anti-join purge == original brute force
-    "ivfpq_insert_exact" -> vL2KnnSql, // exhaustive IVFADC == brute force
-    "ivfpq_delete_exact" -> vL2KnnSql,
-    "ivfpq_delete_bulk" -> vL2KnnSql,
-    // ivf_disk_knn / hnsw_disk_knn / ivfpq_knn: approximate serve paths ->
-    // rows-only; the *_disk_exact forms below carry the full oracle
-    "ivf_disk_exact" -> ivfKnnExactSql,   // exhaustive disk probe == brute force
-    "hnsw_exhaustive" -> hnswExhaustiveSql, // ef >= shard size == brute force
-    "hnsw_insert_exact" -> hnswExhaustiveSql, // maintained index == brute force
-    "hnsw_delete_exact" -> hnswExhaustiveSql, // decoys removed == brute force
-    "hnsw_delete_bulk" -> hnswExhaustiveSql,  // anti-join purge, same contract
-    "hnsw_delete_lazy" -> hnswExhaustiveSql,  // tombstoned == rebuilt == brute force
-    "ivfpq_disk_exact" -> ivfKnnExactSql, // nprobe=nlists + pool>=corpus == brute force
-    "vec_join_pairs" -> vecJoinPairsSql,
-    "knn_graph" -> knnGraphSql,
-    "pagerank_knn" -> pagerankKnnSql,
-    "ppr_knn" -> pprKnnSql,
-    "triangle_count" -> triangleCountSql,
-    "link_predict" -> linkPredictSql,
-    "community_labelprop" -> communitySql,
-    "clustering_coeff" -> clusteringCoeffSql,
-    "sssp_bounded" -> ssspBoundedSql,
-    "tfidf_hashed" -> tfidfHashedSql,
-    "kcore_bounded" -> kcoreSql,
-    "faceted_knn" -> facetedKnnSql,
-    "bm25_pair" -> bm25PairSql,
-    "hybrid_search" -> hybridSearchSql,
-    "rrf_fusion" -> rrfFusionSql,
-    "temporal_knn" -> temporalKnnSql,
-    "multi_vector" -> multiVectorSql,
-    "ltr_rerank" -> ltrRerankSql,
-    "borda_rerank" -> bordaRerankSql,
-    "quant_binary" -> quantBinarySql,
-    "quant_ternary" -> quantTernarySql,
-    "quant_int8" -> quantInt8Sql,
-    "cold_tier" -> coldTierSql,
-    "chunk_text" -> chunkTextSql,
-    "rag_query" -> ragQuerySql,
-    "chunk_pool" -> chunkPoolSql,
-    "cdc_chunks" -> cdcChunksSql,
-    "cdc_dedup" -> cdcDedupSql,
-    "ml_linreg" -> mlLinregSql,
-    "knn_classify" -> knnClassifySql,
-    "zscore_outliers" -> zscoreOutliersSql,
-    "centroid_drift" -> centroidDriftSql,
-    "recall_at_k" -> recallAtKSql,
-    // ml_kmeans: no SQL oracle -> rows-only check (seeded determinism in
-    // spec); kmeans_fixpoint below is the FULL-oracle Lloyd counterpart
-    "kmeans_fixpoint" -> kmeansFixpointSql,
-    "ivf_recall_fixpoint" -> ivfRecallFixpointSql,
-    "ivfpq_recall_fixpoint" -> ivfpqRecallFixpointSql,
-    "dedup_exact" -> dedupExactSql,
-    "dedup_cosine" -> dedupCosineSql,
-    "semdedup" -> semDedupSql,
-    "ivf_join_exact" -> dedupCosineSql, // exhaustive blocking == cross join
-    "fingerprint_dedup" -> fingerprintDedupSql,
-    "knn_classify_blocked" -> knnClassifySql, // same contract, blocked plan
-    "hard_negatives" -> hardNegativesSql,
-    "token_mask" -> tokenMaskSql,
-    "dsir_select" -> dsirSelectSql,
-    "hybrid_fusion" -> hybridFusionSql,
-    "lof_scores" -> lofScoresSql,
-    "arima_forecast" -> arimaForecastSql,
-    "lang_quality" -> langQualitySql,
-    "repetition_stats" -> repetitionStatsSql,
-    "pii_scrub" -> piiScrubSql,
-    "url_host_stats" -> urlHostStatsSql,
-    "url_canon_dedup" -> urlCanonDedupSql,
-    "containment_dedup" -> containmentDedupSql,
-    "kmv_distinct" -> kmvDistinctSql,
-    "kmv_merge_shards" -> kmvMergeShardsSql,
-    "hll_distinct" -> hllDistinctSql,
-    "analyze_table" -> analyzeTableSql,
-    "route_health" -> routeHealthSql,
-    "systematic_sample" -> systematicSampleSql,
-    "weighted_reservoir" -> weightedReservoirSql,
-    "group_reservoir" -> groupReservoirSql,
-    "zorder_layout" -> zorderLayoutSql,
-    "shard_layout" -> shardLayoutSql,
-    "semantic_shards" -> semanticShardsSql,
-    "bpe_train" -> bpeTrainSql,
-    "bpe_train_local" -> bpeTrainSql,
-    "bpe_encode" -> bpeEncodeSql,
-    "unigram_encode" -> unigramEncodeSql,
-    "bpe_fertility" -> bpeFertilitySql,
-    "length_filter_adaptive" -> lengthFilterSql,
-    "budget_feed" -> budgetFeedSql,
-    "corpus_entropy" -> corpusEntropySql,
-    "cms_topk" -> cmsTopkSql,
-    "skew_route" -> skewRouteSql,
-    "hist_quantile" -> histQuantileSql,
-    "decontaminate" -> decontaminateSql,
-    "decontaminate_bloom" -> decontaminateSql,
-    "davies_bouldin" -> daviesBouldinSql,
-    "v_arith" -> vArithSql,
-    "v_element_access" -> vElementAccessSql,
-    "v_preprocess" -> vPreprocessSql,
-    "bandit_ucb" -> banditUcbSql,
-    "qlearning_policy" -> qlearningPolicySql,
-    "bandit_thompson" -> banditThompsonSql,
-    "bandit_egreedy" -> banditEgreedySql,
-    "graphsage_agg" -> graphsageAggSql,
-    "sgc_propagate" -> sgcPropagateSql,
-    "graph_knn" -> graphKnnQSql,
-    "sparse_search" -> sparseSearchSql,
-    "semantic_keyword" -> semanticKeywordSql,
-    "dense_sparse" -> denseSparseSql,
-    "mmr_rerank" -> mmrRerankSql,
-    "dbscan_labels" -> dbscanLabelsSql,
-    "tenant_scan" -> tenantScanSql,
-    "tenant_usage" -> tenantUsageSql,
-    // ivf_join_recall: recall report, rows-only by design
-    "ngram_jaccard" -> ngramJaccardSql,
-    "text_stats" -> textStatsSql,
-    "multimodal_hist" -> multimodalHistSql,
-    "image_decode" -> imageDecodeSql,
-    "image_phash" -> imagePhashSql,
-    "image_resize" -> imageResizeSql,
-    "strip_markup" -> stripMarkupSql,
-    "gopher_rules" -> gopherRulesSql,
-    "image_neardup" -> imageNeardupSql,
-    "audio_meta" -> audioMetaSql,
-    "audio_mp3_meta" -> audioMp3MetaSql,
-    "audio_samples" -> audioSamplesSql,
-    "audio_flac" -> audioFlacSql,
-    "audio_neardup" -> audioNeardupSql,
-    "audio_mpeg_layer1" -> audioMpegLayer1Sql,
-    "audio_mpeg_layer2" -> audioMpegLayer2Sql,
-    "audio_id3" -> audioId3Sql,
-    "warc_ingest" -> warcIngestSql,
-    "zip_ingest" -> zipIngestSql,
-    "image_exif" -> imageExifSql,
-    "subtitle_cues" -> subtitleCuesSql,
-    "markdown_strip" -> markdownStripSql,
-    "pdf_extract" -> pdfExtractSql,
-    "image_webp" -> imageWebpSql,
-    "image_png_native" -> imagePngNativeSql,
-    "audio_resample_linear" -> audioResampleLinearSql,
-    "caption_audio_align" -> captionAudioAlignSql,
-    "csv_ingest" -> csvIngestSql,
-    "tfrecord_ingest" -> tfrecordIngestSql,
-    "webm_probe" -> webmProbeSql,
-    "jsonl_ingest" -> jsonlIngestSql,
-    "ogg_ingest" -> oggIngestSql,
-    "html_links" -> htmlLinksSql,
-    "image_jpeg_native" -> imageJpegNativeSql,
-    "video_frames_mjpeg" -> videoFramesMjpegSql,
-    "boilerplate_extract" -> boilerplateExtractSql,
-    "ogg_codec_probe" -> oggCodecProbeSql,
-    "crawl_frontier" -> crawlFrontierSql,
-    "frontier_delays" -> frontierDelaysSql,
-    "redirect_resolve" -> redirectResolveSql,
-    "html_meta" -> htmlMetaSql,
-    "canonical_dedup" -> canonicalDedupSql,
-    "chat_stats" -> chatStatsSql,
-    "chat_loss_mask" -> chatLossMaskSql,
-    "preference_pairs" -> preferencePairsSql,
-    "bt_strength" -> btStrengthSql,
-    "fim_transform" -> fimTransformSql,
-    "registrable_domain" -> registrableDomainSql,
-    "semantic_decontam" -> semanticDecontamSql,
-    "chat_tool_trace" -> chatToolTraceSql,
-    "reward_calibration" -> rewardCalibrationSql,
-    "annotator_kappa" -> annotatorKappaSql,
-    "token_budget_mix" -> tokenBudgetMixSql,
-    "group_advantage" -> groupAdvantageSql,
-    "judge_vote" -> judgeVoteSql,
-    "pass_at_k" -> passAtKSql,
-    "best_of_n" -> bestOfNSql,
-    "brier_decomp" -> brierSql,
-    "code_stats" -> codeStatsSql,
-    "mi_tokens" -> miTokensSql,
-    "dp_counts" -> dpCountsSql,
-    "needle_insert" -> needleInsertSql,
-    "ndcg_mrr" -> ndcgMrrSql,
-    "k_anon" -> kAnonSql,
-    "constraint_check" -> constraintCheckSql,
-    "sessionize" -> sessionizeSql,
-    "zipf_fit" -> zipfFitSql,
-    "ppo_stats" -> ppoStatsSql,
-    "heaps_fit" -> heapsFitSql,
-    "assortativity" -> assortativitySql,
-    "mcq_shuffle" -> mcqShuffleSql,
-    "span_corrupt" -> spanCorruptSql,
-    "ngram_novelty" -> ngramNoveltySql,
-    "burstiness" -> burstinessSql,
-    "hits_scores" -> hitsScoresSql,
-    "spearman_rho" -> spearmanRhoSql,
-    "kendall_tau" -> kendallTauSql,
-    "gini_tokens" -> giniTokensSql,
-    "stream_cdc" -> streamCdcSql,
-    "bootstrap_ci" -> bootstrapCiSql,
-    "pan_luhn" -> panLuhnSql,
-    "semantic_chunk" -> semanticChunkSql,
-    "conformal_threshold" -> conformalSql,
-    "scd2_history" -> scd2HistorySql,
-    "funnel_stages" -> funnelStagesSql,
-    "retention_cohorts" -> retentionCohortsSql,
-    "judge_length_bias" -> judgeLengthBiasSql,
-    "judge_position_bias" -> judgePositionBiasSql,
-    "distinct_n" -> distinctNSql,
-    "ab_ttest" -> abTtestSql,
-    "cuped_adjust" -> cupedSql,
-    "srm_check" -> srmCheckSql,
-    "forecast_accuracy" -> forecastAccuracySql,
-    "seasonal_decompose" -> seasonalDecomposeSql,
-    "cusum_changepoint" -> cusumChangepointSql,
-    "diff_in_diff" -> diffInDiffSql,
-    "anova_f" -> anovaFSql,
-    "bh_fdr" -> bhFdrSql,
-    "survival_km" -> survivalKmSql,
-    "ips_estimate" -> ipsEstimateSql,
-    "acf_daily" -> acfDailySql,
-    "theil_sen" -> theilSenSql,
-    "propensity_match" -> propensityMatchSql,
-    "ljung_box" -> ljungBoxSql,
-    "markov_transitions" -> markovTransitionsSql,
-    "knn_shapley" -> knnShapleySql,
-    "kcenter_coreset" -> kcenterCoresetSql,
-    "cooks_distance" -> cooksDistanceSql,
-    "label_noise_knn" -> labelNoiseKnnSql,
-    "stream_label_noise" -> streamLabelNoiseSql,
+  /** Every registered query, each declared once; the three maps below are
+    * views of it. */
+  private[graft] lazy val specs: Seq[QuerySpec] = Seq(
+    oracled("q1_agg", q1Agg, q1AggSql),
+    oracled("q1_agg_typed", q1AggTyped, q1AggTypedSql),
+    oracled("dedup_pipeline", dedupPipelineQ, dedupPipelineSql),
+    oracled("q2_join", q2Join, q2JoinSql),
+    oracled("q3_topk", q3Topk, q3TopkSql),
+    oracled("q4_window", q4Window, q4WindowSql),
+    oracled("q5_semi_anti", q5SemiAnti, q5SemiAntiSql),
+    oracled("q6_rollup", q6Rollup, q6RollupSql),
+    oracled("json_filter", jsonFilter, jsonFilterSql),
+    oracled("v_l2_knn", vL2Knn, vL2KnnSql),
+    oracled("v_cosine_knn", vCosineKnn, vCosineKnnSql),
+    oracled("v_ip_knn", vIpKnn, vIpKnnSql),
+    oracled("v_distances", vDistances, vDistancesSql),
+    oracled("v_matryoshka", vMatryoshkaQ, vMatryoshkaSql),
+    oracled("v_distances2", vDistances2, vDistances2Sql),
+    oracled("v_mahalanobis", vMahalanobis, vMahalanobisSql),
+    oracled("bm25_corpus", bm25Corpus, bm25CorpusSql),
+    oracled("v_norm_stats", vNormStats, vNormStatsSql),
+    oracled("v_elementwise", vElementwise, vElementwiseSql),
+    oracled("v_normalize", vNormalize, vNormalizeSql),
+    oracled("va_avg", vaAvg, vaAvgSql),
+    oracled("va_sum", vaSum, vaSumSql),
+    oracled("va_minmax", vaMinMax, vaMinMaxSql),
+    oracled("ivf_knn_exact", ivfKnnExact, ivfKnnExactSql),
+    oracled("ivf_insert_exact", ivfInsertExact, vL2KnnSql), // maintained index == brute force
+    oracled("ivf_delete_exact", ivfDeleteExact, vL2KnnSql), // decoys deleted == original brute force
+    oracled("ivf_delete_bulk", ivfDeleteBulk, vL2KnnSql), // anti-join purge == original brute force
+    oracled("ivfpq_insert_exact", ivfpqInsertExact, vL2KnnSql), // exhaustive IVFADC == brute force
+    oracled("ivfpq_delete_exact", ivfpqDeleteExact, vL2KnnSql),
+    oracled("ivfpq_delete_bulk", ivfpqDeleteBulk, vL2KnnSql),
+    oracled("vec_join_pairs", vecJoinPairs, vecJoinPairsSql),
+    oracled("knn_graph", knnGraph, knnGraphSql),
+    oracled("pagerank_knn", pagerankKnnQ, pagerankKnnSql),
+    oracled("ppr_knn", pprKnnQ, pprKnnSql),
+    oracled("triangle_count", triangleCountQ, triangleCountSql),
+    oracled("link_predict", linkPredictQ, linkPredictSql),
+    oracled("community_labelprop", communityQ, communitySql),
+    oracled("clustering_coeff", clusteringCoeffQ, clusteringCoeffSql),
+    oracled("sssp_bounded", ssspBoundedQ, ssspBoundedSql),
+    oracled("tfidf_hashed", tfidfHashedQ, tfidfHashedSql),
+    oracled("kcore_bounded", kcoreQ, kcoreSql),
+    oracled("faceted_knn", facetedKnn, facetedKnnSql),
+    oracled("bm25_pair", bm25Pair, bm25PairSql),
+    oracled("hybrid_search", hybridSearchQ, hybridSearchSql),
+    oracled("rrf_fusion", rrfFusionQ, rrfFusionSql),
+    oracled("temporal_knn", temporalKnn, temporalKnnSql),
+    oracled("multi_vector", multiVectorQ, multiVectorSql),
+    oracled("ltr_rerank", ltrRerank, ltrRerankSql),
+    oracled("borda_rerank", bordaRerank, bordaRerankSql),
+    oracled("quant_binary", quantBinary, quantBinarySql),
+    oracled("quant_ternary", quantTernary, quantTernarySql),
+    oracled("quant_int8", quantInt8, quantInt8Sql),
+    oracled("cold_tier", coldTierQ, coldTierSql),
+    oracled("chunk_text", chunkText, chunkTextSql),
+    oracled("rag_query", ragQuery, ragQuerySql),
+    oracled("chunk_pool", chunkPoolQ, chunkPoolSql),
+    oracled("cdc_chunks", cdcChunksQ, cdcChunksSql),
+    oracled("cdc_dedup", cdcDedupQ, cdcDedupSql),
+    oracled("ml_linreg", mlLinreg, mlLinregSql),
+    oracled("knn_classify", knnClassify, knnClassifySql),
+    oracled("zscore_outliers", zscoreOutliersQ, zscoreOutliersSql),
+    oracled("centroid_drift", centroidDrift, centroidDriftSql),
+    oracled("recall_at_k", recallAtK, recallAtKSql),
+    face("ml_kmeans", mlKmeans, "kmeans_fixpoint"), // production trainer; MlSpec pins its seeded determinism
+    oracled("kmeans_fixpoint", kmeansFixpointQ, kmeansFixpointSql),
+    oracled("ivf_recall_fixpoint", ivfRecallFixpointQ, ivfRecallFixpointSql),
+    oracled("ivfpq_recall_fixpoint", ivfpqRecallFixpointQ, ivfpqRecallFixpointSql),
+    oracled("dedup_exact", dedupExact, dedupExactSql),
+    oracled("dedup_cosine", dedupCosine, dedupCosineSql),
+    oracled("semdedup", semDedupQ, semDedupSql),
+    oracled("ivf_join_exact", ivfJoinExact, dedupCosineSql), // exhaustive blocking == cross join
+    face("ivf_join_prod", ivfJoinProd, "ivf_join_exact"),
+    face("ivf_join_recall", ivfJoinRecall, "ivf_join_exact"), // recall report
+    oracled("fingerprint_dedup", fingerprintDedupQ, fingerprintDedupSql),
+    oracled("knn_classify_blocked", knnClassifyBlockedQ, knnClassifySql), // same contract, blocked plan
+    oracled("hard_negatives", hardNegativesQ, hardNegativesSql),
+    oracled("token_mask", tokenMaskQ, tokenMaskSql),
+    oracled("dsir_select", dsirSelectQ, dsirSelectSql),
+    oracled("graph_knn", graphKnnQ, graphKnnQSql),
+    oracled("sparse_search", sparseSearchQ, sparseSearchSql),
+    oracled("semantic_keyword", semanticKeywordQ, semanticKeywordSql),
+    oracled("dense_sparse", denseSparseQ, denseSparseSql),
+    oracled("mmr_rerank", mmrRerankQ, mmrRerankSql),
+    oracled("dbscan_labels", dbscanLabelsQ, dbscanLabelsSql),
+    oracled("tenant_scan", tenantScanQ, tenantScanSql),
+    oracled("tenant_usage", tenantUsageQ, tenantUsageSql),
+    oracled("ngram_jaccard", ngramJaccard, ngramJaccardSql),
+    oracled("text_stats", textStats, textStatsSql),
+    oracled("lang_quality", langQuality, langQualitySql),
+    oracled("repetition_stats", repetitionStatsQ, repetitionStatsSql),
+    oracled("pii_scrub", piiScrub, piiScrubSql),
+    oracled("url_host_stats", urlHostStats, urlHostStatsSql),
+    oracled("url_canon_dedup", urlCanonDedupQ, urlCanonDedupSql),
+    oracled("containment_dedup", containmentDedupQ, containmentDedupSql),
+    oracled("kmv_distinct", kmvDistinctQ, kmvDistinctSql),
+    oracled("kmv_merge_shards", kmvMergeShardsQ, kmvMergeShardsSql),
+    oracled("hll_distinct", hllDistinctQ, hllDistinctSql),
+    oracled("analyze_table", analyzeTableQ, analyzeTableSql),
+    oracled("route_health", routeHealthQ, routeHealthSql),
+    oracled("systematic_sample", systematicSampleQ, systematicSampleSql),
+    oracled("weighted_reservoir", weightedReservoirQ, weightedReservoirSql),
+    oracled("group_reservoir", groupReservoirQ, groupReservoirSql),
+    oracled("zorder_layout", zorderLayoutQ, zorderLayoutSql),
+    oracled("shard_layout", shardLayoutQ, shardLayoutSql),
+    oracled("semantic_shards", semanticShardsQ, semanticShardsSql),
+    oracled("bpe_train", bpeTrainQ, bpeTrainSql),
+    oracled("bpe_train_local", bpeTrainLocalQ, bpeTrainSql),
+    oracled("bpe_encode", bpeEncodeQ, bpeEncodeSql),
+    oracled("unigram_encode", unigramEncodeQ, unigramEncodeSql),
+    oracled("bpe_fertility", bpeFertilityQ, bpeFertilitySql),
+    oracled("length_filter_adaptive", lengthFilterQ, lengthFilterSql),
+    oracled("budget_feed", budgetFeedQ, budgetFeedSql),
+    oracled("corpus_entropy", corpusEntropyQ, corpusEntropySql),
+    oracled("cms_topk", cmsTopkQ, cmsTopkSql),
+    oracled("skew_route", skewRouteQ, skewRouteSql),
+    oracled("hist_quantile", histQuantileQ, histQuantileSql),
+    oracled("decontaminate", decontaminateQ, decontaminateSql),
+    oracled("decontaminate_bloom", decontaminateBloomQ, decontaminateSql),
+    oracled("minhash_lsh", minhashLsh, minhashLshSql),
+    oracled("lsh_plan", lshPlanQ, lshPlanSql),
+    oracled("lsh_catch_rate", lshCatchRateQ, lshCatchRateSql),
+    oracled("incremental_dedup", incrementalDedupQ, incrementalDedupSql),
+    oracled("ingest_pipeline", ingestPipelineQ, ingestPipelineSql),
+    oracled("simhash_pairs", simhashPairs, simhashPairsSql),
+    oracled("multimodal_hist", multimodalHist, multimodalHistSql),
+    oracled("image_decode", imageDecode, imageDecodeSql),
+    oracled("image_phash", imagePhashQ, imagePhashSql),
+    oracled("image_resize", imageResizeQ, imageResizeSql),
+    oracled("strip_markup", stripMarkupQ, stripMarkupSql),
+    oracled("gopher_rules", gopherRulesQ, gopherRulesSql),
+    oracled("image_neardup", imageNeardupQ, imageNeardupSql),
+    oracled("audio_meta", audioMeta, audioMetaSql),
+    oracled("audio_mp3_meta", audioMp3Meta, audioMp3MetaSql),
+    oracled("audio_samples", audioSamples, audioSamplesSql),
+    oracled("audio_flac", audioFlac, audioFlacSql),
+    oracled("audio_neardup", audioNeardupQ, audioNeardupSql),
+    oracled("audio_mpeg_layer1", audioMpegLayer1, audioMpegLayer1Sql),
+    oracled("audio_mpeg_layer2", audioMpegLayer2, audioMpegLayer2Sql),
+    oracled("audio_id3", audioId3, audioId3Sql),
+    oracled("warc_ingest", warcIngest, warcIngestSql),
+    oracled("zip_ingest", zipIngest, zipIngestSql),
+    oracled("image_exif", imageExif, imageExifSql),
+    oracled("subtitle_cues", subtitleCues, subtitleCuesSql),
+    oracled("markdown_strip", markdownStrip, markdownStripSql),
+    oracled("pdf_extract", pdfExtract, pdfExtractSql),
+    oracled("image_webp", imageWebp, imageWebpSql),
+    oracled("image_png_native", imagePngNative, imagePngNativeSql),
+    oracled("audio_resample_linear", audioResampleLinear, audioResampleLinearSql),
+    oracled("caption_audio_align", captionAudioAlign, captionAudioAlignSql),
+    oracled("csv_ingest", csvIngest, csvIngestSql),
+    oracled("tfrecord_ingest", tfrecordIngest, tfrecordIngestSql),
+    oracled("webm_probe", webmProbe, webmProbeSql),
+    oracled("jsonl_ingest", jsonlIngest, jsonlIngestSql),
+    oracled("ogg_ingest", oggIngest, oggIngestSql),
+    oracled("html_links", htmlLinks, htmlLinksSql),
+    oracled("image_jpeg_native", imageJpegNative, imageJpegNativeSql),
+    oracled("boilerplate_extract", boilerplateExtract, boilerplateExtractSql),
+    oracled("ogg_codec_probe", oggCodecProbe, oggCodecProbeSql),
+    oracled("crawl_frontier", crawlFrontier, crawlFrontierSql),
+    oracled("frontier_delays", frontierDelays, frontierDelaysSql),
+    oracled("redirect_resolve", redirectResolve, redirectResolveSql),
+    oracled("html_meta", htmlMeta, htmlMetaSql),
+    oracled("canonical_dedup", canonicalDedup, canonicalDedupSql),
+    oracled("chat_stats", chatStats, chatStatsSql),
+    oracled("chat_loss_mask", chatLossMask, chatLossMaskSql),
+    oracled("preference_pairs", preferencePairs, preferencePairsSql),
+    oracled("bt_strength", btStrengthQ, btStrengthSql),
+    oracled("fim_transform", fimTransform, fimTransformSql),
+    oracled("registrable_domain", registrableDomain, registrableDomainSql),
+    oracled("semantic_decontam", semanticDecontamQ, semanticDecontamSql),
+    oracled("chat_tool_trace", chatToolTrace, chatToolTraceSql),
+    oracled("reward_calibration", rewardCalibration, rewardCalibrationSql),
+    oracled("annotator_kappa", annotatorKappa, annotatorKappaSql),
+    oracled("token_budget_mix", tokenBudgetMix, tokenBudgetMixSql),
+    oracled("group_advantage", groupAdvantage, groupAdvantageSql),
+    oracled("judge_vote", judgeVote, judgeVoteSql),
+    oracled("pass_at_k", passAtKQ, passAtKSql),
+    oracled("best_of_n", bestOfNQ, bestOfNSql),
+    oracled("brier_decomp", brierQ, brierSql),
+    oracled("code_stats", codeStatsQ, codeStatsSql),
+    oracled("mi_tokens", miTokensQ, miTokensSql),
+    oracled("dp_counts", dpCountsQ, dpCountsSql),
+    oracled("needle_insert", needleInsertQ, needleInsertSql),
+    oracled("ndcg_mrr", ndcgMrrQ, ndcgMrrSql),
+    oracled("k_anon", kAnonQ, kAnonSql),
+    oracled("constraint_check", constraintCheckQ, constraintCheckSql),
+    oracled("sessionize", sessionizeQ, sessionizeSql),
+    oracled("zipf_fit", zipfFitQ, zipfFitSql),
+    oracled("ppo_stats", ppoStatsQ, ppoStatsSql),
+    oracled("heaps_fit", heapsFitQ, heapsFitSql),
+    oracled("assortativity", assortativityQ, assortativitySql),
+    oracled("mcq_shuffle", mcqShuffleQ, mcqShuffleSql),
+    oracled("span_corrupt", spanCorruptQ, spanCorruptSql),
+    oracled("ngram_novelty", ngramNoveltyQ, ngramNoveltySql),
+    oracled("burstiness", burstinessQ, burstinessSql),
+    oracled("hits_scores", hitsScoresQ, hitsScoresSql),
+    oracled("spearman_rho", spearmanRhoQ, spearmanRhoSql),
+    oracled("kendall_tau", kendallTauQ, kendallTauSql),
+    oracled("gini_tokens", giniTokensQ, giniTokensSql),
+    oracled("stream_cdc", streamCdcQ, streamCdcSql),
+    oracled("bootstrap_ci", bootstrapCiQ, bootstrapCiSql),
+    oracled("pan_luhn", panLuhnQ, panLuhnSql),
+    oracled("semantic_chunk", semanticChunkQ, semanticChunkSql),
+    oracled("conformal_threshold", conformalQ, conformalSql),
+    oracled("scd2_history", scd2HistoryQ, scd2HistorySql),
+    oracled("funnel_stages", funnelStagesQ, funnelStagesSql),
+    oracled("retention_cohorts", retentionCohortsQ, retentionCohortsSql),
+    oracled("judge_length_bias", judgeLengthBiasQ, judgeLengthBiasSql),
+    oracled("judge_position_bias", judgePositionBiasQ, judgePositionBiasSql),
+    oracled("distinct_n", distinctNQ, distinctNSql),
+    oracled("ab_ttest", abTtestQ, abTtestSql),
+    oracled("cuped_adjust", cupedQ, cupedSql),
+    oracled("srm_check", srmCheckQ, srmCheckSql),
+    oracled("forecast_accuracy", forecastAccuracyQ, forecastAccuracySql),
+    oracled("seasonal_decompose", seasonalDecomposeQ, seasonalDecomposeSql),
+    oracled("cusum_changepoint", cusumChangepointQ, cusumChangepointSql),
+    oracled("diff_in_diff", diffInDiffQ, diffInDiffSql),
+    oracled("anova_f", anovaFQ, anovaFSql),
+    oracled("bh_fdr", bhFdrQ, bhFdrSql),
+    oracled("survival_km", survivalKmQ, survivalKmSql),
+    oracled("ips_estimate", ipsEstimateQ, ipsEstimateSql),
+    oracled("acf_daily", acfDailyQ, acfDailySql),
+    oracled("theil_sen", theilSenQ, theilSenSql),
+    oracled("propensity_match", propensityMatchQ, propensityMatchSql),
+    oracled("ljung_box", ljungBoxQ, ljungBoxSql),
+    oracled("markov_transitions", markovTransitionsQ, markovTransitionsSql),
+    oracled("knn_shapley", knnShapleyQ, knnShapleySql),
+    oracled("kcenter_coreset", kcenterCoresetQ, kcenterCoresetSql),
+    oracled("cooks_distance", cooksDistanceQ, cooksDistanceSql),
+    oracled("label_noise_knn", labelNoiseKnnQ, labelNoiseKnnSql),
+    oracled("stream_label_noise", streamLabelNoiseQ, streamLabelNoiseSql),
     // maintained-by-streaming-ingest index at the exhaustive dial ==
     // brute force over the full corpus
-    "stream_index_ingest" -> vL2KnnSql,
-    "stream_ivfpq_ingest" -> vL2KnnSql,
-    "stream_index_retract" -> vL2KnnSql,  // streamed tombstones == originals brute force
-    "stream_ivfpq_retract" -> vL2KnnSql,
-    "stream_hnsw_retract" -> hnswExhaustiveSql,
-    "retract_health" -> retractHealthSql,
-    "data_map" -> dataMapSql,
-    "facility_select" -> facilitySelectSql,
-    "betweenness_knn" -> betweennessKnnSql,
-    "katz_knn" -> katzKnnSql,
-    "harmonic_knn" -> harmonicKnnSql,
-    "deepwalk_corpus" -> deepwalkCorpusSql,
-    "rake_keywords" -> rakeKeywordsSql,
-    "textrank_keywords" -> textrankKeywordsSql,
-    "winsorize_stats" -> winsorizeStatsSql,
-    "textrank_summary" -> textrankSummarySql,
-    "lm_generate" -> lmGenerateSql,
-    "modularity_knn" -> modularityKnnSql,
-    "pmi_collocations" -> pmiCollocationsSql,
-    "benford_audit" -> benfordAuditSql,
-    "mp4_probe" -> mp4ProbeSql,
-    "hls_playlist" -> hlsPlaylistSql,
-    "psi_drift" -> psiDriftSql,
-    "json_profile" -> jsonProfileSql,
-    "orc_probe" -> orcProbeSql,
-    "avro_ingest" -> avroIngestSql,
-    "bleu_score" -> bleuScoreSql,
-    "rouge_l" -> rougeLSql,
-    "edit_neardup" -> editNearDupSql,
-    "auc_roc" -> aucRocSql,
-    "domain_reweight" -> domainReweightSql,
-    "audio_segments" -> audioSegmentsSql,
-    "sentence_split" -> sentenceSplitSql,
-    "parquet_probe" -> parquetProbeSql,
-    "crawl_pipeline" -> crawlPipelineSql,
-    "script_detect" -> scriptDetectSql,
-    "curriculum_order" -> curriculumOrderSql,
-    "shot_boundaries" -> shotBoundariesSql,
-    "readability_score" -> readabilityScoreSql,
-    "stream_frontier" -> streamFrontierSql,
-    "anchor_text_agg" -> anchorTextAggSql,
-    "decompress_auto" -> decompressAutoSql,
-    "audio_gain" -> audioGainSql,
-    "image_crop_pad" -> imageCropPadSql,
-    "xml_extract" -> xmlExtractSql,
-    "image_orient" -> imageOrientSql,
-    "video_y4m" -> videoY4mSql,
-    "video_neardup" -> videoNeardupSql,
-    "image_gif" -> imageGifSql,
-    "image_qoi" -> imageQoiSql,
-    "image_tiff" -> imageTiffSql,
-    "audio_aiff" -> audioAiffSql,
-    "audio_au" -> audioAuSql,
-    "robots_filter" -> robotsFilterSql,
-    "robots_sitemaps" -> robotsSitemapsSql,
-    "charset_decode" -> charsetDecodeSql,
-    "text_normalize" -> textNormalizeSql,
-    "url_idn" -> urlIdnSql,
-    "url_pct_norm" -> urlPctNormSql,
-    "sitemap_parse" -> sitemapParseSql,
-    "mime_sniff" -> mimeSniffSql,
-    "image_tga" -> imageTgaSql,
-    "video_flic" -> videoFlicSql,
-    "epoch_shuffle" -> epochShuffleSql,
-    "wds_ingest" -> wdsIngestSql,
-    "vgraph_analytics" -> vgraphAnalyticsSql,
-    "audio_resample" -> audioResampleSql,
-    "audio_g711" -> audioG711Sql,
-    "audio_adpcm" -> audioAdpcmSql,
-    "video_meta" -> videoMetaSql,
-    "video_frames" -> videoFramesSql,
-    "v_compare" -> vCompareSql,
-    "sim_histogram" -> simHistogramSql,
-    "sparse_l2" -> sparseL2Sql,
-    "ocsvm_scores" -> ocsvmScoresSql,
-    "pq_adc" -> pqAdcSql,
-    "two_stage_rerank" -> twoStageRerankSql,
-    "vec_route_assign" -> vecRouteSql,
-    "stream_window_agg" -> streamWindowAggSql,
-    "stream_dedup" -> streamDedupSql,
-    "stream_neardup" -> streamNeardupSql,
-    "dataset_diff" -> datasetDiffSql,
-    "stream_distinct" -> streamDistinctSql,
-    "stream_cms_topk" -> streamCmsTopkSql,
-    "stream_benford" -> streamBenfordSql,
-    "shard_manifest" -> shardManifestSql,
-    "html_tables" -> htmlTablesSql,
-    "html_table_cells" -> htmlTableCellsSql,
-    "ico_probe" -> icoProbeSql,
-    "og_cards" -> ogCardsSql,
-    "svg_probe" -> svgProbeSql,
-    "rss_probe" -> rssProbeSql,
-    "stream_session_agg" -> streamSessionAggSql,
-    "stream_stream_join" -> streamStreamJoinSql,
-    "stream_quota" -> streamQuotaSql,
-    "stream_curation" -> streamCurationSql,
-    "quant_ranged" -> quantRangedSql,
-    "asof_join" -> asofJoinSql,
-    "range_join" -> rangeJoinSql,
-    "skew_salted_join" -> skewSaltedJoinSql,
-    "curation_pipeline" -> curationPipelineSql,
-    "curation_pipeline2" -> curationPipeline2Sql,
-    "pack_sequences" -> packSequencesSql,
-    "line_dedup" -> lineDedupSql,
-    "training_feed" -> trainingFeedSql,
-    "lm_score" -> lmScoreSql,
-    "lm_score_kn" -> lmScoreKnSql,
-    "quality_clf" -> qualityClfSql,
-    "span_dedup" -> spanDedupSql,
-    "hash_sample" -> hashSampleSql,
-    "mixture_sample" -> mixtureSampleSql,
-    "stratified_sample" -> stratifiedSampleSql,
-    "temperature_mixture" -> temperatureMixtureSql,
-    "vec_join_topk" -> vecJoinTopkSql,
-    "weighted_ensemble" -> weightedEnsembleSql,
-    "dup_components" -> dupComponentsSql,
-    "simhash_pairs" -> simhashPairsSql,
-    "minhash_lsh" -> minhashLshSql,
-    "lsh_plan" -> lshPlanSql,
-    "lsh_catch_rate" -> lshCatchRateSql,
-    "incremental_dedup" -> incrementalDedupSql,
-    "ingest_pipeline" -> ingestPipelineSql,
-    "shap_fixed" -> shapFixedSql,
-    "lime_fixed" -> limeFixedSql,
-    "topics_fixpoint" -> topicsFixedSql,
-    "whiten_fixpoint" -> whitenFixedSql,
-    "iforest_fixpoint" -> iforestFixedSql,
-    "iforest_small" -> iforestSmallSql,
-    "gcn_fixpoint" -> gcnFixedSql,
-    "autoencoder_fixpoint" -> aeFixedSql,
-    "tsne_fixpoint" -> tsneFixedSql,
-    "umap_fixpoint" -> umapFixedSql,
-    // Remaining rows-only queries fall into exactly three classes:
-    //  - production faces with an oracle-verified fixpoint sibling
-    //    (ml_kmeans/whiten/topics/iforest_scores/gcn_nodes/
-    //     autoencoder_recon/shap_linear/lime_linear);
-    //  - ANN recall/serve reports whose exact counterparts ARE oracled
-    //    (hnsw_*/ivf_*recall/ivf_disk_knn/ivfpq_knn* — and
-    //     ivf_recall_fixpoint puts one full recall CURVE under the
-    //     oracle);
-    //  - discontinuous-dynamics optimizers no rounding can absorb
-    //    (tsne_reduce: sign-adaptive gains; umap_reduce: binary-searched
-    //    sigma) -> unit specs assert their contracts instead.
+    oracled("stream_index_ingest", streamIndexIngestQ, vL2KnnSql),
+    oracled("stream_ivfpq_ingest", streamIvfpqIngestQ, vL2KnnSql),
+    oracled("stream_index_retract", streamIndexRetractQ, vL2KnnSql), // streamed tombstones == originals brute force
+    oracled("stream_ivfpq_retract", streamIvfpqRetractQ, vL2KnnSql),
+    oracled("stream_hnsw_retract", streamHnswRetractQ, hnswExhaustiveSql),
+    oracled("retract_health", retractHealthQ, retractHealthSql),
+    oracled("data_map", dataMapQ, dataMapSql),
+    oracled("facility_select", facilitySelectQ, facilitySelectSql),
+    oracled("betweenness_knn", betweennessKnnQ, betweennessKnnSql),
+    oracled("katz_knn", katzKnnQ, katzKnnSql),
+    oracled("harmonic_knn", harmonicKnnQ, harmonicKnnSql),
+    oracled("deepwalk_corpus", deepwalkCorpusQ, deepwalkCorpusSql),
+    oracled("rake_keywords", rakeKeywordsQ, rakeKeywordsSql),
+    oracled("textrank_keywords", textrankKeywordsQ, textrankKeywordsSql),
+    oracled("winsorize_stats", winsorizeStatsQ, winsorizeStatsSql),
+    oracled("textrank_summary", textrankSummaryQ, textrankSummarySql),
+    oracled("lm_generate", lmGenerateQ, lmGenerateSql),
+    oracled("modularity_knn", modularityKnnQ, modularityKnnSql),
+    oracled("pmi_collocations", pmiCollocationsQ, pmiCollocationsSql),
+    oracled("benford_audit", benfordAuditQ, benfordAuditSql),
+    oracled("mp4_probe", mp4Probe, mp4ProbeSql),
+    oracled("hls_playlist", hlsPlaylist, hlsPlaylistSql),
+    oracled("psi_drift", psiDrift, psiDriftSql),
+    oracled("json_profile", jsonProfileQ, jsonProfileSql),
+    oracled("orc_probe", orcProbe, orcProbeSql),
+    oracled("avro_ingest", avroIngest, avroIngestSql),
+    oracled("bleu_score", bleuScoreQ, bleuScoreSql),
+    oracled("rouge_l", rougeLQ, rougeLSql),
+    oracled("edit_neardup", editNearDupQ, editNearDupSql),
+    oracled("auc_roc", aucRocQ, aucRocSql),
+    oracled("domain_reweight", domainReweight, domainReweightSql),
+    oracled("audio_segments", audioSegments, audioSegmentsSql),
+    oracled("sentence_split", sentenceSplit, sentenceSplitSql),
+    oracled("parquet_probe", parquetProbe, parquetProbeSql),
+    oracled("crawl_pipeline", crawlPipeline, crawlPipelineSql),
+    oracled("script_detect", scriptDetect, scriptDetectSql),
+    oracled("curriculum_order", curriculumOrder, curriculumOrderSql),
+    oracled("shot_boundaries", shotBoundaries, shotBoundariesSql),
+    oracled("readability_score", readabilityScore, readabilityScoreSql),
+    oracled("stream_frontier", streamFrontierQ, streamFrontierSql),
+    oracled("anchor_text_agg", anchorTextAgg, anchorTextAggSql),
+    oracled("decompress_auto", decompressAuto, decompressAutoSql),
+    oracled("audio_gain", audioGain, audioGainSql),
+    oracled("image_crop_pad", imageCropPad, imageCropPadSql),
+    oracled("xml_extract", xmlExtract, xmlExtractSql),
+    oracled("image_orient", imageOrient, imageOrientSql),
+    oracled("video_y4m", videoY4m, videoY4mSql),
+    oracled("video_neardup", videoNeardupQ, videoNeardupSql),
+    oracled("image_gif", imageGif, imageGifSql),
+    oracled("image_qoi", imageQoi, imageQoiSql),
+    oracled("image_tiff", imageTiff, imageTiffSql),
+    oracled("audio_aiff", audioAiff, audioAiffSql),
+    oracled("audio_au", audioAu, audioAuSql),
+    oracled("robots_filter", robotsFilter, robotsFilterSql),
+    oracled("robots_sitemaps", robotsSitemapsQ, robotsSitemapsSql),
+    oracled("charset_decode", charsetDecode, charsetDecodeSql),
+    oracled("text_normalize", textNormalize, textNormalizeSql),
+    oracled("url_idn", urlIdn, urlIdnSql),
+    oracled("url_pct_norm", urlPctNorm, urlPctNormSql),
+    oracled("sitemap_parse", sitemapParse, sitemapParseSql),
+    oracled("mime_sniff", mimeSniff, mimeSniffSql),
+    oracled("image_tga", imageTga, imageTgaSql),
+    oracled("video_flic", videoFlic, videoFlicSql),
+    oracled("epoch_shuffle", epochShuffleQ, epochShuffleSql),
+    oracled("wds_ingest", wdsIngest, wdsIngestSql),
+    oracled("vgraph_analytics", vgraphAnalyticsQ, vgraphAnalyticsSql),
+    oracled("audio_resample", audioResample, audioResampleSql),
+    oracled("audio_g711", audioG711, audioG711Sql),
+    oracled("audio_adpcm", audioAdpcm, audioAdpcmSql),
+    oracled("video_meta", videoMeta, videoMetaSql),
+    oracled("video_frames", videoFrames, videoFramesSql),
+    oracled("video_frames_mjpeg", videoFramesMjpeg, videoFramesMjpegSql),
+    oracled("v_compare", vCompare, vCompareSql),
+    oracled("sim_histogram", simHistogram, simHistogramSql),
+    oracled("sparse_l2", sparseL2, sparseL2Sql),
+    face("iforest_scores", iforestScores, "iforest_fixpoint"),
+    face("topics", topicsQ, "topics_fixpoint"),
+    oracled("topics_fixpoint", topicsFixedQ, topicsFixedSql),
+    oracled("whiten_fixpoint", whitenFixedQ, whitenFixedSql),
+    oracled("iforest_fixpoint", iforestFixedQ, iforestFixedSql),
+    oracled("iforest_small", iforestSmallQ, iforestSmallSql),
+    oracled("gcn_fixpoint", gcnFixedQ, gcnFixedSql),
+    oracled("autoencoder_fixpoint", aeFixedQ, aeFixedSql),
+    face("whiten", whitenQ, "whiten_fixpoint"),
+    face("ivf_ann_recall", ivfAnnRecall, "ivf_recall_fixpoint"),
+    face("hnsw_ann_recall", hnswAnnRecall, "hnsw_exhaustive"),
+    face("hnsw_knn", hnswKnn, "hnsw_exhaustive"),
+    face("ivf_disk_knn", ivfDiskKnn, "ivf_disk_exact"), // approximate serve path
+    oracled("ivf_disk_exact", ivfDiskExact, ivfKnnExactSql), // exhaustive disk probe == brute force
+    face("hnsw_disk_knn", hnswDiskKnn, "hnsw_exhaustive"), // approximate serve path
+    oracled("hnsw_exhaustive", hnswExhaustive, hnswExhaustiveSql), // ef >= shard size == brute force
+    oracled("hnsw_insert_exact", hnswInsertExact, hnswExhaustiveSql), // maintained index == brute force
+    oracled("hnsw_delete_exact", hnswDeleteExact, hnswExhaustiveSql), // decoys removed == brute force
+    oracled("hnsw_delete_bulk", hnswDeleteBulk, hnswExhaustiveSql), // anti-join purge, same contract
+    oracled("hnsw_delete_lazy", hnswDeleteLazy, hnswExhaustiveSql), // tombstoned == rebuilt == brute force
+    face("ivfpq_knn", ivfpqKnn, "ivfpq_disk_exact"), // approximate serve path
+    oracled("ivfpq_disk_exact", ivfpqDiskExact, ivfKnnExactSql), // nprobe=nlists + pool>=corpus == brute force
+    face("hnsw_recall_curve", hnswRecallCurve, "hnsw_exhaustive"),
+    face("ivfpq_knn_recall", ivfpqKnnRecall, "ivfpq_recall_fixpoint"),
+    face("ivf_recall_curve", ivfRecallCurve, "ivf_recall_fixpoint"),
+    oracled("hybrid_fusion", hybridFusionQ, hybridFusionSql),
+    oracled("v_arith", vArith, vArithSql),
+    oracled("v_element_access", vElementAccess, vElementAccessSql),
+    oracled("v_preprocess", vPreprocess, vPreprocessSql),
+    oracled("bandit_ucb", banditUcbQ, banditUcbSql),
+    oracled("bandit_thompson", banditThompsonQ, banditThompsonSql),
+    oracled("bandit_egreedy", banditEgreedyQ, banditEgreedySql),
+    oracled("qlearning_policy", qlearningPolicyQ, qlearningPolicySql),
+    oracled("graphsage_agg", graphsageAggQ, graphsageAggSql),
+    oracled("sgc_propagate", sgcPropagateQ, sgcPropagateSql),
+    face("shap_linear", shapLinearQ, "shap_fixed"),
+    face("lime_linear", limeLinearQ, "lime_fixed"),
+    oracled("shap_fixed", shapFixedQ, shapFixedSql),
+    oracled("lime_fixed", limeFixedQ, limeFixedSql),
+    face("gcn_nodes", gcnNodesQ, "gcn_fixpoint"),
+    oracled("davies_bouldin", daviesBouldinQ, daviesBouldinSql),
+    oracled("arima_forecast", arimaForecastQ, arimaForecastSql),
+    oracled("lof_scores", lofScores, lofScoresSql),
+    oracled("ocsvm_scores", ocsvmScoresQ, ocsvmScoresSql),
+    face("tsne_reduce", tsneReduceQ, "tsne_fixpoint"),
+    oracled("tsne_fixpoint", tsneFixedQ, tsneFixedSql),
+    oracled("umap_fixpoint", umapFixedQ, umapFixedSql),
+    face("autoencoder_recon", autoencoderReconQ, "autoencoder_fixpoint"),
+    face("umap_reduce", umapReduceQ, "umap_fixpoint"),
+    oracled("pq_adc", pqAdcQ, pqAdcSql),
+    oracled("two_stage_rerank", twoStageRerankQ, twoStageRerankSql),
+    oracled("vec_route_assign", vecRouteQ, vecRouteSql),
+    oracled("stream_window_agg", streamWindowAggQ, streamWindowAggSql),
+    oracled("stream_dedup", streamDedupQ, streamDedupSql),
+    oracled("stream_neardup", streamNeardupQ, streamNeardupSql),
+    oracled("dataset_diff", datasetDiffQ, datasetDiffSql),
+    oracled("stream_distinct", streamDistinctQ, streamDistinctSql),
+    oracled("stream_cms_topk", streamCmsTopkQ, streamCmsTopkSql),
+    oracled("stream_benford", streamBenfordQ, streamBenfordSql),
+    oracled("shard_manifest", shardManifestQ, shardManifestSql),
+    oracled("html_tables", htmlTablesQ, htmlTablesSql),
+    oracled("html_table_cells", htmlTableCellsQ, htmlTableCellsSql),
+    oracled("ico_probe", icoProbeQ, icoProbeSql),
+    oracled("og_cards", ogCardsQ, ogCardsSql),
+    oracled("svg_probe", svgProbeQ, svgProbeSql),
+    oracled("rss_probe", rssProbeQ, rssProbeSql),
+    oracled("stream_session_agg", streamSessionAggQ, streamSessionAggSql),
+    oracled("stream_stream_join", streamStreamJoinQ, streamStreamJoinSql),
+    oracled("stream_quota", streamQuotaQ, streamQuotaSql),
+    oracled("stream_curation", streamCurationQ, streamCurationSql),
+    oracled("quant_ranged", quantRangedQ, quantRangedSql),
+    oracled("asof_join", asofJoinQ, asofJoinSql),
+    oracled("range_join", rangeJoinQ, rangeJoinSql),
+    oracled("skew_salted_join", skewSaltedJoinQ, skewSaltedJoinSql),
+    oracled("curation_pipeline", curationPipelineQ, curationPipelineSql),
+    oracled("curation_pipeline2", curationPipeline2Q, curationPipeline2Sql),
+    oracled("pack_sequences", packSequencesQ, packSequencesSql),
+    oracled("line_dedup", lineDedupQ, lineDedupSql),
+    oracled("training_feed", trainingFeedQ, trainingFeedSql),
+    oracled("lm_score", lmScoreQ, lmScoreSql),
+    oracled("lm_score_kn", lmScoreKnQ, lmScoreKnSql),
+    oracled("quality_clf", qualityClfQ, qualityClfSql),
+    oracled("span_dedup", spanDedupQ, spanDedupSql),
+    face("span_dedup_hashed", spanDedupHashed, "span_dedup"),
+    oracled("hash_sample", hashSampleQ, hashSampleSql),
+    oracled("mixture_sample", mixtureSampleQ, mixtureSampleSql),
+    oracled("stratified_sample", stratifiedSampleQ, stratifiedSampleSql),
+    oracled("temperature_mixture", temperatureMixtureQ, temperatureMixtureSql),
+    oracled("vec_join_topk", vecJoinTopkQ, vecJoinTopkSql),
+    oracled("weighted_ensemble", weightedEnsembleQ, weightedEnsembleSql),
+    oracled("dup_components", dupComponentsQ, dupComponentsSql),
   )
+
+  def queries: Map[String, (SparkSession, String) => DataFrame] =
+    specs.map(s => s.name -> s.build).toMap
+
+  def oracleSql: Map[String, String] =
+    specs.collect { case QuerySpec(name, _, Oracle(sql)) => name -> sql() }.toMap
+
+  def faceSiblings: Map[String, String] =
+    specs.collect { case QuerySpec(name, _, FaceOf(sibling)) => name -> sibling }.toMap
 }

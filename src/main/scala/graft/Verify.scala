@@ -1,7 +1,10 @@
 package graft
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+import scala.collection.mutable.ArrayBuffer
+/** Correctness dump: each SparkEntry.queries result → parquet, plus
+  * oracle_sql.json, for the DuckDB compare (`tools/check.py`). Ends with one
+  * `[verify] N failed: <names>` line and exits 1 when N > 0: a query
+  * that threw, or an optional subset name that is not a registered query. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir, rest @ _*) = args
@@ -9,13 +12,17 @@ object Verify {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = Sessions.localMeasurement(cpus)
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
+    val queries = SparkEntry.queries
+    val failed = ArrayBuffer.from(only.filterNot(queries.contains))
+    failed.foreach(n => System.err.println(s"[verify] $n failed: not a registered query"))
+    queries
       .filter { case (name, _) => only.isEmpty || only(name) }
       .foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        failed += name
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
@@ -34,5 +41,7 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+    println(s"[verify] ${failed.size} failed: ${failed.mkString(", ")}")
+    if (failed.nonEmpty) sys.exit(1)
   }
 }

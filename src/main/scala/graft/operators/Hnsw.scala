@@ -452,10 +452,12 @@ object Hnsw {
     * the LAZY deletion path uses. Driver-sized by design: a tombstone
     * set is bounded by [[compact]]'s threshold sweep (shards above
     * `minDeadFraction` rebuild and consume their tombstones), so it
-    * stays erasure-batch-sized — millions of longs, not corpus-sized. */
+    * stays erasure-batch-sized — millions of longs, not corpus-sized.
+    * Null ids (and ids that do not cast to a long) are skipped, as in
+    * [[deleteBulk]]. */
   def tombstoneSet(ids: DataFrame): Set[Long] = {
-    val c = ids.columns.head
-    ids.select(col(c).cast("long")).distinct()
+    val id = col(ids.columns.head).cast("long")
+    ids.select(id).where(id.isNotNull).distinct()
       .collect().map(_.getLong(0)).toSet
   }
 

@@ -26,6 +26,11 @@ class BenchShapeSpec extends AnyFunSuite {
     assert(missing.isEmpty, s"headline names not in SparkEntry.queries: $missing")
   }
 
+  test("every warm name is a headline name") {
+    val stray = Bench.warm.filterNot(Bench.headline.contains)
+    assert(stray.isEmpty, s"warm names not in Bench.headline: $stray")
+  }
+
   // Since r11 Bench emits TWO self-contained JSON lines: a compact META
   // line (top spreads/calib) first, then the MAIN line (total +
   // total_norm + per-query seconds) LAST. The main line must always sit

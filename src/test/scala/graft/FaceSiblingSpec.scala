@@ -44,4 +44,9 @@ class FaceSiblingSpec extends AnyFunSuite {
     assert(dangling.isEmpty,
       s"oracleSql entries with no queries entry: ${dangling.toSeq.sorted}")
   }
+
+  test("every query name is declared once (the maps would collapse a repeat)") {
+    val repeated = SparkEntry.specs.groupBy(_.name).collect { case (n, ss) if ss.size > 1 => n }
+    assert(repeated.isEmpty, s"query names declared more than once: ${repeated.toSeq.sorted}")
+  }
 }

@@ -432,6 +432,10 @@ class HnswSpec extends SparkSpecBase {
     assert(Hnsw.deleteBulk(base, manifest.limit(0), numShards = 4) eq base)
   }
 
+  test("tombstoneSet skips a null manifest id instead of failing the collect") {
+    assert(Hnsw.tombstoneSet(Seq[java.lang.Long](1L, null).toDF("vec_id")) == Set(1L))
+  }
+
   test("maintenance stays within 2·numShards partitions when parallelism exceeds numShards") {
     assume(spark.sparkContext.defaultParallelism > 2)
     var idx = Hnsw.build(emb.filter($"vec_id" < 300), "vec_id", "embedding", numShards = 2)

@@ -233,8 +233,8 @@ object Ivf {
   }
 
   /** The ONE routing kernel: assign each row its nearest centroid
-    * (broadcast, nlists-sized; [[nearestCentroid]], so ties break to the
-    * LOWER cluster id). Shared by [[insert]], the streaming
+    * ([[nearestCentroid]], so ties break to the LOWER cluster id; the
+    * nlists centroids ride in the UDF's closure). Shared by [[insert]], the streaming
     * ingest paths ([[graft.streaming.StreamIndexIngest]]), IVFADC
     * maintenance ([[IvfPq.insert]]), and the `route_health` dial —
     * batch and stream routing cannot diverge because there is exactly
@@ -252,8 +252,7 @@ object Ivf {
     * everything lands FAR from its centroid). */
   def routeWithDist(centroids: Array[Array[Float]], df: DataFrame,
                     vecCol: String): DataFrame = {
-    val bc = df.sparkSession.sparkContext.broadcast(centroids)
-    val assign = udf((v: Seq[Float]) => nearestCentroid(v.toArray, bc.value))
+    val assign = udf((v: Seq[Float]) => nearestCentroid(v.toArray, centroids))
     df.withColumn("__route", assign(col(vecCol)))
       .withColumn("cluster_id", col("__route._1"))
       .withColumn("route_dist", col("__route._2"))
@@ -289,9 +288,9 @@ object Ivf {
     * so a million-row erasure set never rides the plan as a literal.
     * Same contract as [[delete]] (no refit, no tombstones, centroids
     * keep their positions; rebuild trigger = `statistics().imbalance`).
-    * `ids` must carry a column named `idCol`; Catalyst broadcasts the
-    * erasure set when it is small and shuffles both sides on the id
-    * otherwise — either way ONE anti-join over the posting lists,
+    * `ids` must carry a column named `idCol`; Catalyst ships the whole
+    * erasure set to every task when it is small and shuffles both sides
+    * on the id otherwise — either way ONE anti-join over the posting lists,
     * never a per-id filter chain. */
   def deleteBulk(model: IvfModel, idCol: String, ids: DataFrame): IvfModel =
     model.copy(assigned = model.assigned
@@ -314,76 +313,30 @@ object Ivf {
   }
 
   /**
-   * Cluster-blocked similarity join for large×large inputs: assign both
-   * sides to the same centroids, shuffle-join on `cluster_id`, compute
-   * distances only within blocks. Trades the O(|L|·|R|) cross product for
-   * O(sum of per-cluster products) — the standard IVF blocking scheme.
+   * Cluster-blocked similarity join for large×large inputs: every pair of
+   * an index row and an `other` row within `threshold` under `metric`,
+   * found inside the index's posting lists rather than over the
+   * O(|L|·|R|) cross product. Each `other` row probes its `nprobe`
+   * nearest lists ([[probeOrder]]); nprobe=1 is the cheapest and misses
+   * pairs whose members fall in different lists, larger values buy recall
+   * linearly in cost, and **nprobe = nlists is exhaustive and equals the
+   * cross join** — the oracle-verified configuration. A pair is emitted at
+   * most once (the index row sits in exactly one posting list).
    *
-   * `nprobe` is the right side's multi-probe width: each right row joins
-   * its `nprobe` nearest posting lists. nprobe=1 is the cheapest (misses
-   * pairs whose members fall in different clusters, recall<1); larger
-   * values buy recall linearly in cost; **nprobe = nlists is exhaustive
-   * assignment and provably equals the cross join** — that is the
-   * oracle-verified configuration, and the recall/cost dial between 1 and
-   * nlists is the production setting. A pair is emitted at most once (the
-   * left row sits in exactly one posting list).
-   *
-   * `pairFilter` (r15, guide §1.2): an optional cheap predicate over the
-   * joined `l_*`/`r_*` columns evaluated BEFORE the distance kernel. A
-   * caller that keeps only `l_id < r_id` pairs would otherwise pay the
-   * kernel on every pair and throw half away — Catalyst evaluates the
-   * caller's post-hoc filter conjunction distance-first (the inner
-   * filter wins the CombineFilters order), so pushing the cheap half
-   * here halves the kernel evaluations. Result set is identical: the
-   * predicate commutes with the threshold filter.
-   *
-   * Cosine (r15, guide §1.2): per-SIDE squared norms are hoisted out of
-   * the per-PAIR kernel (`normSq` once per left row / once per right row
-   * BEFORE the probe explode), and each pair evaluates only the dot
-   * product; the combine step is bit-identical to the fused kernel
-   * (`DistanceExpressions.cosineFromParts`), so distances — and the
-   * oracle hash — are unchanged while per-pair flops drop ~3×.
-   *
-   * The pair stage runs on `defaultParallelism` tasks: both sides move
-   * there by list, by number ([[byList]]).
+   * It runs as one Spark job over [[IvfBlockJoin]]'s list blocks, the scan
+   * [[knnJoin]] uses, with no UDF; each row is routed in its task. Output:
+   * `cluster_id`, the `l_`-prefixed index columns, the `r_`-prefixed
+   * `other` columns and `distance`. `pairFilter`, a predicate over those
+   * columns, filters the pairs. A null index vector never pairs; a null `other` vector, a null
+   * element and a dimension mismatch fail the query; an unknown metric
+   * fails the call.
    */
   def join(model: IvfModel, other: DataFrame, otherVecCol: String,
            metric: String = "l2", threshold: Double, nprobe: Int = 1,
            pairFilter: Option[org.apache.spark.sql.Column] = None): DataFrame = {
-    val bCentroids = other.sparkSession.sparkContext.broadcast(model.centroids)
-    val p = math.max(1, nprobe)
-    val probeUdf = udf((v: Seq[Float]) =>
-      probeOrder(centroidDistances(v.toArray, bCentroids.value)).take(p).toSeq)
-    val cosine = metric == "cosine"
-    val l0 = model.assigned.select(
-      model.assigned.columns.map(c => col(c).as(if (c == "cluster_id") c else s"l_$c")).toSeq: _*)
-    val l = if (cosine)
-      l0.withColumn("__l_nsq",
-        graft.plans.DistanceExpressions.normSq(col(s"l_${model.vecCol}")))
-    else l0
-    val r0 = if (cosine)
-      other.withColumn("__r_nsq",
-        graft.plans.DistanceExpressions.normSq(col(otherVecCol)))
-    else other
-    val rCols = other.columns.map(c => col(c).as(s"r_$c")) ++
-      (if (cosine) Seq(col("__r_nsq")) else Nil)
-    val r = r0.withColumn("cluster_id", explode(probeUdf(col(otherVecCol))))
-      .select((rCols :+ col("cluster_id")).toSeq: _*)
-    // the pair stage runs on P tasks: both sides move there by list
-    val parts = other.sparkSession.sparkContext.defaultParallelism
-    val joined0 = byList(l, parts).join(byList(r, parts), Seq("__part", "cluster_id"))
-      .drop("__part")
-    val joined = pairFilter.map(joined0.filter).getOrElse(joined0)
-    val dist =
-      if (cosine) graft.plans.DistanceExpressions.cosineFromParts(
-        graft.plans.DistanceExpressions.dot(
-          col(s"l_${model.vecCol}"), col(s"r_$otherVecCol")),
-        col("__l_nsq"), col("__r_nsq"))
-      else Knn.distCol(metric)(col(s"l_${model.vecCol}"), col(s"r_$otherVecCol"))
-    joined
-      .withColumn("distance", dist)
-      .filter(col("distance") <= threshold)
-      .drop("__l_nsq", "__r_nsq")
+    val pairs = IvfBlockJoin.join(model, other, otherVecCol, graft.plans.Metric(metric),
+      threshold, nprobe)
+    pairFilter.map(pairs.filter).getOrElse(pairs)
   }
 
   /** Per-list covering radius, max over members of d(member, centroid):
@@ -392,19 +345,10 @@ object Ivf {
     * values to the driver); a list with no rows reads 0. */
   def radii(model: IvfModel): Array[Double] = IvfBlockJoin.radii(model)
 
-  /** `df` moved by number to `parts` partitions, list c to partition
-    * c mod `parts` (column `__part`): the lists spread evenly, and a join
-    * keyed on (`__part`, `cluster_id`) reads this partitioning as it is.
-    * Adaptive execution never merges a by-number exchange, and it must
-    * not here: these partitions are few bytes for a lot of pair work. */
-  private def byList(df: DataFrame, parts: Int): DataFrame =
-    df.withColumn("__part", pmod(col("cluster_id"), lit(parts)))
-      .repartitionById(parts, col("__part"))
-
   /**
    * EXACT distributed k-NN join — every query row gets its true k nearest
-   * train rows, with no broadcast of the train table. The scale shape for
-   * `knn_classify`/`knn_regress`/`vec_join(k)` on large train sides.
+   * train rows, without shipping the train table to every task. The scale
+   * shape for `knn_classify`/`knn_regress`/`vec_join(k)` on large train sides.
    *
    * The index's rows move by list to `defaultParallelism` partitions (list
    * c on partition c mod P, a fixed count) as Spark binary rows, and each
@@ -427,7 +371,7 @@ object Ivf {
    *
    * Routing runs in the scan tasks against the centroids they carry, and
    * the radii reach the query partitions through a shuffle: nothing is
-   * collected or broadcast by hand. The passes and the merge are the
+   * collected or shipped by hand. The passes and the merge are the
    * shuffle stages of one Spark job, and the result is a frame over its
    * rows; as a query plan, re-planned after each of its stages, the same
    * steps cost more than the scans themselves on small inputs. Pruning

@@ -1,26 +1,30 @@
 package graft.operators
 
 import scala.collection.mutable
+import scala.reflect.ClassTag
 
 import org.apache.spark.{HashPartitioner, Partitioner}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.classic.GraftShim
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Ascending, BoundReference, GenericInternalRow, InterpretedOrdering, JoinedRow, SortOrder, UnsafeProjection, UnsafeRow}
-import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, SQLOrderingUtil}
 import org.apache.spark.sql.functions.{col, struct}
 import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, StructField, StructType}
 
 import graft.functions.VectorOps
-import graft.plans.DistanceExpressions
+import graft.plans.{DistanceExpressions, Metric}
 
 /**
- * The posting-list block scan behind [[Ivf.knnJoin]]. Index rows and
- * query rows travel as Spark's binary rows ([[UnsafeRow]]); a block holds
- * at most [[BlockRows]] rows of one list with their vectors unpacked once
- * into primitive float arrays, and its covering radius. Both passes and
- * the per-query merge are one Spark job of shuffle stages, with no query
- * plan to re-plan between them.
+ * The posting-list block scan behind [[Ivf.knnJoin]], [[Ivf.join]] and
+ * [[Ivf.radii]]. Index rows and probing rows travel as Spark's binary rows
+ * ([[UnsafeRow]]); a block holds at most [[BlockRows]] rows of one list
+ * with their vectors unpacked once into primitive float arrays. One scan
+ * co-groups each partition's blocks with the rows that probe their lists
+ * and runs a per-(block, row) step: the k-nearest step for `knnJoin`, the
+ * within-threshold step for `join`. Each call is one Spark job of shuffle
+ * stages, with no query plan to re-plan between them.
  */
 private[graft] object IvfBlockJoin {
 
@@ -44,19 +48,23 @@ private[graft] object IvfBlockJoin {
     def getPartition(key: Any): Int = key.asInstanceOf[Int]
   }
 
-  /** One query: its id, its row (every query column) and its vector. */
+  /** One probing row: its id (knnJoin's query id), its row (every
+    * column) and its vector. */
   final case class Query(id: Any, row: UnsafeRow, vec: Array[Float])
 
   /** A candidate train row at `distance` from its query. */
   final case class Cand(distance: Double, row: UnsafeRow)
 
   private final case class Block(list: Int, rows: Array[UnsafeRow], vecs: Array[Array[Float]],
-                                 radius: Double)
+                                 centroid: Array[Float]) {
+    /** The block's covering radius, max over its rows of d(row, centroid). */
+    lazy val radius: Double = vecs.iterator.map(VectorOps.l2(_, centroid)).max
+  }
 
   /** A vector read out of `a` into a primitive array, null elements and
     * a null vector rejected. */
   private def vector(a: ArrayData, nulls: Boolean): Array[Float] = {
-    if (a == null) throw new IllegalArgumentException("knnJoin: null vector")
+    if (a == null) throw new IllegalArgumentException("null index vector")
     DistanceExpressions.floats(a, nulls)
   }
 
@@ -67,8 +75,8 @@ private[graft] object IvfBlockJoin {
     rows.foreach { case (c, r) => lists.getOrElseUpdate(c, mutable.ArrayBuffer()) += r }
     lists.iterator.flatMap { case (c, rs) =>
       rs.grouped(BlockRows).map { chunk =>
-        val vecs = chunk.map(r => vector(r.getArray(vecOrd), nulls)).toArray
-        Block(c, chunk.toArray, vecs, vecs.iterator.map(VectorOps.l2(_, centroids(c))).max)
+        Block(c, chunk.toArray, chunk.map(r => vector(r.getArray(vecOrd), nulls)).toArray,
+          centroids(c))
       }
     }
   }
@@ -100,20 +108,26 @@ private[graft] object IvfBlockJoin {
     out.toArray
   }
 
-  /** Co-groups each partition's blocks with the queries paired with
-    * their lists, one scan per (block, query); yields (query id,
-    * candidates). */
-  private def scanAll(index: RDD[(Int, UnsafeRow)], pairs: RDD[(Int, Query)], k: Int,
-                      vecOrd: Int, nulls: Boolean,
-                      centroids: Array[Array[Float]]): RDD[(Any, Array[Cand])] =
+  /** The k-nearest step: per (block, query), the query's id and
+    * [[scan]]'s candidates, with one heap and one distance buffer per
+    * task. */
+  private def nearest(k: Int): () => (Block, Query) => Iterator[(Any, Array[Cand])] = () => {
+    val heap = new Hnsw.Heap(nearestFirst = false)
+    val d = new Array[Double](BlockRows)
+    (b, q) => Iterator.single((q.id, scan(b, q.vec, k, d, heap)))
+  }
+
+  /** Co-groups each partition's blocks with the rows paired with their
+    * lists and runs `step` once per (block, row); `step` is made once per
+    * task, so it can hold the task's buffers. */
+  private def scanAll[Q: ClassTag, T: ClassTag](index: RDD[(Int, UnsafeRow)],
+      pairs: RDD[(Int, Q)], vecOrd: Int, nulls: Boolean, centroids: Array[Array[Float]])(
+      step: () => (Block, Q) => Iterator[T]): RDD[T] =
     index.zipPartitions(pairs) { (rows, qs) =>
       val byList = qs.toArray.groupBy(_._1)
-      val heap = new Hnsw.Heap(nearestFirst = false)
-      var d = new Array[Double](BlockRows)
+      val run = step()
       blocks(rows, vecOrd, nulls, centroids).flatMap { b =>
-        if (d.length < b.rows.length) d = new Array[Double](b.rows.length)
-        byList.getOrElse(b.list, Array.empty[(Int, Query)]).iterator
-          .map { case (_, q) => (q.id, scan(b, q.vec, k, d, heap)) }
+        byList.getOrElse(b.list, Array.empty[(Int, Q)]).iterator.flatMap { case (_, q) => run(b, q) }
       }
     }
 
@@ -126,16 +140,16 @@ private[graft] object IvfBlockJoin {
       cs.filter(c => java.lang.Double.compare(c.distance, kth) <= 0)
     }
 
-  /** The index's rows by list: (list, row of `t_`-prefixed train
+  /** The index's rows by list: (list, row of the `prefix`ed index
     * columns), the row type, the vector's ordinal in it and whether the
     * vector type admits null elements. */
   private final case class Index(rows: RDD[(Int, UnsafeRow)], rowType: StructType,
                                  vecOrd: Int, nulls: Boolean)
 
-  private def indexOf(model: Ivf.IvfModel, byList: ListPartitioner): Index = {
+  private def indexOf(model: Ivf.IvfModel, prefix: String, byList: ListPartitioner): Index = {
     val train = model.assigned.columns.filter(_ != "cluster_id")
     val tRows = model.assigned.select(col("cluster_id"),
-      struct(train.map(c => col(c).as(s"t_$c")).toSeq: _*).as("t"))
+      struct(train.map(c => col(c).as(s"$prefix$c")).toSeq: _*).as("t"))
     val tType = tRows.schema("t").dataType.asInstanceOf[StructType]
     val width = tType.length
     val vecOrd = train.indexOf(model.vecCol)
@@ -149,7 +163,7 @@ private[graft] object IvfBlockJoin {
     * with no rows. */
   def radii(model: Ivf.IvfModel): Array[Double] = {
     val parts = model.assigned.sparkSession.sparkContext.defaultParallelism
-    val Index(index, _, vecOrd, nulls) = indexOf(model, new ListPartitioner(parts))
+    val Index(index, _, vecOrd, nulls) = indexOf(model, "t_", new ListPartitioner(parts))
     val centroids = model.centroids
     val out = new Array[Double](centroids.length)
     index.mapPartitions(rows => blocks(rows, vecOrd, nulls, centroids).map(b => (b.list, b.radius)))
@@ -167,31 +181,20 @@ private[graft] object IvfBlockJoin {
     val centroids = model.centroids
     val probes = math.min(math.max(1, initProbes), centroids.length)
 
-    val Index(index, tType, vecOrd, tNulls) = indexOf(model, byList)
+    val Index(index, tType, vecOrd, tNulls) = indexOf(model, "t_", byList)
 
-    val qRows = queries.select(struct(queries.columns.map(col).toSeq: _*).as("q"))
-    val qType = qRows.schema("q").dataType.asInstanceOf[StructType]
-    val qWidth = qType.length
-    val (qIdOrd, qVecOrd) = (qType.fieldIndex(qIdCol), qType.fieldIndex(qVecCol))
-    val qIdType = qType(qIdOrd).dataType
-    val qNulls = qType(qVecOrd).dataType.asInstanceOf[ArrayType].containsNull
+    val (qs, qType) = queriesOf(queries, qVecCol, Some(qIdCol), "knnJoin")
     val outSchema = StructType(qType.fields ++ tType.fields ++ Seq(
       StructField("distance", DoubleType, nullable = true),
       StructField("rank", IntegerType, nullable = false)))
     if (k <= 0)
-      return org.apache.spark.sql.classic.GraftShim.dataFrame(spark,
-        spark.sparkContext.emptyRDD[InternalRow], outSchema)
-    val qs = qRows.queryExecution.toRdd.map { r =>
-      val row = r.getStruct(0, qWidth).copy().asInstanceOf[UnsafeRow]
-      if (row.isNullAt(qVecOrd)) throw new IllegalArgumentException("knnJoin: null query vector")
-      Query(row.get(qIdOrd, qIdType), row, vector(row.getArray(qVecOrd), qNulls))
-    }
+      return GraftShim.dataFrame(spark, spark.sparkContext.emptyRDD[InternalRow], outSchema)
 
     // pass 1: the nearest `probes` lists of each query
     val first = scanAll(index,
       qs.flatMap(q => Ivf.probeOrder(Ivf.centroidDistances(q.vec, centroids)).take(probes)
         .map(c => (c, q))).partitionBy(byList),
-      k, vecOrd, tNulls, centroids)
+      vecOrd, tNulls, centroids)(nearest(k))
 
     // every query with its pass-1 candidates, pruned to the k-th distance
     val perQuery: RDD[(Any, (Query, Array[Cand]))] =
@@ -220,7 +223,7 @@ private[graft] object IvfBlockJoin {
             .filter(c => radius.get(c).exists(r => d(c) - r <= bound)).map(c => (c, q))
         }
       }.partitionBy(byList),
-      k, vecOrd, tNulls, centroids)
+      vecOrd, tNulls, centroids)(nearest(k))
 
     // merge per query; rank by (distance, tieBreak…) ascending, nulls first
     val tieOrds = tieBreak.map(c => tType.fieldIndex(s"t_$c"))
@@ -243,6 +246,54 @@ private[graft] object IvfBlockJoin {
         }
       }
     }
-    org.apache.spark.sql.classic.GraftShim.dataFrame(spark, ranked, outSchema)
+    GraftShim.dataFrame(spark, ranked, outSchema)
+  }
+
+  /** See [[Ivf.join]]. */
+  def join(model: Ivf.IvfModel, other: DataFrame, otherVecCol: String, metric: Metric,
+           threshold: Double, nprobe: Int): DataFrame = {
+    val byList = new ListPartitioner(other.sparkSession.sparkContext.defaultParallelism)
+    val centroids = model.centroids
+    // a null index vector never pairs
+    val Index(index, lType, vecOrd, lNulls) = indexOf(
+      model.copy(assigned = model.assigned.filter(col(model.vecCol).isNotNull)), "l_", byList)
+    val (rs, rType) = queriesOf(other, otherVecCol, None, "Ivf.join")
+    val outSchema = StructType((model.assigned.schema("cluster_id") +: lType.fields) ++
+      rType.fields.map(f => f.copy(name = s"r_${f.name}")) :+
+      StructField("distance", DoubleType, nullable = true))
+    val kernel = metric.arrayKernel
+    // each pair within the threshold, compared as Spark SQL compares
+    // doubles (NaN above everything)
+    val pairs = scanAll(index,
+      rs.flatMap(r => Ivf.probeOrder(Ivf.centroidDistances(r.vec, centroids))
+        .take(math.max(1, nprobe)).map(c => (c, r))).partitionBy(byList),
+      vecOrd, lNulls, centroids) { () =>
+      val project = UnsafeProjection.create(outSchema)
+      (b, r) => b.rows.indices.iterator.flatMap { j =>
+        val d = kernel(b.vecs(j), r.vec)
+        if (SQLOrderingUtil.compareDoubles(d, threshold) > 0) None
+        else Some(project(new JoinedRow(new JoinedRow(InternalRow(b.list), b.rows(j)),
+          new JoinedRow(r.row, InternalRow(d)))).copy(): InternalRow)
+      }
+    }
+    GraftShim.dataFrame(other.sparkSession, pairs, outSchema)
+  }
+
+  /** `df`'s rows as [[Query]]s, every column in one binary row with the
+    * vector read out and the `idCol` value carried (null without one),
+    * and the row type. A null vector fails the query. */
+  private def queriesOf(df: DataFrame, vecCol: String, idCol: Option[String],
+                        what: String): (RDD[Query], StructType) = {
+    val rows = df.select(struct(df.columns.map(col).toSeq: _*).as("q"))
+    val rowType = rows.schema("q").dataType.asInstanceOf[StructType]
+    val width = rowType.length
+    val vecOrd = rowType.fieldIndex(vecCol)
+    val nulls = rowType(vecOrd).dataType.asInstanceOf[ArrayType].containsNull
+    val id = idCol.map(c => (rowType.fieldIndex(c), rowType(c).dataType))
+    (rows.queryExecution.toRdd.map { r =>
+      val row = r.getStruct(0, width).copy().asInstanceOf[UnsafeRow]
+      if (row.isNullAt(vecOrd)) throw new IllegalArgumentException(s"$what: null query vector")
+      Query(id.map { case (o, t) => row.get(o, t) }.orNull, row, vector(row.getArray(vecOrd), nulls))
+    }, rowType)
   }
 }

@@ -12,10 +12,11 @@ import graft.functions.VectorOps
  * Train: split dims into `m` subspaces, k-means each subspace on a
  * driver-side sample (the reference pulls all vectors into backend memory
  * via SPI — SURVEY §3.3; we cap the sample instead). Encode: per-subspace
- * argmin codeword — distributed, broadcast codebooks. Search: asymmetric
- * distance (ADC) — per-subspace lookup table of query-to-codeword
- * distances, summed over code bytes; the table is tiny (m × k doubles)
- * and broadcast, so scoring is a scan with no shuffle.
+ * argmin codeword — distributed, the codebook in the task closure. Search:
+ * asymmetric distance (ADC) — per-subspace lookup table of
+ * query-to-codeword distances, summed over code bytes; the table is tiny
+ * (m × k doubles) and rides in the task closure, so scoring is a scan
+ * with no shuffle.
  */
 object Pq {
 
@@ -23,48 +24,43 @@ object Pq {
 
     def encode(v: Array[Float]): Array[Byte] = {
       require(v.length == m * subDim, s"vector dim ${v.length} != ${m * subDim}")
-      val out = new Array[Byte](m)
-      var s = 0
-      while (s < m) {
+      Array.tabulate(m) { s =>
         val cb = codebooks(s)
         var best = 0; var bestD = Double.MaxValue; var c = 0
         while (c < cb.length) {
-          var d = 0.0; var j = 0
-          while (j < subDim) {
-            val diff = v(s * subDim + j).toDouble - cb(c)(j).toDouble
-            d += diff * diff
-            j += 1
-          }
+          val d = subDistance(v, s, cb(c))
           if (d < bestD) { bestD = d; best = c }
           c += 1
         }
-        out(s) = best.toByte
-        s += 1
+        best.toByte
       }
-      out
     }
 
     /** Squared-L2 lookup table for a query: table(s)(c) = ||q_s - cb_s,c||². */
-    def adcTable(query: Array[Float]): Array[Array[Double]] = {
-      Array.tabulate(m) { s =>
-        codebooks(s).map { cw =>
-          var d = 0.0; var j = 0
-          while (j < subDim) {
-            val diff = query(s * subDim + j).toDouble - cw(j).toDouble
-            d += diff * diff
-            j += 1
-          }
-          d
-        }
-      }
-    }
+    def adcTable(query: Array[Float]): Array[Array[Double]] =
+      Array.tabulate(m)(s => codebooks(s).map(subDistance(query, s, _)))
 
     /** `pq_asymmetric_distance`: sqrt of summed per-subspace table lookups. */
-    def adcDistance(table: Array[Array[Double]], codes: Array[Byte]): Double = {
-      var d = 0.0; var s = 0
-      while (s < m) { d += table(s)(codes(s) & 0xFF); s += 1 }
-      math.sqrt(d)
+    def adcDistance(table: Array[Array[Double]], codes: Array[Byte]): Double = adc(table, codes)
+
+    /** ||v_s - cw||², subspace `s` of `v` against codeword `cw`, in doubles. */
+    private def subDistance(v: Array[Float], s: Int, cw: Array[Float]): Double = {
+      var d = 0.0; var j = 0
+      while (j < subDim) {
+        val diff = v(s * subDim + j).toDouble - cw(j).toDouble
+        d += diff * diff
+        j += 1
+      }
+      d
     }
+  }
+
+  /** [[PqCodebook.adcDistance]] from the table alone, so a scoring task
+    * needs no codebook. */
+  private def adc(table: Array[Array[Double]], codes: Array[Byte]): Double = {
+    var d = 0.0; var s = 0
+    while (s < table.length) { d += table(s)(codes(s) & 0xFF); s += 1 }
+    math.sqrt(d)
   }
 
   /** `train_pq_codebook(table, col, m, k)`: per-subspace Lloyd's k-means
@@ -133,24 +129,22 @@ object Pq {
 
   /** Encode a table; codes column is BinaryType, m bytes per row. */
   def encodeTable(df: DataFrame, vecCol: String, codebook: PqCodebook): DataFrame = {
-    val bCb = df.sparkSession.sparkContext.broadcast(codebook)
     // null vector → null codes (the Knn path tolerates null embeddings;
     // a crash here would make PQ the only operator a dirty corpus kills)
-    val enc = udf((v: Seq[Float]) => if (v == null) null else bCb.value.encode(v.toArray))
+    val enc = udf((v: Seq[Float]) => if (v == null) null else codebook.encode(v.toArray))
     df.withColumn("pq_codes", enc(col(vecCol)))
   }
 
-  /** ADC top-k over an encoded table: broadcast lookup table, scan, heap.
+  /** ADC top-k over an encoded table: the query's lookup table rides in
+    * the scoring UDF's closure; scan, heap.
     * ADC distances collide whenever two rows share all code bytes, so
     * `tieBreak` columns matter for deterministic cuts. */
   def search(encoded: DataFrame, codebook: PqCodebook, query: Array[Float],
              k: Int = 10, tieBreak: Seq[String] = Nil): DataFrame = {
     val table = codebook.adcTable(query)
-    val bTable = encoded.sparkSession.sparkContext.broadcast(table)
-    val bCb = encoded.sparkSession.sparkContext.broadcast(codebook)
-    val adc = udf((codes: Array[Byte]) =>
-      if (codes == null) None else Some(bCb.value.adcDistance(bTable.value, codes)))
-    encoded.withColumn("adc_distance", adc(col("pq_codes")))
+    val score = udf((codes: Array[Byte]) =>
+      if (codes == null) None else Some(adc(table, codes)))
+    encoded.withColumn("adc_distance", score(col("pq_codes")))
       .orderBy((col("adc_distance").asc_nulls_last +: tieBreak.map(col)).toSeq: _*)
       .limit(k)
   }

@@ -38,8 +38,8 @@ import graft.operators.Ivf
  * must be unique per index path — one writer stream per index, which
  * is what a checkpoint location already enforces.
  *
- * Scale shape: ONE centroid broadcast (nlists-sized) per micro-batch,
- * a stateless map, and a write of ~|batch| rows shuffled into at most
+ * Scale shape: the nlists centroids in the routing closure, a stateless
+ * map, and a write of ~|batch| rows shuffled into at most
  * nlists partition directories; no cross-batch state (the on-disk
  * index IS the state), no touch of existing posting files — dynamic
  * overwrite deletes only partitions the batch itself carries, and no
@@ -84,17 +84,25 @@ object StreamIndexIngest {
     * batches) — `run` does. */
   def ingestBatch(centroids: Array[Array[Float]], vecCol: String,
                   batch: DataFrame, indexPath: String,
-                  batchId: Long): Unit = {
+                  batchId: Long): Unit =
+    ingest(centroids, vecCol, batch, indexPath, batchId, "assigned")(identity)
+
+  /** The one ingest path: route the batch, write its rows as `encode`
+    * makes them into the `table` of the partitioned index as the batch's
+    * own epoch, and emit its route-health row. */
+  private def ingest(centroids: Array[Array[Float]], vecCol: String, batch: DataFrame,
+                     indexPath: String, batchId: Long, table: String)(
+                     encode: DataFrame => DataFrame): Unit = {
     if (batch.isEmpty) return // an epoch with no rows writes nothing
     val routed = Ivf.routeWithDist(centroids, batch, vecCol).persist()
     try {
-      routed.drop("route_dist")
+      encode(routed.drop("route_dist"))
         .withColumn("ingest", lit(s"batch-$batchId"))
         .repartition(col("cluster_id"))
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("ingest", "cluster_id")
-        .parquet(s"$indexPath/assigned")
+        .parquet(s"$indexPath/$table")
       writeRouteHealth(routed, indexPath, batchId)
     } finally routed.unpersist()
   }
@@ -138,13 +146,17 @@ object StreamIndexIngest {
   def run(centroids: Array[Array[Float]], stream: DataFrame, vecCol: String,
           indexPath: String, checkpoint: String,
           trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
+    start(stream, checkpoint, trigger)(ingestBatch(centroids, vecCol, _, indexPath, _))
+
+  /** Starts `stream` with `ingest` as its `foreachBatch` sink, given each
+    * micro-batch and its checkpointed id. */
+  private def start(stream: DataFrame, checkpoint: String, trigger: Trigger)(
+      ingest: (DataFrame, Long) => Unit): StreamingQuery =
     stream.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        ingestBatch(centroids, vecCol, batch, indexPath, batchId)
-      }
+      .foreachBatch { (batch: DataFrame, batchId: Long) => ingest(batch, batchId) }
       .start()
 
   /** [[ingestBatch]]'s IVFADC form: route with the FIXED centroids AND
@@ -160,20 +172,9 @@ object StreamIndexIngest {
   def ingestBatchPq(centroids: Array[Array[Float]],
                     codebook: graft.operators.Pq.PqCodebook, vecCol: String,
                     batch: DataFrame, indexPath: String,
-                    batchId: Long): Unit = {
-    if (batch.isEmpty) return // an epoch with no rows writes nothing
-    val routed = Ivf.routeWithDist(centroids, batch, vecCol).persist()
-    try {
-      graft.operators.Pq.encodeTable(routed.drop("route_dist"), vecCol, codebook)
-        .withColumn("ingest", lit(s"batch-$batchId"))
-        .repartition(col("cluster_id"))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("ingest", "cluster_id")
-        .parquet(s"$indexPath/encoded")
-      writeRouteHealth(routed, indexPath, batchId)
-    } finally routed.unpersist()
-  }
+                    batchId: Long): Unit =
+    ingest(centroids, vecCol, batch, indexPath, batchId, "encoded")(
+      graft.operators.Pq.encodeTable(_, vecCol, codebook))
 
   /** Continuous IVFADC ingest ([[run]]'s code-table form). HNSW is
     * deliberately NOT given a streaming face: its insert is a
@@ -185,12 +186,5 @@ object StreamIndexIngest {
             codebook: graft.operators.Pq.PqCodebook, stream: DataFrame,
             vecCol: String, indexPath: String, checkpoint: String,
             trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        ingestBatchPq(centroids, codebook, vecCol, batch, indexPath, batchId)
-      }
-      .start()
+    start(stream, checkpoint, trigger)(ingestBatchPq(centroids, codebook, vecCol, _, indexPath, _))
 }

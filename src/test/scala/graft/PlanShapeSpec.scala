@@ -1,9 +1,7 @@
 package graft
 
-import org.apache.spark.sql.catalyst.plans.physical.{Partitioning, ShufflePartitionIdPassThrough}
 import org.apache.spark.sql.execution.SparkPlan
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AQEShuffleReadExec, QueryStageExec, ShuffleQueryStageExec}
-import org.apache.spark.sql.execution.exchange.REPARTITION_BY_NUM
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AQEShuffleReadExec, QueryStageExec}
 import org.apache.spark.sql.functions._
 
 /** Plan-shape assertions: the scale properties the engine relies on
@@ -208,25 +206,6 @@ class PlanShapeSpec extends SparkSpecBase {
     case other => other +: other.children.flatMap(nodesOf)
   }
 
-  /** Runs `df`, then returns the query stages of its by-number exchanges
-    * that `isIt` picks, after checking that no stage of the final plan
-    * reads one through an adaptive shuffle read (a coalesced or local
-    * read would change how many tasks consume it), each with the number
-    * of its partitions that hold rows. A reused exchange counts once. */
-  private def byNumberStages(df: org.apache.spark.sql.DataFrame)(
-      isIt: Partitioning => Boolean): Seq[(ShuffleQueryStageExec, Int)] = {
-    df.collect()
-    val nodes = nodesOf(df.queryExecution.executedPlan)
-    val stages = nodes.collect {
-      case s: ShuffleQueryStageExec if s.shuffle.shuffleOrigin == REPARTITION_BY_NUM &&
-        isIt(s.shuffle.outputPartitioning) => s
-    }
-    val reads = nodes.collect { case r: AQEShuffleReadExec if stages.exists(r.child eq _) => r }
-    assert(reads.isEmpty, s"adaptive execution re-read the exchange: ${reads.mkString}")
-    stages.groupBy(_.shuffle.id).values.map(_.head).toSeq
-      .map(st => (st, st.mapStats.get.bytesByPartitionId.count(_ > 0)))
-  }
-
   /** The RDD a frame over binary rows reads, and that RDD's lineage. */
   private def lineageOf(df: org.apache.spark.sql.DataFrame): Seq[org.apache.spark.rdd.RDD[_]] = {
     def lineage(r: org.apache.spark.rdd.RDD[_]): Seq[org.apache.spark.rdd.RDD[_]] =
@@ -297,23 +276,30 @@ class PlanShapeSpec extends SparkSpecBase {
     assert(busy.count(_ == p) >= 2, s"scan exchanges busy on $busy tasks, want $p")
   }
 
-  test("IVF join pair stage runs on `parallelism` tasks — both sides move by number") {
+  test("IVF join scan runs on `parallelism` tasks — blocks and other rows move by list") {
     val p = spark.sparkContext.defaultParallelism
     val emb = Tables.read(spark, dir, "embeddings").filter(col("vec_id") < 400)
     // the index's rows materialised, as a maintained index is
     val built = operators.Ivf.build(emb, "embedding", 8, 7L, 5)
     val model = built.copy(assigned = built.assigned.localCheckpoint())
     val qs = emb.filter(col("vec_id") < 64).select(col("vec_id").as("qid"), col("embedding"))
-    val stages = byNumberStages(
-      operators.Ivf.join(model, qs, "embedding", "cosine", 0.2, nprobe = 2)) {
-      case _: ShufflePartitionIdPassThrough => true
-      case _ => false
+    val out = operators.Ivf.join(model, qs, "embedding", "cosine", 0.2, nprobe = 2)
+    assert(out.collect().nonEmpty)
+    // the scan's exchanges sit in the lineage of the one RDD the frame
+    // reads, none in its plan, so adaptive execution never re-reads them
+    noPlanExchange(out)
+    assert(!planOf(out).contains("UDF"), s"a UDF in the executed plan: ${planOf(out)}")
+    // the index's blocks and the (list, row) pairs, by list
+    val byList = lineageOf(out).collect {
+      case s: org.apache.spark.rdd.ShuffledRDD[_, _, _]
+        if s.partitioner.exists(_.isInstanceOf[operators.IvfBlockJoin.ListPartitioner]) => s
     }
-    assert(stages.size == 2, s"want the index and query sides by number, got ${stages.size}")
-    stages.foreach { case (st, busy) =>
-      assert(st.shuffle.numPartitions == p, s"pair exchange has ${st.shuffle.numPartitions} partitions")
-      assert(busy == p, s"pair stage ran on $busy non-empty tasks, want $p")
-    }
+    assert(byList.size == 2, s"want the blocks and the probing rows by list, got ${byList.size}")
+    byList.foreach(s =>
+      assert(s.getNumPartitions == p, s"scan exchange has ${s.getNumPartitions} partitions"))
+    // 8 lists on partitions c mod P: both exchanges fill every task
+    val busy = byList.map(_.mapPartitions(it => Iterator(it.hasNext)).collect().count(identity))
+    assert(busy.forall(_ == p), s"scan exchanges busy on $busy tasks, want $p")
   }
 
   test("q1_agg_typed keeps double sums in whole-stage codegen — no decimal anywhere") {

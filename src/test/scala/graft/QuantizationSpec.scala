@@ -140,6 +140,30 @@ class QuantizationSpec extends AnyFunSuite {
     intercept[IllegalArgumentException](Pq.codebookFrom(Array(Array(1f, 2f, 3f)), m = 2))
   }
 
+  test("PQ: encode codes and ADC table bits are pinned") {
+    // 256 codewords per subspace, the first 16 on an integer grid and
+    // repeated (exact ties), the rest random; queries hit grid points,
+    // random points, NaN and ±Inf
+    val rnd = new scala.util.Random(21)
+    val (m, subDim) = (4, 3)
+    val books = Array.tabulate(m) { _ =>
+      val grid = Array.fill(16)(Array.fill(subDim)((rnd.nextInt(5) - 2).toFloat))
+      grid ++ grid.map(_.clone()) ++ Array.fill(224)(Array.fill(subDim)(rnd.nextGaussian().toFloat * 2f))
+    }
+    val cb = Pq.PqCodebook(m, subDim, books)
+    val queries = Array.fill(40)(Array.fill(m * subDim)((rnd.nextInt(5) - 2).toFloat)) ++
+      Array.fill(40)(Array.fill(m * subDim)(rnd.nextGaussian().toFloat * 2f)) ++
+      Seq(Array.fill(m * subDim)(Float.NaN), Array.tabulate(m * subDim)(i =>
+        if (i % 2 == 0) Float.PositiveInfinity else Float.NegativeInfinity))
+    val lines = queries.map { q =>
+      cb.encode(q).map(_ & 0xff).mkString(",") + " " + cb.adcTable(q).map(_.map(d =>
+        java.lang.Long.toHexString(java.lang.Double.doubleToRawLongBits(d))).mkString(",")).mkString(";")
+    }
+    val sha = java.security.MessageDigest.getInstance("SHA-256")
+      .digest(lines.mkString("\n").getBytes("UTF-8")).map(b => f"${b & 0xff}%02x").mkString
+    assert(sha == "c2ad6219b2ee54ca145a49d4325d8a89d31136d25e6a72af07441cbcd87b92ec", s"PQ codes and tables changed: sha $sha")
+  }
+
   test("PQ rejects codebooks that cannot fit a byte code") {
     intercept[IllegalArgumentException](
       Pq.codebookFrom(Array.fill(257)(Array(1f, 2f)), m = 1))

@@ -1,8 +1,10 @@
 #!/usr/bin/env python3
 """Local stand-in for the driver's t2 gate: run each oracle_sql.json entry
 in DuckDB over the sf parquet tables and compare with the Spark parquet
-dumps (column names sorted, floats rounded to 6 decimals, row multiset)."""
-import sys, os, json, math
+dumps (column names sorted, floats rounded to 6 decimals, row multiset).
+The oracles run on min(4, available cores) worker processes; the output
+lists them by name as before."""
+import sys, os, json, math, multiprocessing
 import duckdb
 
 TABLES = ["region", "nation", "customer", "supplier", "part",
@@ -40,53 +42,73 @@ def norm_rows(cols, rows):
                  key=repr)  # repr-key: NULLs (None) sort deterministically
     return [cols[i] for i in order], out
 
-def main(sf_dir, out_dir):
-    con = duckdb.connect()
+_con = None
+
+def _connect(sf_dir):
+    # one DuckDB connection per worker process, over the sf tables
+    global _con
+    _con = duckdb.connect()
+    # a worker would print DuckDB's progress bar into the output
+    _con.execute("SET enable_progress_bar = false")
     for t in TABLES:
         p = f"{sf_dir}/{t}.parquet"
         if os.path.exists(p):
-            con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
+            _con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
+
+def check_one(item):
+    """(matched, the line to print) for one oracle entry."""
+    name, sql, out_dir = item
+    con = _con
+    spark_path = f"{out_dir}/{name}"
+    if not os.path.isdir(spark_path):
+        return False, f"FAIL {name}: no spark output"
+    try:
+        rel = con.sql(sql)
+        # Type-strict: the driver's comparator type-tags the ORACLE's
+        # declared column types, and a DuckDB HUGEINT (e.g. an un-CAST
+        # sum(BIGINT)) hash-diverges from Spark's int64 even when every
+        # value is equal — Python folds int128 to int, so value compare
+        # alone can't see it (the r9 image_phash/semantic_shards/
+        # stream_neardup red rows). Fail here the way the driver does.
+        bad_t = [(c, str(t)) for c, t in zip(rel.columns, rel.types)
+                 if str(t).upper() in ("HUGEINT", "UHUGEINT", "UBIGINT")]
+        if bad_t:
+            return False, (f"FAIL {name}: oracle column type not representable "
+                           f"in Spark int64 (CAST it): {bad_t}")
+        o_cols = list(rel.columns)
+        o_rows = rel.fetchall()
+    except Exception as e:
+        return False, f"FAIL {name}: oracle error: {e}"
+    try:
+        cur = con.execute(f"SELECT * FROM read_parquet('{spark_path}/*.parquet')")
+        s_cols = [d[0] for d in cur.description]
+        s_rows = cur.fetchall()
+    except Exception as e:
+        return False, f"FAIL {name}: spark read error: {e}"
+    oc, orows = norm_rows(o_cols, o_rows)
+    sc, srows = norm_rows(s_cols, s_rows)
+    if oc != sc:
+        return False, f"FAIL {name}: columns differ oracle={oc} spark={sc}"
+    if len(orows) != len(srows):
+        return False, f"FAIL {name}: rowcount oracle={len(orows)} spark={len(srows)}"
+    if orows != srows:
+        bad = [(a, b) for a, b in zip(orows, srows) if a != b][:3]
+        return False, f"FAIL {name}: value mismatch (cols {oc}), first diffs: {bad}"
+    return True, f"OK   {name} ({len(srows)} rows)"
+
+def main(sf_dir, out_dir):
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
+    items = [(name, sql, out_dir) for name, sql in sorted(oracle.items())]
+    # the oracles run on a pool of worker processes; imap hands the
+    # results back in name order, so the printed lines are the same as
+    # one process would print
+    workers = min(4, len(os.sched_getaffinity(0)))
     n_ok = 0
-    for name, sql in sorted(oracle.items()):
-        spark_path = f"{out_dir}/{name}"
-        if not os.path.isdir(spark_path):
-            print(f"FAIL {name}: no spark output"); continue
-        try:
-            rel = con.sql(sql)
-            # Type-strict: the driver's comparator type-tags the ORACLE's
-            # declared column types, and a DuckDB HUGEINT (e.g. an un-CAST
-            # sum(BIGINT)) hash-diverges from Spark's int64 even when every
-            # value is equal — Python folds int128 to int, so value compare
-            # alone can't see it (the r9 image_phash/semantic_shards/
-            # stream_neardup red rows). Fail here the way the driver does.
-            bad_t = [(c, str(t)) for c, t in zip(rel.columns, rel.types)
-                     if str(t).upper() in ("HUGEINT", "UHUGEINT", "UBIGINT")]
-            if bad_t:
-                print(f"FAIL {name}: oracle column type not representable "
-                      f"in Spark int64 (CAST it): {bad_t}")
-                continue
-            o_cols = list(rel.columns)
-            o_rows = rel.fetchall()
-        except Exception as e:
-            print(f"FAIL {name}: oracle error: {e}"); continue
-        try:
-            cur = con.execute(f"SELECT * FROM read_parquet('{spark_path}/*.parquet')")
-            s_cols = [d[0] for d in cur.description]
-            s_rows = cur.fetchall()
-        except Exception as e:
-            print(f"FAIL {name}: spark read error: {e}"); continue
-        oc, orows = norm_rows(o_cols, o_rows)
-        sc, srows = norm_rows(s_cols, s_rows)
-        if oc != sc:
-            print(f"FAIL {name}: columns differ oracle={oc} spark={sc}"); continue
-        if len(orows) != len(srows):
-            print(f"FAIL {name}: rowcount oracle={len(orows)} spark={len(srows)}"); continue
-        if orows != srows:
-            bad = [(a, b) for a, b in zip(orows, srows) if a != b][:3]
-            print(f"FAIL {name}: value mismatch (cols {oc}), first diffs: {bad}"); continue
-        n_ok += 1
-        print(f"OK   {name} ({len(srows)} rows)")
+    with multiprocessing.get_context("spawn").Pool(
+            workers, initializer=_connect, initargs=(sf_dir,)) as pool:
+        for ok, line in pool.imap(check_one, items):
+            print(line, flush=True)
+            n_ok += ok
     print(f"== {n_ok}/{len(oracle)} matched ==")
     return 0 if n_ok == len(oracle) else 1
 

@@ -327,9 +327,11 @@ object Ivf {
    * [[knnJoin]] uses, with no UDF; each row is routed in its task. Output:
    * `cluster_id`, the `l_`-prefixed index columns, the `r_`-prefixed
    * `other` columns and `distance`. `pairFilter`, a predicate over those
-   * columns, filters the pairs. A null index vector never pairs; a null `other` vector, a null
-   * element and a dimension mismatch fail the query; an unknown metric
-   * fails the call.
+   * columns, filters the pairs. A vector column of another numeric type
+   * than float is cast to float, as SQL's distance functions cast it. A
+   * null index vector never pairs; a null `other` vector, a null element
+   * and a dimension mismatch fail the query; an unknown metric and a
+   * non-numeric vector column fail the call.
    */
   def join(model: IvfModel, other: DataFrame, otherVecCol: String,
            metric: String = "l2", threshold: Double, nprobe: Int = 1,
@@ -340,8 +342,8 @@ object Ivf {
   }
 
   /** Per-list covering radius, max over members of d(member, centroid):
-    * the bound that makes [[knnJoin]] exact. Read from the posting-list
-    * blocks [[knnJoin]] scans, so the radius has one definition (nlists
+    * the bound that makes [[knnJoin]] exact. Read from the posting lists
+    * as [[knnJoin]] reads them, so the radius has one definition (nlists
     * values to the driver); a list with no rows reads 0. */
   def radii(model: IvfModel): Array[Double] = IvfBlockJoin.radii(model)
 
@@ -352,13 +354,12 @@ object Ivf {
    *
    * The index's rows move by list to `defaultParallelism` partitions (list
    * c on partition c mod P, a fixed count) as Spark binary rows, and each
-   * partition cuts its lists into blocks of at most 1024 rows, unpacking a
-   * block's vectors once into primitive arrays and taking its covering
-   * radius. Each pass co-groups the blocks with the queries that probe
-   * their lists: one scan per (block, query) runs the L2 kernel over the
-   * block into a bounded primitive heap and keeps the block's k nearest
-   * rows plus any row tied with the k-th. No row is built per (query,
-   * train row), and a block is never copied per query.
+   * pass co-groups the lists with the queries that probe them, cutting a
+   * list into blocks of at most 1024 rows and unpacking a block's vectors
+   * once into primitive arrays: one scan per (block, query) runs the L2
+   * kernel over the block into a bounded primitive heap and keeps the
+   * block's k nearest rows plus any row tied with the k-th. No row is
+   * built per (query, train row), and a block is never copied per query.
    *
    *  1. Pass 1 scans the `initProbes` nearest lists of each query; the
    *     k-th distance over their candidates is D_k, an upper bound on the
@@ -381,7 +382,8 @@ object Ivf {
    *
    * Output: query columns + `t_`-prefixed train columns + `distance` +
    * `rank` (1..k, ordered by distance then `tieBreak` train columns).
-   * Query ids must be unique. A null query vector fails the query, as
+   * Query ids must be unique. A vector column of another numeric type
+   * than float is cast to float. A null query vector fails the query, as
    * does a dimension mismatch.
    */
   def knnJoin(model: IvfModel, queries: DataFrame, qVecCol: String, qIdCol: String,

@@ -8,10 +8,10 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.classic.GraftShim
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Ascending, BoundReference, GenericInternalRow, InterpretedOrdering, JoinedRow, SortOrder, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.expressions.{Ascending, BoundReference, Cast, GenericInternalRow, InterpretedOrdering, JoinedRow, SortOrder, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.util.{ArrayData, SQLOrderingUtil}
 import org.apache.spark.sql.functions.{col, struct}
-import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, IntegerType, NumericType, StructField, StructType}
 
 import graft.functions.VectorOps
 import graft.plans.{DistanceExpressions, Metric}
@@ -19,12 +19,13 @@ import graft.plans.{DistanceExpressions, Metric}
 /**
  * The posting-list block scan behind [[Ivf.knnJoin]], [[Ivf.join]] and
  * [[Ivf.radii]]. Index rows and probing rows travel as Spark's binary rows
- * ([[UnsafeRow]]); a block holds at most [[BlockRows]] rows of one list
- * with their vectors unpacked once into primitive float arrays. One scan
- * co-groups each partition's blocks with the rows that probe their lists
- * and runs a per-(block, row) step: the k-nearest step for `knnJoin`, the
- * within-threshold step for `join`. Each call is one Spark job of shuffle
- * stages, with no query plan to re-plan between them.
+ * ([[UnsafeRow]]) to the partition of their list, where Spark's spillable
+ * co-group meets each list with the rows that probe it; a block holds at
+ * most [[BlockRows]] rows of one list with their vectors unpacked once
+ * into primitive float arrays. The scan runs a per-(block, row) step: the
+ * k-nearest step for `knnJoin`, the within-threshold step for `join`.
+ * Each call is one Spark job of shuffle stages, with no query plan to
+ * re-plan between them.
  */
 private[graft] object IvfBlockJoin {
 
@@ -48,36 +49,33 @@ private[graft] object IvfBlockJoin {
     def getPartition(key: Any): Int = key.asInstanceOf[Int]
   }
 
-  /** One probing row: its id (knnJoin's query id), its row (every
-    * column) and its vector. */
-  final case class Query(id: Any, row: UnsafeRow, vec: Array[Float])
+  /** One probing row: its id (knnJoin's query id, null for join) and
+    * its row, every column, the vector among them. */
+  final case class Query(id: Any, row: UnsafeRow)
 
   /** A candidate train row at `distance` from its query. */
   final case class Cand(distance: Double, row: UnsafeRow)
 
-  private final case class Block(list: Int, rows: Array[UnsafeRow], vecs: Array[Array[Float]],
-                                 centroid: Array[Float]) {
-    /** The block's covering radius, max over its rows of d(row, centroid). */
-    lazy val radius: Double = vecs.iterator.map(VectorOps.l2(_, centroid)).max
-  }
+  private final case class Block(list: Int, rows: Array[UnsafeRow], vecs: Array[Array[Float]])
 
-  /** A vector read out of `a` into a primitive array, null elements and
-    * a null vector rejected. */
-  private def vector(a: ArrayData, nulls: Boolean): Array[Float] = {
-    if (a == null) throw new IllegalArgumentException("null index vector")
-    DistanceExpressions.floats(a, nulls)
-  }
-
-  /** The blocks of one partition's index rows, (list, row) pairs. */
-  private def blocks(rows: Iterator[(Int, UnsafeRow)], vecOrd: Int, nulls: Boolean,
-                     centroids: Array[Array[Float]]): Iterator[Block] = {
-    val lists = mutable.LinkedHashMap[Int, mutable.ArrayBuffer[UnsafeRow]]()
-    rows.foreach { case (c, r) => lists.getOrElseUpdate(c, mutable.ArrayBuffer()) += r }
-    lists.iterator.flatMap { case (c, rs) =>
-      rs.grouped(BlockRows).map { chunk =>
-        Block(c, chunk.toArray, chunk.map(r => vector(r.getArray(vecOrd), nulls)).toArray,
-          centroids(c))
-      }
+  /** The reader of the vector at ordinal `ord` of a row of a `side`
+    * input, into a primitive float array: an array<float> as is, another
+    * numeric array through Spark's cast to float, the cast SQL's distance
+    * functions apply to it. A null vector and a null element fail; any
+    * other column type fails here, when the join is built. */
+  private def reader(t: DataType, ord: Int, side: String): InternalRow => Array[Float] = {
+    val floats: InternalRow => ArrayData = t match {
+      case ArrayType(FloatType, _) => _.getArray(ord)
+      case ArrayType(_: NumericType, nulls) =>
+        val cast = Cast(BoundReference(ord, t, nullable = false), ArrayType(FloatType, nulls))
+        cast.eval(_).asInstanceOf[ArrayData]
+      case _ => throw new IllegalArgumentException(
+        s"the $side vector column must be a numeric array, got ${t.catalogString}")
+    }
+    val nulls = t.asInstanceOf[ArrayType].containsNull
+    r => {
+      if (r.isNullAt(ord)) throw new IllegalArgumentException(s"null $side vector")
+      DistanceExpressions.floats(floats(r), nulls)
     }
   }
 
@@ -111,25 +109,48 @@ private[graft] object IvfBlockJoin {
   /** The k-nearest step: per (block, query), the query's id and
     * [[scan]]'s candidates, with one heap and one distance buffer per
     * task. */
-  private def nearest(k: Int): () => (Block, Query) => Iterator[(Any, Array[Cand])] = () => {
-    val heap = new Hnsw.Heap(nearestFirst = false)
-    val d = new Array[Double](BlockRows)
-    (b, q) => Iterator.single((q.id, scan(b, q.vec, k, d, heap)))
-  }
+  private def nearest(k: Int): () => (Block, Query, Array[Float]) => Iterator[(Any, Array[Cand])] =
+    () => {
+      val heap = new Hnsw.Heap(nearestFirst = false)
+      val d = new Array[Double](BlockRows)
+      (b, q, v) => Iterator.single((q.id, scan(b, v, k, d, heap)))
+    }
 
-  /** Co-groups each partition's blocks with the rows paired with their
-    * lists and runs `step` once per (block, row); `step` is made once per
-    * task, so it can hold the task's buffers. */
-  private def scanAll[Q: ClassTag, T: ClassTag](index: RDD[(Int, UnsafeRow)],
-      pairs: RDD[(Int, Q)], vecOrd: Int, nulls: Boolean, centroids: Array[Array[Float]])(
-      step: () => (Block, Q) => Iterator[T]): RDD[T] =
-    index.zipPartitions(pairs) { (rows, qs) =>
-      val byList = qs.toArray.groupBy(_._1)
+  /** Each row keyed by its `n` nearest lists, moved to their scan
+    * partitions. */
+  private def route(qs: RDD[Query], read: InternalRow => Array[Float],
+                    centroids: Array[Array[Float]], n: Int, byList: ListPartitioner): RDD[(Int, Query)] =
+    qs.flatMap(q => Ivf.probeOrder(Ivf.centroidDistances(read(q.row), centroids)).take(n)
+      .map(c => (c, q))).partitionBy(byList)
+
+  /** Co-groups each partition's lists with the rows that probe them, in
+    * Spark's spillable map, and runs `step` once per (block, probing row,
+    * its vector); a block holds at most [[BlockRows]] rows of one list,
+    * their vectors read out once, and a list no row probes is never read
+    * out. `step` is made once per task, so it can hold the task's
+    * buffers. */
+  private def scanAll[T: ClassTag](index: Index, probing: RDD[(Int, Query)],
+      read: InternalRow => Array[Float])(
+      step: () => (Block, Query, Array[Float]) => Iterator[T]): RDD[T] = {
+    val readIndex = index.read
+    index.rows.cogroup(probing).mapPartitions { lists =>
       val run = step()
-      blocks(rows, vecOrd, nulls, centroids).flatMap { b =>
-        byList.getOrElse(b.list, Array.empty[(Int, Q)]).iterator.flatMap { case (_, q) => run(b, q) }
+      lists.flatMap { case (c, (members, qs)) =>
+        val ps = qs.iterator.map(q => (q, read(q.row))).toArray
+        if (ps.isEmpty) Iterator.empty
+        else members.grouped(BlockRows).map(m => Block(c, m.toArray, m.map(readIndex).toArray))
+          .flatMap(b => ps.iterator.flatMap { case (q, v) => run(b, q, v) })
       }
     }
+  }
+
+  /** Each list's covering radius, max over its rows of d(row, centroid). */
+  private def listRadii(index: Index, centroids: Array[Array[Float]]): RDD[(Int, Double)] = {
+    val read = index.read
+    index.rows.groupByKey().map { case (c, members) =>
+      (c, members.iterator.map(r => VectorOps.l2(read(r), centroids(c))).max)
+    }
+  }
 
   /** Candidates within the k-th smallest distance among them (all of
     * them when there are k or fewer). */
@@ -141,10 +162,9 @@ private[graft] object IvfBlockJoin {
     }
 
   /** The index's rows by list: (list, row of the `prefix`ed index
-    * columns), the row type, the vector's ordinal in it and whether the
-    * vector type admits null elements. */
+    * columns), the row type and the reader of the row's vector. */
   private final case class Index(rows: RDD[(Int, UnsafeRow)], rowType: StructType,
-                                 vecOrd: Int, nulls: Boolean)
+                                 read: InternalRow => Array[Float])
 
   private def indexOf(model: Ivf.IvfModel, prefix: String, byList: ListPartitioner): Index = {
     val train = model.assigned.columns.filter(_ != "cluster_id")
@@ -156,18 +176,15 @@ private[graft] object IvfBlockJoin {
     Index(tRows.queryExecution.toRdd
         .map(r => (r.getInt(0), r.getStruct(1, width).copy().asInstanceOf[UnsafeRow]))
         .partitionBy(byList),
-      tType, vecOrd, tType(vecOrd).dataType.asInstanceOf[ArrayType].containsNull)
+      tType, reader(tType(vecOrd).dataType, vecOrd, "index"))
   }
 
-  /** Each list's covering radius, max over its blocks; 0 for a list
-    * with no rows. */
+  /** Each list's covering radius; 0 for a list with no rows. */
   def radii(model: Ivf.IvfModel): Array[Double] = {
     val parts = model.assigned.sparkSession.sparkContext.defaultParallelism
-    val Index(index, _, vecOrd, nulls) = indexOf(model, "t_", new ListPartitioner(parts))
-    val centroids = model.centroids
-    val out = new Array[Double](centroids.length)
-    index.mapPartitions(rows => blocks(rows, vecOrd, nulls, centroids).map(b => (b.list, b.radius)))
-      .collect().foreach { case (c, r) => out(c) = math.max(out(c), r) }
+    val index = indexOf(model, "t_", new ListPartitioner(parts))
+    val out = new Array[Double](model.centroids.length)
+    listRadii(index, model.centroids).collect().foreach { case (c, r) => out(c) = r }
     out
   }
 
@@ -181,9 +198,10 @@ private[graft] object IvfBlockJoin {
     val centroids = model.centroids
     val probes = math.min(math.max(1, initProbes), centroids.length)
 
-    val Index(index, tType, vecOrd, tNulls) = indexOf(model, "t_", byList)
+    val index = indexOf(model, "t_", byList)
+    val tType = index.rowType
 
-    val (qs, qType) = queriesOf(queries, qVecCol, Some(qIdCol), "knnJoin")
+    val (qs, qType, qRead) = queriesOf(queries, qVecCol, Some(qIdCol), "knnJoin query")
     val outSchema = StructType(qType.fields ++ tType.fields ++ Seq(
       StructField("distance", DoubleType, nullable = true),
       StructField("rank", IntegerType, nullable = false)))
@@ -191,10 +209,7 @@ private[graft] object IvfBlockJoin {
       return GraftShim.dataFrame(spark, spark.sparkContext.emptyRDD[InternalRow], outSchema)
 
     // pass 1: the nearest `probes` lists of each query
-    val first = scanAll(index,
-      qs.flatMap(q => Ivf.probeOrder(Ivf.centroidDistances(q.vec, centroids)).take(probes)
-        .map(c => (c, q))).partitionBy(byList),
-      vecOrd, tNulls, centroids)(nearest(k))
+    val first = scanAll(index, route(qs, qRead, centroids, probes, byList), qRead)(nearest(k))
 
     // every query with its pass-1 candidates, pruned to the k-th distance
     val perQuery: RDD[(Any, (Query, Array[Cand]))] =
@@ -203,10 +218,7 @@ private[graft] object IvfBlockJoin {
       }
 
     // each list's covering radius, sent to every query partition
-    val radii = index.mapPartitions(rows => blocks(rows, vecOrd, tNulls, centroids)
-        .map(b => (b.list, b.radius)).toArray.groupBy(_._1).iterator
-        .map { case (c, rs) => (c, rs.map(_._2).max) })
-      .flatMap(cr => (0 until parts).map(p => (p, cr)))
+    val radii = listRadii(index, centroids).flatMap(cr => (0 until parts).map(p => (p, cr)))
       .partitionBy(new IdPartitioner(parts))
 
     // pass 2: the lists pass 1 did not scan whose bound d(q,c) − r(c)
@@ -218,12 +230,12 @@ private[graft] object IvfBlockJoin {
           val bound = if (cs.length >= k)
             cs.map(_.distance).sorted(Ordering.Double.TotalOrdering)(k - 1) + 1e-9
           else Double.MaxValue
-          val d = Ivf.centroidDistances(q.vec, centroids)
+          val d = Ivf.centroidDistances(qRead(q.row), centroids)
           Ivf.probeOrder(d).iterator.drop(probes)
             .filter(c => radius.get(c).exists(r => d(c) - r <= bound)).map(c => (c, q))
         }
       }.partitionBy(byList),
-      vecOrd, tNulls, centroids)(nearest(k))
+      qRead)(nearest(k))
 
     // merge per query; rank by (distance, tieBreak…) ascending, nulls first
     val tieOrds = tieBreak.map(c => tType.fieldIndex(s"t_$c"))
@@ -253,24 +265,21 @@ private[graft] object IvfBlockJoin {
   def join(model: Ivf.IvfModel, other: DataFrame, otherVecCol: String, metric: Metric,
            threshold: Double, nprobe: Int): DataFrame = {
     val byList = new ListPartitioner(other.sparkSession.sparkContext.defaultParallelism)
-    val centroids = model.centroids
     // a null index vector never pairs
-    val Index(index, lType, vecOrd, lNulls) = indexOf(
+    val index = indexOf(
       model.copy(assigned = model.assigned.filter(col(model.vecCol).isNotNull)), "l_", byList)
-    val (rs, rType) = queriesOf(other, otherVecCol, None, "Ivf.join")
-    val outSchema = StructType((model.assigned.schema("cluster_id") +: lType.fields) ++
+    val (rs, rType, rRead) = queriesOf(other, otherVecCol, None, "other-side")
+    val outSchema = StructType((model.assigned.schema("cluster_id") +: index.rowType.fields) ++
       rType.fields.map(f => f.copy(name = s"r_${f.name}")) :+
       StructField("distance", DoubleType, nullable = true))
     val kernel = metric.arrayKernel
     // each pair within the threshold, compared as Spark SQL compares
     // doubles (NaN above everything)
-    val pairs = scanAll(index,
-      rs.flatMap(r => Ivf.probeOrder(Ivf.centroidDistances(r.vec, centroids))
-        .take(math.max(1, nprobe)).map(c => (c, r))).partitionBy(byList),
-      vecOrd, lNulls, centroids) { () =>
+    val pairs = scanAll(index, route(rs, rRead, model.centroids, math.max(1, nprobe), byList),
+      rRead) { () =>
       val project = UnsafeProjection.create(outSchema)
-      (b, r) => b.rows.indices.iterator.flatMap { j =>
-        val d = kernel(b.vecs(j), r.vec)
+      (b, r, v) => b.rows.indices.iterator.flatMap { j =>
+        val d = kernel(b.vecs(j), v)
         if (SQLOrderingUtil.compareDoubles(d, threshold) > 0) None
         else Some(project(new JoinedRow(new JoinedRow(InternalRow(b.list), b.rows(j)),
           new JoinedRow(r.row, InternalRow(d)))).copy(): InternalRow)
@@ -280,20 +289,19 @@ private[graft] object IvfBlockJoin {
   }
 
   /** `df`'s rows as [[Query]]s, every column in one binary row with the
-    * vector read out and the `idCol` value carried (null without one),
-    * and the row type. A null vector fails the query. */
+    * `idCol` value carried (null without one), the row type and the
+    * reader of the row's vector. */
   private def queriesOf(df: DataFrame, vecCol: String, idCol: Option[String],
-                        what: String): (RDD[Query], StructType) = {
+                        side: String): (RDD[Query], StructType, InternalRow => Array[Float]) = {
     val rows = df.select(struct(df.columns.map(col).toSeq: _*).as("q"))
     val rowType = rows.schema("q").dataType.asInstanceOf[StructType]
     val width = rowType.length
     val vecOrd = rowType.fieldIndex(vecCol)
-    val nulls = rowType(vecOrd).dataType.asInstanceOf[ArrayType].containsNull
+    val read = reader(rowType(vecOrd).dataType, vecOrd, side)
     val id = idCol.map(c => (rowType.fieldIndex(c), rowType(c).dataType))
     (rows.queryExecution.toRdd.map { r =>
       val row = r.getStruct(0, width).copy().asInstanceOf[UnsafeRow]
-      if (row.isNullAt(vecOrd)) throw new IllegalArgumentException(s"$what: null query vector")
-      Query(id.map { case (o, t) => row.get(o, t) }.orNull, row, vector(row.getArray(vecOrd), nulls))
-    }, rowType)
+      Query(id.map { case (o, t) => row.get(o, t) }.orNull, row)
+    }, rowType, read)
   }
 }

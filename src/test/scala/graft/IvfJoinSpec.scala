@@ -112,6 +112,49 @@ class IvfJoinSpec extends SparkSpecBase {
     assert(messages(e2).exists(_.contains("null element")), messages(e2).mkString("\n"))
   }
 
+  test("Ivf.join: a null element in a list no row probes is never read") {
+    val withNulls = ArrayType(FloatType, containsNull = true)
+    val indexSchema = StructType(Seq(StructField("id", LongType), StructField("vec", withNulls),
+      StructField("cluster_id", IntegerType)))
+    val index = spark.createDataFrame(spark.sparkContext.parallelize(
+      Seq(Row(1L, Seq(1f, 0f, 0f, 0f), 0), Row(2L, Seq(-1f, null, 0f, 0f), 1)), 2), indexSchema)
+    val handBuilt = Ivf.IvfModel(Array(Array(1f, 0f, 0f, 0f), Array(-1f, 0f, 0f, 0f)), index, "vec")
+    val near = spark.sparkContext.parallelize(Seq((5L, Array(0.9f, 0f, 0f, 0f))), 1).toDF("id", "vec")
+    val pairs = Ivf.join(handBuilt, near, "vec", "l2", 1e9, nprobe = 1)
+      .select(col("l_id")).as[Long].collect()
+    assert(pairs.toSeq == Seq(1L))
+  }
+
+  test("Ivf.join: another numeric vector type is cast to float; a non-numeric one fails the call") {
+    val model = Ivf.build(gridDf, "vec", nlists = 4, seed = 3L)
+    val nlists = model.centroids.length
+    val typed = gridOther.as[(Long, Array[Float])]
+    // off-grid doubles, so the cast to float rounds
+    val others = Seq(typed.map { case (i, v) => (i, v.map(_ / 3.0 + 1e-9)) }.toDF("id", "vec"),
+      typed.map { case (i, v) => (i, v.map(_.toInt)) }.toDF("id", "vec"),
+      typed.map { case (i, v) => (i, v.map(_.toLong)) }.toDF("id", "vec"))
+    val doubleModel = model.copy(assigned = model.assigned
+      .withColumn("vec", col("vec").cast(ArrayType(DoubleType, containsNull = false))))
+    for ((metric, threshold) <- Seq("l2" -> 0.5, "cosine" -> 0.5)) {
+      def join(m: Ivf.IvfModel, other: DataFrame) =
+        Ivf.join(m, other, "vec", metric, threshold, nprobe = nlists)
+      val asFloats = triples(join(model, gridOther))
+      for (other <- others) {
+        val t = other.schema("vec").dataType
+        val got = join(model, other)
+        val want = triples(join(model, other.withColumn("vec", col("vec").cast("array<float>"))))
+        assert(got.schema("r_vec").dataType == t, t)
+        assert(triples(got) == want && want.nonEmpty, s"$metric $t")
+        if (t != ArrayType(DoubleType, containsNull = false)) assert(want == asFloats, s"$metric $t")
+      }
+      // the index side too
+      assert(triples(join(doubleModel, gridOther)) == asFloats, metric)
+    }
+    val strings = gridOther.withColumn("vec", col("vec").cast("array<string>"))
+    // rejected when the join is built, before anything runs
+    intercept[Exception](Ivf.join(model, strings, "vec", "l2", 1.0))
+  }
+
   test("Ivf.join: a dimension mismatch fails the query; an unknown metric fails the call") {
     val model = Ivf.build(gridDf, "vec", nlists = 4, seed = 3L)
     val short = spark.sparkContext.parallelize(Seq((1L, Array(1f, 0f))), 1).toDF("id", "vec")

@@ -154,6 +154,16 @@ class IvfKnnJoinSpec extends SparkSpecBase {
     assert(sha == "134be33a813624dc10883969db812ee0feea7268a647d851fd1e65af32133b28", s"knnJoin rows changed: ${rows.length} rows, sha $sha")
   }
 
+  test("knnJoin casts another numeric vector type to float") {
+    val model = Ivf.build(gridDf, "vec", nlists = 4, seed = 11L)
+    val doubles = gridQs.as[(Long, Array[Float])]
+      .map { case (q, v) => (q, v.map(_ / 3.0 + 1e-9)) }.toDF("qid", "qvec")
+    def rows(qs: DataFrame) = Ivf.knnJoin(model, qs, "qvec", "qid", 3, tieBreak = Seq("id"))
+      .select("qid", "t_id", "distance", "rank").collect().map(_.toString).toSeq.sorted
+    val got = rows(doubles)
+    assert(got.nonEmpty && got == rows(doubles.withColumn("qvec", col("qvec").cast("array<float>"))))
+  }
+
   test("knnJoin rejects a non-L2 metric, a null query vector and a dimension mismatch") {
     val model = Ivf.build(gridDf, "vec", nlists = 4, seed = 11L)
     intercept[IllegalArgumentException](Ivf.knnJoin(model, gridQs, "qvec", "qid", 3, "cosine"))

@@ -3859,7 +3859,7 @@ object SparkEntry {
       Array.tabulate(64)(i => if (i == 0) -1.0f else 0.0f),
       Array.tabulate(64)(i => if (i == 1) 1.0f else 0.0f),
       Array.tabulate(64)(i => if (i == 1) -1.0f else 0.0f))
-    val e = Tables.read(s, dir, "embeddings")
+    val e = Tables.read(s, dir, "embeddings").select("embedding")
     val g = operators.Ivf.routeWithDist(cents, e, "embedding")
       .groupBy("cluster_id")
       .agg(count(lit(1)).as("n"),
@@ -10409,7 +10409,7 @@ object SparkEntry {
     val cents = emb.filter(col("vec_id") < 16).orderBy("vec_id")
       .select("embedding").collect().map(_.getSeq[Float](0).toArray)
     val cb = operators.Pq.codebookFrom(cents, m = 8)
-    val encoded = operators.Pq.encodeTable(emb, "embedding", cb)
+    val encoded = operators.Pq.encodeTable(emb.select("vec_id", "embedding"), "embedding", cb)
     operators.Pq.search(encoded, cb, qvec(s, dir), k = 10, tieBreak = Seq("vec_id"))
       .select(col("vec_id"), round(col("adc_distance"), 6).as("adc"))
   }

@@ -239,9 +239,7 @@ object AutoMl {
   def whitenEmbeddings(df: DataFrame, vecCol: String, k: Int,
                        epsilon: Double = 1e-8): DataFrame = {
     import org.apache.spark.ml.feature.{PCA, StandardScaler}
-    import org.apache.spark.ml.linalg.Vectors
-    val toMl = udf((v: Seq[Float]) => Vectors.dense(v.map(_.toDouble).toArray))
-    val featured = df.withColumn("__f", toMl(col(vecCol)))
+    val featured = df.withColumn("__f", org.apache.spark.ml.functions.array_to_vector(col(vecCol)))
     val pca = new PCA().setK(k).setInputCol("__f").setOutputCol("__p").fit(featured)
     // eigenvalues of the covariance = explainedVariance * total variance;
     // MLlib exposes the proportion, so recover scale from projected variance

@@ -25,15 +25,9 @@ import org.apache.spark.sql.functions._
  */
 object Explain {
 
-  /** splitmix64 — public-domain mix (Steele et al., also JDK
-    * SplittableRandom); uniform in [0,1). */
-  private[graft] def u01(x: Long): Double = {
-    var z = x + 0x9e3779b97f4a7c15L
-    z = (z ^ (z >>> 30)) * 0xbf58476d1ce4e5b9L
-    z = (z ^ (z >>> 27)) * 0x94d049bb133111ebL
-    z = z ^ (z >>> 31)
-    (z >>> 11) * (1.0 / (1L << 53))
-  }
+  /** splitmix64 ([[graft.functions.DetRandom.mix64]]); uniform in [0,1). */
+  private[graft] def u01(x: Long): Double =
+    (graft.functions.DetRandom.mix64(x) >>> 11) * (1.0 / (1L << 53))
 
   /**
    * Sampling SHAP (`calculate_shap_values`, ml_explainable_ai.c:144-186):

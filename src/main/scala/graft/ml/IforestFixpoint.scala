@@ -3,6 +3,8 @@ package graft.ml
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.functions.DetRandom.mix64
+
 /**
  * Isolation forest with a bit-reproducible randomness contract — the
  * oracle-checkable counterpart of the serial-RNG [[IsolationForest]]
@@ -30,13 +32,6 @@ import org.apache.spark.sql.functions._
  * node table and maps the full table, embarrassingly parallel.
  */
 object IforestFixpoint {
-
-  @inline private def mix64(z0: Long): Long = {
-    var z = z0 + 0x9E3779B97F4A7C15L
-    z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
-    z = (z ^ (z >>> 27)) * 0x94D049BB133111EBL
-    z ^ (z >>> 31)
-  }
 
   /** 53-bit non-negative rank key (signed order == unsigned order). */
   @inline private def rank53(z: Long): Long = z >>> 11

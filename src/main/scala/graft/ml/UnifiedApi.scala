@@ -5,7 +5,6 @@ import org.apache.spark.ml.classification._
 import org.apache.spark.ml.clustering.{BisectingKMeans, GaussianMixture, KMeans}
 import org.apache.spark.ml.evaluation.{ClusteringEvaluator, MulticlassClassificationEvaluator, RegressionEvaluator}
 import org.apache.spark.ml.feature.PCA
-import org.apache.spark.ml.linalg.Vectors
 import org.apache.spark.ml.recommendation.ALS
 import org.apache.spark.ml.regression._
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -90,10 +89,8 @@ object UnifiedApi {
     "kmeans", "minibatch_kmeans", "gmm", "hierarchical", "dbscan", "pca",
     "collaborative_filter", "arima", "zscore_outliers", "isolation_forest")
 
-  private def toFeatures(df: DataFrame, featuresCol: String): DataFrame = {
-    val toMl = udf((v: Seq[Float]) => Vectors.dense(v.map(_.toDouble).toArray))
-    df.withColumn("features", toMl(col(featuresCol)))
-  }
+  private def toFeatures(df: DataFrame, featuresCol: String): DataFrame =
+    df.withColumn("features", org.apache.spark.ml.functions.array_to_vector(col(featuresCol)))
 
   private def p(params: Map[String, String], key: String, dflt: Double): Double =
     params.get(key).map(_.toDouble).getOrElse(dflt)

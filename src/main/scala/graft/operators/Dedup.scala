@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions
+import graft.functions.DetRandom.mix64
 
 /**
  * Deduplication for training-data pipelines (BASELINE north star; not in
@@ -336,16 +337,6 @@ object Dedup {
     var i = 0
     while (i < bytes.length) { h = ((h << 5) + h) ^ (bytes(i) & 0xFF); i += 1 }
     h
-  }
-
-  /** splitmix64 finalizer — a full-avalanche 64-bit mixer; with per-hash
-    * seed offsets it gives the independent uniform hash family minhash
-    * needs, at two multiplies per hash (no modular arithmetic). */
-  @inline private def mix64(z0: Long): Long = {
-    var z = z0 + 0x9E3779B97F4A7C15L
-    z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
-    z = (z ^ (z >>> 27)) * 0x94D049BB133111EBL
-    z ^ (z >>> 31)
   }
 
   /** Sorted distinct djb2 hashes of a doc's word shingles. This is the

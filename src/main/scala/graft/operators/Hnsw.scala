@@ -12,6 +12,7 @@ import org.apache.spark.sql.classic.GraftShim
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.functions.DetRandom.mix64
 import graft.plans.{InInts, Metric}
 
 /**
@@ -68,13 +69,6 @@ object Hnsw {
       case Some(m @ (Metric.L2 | Metric.Cosine | Metric.InnerProduct)) => m.arrayKernel
       case _ => throw new IllegalArgumentException(s"unknown metric: $metric")
     }
-
-  private def mix64(x: Long): Long = {
-    var z = x + 0x9e3779b97f4a7c15L
-    z = (z ^ (z >>> 30)) * 0xbf58476d1ce4e5b9L
-    z = (z ^ (z >>> 27)) * 0x94d049bb133111ebL
-    z ^ (z >>> 31)
-  }
 
   /** Deterministic geometric level: floor(−ln(u)·mL), u ∈ (0,1] hashed
     * from the id (reference draws u from random(), `hnsw_am.c` insert). */
@@ -502,18 +496,16 @@ object Hnsw {
     (df.queryExecution.toRdd, df.schema)
   }
 
-  /** The (id, vector) rows of `df`; a null id or vector fails the task. */
+  /** The (id, vector) rows of `df`, each vector read by
+    * [[graft.plans.DistanceExpressions.reader]]; a null id or vector
+    * fails the task. */
   private def newRows(df: DataFrame, idCol: String, vecCol: String): RDD[(Long, Array[Float])] = {
     val rows = df.select(col(idCol).cast("long"), col(vecCol))
-    val nulls = rows.schema(1).dataType match {
-      case ArrayType(FloatType, containsNull) => containsNull
-      case other => throw new IllegalArgumentException(
-        s"$vecCol must be array<float>, got ${other.catalogString}")
-    }
+    val read = graft.plans.DistanceExpressions.reader(rows.schema(1).dataType, 1, "indexed")
     rows.queryExecution.toRdd.map { r =>
-      if (r.isNullAt(0) || r.isNullAt(1))
-        throw new IllegalArgumentException(s"null $idCol or $vecCol in the rows to index")
-      (r.getLong(0), graft.plans.DistanceExpressions.floats(r.getArray(1), nulls))
+      val v = if (r.isNullAt(0)) null else read(r)
+      if (v == null) throw new IllegalArgumentException(s"null $idCol or $vecCol in the rows to index")
+      (r.getLong(0), v)
     }
   }
 
@@ -774,9 +766,10 @@ object Hnsw {
   }
 
   /**
-   * Batch ANN search, one Spark job: queries broadcast (tiny), each
-   * shard's graph walked for every query, and each query's per-shard
-   * top-k merged — never a corpus-sized shuffle. Returns
+   * Batch ANN search, one Spark job: the queries ride in the task
+   * closure (tiny), each shard's graph is walked for every query, and
+   * each query's per-shard top-k are merged — never a corpus-sized
+   * shuffle. Returns
    * (qid, id, distance, rank ≤ k), ranked by (distance, id) as Spark SQL
    * orders them. Each id appears at most once per query, at its nearer
    * row when a batch indexed it twice, so a query may get fewer than k
@@ -801,7 +794,7 @@ object Hnsw {
    * `Metrics.CacheMisses`.
    *
    * `tombstones` is the LAZY-deletion filter ([[tombstoneSet]]): the
-   * set broadcasts with the queries and tombstoned ids are excluded
+   * set broadcasts (when not empty) and tombstoned ids are excluded
    * from every shard's result heap while still routing the walk —
    * erasure takes effect at the NEXT query with zero graph rebuild,
    * and [[compact]] reclaims the space later. Because the filter never
@@ -817,8 +810,9 @@ object Hnsw {
     val spark = index.sparkSession
     val sc = spark.sparkContext
     val dist = distFn(metric)
-    val bq = sc.broadcast(queries)
-    val bt = sc.broadcast(tombstones)
+    // a tombstone set can hold millions of ids: a broadcast is read once
+    // per executor, not once per shard task
+    val bt = if (tombstones.isEmpty) None else Some(sc.broadcast(tombstones))
     val parts = sc.defaultParallelism
     val hits = graft.Metrics.counter(spark, graft.Metrics.CacheHits)
     val misses = graft.Metrics.counter(spark, graft.Metrics.CacheMisses)
@@ -844,8 +838,8 @@ object Hnsw {
           }
           g
         }
-        val dead = graphs.map(g => if (bt.value.isEmpty) null else g.deadMask(bt.value.contains))
-        bq.value.iterator.flatMap { case (qid, q) =>
+        val dead = graphs.map(g => bt.map(b => g.deadMask(b.value.contains)).orNull)
+        queries.iterator.flatMap { case (qid, q) =>
           val found = graphs.indices.flatMap(i => graphs(i).search(q, k, ef, dead(i)))
           if (found.isEmpty) None else Some((qid, nearest(found, k)))
         }

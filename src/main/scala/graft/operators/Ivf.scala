@@ -1,13 +1,13 @@
 package graft.operators
 
 import org.apache.spark.ml.clustering.KMeans
-import org.apache.spark.ml.linalg.Vectors
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.ml.functions.array_to_vector
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.classic.GraftShim
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorOps
-import graft.plans.InInts
+import graft.plans.{DistanceExpressions, InInts}
 
 /**
  * IVF (inverted-file) ANN index, the Spark-native answer to the
@@ -233,12 +233,16 @@ object Ivf {
   }
 
   /** The ONE routing kernel: assign each row its nearest centroid
-    * ([[nearestCentroid]], so ties break to the LOWER cluster id; the
-    * nlists centroids ride in the UDF's closure). Shared by [[insert]], the streaming
+    * ([[nearestCentroid]], so ties break to the LOWER cluster id), in the
+    * task over the rows' binary form. Shared by [[insert]], the streaming
     * ingest paths ([[graft.streaming.StreamIndexIngest]]), IVFADC
     * maintenance ([[IvfPq.insert]]), and the `route_health` dial —
     * batch and stream routing cannot diverge because there is exactly
-    * one definition. Returns `df` + `cluster_id`. */
+    * one definition. Returns `df` + `cluster_id`. The result is planned
+    * from `df`'s rows as [[graft.plans.DistanceExpressions.withVectorColumns]]
+    * reads them: `df` must not be a streaming frame (route each
+    * micro-batch inside `foreachBatch`), and columns it does not need
+    * should be dropped before the call. */
   def routeWith(centroids: Array[Array[Float]], df: DataFrame,
                 vecCol: String): DataFrame =
     routeWithDist(centroids, df, vecCol).drop("route_dist")
@@ -249,15 +253,16 @@ object Ivf {
     * [[graft.streaming.StreamIndexIngest]] and the oracled
     * `route_health` dial aggregate (mean routing distance is the drift
     * signal imbalance alone can miss when clusters stay balanced but
-    * everything lands FAR from its centroid). */
+    * everything lands FAR from its centroid). A null vector fails the
+    * query; existing `cluster_id`/`route_dist` columns are replaced. The
+    * same restrictions on `df` as [[routeWith]]'s hold. */
   def routeWithDist(centroids: Array[Array[Float]], df: DataFrame,
-                    vecCol: String): DataFrame = {
-    val assign = udf((v: Seq[Float]) => nearestCentroid(v.toArray, centroids))
-    df.withColumn("__route", assign(col(vecCol)))
-      .withColumn("cluster_id", col("__route._1"))
-      .withColumn("route_dist", col("__route._2"))
-      .drop("__route")
-  }
+                    vecCol: String): DataFrame =
+    DistanceExpressions.withVectorColumns(df, vecCol, "routed", "cluster_id int, route_dist double") { v =>
+      if (v == null) throw new IllegalArgumentException("null routed vector")
+      val (c, d) = nearestCentroid(v, centroids)
+      Array(c, d)
+    }
 
   /** Incremental maintenance (the `ivfinsert` analog): new rows route to
     * their nearest EXISTING centroid via [[routeWith]] and append to that
@@ -299,8 +304,7 @@ object Ivf {
   /** Batch index build. nlists/nprobe defaults match ivf_am.c:54-55. */
   def build(df: DataFrame, vecCol: String, nlists: Int = 100, seed: Long = 42L,
             maxIter: Int = 20): IvfModel = {
-    val toMl = udf((v: Seq[Float]) => Vectors.dense(v.map(_.toDouble).toArray))
-    val featured = df.withColumn("__features", toMl(col(vecCol)))
+    val featured = df.withColumn("__features", array_to_vector(col(vecCol)))
     val kmeans = new KMeans()
       .setK(nlists).setSeed(seed).setMaxIter(maxIter)
       .setFeaturesCol("__features").setPredictionCol("cluster_id")

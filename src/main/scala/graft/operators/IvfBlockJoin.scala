@@ -8,10 +8,10 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.classic.GraftShim
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Ascending, BoundReference, Cast, GenericInternalRow, InterpretedOrdering, JoinedRow, SortOrder, UnsafeProjection, UnsafeRow}
-import org.apache.spark.sql.catalyst.util.{ArrayData, SQLOrderingUtil}
+import org.apache.spark.sql.catalyst.expressions.{Ascending, BoundReference, GenericInternalRow, InterpretedOrdering, JoinedRow, SortOrder, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.functions.{col, struct}
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, IntegerType, NumericType, StructField, StructType}
+import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType, StructField, StructType}
 
 import graft.functions.VectorOps
 import graft.plans.{DistanceExpressions, Metric}
@@ -58,25 +58,10 @@ private[graft] object IvfBlockJoin {
 
   private final case class Block(list: Int, rows: Array[UnsafeRow], vecs: Array[Array[Float]])
 
-  /** The reader of the vector at ordinal `ord` of a row of a `side`
-    * input, into a primitive float array: an array<float> as is, another
-    * numeric array through Spark's cast to float, the cast SQL's distance
-    * functions apply to it. A null vector and a null element fail; any
-    * other column type fails here, when the join is built. */
+  /** [[DistanceExpressions.reader]] for a `side` input; a null vector fails. */
   private def reader(t: DataType, ord: Int, side: String): InternalRow => Array[Float] = {
-    val floats: InternalRow => ArrayData = t match {
-      case ArrayType(FloatType, _) => _.getArray(ord)
-      case ArrayType(_: NumericType, nulls) =>
-        val cast = Cast(BoundReference(ord, t, nullable = false), ArrayType(FloatType, nulls))
-        cast.eval(_).asInstanceOf[ArrayData]
-      case _ => throw new IllegalArgumentException(
-        s"the $side vector column must be a numeric array, got ${t.catalogString}")
-    }
-    val nulls = t.asInstanceOf[ArrayType].containsNull
-    r => {
-      if (r.isNullAt(ord)) throw new IllegalArgumentException(s"null $side vector")
-      DistanceExpressions.floats(floats(r), nulls)
-    }
+    val read = DistanceExpressions.reader(t, ord, side)
+    r => Option(read(r)).getOrElse(throw new IllegalArgumentException(s"null $side vector"))
   }
 
   /** Every row of `b` within the k-th smallest distance to `q`: the

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, FloatType, StructType}
+import org.apache.spark.sql.types.StructType
 
 
 /**
@@ -53,7 +53,7 @@ object Knn {
    * Exact top-k of a whole query set in ONE scan: the recall truth of
    * [[Ivf.recallCurve]], [[Hnsw.recallCurve]], their tuners and the
    * recall reports. Each task reads a row's vector once
-   * ([[graft.plans.DistanceExpressions.floats]]), runs the metric's
+   * ([[graft.plans.DistanceExpressions.reader]]), runs the metric's
    * kernel against every query, and keeps a bounded heap of k rows per
    * query; the driver merges the at most k rows each task emits per
    * query. One Spark job, with no UDF, broadcast, shuffle or window —
@@ -73,10 +73,7 @@ object Knn {
     val kernel = graft.plans.Metric(metric).arrayKernel
     val input = corpus.select(col(idCol).cast("long"), col(vecCol),
       struct(corpus.columns.filter(_ != vecCol).map(col).toSeq: _*))
-    val nulls = input.schema(1).dataType match {
-      case ArrayType(FloatType, n) => n
-      case t => throw new IllegalArgumentException(s"$vecCol must be array<float>, got ${t.catalogString}")
-    }
+    val read = graft.plans.DistanceExpressions.reader(input.schema(1).dataType, 1, "corpus")
     val restType = input.schema(2).dataType.asInstanceOf[StructType]
     val (qids, qvecs) = queries.unzip
     val top = input.queryExecution.toRdd.mapPartitions { rows =>
@@ -87,8 +84,7 @@ object Knn {
       rows.foreach { r =>
         if (!r.isNullAt(0)) {
           val id = r.getLong(0)
-          val v = if (r.isNullAt(1)) null
-                  else graft.plans.DistanceExpressions.floats(r.getArray(1), nulls)
+          val v = read(r)
           var rest: InternalRow = null
           var i = 0
           while (i < qids.length) {

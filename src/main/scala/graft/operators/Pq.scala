@@ -1,9 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.ml.functions.array_to_vector
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorOps
+import graft.plans.DistanceExpressions
 
 /**
  * Product quantization + OPQ (SURVEY §2.8; reference
@@ -127,13 +129,15 @@ object Pq {
     PqCodebook(m, subDim, codebooks)
   }
 
-  /** Encode a table; codes column is BinaryType, m bytes per row. */
-  def encodeTable(df: DataFrame, vecCol: String, codebook: PqCodebook): DataFrame = {
-    // null vector → null codes (the Knn path tolerates null embeddings;
-    // a crash here would make PQ the only operator a dirty corpus kills)
-    val enc = udf((v: Seq[Float]) => if (v == null) null else codebook.encode(v.toArray))
-    df.withColumn("pq_codes", enc(col(vecCol)))
-  }
+  /** Encode a table; codes column is BinaryType, m bytes per row. A null
+    * vector gets null codes (the Knn path tolerates null embeddings; a
+    * crash here would make PQ the only operator a dirty corpus kills).
+    * As with [[Ivf.routeWith]], `df` must not be a streaming frame, and
+    * columns it does not need should be dropped before the call
+    * ([[graft.plans.DistanceExpressions.withVectorColumns]]). */
+  def encodeTable(df: DataFrame, vecCol: String, codebook: PqCodebook): DataFrame =
+    DistanceExpressions.withVectorColumns(df, vecCol, "encoded", "pq_codes binary")(v =>
+      Array(if (v == null) null else codebook.encode(v)))
 
   /** ADC top-k over an encoded table: the query's lookup table rides in
     * the scoring UDF's closure; scan, heap.
@@ -157,11 +161,9 @@ object Pq {
    */
   def trainOpqRotation(df: DataFrame, vecCol: String): Array[Array[Float]] = {
     import org.apache.spark.ml.feature.PCA
-    import org.apache.spark.ml.linalg.Vectors
     val dim = df.select(vecCol).head().getSeq[Float](0).length
-    val toMl = udf((v: Seq[Float]) => Vectors.dense(v.map(_.toDouble).toArray))
     val pca = new PCA().setK(dim).setInputCol("__f").setOutputCol("__p")
-      .fit(df.withColumn("__f", toMl(col(vecCol))))
+      .fit(df.withColumn("__f", array_to_vector(col(vecCol))))
     // pc is dim x k column-major; rows = original dims, cols = components
     val pc = pca.pc
     Array.tabulate(dim)(r => Array.tabulate(dim)(c => pc(r, c).toFloat))

@@ -1,10 +1,12 @@
 package graft.plans
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ImplicitCastInputTypes, Literal, Predicate, UnaryExpression}
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, BoundReference, Cast, Expression, GenericInternalRow, ImplicitCastInputTypes, JoinedRow, Literal, Predicate, UnaryExpression, UnsafeProjection}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, IntegerType}
+import org.apache.spark.sql.classic.GraftShim
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, IntegerType, NumericType, StructType}
 
 /**
  * One distance metric: the SQL name it is registered under, the names the
@@ -141,8 +143,9 @@ case class NormSqExpr(child: Expression) extends UnaryExpression {
 }
 
 /** The read of an `ArrayData` vector into the `float[]` the
-  * [[graft.functions.VectorOps]] kernels take, and the Column helpers that
-  * build [[DistanceExpr]]. */
+  * [[graft.functions.VectorOps]] kernels take, the one reader of a vector
+  * column for task-side code, and the Column helpers that build
+  * [[DistanceExpr]]. */
 object DistanceExpressions {
 
   /** Whether `e`'s array<float> values can hold a null element: per its
@@ -172,10 +175,50 @@ object DistanceExpressions {
     a.toFloatArray()
   }
 
-  private def toCol(e: Expression): Column =
-    org.apache.spark.sql.classic.GraftShim.column(e)
-  private def ex(c: Column): Expression =
-    org.apache.spark.sql.classic.GraftShim.expression(c)
+  /** The one reader of a vector column for task-side code: the vector at
+    * ordinal `ord` of a row whose column there has type `t`. array<float>
+    * is read as is; another numeric array goes through Spark's cast to
+    * array<float> (SQL's distance functions cast it so), keeping
+    * `containsNull`; a non-numeric column fails here, when the call is
+    * built (`what` names it). A null element fails in [[floats]]. A null
+    * vector reads as `null`, and each caller applies its own rule. */
+  private[graft] def reader(t: DataType, ord: Int, what: String): InternalRow => Array[Float] = t match {
+    case ArrayType(e: NumericType, nulls) =>
+      val cast = Cast(BoundReference(ord, t, nullable = false), ArrayType(FloatType, nulls))
+      val read: InternalRow => ArrayData =
+        if (e == FloatType) _.getArray(ord) else cast.eval(_).asInstanceOf[ArrayData]
+      r => if (r.isNullAt(ord)) null else floats(read(r), nulls)
+    case _ => throw new IllegalArgumentException(
+      s"the $what vector column must be a numeric array, got ${t.catalogString}")
+  }
+
+  /** `df` with the columns of the DDL `cols` set in each row, in its task,
+    * to `f`'s values for the row's `vecCol` vector (as [[reader]] reads it,
+    * null for a null vector): a column `df` already has is replaced in
+    * place, the others are appended in order. The result is planned from
+    * `df`'s executed rows, so `df` cannot be a streaming frame (this
+    * fails on one), Catalyst prunes none of `df`'s columns and pushes no
+    * filter below it, and with adaptive execution a shuffle `df` needs
+    * runs when this is called, not at the action. */
+  private[graft] def withVectorColumns(df: DataFrame, vecCol: String, what: String,
+      cols: String)(f: Array[Float] => Array[Any]): DataFrame = {
+    val (in, add) = (df.schema, StructType.fromDDL(cols))
+    val read = reader(in(vecCol).dataType, in.fieldIndex(vecCol), what)
+    // each output field, and its ordinal in the input row joined to f's
+    val out = in.fields.zipWithIndex.map { case (c, i) =>
+      val j = add.names.indexOf(c.name)
+      if (j < 0) (c, i) else (add(j), in.length + j)
+    } ++ add.fields.zipWithIndex.collect { case (c, j) if !in.names.contains(c.name) => (c, in.length + j) }
+    val rows = df.queryExecution.toRdd.mapPartitions { it =>
+      val project = UnsafeProjection.create(out.map { case (c, i) => BoundReference(i, c.dataType, c.nullable) })
+      val joined = new JoinedRow
+      it.map(r => project(joined(r, new GenericInternalRow(f(read(r))))): InternalRow)
+    }
+    GraftShim.dataFrame(df.sparkSession, rows, StructType(out.map(_._1)))
+  }
+
+  private def toCol(e: Expression): Column = GraftShim.column(e)
+  private def ex(c: Column): Expression = GraftShim.expression(c)
 
   private[graft] def dist(m: Metric)(a: Column, b: Column): Column =
     toCol(DistanceExpr(m, ex(a), ex(b)))

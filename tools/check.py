@@ -3,8 +3,10 @@
 in DuckDB over the sf parquet tables and compare with the Spark parquet
 dumps (column names sorted, floats rounded to 6 decimals, row multiset).
 The oracles run on min(4, available cores) worker processes; the output
-lists them by name as before."""
+lists them by name as before. A worker that dies fails its oracle and every
+one still queued, and the run exits 1."""
 import sys, os, json, math, multiprocessing
+from concurrent.futures import ProcessPoolExecutor
 import duckdb
 
 TABLES = ["region", "nation", "customer", "supplier", "part",
@@ -99,14 +101,18 @@ def check_one(item):
 def main(sf_dir, out_dir):
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
     items = [(name, sql, out_dir) for name, sql in sorted(oracle.items())]
-    # the oracles run on a pool of worker processes; imap hands the
-    # results back in name order, so the printed lines are the same as
-    # one process would print
+    # the oracles run on a pool of worker processes; the results are read
+    # back in name order, so the printed lines are the same as one process
+    # would print
     workers = min(4, len(os.sched_getaffinity(0)))
     n_ok = 0
-    with multiprocessing.get_context("spawn").Pool(
-            workers, initializer=_connect, initargs=(sf_dir,)) as pool:
-        for ok, line in pool.imap(check_one, items):
+    with ProcessPoolExecutor(workers, mp_context=multiprocessing.get_context("spawn"),
+                             initializer=_connect, initargs=(sf_dir,)) as pool:
+        for item, fut in [(i, pool.submit(check_one, i)) for i in items]:
+            try:
+                ok, line = fut.result()
+            except Exception as e:  # a dead worker breaks the pool
+                ok, line = False, f"FAIL {item[0]}: worker error: {e!r}"
             print(line, flush=True)
             n_ok += ok
     print(f"== {n_ok}/{len(oracle)} matched ==")
